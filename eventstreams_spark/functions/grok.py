@@ -1,16 +1,20 @@
 """Grok pattern support (Logstash `grok` filter equivalent, SURVEY §2.3 P9).
 
-A grok expression like ``src%{NUMBER:num}`` compiles to a Java-regex
-with named groups; extraction is then plain ``regexp_extract`` —
-JVM-side, codegen'd, no Python in the hot path. Pattern library is the
-standard public grok core set (re-expressed, not copied).
+A grok expression like ``src%{NUMBER:num}`` compiles to a Java regex
+with one capture group per field. :func:`grok_frame` matches each line
+once: a single ``regexp_replace`` writes every group, joined by a
+control character, and one ``split`` feeds all fields. The column-level
+:func:`grok_extract` is the per-field ``regexp_extract`` reference that
+the one-pass form reproduces exactly. Both are JVM-side and codegen'd,
+with no Python in the hot path. Pattern library is the standard public
+grok core set (re-expressed, not copied).
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Core grok patterns (public Logstash pattern names, regex re-derived,
@@ -120,3 +124,53 @@ def grok_extract(col: Column | str, expr: str) -> dict[str, Column]:
     regex, fields = grok_to_regex(expr)
     c = F.col(col) if isinstance(col, str) else col
     return {f: F.regexp_extract(c, regex, i + 1) for i, f in enumerate(fields)}
+
+
+#: Joins the groups in the one-pass replacement. A line that contains
+#: it could split into the wrong fields, so only such a line falls back
+#: to per-field ``regexp_extract``.
+_DELIM = "\u0001"
+
+
+def grok_array(col: Column | str, expr: str) -> tuple[Column, list[str]]:
+    """Every grok field of ``expr`` as one ``array<string>`` Column
+    (element ``i`` is ``fields[i]``), from one regex pass per line.
+
+    The compiled regex ``R`` is wrapped as ``^(?:(?s:.*?)(?:R))?(?s:.*)$``,
+    which matches every line exactly once: the lazy prefix finds the
+    leftmost match of ``R``, as ``regexp_extract``'s ``find`` does, and
+    when ``R`` matches nowhere the optional group is skipped, so every
+    group is unset and writes ``""``. A NULL line gives a NULL array.
+    Each element equals ``regexp_extract(col, R, i + 1)``, and the array
+    always has ``len(fields)`` elements, so indexing it is safe under
+    ANSI mode.
+    """
+    regex, fields = grok_to_regex(expr)
+    c = F.col(col) if isinstance(col, str) else col
+    groups = _DELIM.join(f"${i + 1}" for i in range(len(fields)))
+    one_pass = F.split(
+        F.regexp_replace(c, f"^(?:(?s:.*?)(?:{regex}))?(?s:.*)$", groups), _DELIM
+    )
+    per_field = F.array(*[F.regexp_extract(c, regex, i + 1) for i in range(len(fields))])
+    return F.when(c.contains(_DELIM), per_field).otherwise(one_pass), fields
+
+
+def grok_frame(df: DataFrame, source: str, expr: str) -> DataFrame:
+    """Add (or replace) one column per grok field of ``expr``, all read
+    from the original ``source`` value — a field may share its name.
+
+    The array from :func:`grok_array` is built once in a hidden column,
+    every field is projected from it, and the hidden column is dropped.
+    Catalyst keeps the array in its own projection when several fields
+    reference it, so the regex runs once per line there (and once more
+    in a filter on a field that Catalyst pushes below it).
+    """
+    arr, fields = grok_array(source, expr)
+    hidden = "__grok"
+    while hidden in df.columns or hidden in fields:
+        hidden += "_"
+    return (
+        df.withColumn(hidden, arr)
+        .withColumns({f: F.col(hidden)[i] for i, f in enumerate(fields)})
+        .drop(hidden)
+    )

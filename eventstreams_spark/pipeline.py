@@ -35,7 +35,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.grok import grok_extract
+from .functions.grok import grok_frame
 
 Transform = Callable[[DataFrame], DataFrame]
 
@@ -157,10 +157,11 @@ def _prune(keep: list[str]) -> Transform:
 
 @step("grok")
 def _grok(source: str, pattern: str, remove_source: bool = False) -> Transform:
-    """Grok-extract named fields from a string column (P9)."""
+    """Grok-extract named fields from a string column (P9): one regex
+    pass per line feeds every field (``grok_frame``), and each field is
+    read from the original ``source`` value."""
     def t(df: DataFrame) -> DataFrame:
-        for fname, col in grok_extract(source, pattern).items():
-            df = df.withColumn(fname, col)
+        df = grok_frame(df, source, pattern)
         return df.drop(source) if remove_source else df
 
     return t

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.grok import grok_extract as _grok_extract
+from ..functions.grok import grok_frame, grok_to_regex
 from ..registry import query
 
 
@@ -139,15 +139,15 @@ def clone_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def grok_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grok field extraction: 'src%{INT:src_num}' → regexp_extract.
+    """Grok field extraction: 'src%{INT:src_num}' through grok_frame.
 
-    Uses the grok pattern compiler (functions/grok.py); the extraction
-    itself is a codegen'd JVM regex — no Python per row.
+    Uses the grok pattern compiler and frame helper (functions/grok.py);
+    the extraction is one codegen'd JVM regex pass per line — no Python
+    per row.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    fields = _grok_extract(F.col("source"), "src%{INT:src_num}")
+    docs = grok_frame(load_table(spark, sf_dir, "documents"), "source", "src%{INT:src_num}")
     return (
-        docs.select(fields["src_num"].cast("int").alias("src_num"), "n_chars")
+        docs.select(F.col("src_num").cast("int").alias("src_num"), "n_chars")
         .groupBy("src_num")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("total_chars"))
     )
@@ -521,8 +521,6 @@ def _apache_oracle() -> str:
     synthesize the identical log line from events columns, then parse
     it back with the SAME compiled grok regex (group numbers come from
     the compiler's capture order)."""
-    from ..functions.grok import grok_to_regex
-
     regex, fields = grok_to_regex("%{COMBINEDAPACHELOG}")
     g = {f: i + 1 for i, f in enumerate(fields)}
     sql_re = regex.replace("'", "''")  # DuckDB '...' takes backslashes literally
@@ -559,8 +557,8 @@ def _apache_oracle() -> str:
 
 @query("grok_apache_combined", category="P9", oracle=_apache_oracle())
 def grok_apache_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COMBINEDAPACHELOG roundtrip (P9 breadth, VERDICT r2 #6): the
-    full Logstash core-pattern dictionary in action — Apache combined
+    """COMBINEDAPACHELOG roundtrip through one-pass grok (P9 breadth):
+    the full Logstash core-pattern dictionary in action — Apache combined
     access lines are SYNTHESIZED deterministically from events columns
     (JVM-side concat), then parsed back through the compiled
     %{COMBINEDAPACHELOG} grok (11 capture fields, recursive pattern
@@ -569,14 +567,11 @@ def grok_apache_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle hash pins both the synthesis AND every byte of the
     extraction regex.
 
-    Scale: pure Column exprs end to end — one codegen'd projection
-    (concat + 4 regexp_extract) and one two-phase agg, no Python, no
-    shuffle beyond the final 15-group rollup.
+    Scale: pure Column exprs end to end — codegen'd projections (concat,
+    then one regex pass per line through ``grok_frame``) and one
+    two-phase agg, no Python, no shuffle beyond the final 15-group
+    rollup.
     """
-    from ..functions.grok import grok_to_regex
-
-    regex, fields = grok_to_regex("%{COMBINEDAPACHELOG}")
-    g = {f: i + 1 for i, f in enumerate(fields)}
     ev = load_table(spark, sf_dir, "events")
     verb = (
         F.when(F.col("event_type") == "purchase", "POST")
@@ -604,11 +599,11 @@ def grok_apache_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % 7).cast("string"),
         F.lit('"'),
     )
-    parsed = ev.select(
-        F.regexp_extract(line, regex, g["verb"]).alias("verb"),
-        F.regexp_extract(line, regex, g["response"]).cast("long").alias("response"),
-        F.regexp_extract(line, regex, g["bytes"]).cast("long").alias("bytes"),
-        F.regexp_extract(line, regex, g["clientip"]).alias("clientip"),
+    parsed = grok_frame(ev.select(line.alias("line")), "line", "%{COMBINEDAPACHELOG}").select(
+        "verb",
+        F.col("response").cast("long").alias("response"),
+        F.col("bytes").cast("long").alias("bytes"),
+        "clientip",
     )
     return (
         parsed.groupBy("verb", "response")

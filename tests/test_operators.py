@@ -296,6 +296,53 @@ def test_heavy_hitters_misra_gries_guarantees(spark, sf_dir):
     assert exact == true
 
 
+# A canonical example per core grok pattern (the dictionary's spec).
+_GROK_EXAMPLES = {
+    "WORD": "hello_1",
+    "NOTSPACE": "a/b:c",
+    "DATA": "",
+    "GREEDYDATA": "anything at all",
+    "INT": "-42",
+    "POSINT": "17",
+    "NONNEGINT": "0",
+    "NUMBER": "3.14",
+    "BASE10NUM": "-0.5",
+    "BASE16NUM": "0xDEADbeef",
+    "IP": "192.168.0.1",
+    "IPV6": "2001:db8::1",
+    "HOSTNAME": "web-01.example.com",
+    "IPORHOST": "10.0.0.1",
+    "USERNAME": "svc.user-1",
+    "USER": "root",
+    "EMAILADDRESS": "a.b+c@example.org",
+    "MAC": "00:1A:2b:3C:4d:5E",
+    "UUID": "123e4567-e89b-12d3-a456-426614174000",
+    "LOGLEVEL": "ERROR",
+    "MONTH": "Sep",
+    "MONTHNUM": "09",
+    "MONTHDAY": "31",
+    "DAY": "Fri",
+    "YEAR": "2024",
+    "HOUR": "23",
+    "MINUTE": "59",
+    "SECOND": "59.123",
+    "TIME": "23:59:59",
+    "TIMESTAMP_ISO8601": "2024-01-02T03:04:05.678Z",
+    "HTTPDATE": "18/Nov/2023:10:27:31 +0000",
+    "SYSLOGTIMESTAMP": "Jan  2 03:04:05",
+    "URIPROTO": "https",
+    "URIHOST": "example.com:8443",
+    "URIPATH": "/a/b-c/d.e",
+    "URIPARAM": "?k=v&x=1",
+    "URIPATHPARAM": "/p?q=1",
+    "URI": "https://u:p@example.com:80/path?x=1",
+    "QS": '"quoted \\" string"',
+    "QUOTEDSTRING": '"ok"',
+    "PROG": "systemd-logind",
+    "SYSLOGHOST": "host1",
+}
+
+
 def test_grok_pattern_dictionary_sweep():
     """Every atom in the core pattern dictionary compiles standalone
     and matches a canonical example (and rejects a counter-example
@@ -305,50 +352,7 @@ def test_grok_pattern_dictionary_sweep():
 
     from eventstreams_spark.functions.grok import PATTERNS, grok_to_regex
 
-    examples = {
-        "WORD": "hello_1",
-        "NOTSPACE": "a/b:c",
-        "DATA": "",
-        "GREEDYDATA": "anything at all",
-        "INT": "-42",
-        "POSINT": "17",
-        "NONNEGINT": "0",
-        "NUMBER": "3.14",
-        "BASE10NUM": "-0.5",
-        "BASE16NUM": "0xDEADbeef",
-        "IP": "192.168.0.1",
-        "IPV6": "2001:db8::1",
-        "HOSTNAME": "web-01.example.com",
-        "IPORHOST": "10.0.0.1",
-        "USERNAME": "svc.user-1",
-        "USER": "root",
-        "EMAILADDRESS": "a.b+c@example.org",
-        "MAC": "00:1A:2b:3C:4d:5E",
-        "UUID": "123e4567-e89b-12d3-a456-426614174000",
-        "LOGLEVEL": "ERROR",
-        "MONTH": "Sep",
-        "MONTHNUM": "09",
-        "MONTHDAY": "31",
-        "DAY": "Fri",
-        "YEAR": "2024",
-        "HOUR": "23",
-        "MINUTE": "59",
-        "SECOND": "59.123",
-        "TIME": "23:59:59",
-        "TIMESTAMP_ISO8601": "2024-01-02T03:04:05.678Z",
-        "HTTPDATE": "18/Nov/2023:10:27:31 +0000",
-        "SYSLOGTIMESTAMP": "Jan  2 03:04:05",
-        "URIPROTO": "https",
-        "URIHOST": "example.com:8443",
-        "URIPATH": "/a/b-c/d.e",
-        "URIPARAM": "?k=v&x=1",
-        "URIPATHPARAM": "/p?q=1",
-        "URI": "https://u:p@example.com:80/path?x=1",
-        "QS": '"quoted \\" string"',
-        "QUOTEDSTRING": '"ok"',
-        "PROG": "systemd-logind",
-        "SYSLOGHOST": "host1",
-    }
+    examples = _GROK_EXAMPLES
     missing = set(PATTERNS) - set(examples) - {
         "SPACE",  # matches empty by design
         "SYSLOGPROG",  # carries fields; covered by SYSLOGLINE test
@@ -365,6 +369,90 @@ def test_grok_pattern_dictionary_sweep():
                       ("UUID", "123"), ("MAC", "001A2b3C4d5E")]:
         regex, _ = grok_to_regex("%{" + name + ":x}")
         assert re.fullmatch(regex, bad) is None, (name, bad)
+
+
+_APACHE_LINE = (
+    '93.180.71.3 - frank [18/Nov/2023:10:27:31 +0000] '
+    '"GET /downloads/product_1?x=1 HTTP/1.1" 304 1024 '
+    '"http://example.com/start" "Mozilla/5.0 (X11; Linux x86_64)"'
+)
+_SYSLOG_LINE = "Jan 12 06:30:45 web01 sshd[2451]: Failed password"
+# Every line shape the one-pass grok must treat as regexp_extract does.
+_GROK_EDGE_LINES = [
+    _APACHE_LINE,
+    _SYSLOG_LINE,
+    None,
+    "",
+    "no structure here",
+    "junk>> " + _APACHE_LINE + " <<junk",
+    "<13>" + _SYSLOG_LINE + " tail",
+    _APACHE_LINE.replace("Mozilla", "Moz\r\nilla"),
+    _SYSLOG_LINE + "\r\nsecond line\n",
+    "\n" + _APACHE_LINE,
+    _APACHE_LINE.replace(" 1024 ", " - "),
+    _APACHE_LINE.replace(" HTTP/1.1", ""),
+    _APACHE_LINE.replace(" 1024 ", " - ").replace(" HTTP/1.1", ""),
+    _APACHE_LINE.replace("Mozilla/5.0", "Mözilla/5.0 日本語 🚀"),
+    _SYSLOG_LINE.replace("Failed password", "échec ünïcode ✓"),
+    _APACHE_LINE.replace("Mozilla", "Moz\u0001illa"),
+    _SYSLOG_LINE.replace("password", "pass\u0001word"),
+    "\u0001",
+    "\u0001" + _APACHE_LINE,
+    _APACHE_LINE[:60],
+    _APACHE_LINE + " " + _APACHE_LINE.replace("frank", "second"),
+] + list(_GROK_EXAMPLES.values()) + ["300.1.2", "0", "NOISE", "123", "001A2b3C4d5E"]
+
+
+def _grok_lines(spark):
+    return spark.createDataFrame(list(enumerate(_GROK_EDGE_LINES)), "id int, line string")
+
+
+def test_grok_one_pass_array_equals_regexp_extract(spark):
+    """grok_array (one regex pass per line) equals per-field
+    regexp_extract for the composite line formats and every pattern in
+    the dictionary, on non-matching, NULL, empty, prefixed/suffixed,
+    CR/LF-carrying, optional-group-absent, non-ASCII and
+    delimiter-carrying lines."""
+    from eventstreams_spark.functions.grok import PATTERNS, grok_array, grok_to_regex
+
+    exprs = ["%{COMMONAPACHELOG}", "%{COMBINEDAPACHELOG}", "%{SYSLOGLINE}"] + [
+        "%{" + name + ":x}" for name in PATTERNS
+    ]
+    line = F.col("line")
+    checks = []
+    for k, expr in enumerate(exprs):
+        regex, fields = grok_to_regex(expr)
+        arr, got_fields = grok_array(line, expr)
+        assert got_fields == fields
+        want = F.array(*[F.regexp_extract(line, regex, i + 1) for i in range(len(fields))])
+        # NULL line: NULL array, so every projected field is NULL
+        checks.append(
+            F.coalesce(F.when(line.isNull(), arr.isNull()).otherwise(arr == want), F.lit(False))
+            .alias(f"ok{k}")
+        )
+    bad = [
+        (exprs[k], _GROK_EDGE_LINES[r.id])
+        for r in _grok_lines(spark).select("id", *checks).collect()
+        for k in range(len(exprs))
+        if not r[f"ok{k}"]
+    ]
+    assert not bad, bad[:5]
+
+
+def test_grok_frame_equals_per_field_columns(spark):
+    """The frame-level helper adds the same columns, in the same order,
+    with the same values as one regexp_extract per field."""
+    from eventstreams_spark.functions.grok import grok_extract, grok_frame
+
+    df = _grok_lines(spark)
+    for expr in (
+        "%{COMMONAPACHELOG}", "%{COMBINEDAPACHELOG}", "%{SYSLOGLINE}",
+        "src%{INT:src_num}", "%{WORD:x}",
+    ):
+        got = grok_frame(df, "line", expr)
+        want = df.withColumns(grok_extract("line", expr))
+        assert got.columns == want.columns
+        assert got.orderBy("id").collect() == want.orderBy("id").collect(), expr
 
 
 def test_dtw_banded_dp_unreachable_returns_none():

@@ -42,6 +42,43 @@ def test_grok_dissect_date_kv_chain(logs):
     assert rows[3].client == "" and rows[3]["@timestamp"] is None  # no match, no crash
 
 
+
+def test_grok_field_named_like_source_keeps_later_fields(spark):
+    """Every field is read from the original source value, even when a
+    field takes the source column's name."""
+    df = spark.createDataFrame([("a b 1",), ("bad",)], "line string")
+    pipe = Pipeline.from_config({"steps": [
+        {"type": "grok", "source": "line",
+         "pattern": "%{WORD:line} %{NOTSPACE:path} %{INT:status}"},
+    ]})
+    out = pipe.apply(df)
+    assert out.columns == ["line", "path", "status"]
+    assert sorted(tuple(r) for r in out.collect()) == [("", "", ""), ("a", "b", "1")]
+
+
+def test_weblog_chain_runs_grok_regex_at_most_twice(spark):
+    """COMBINEDAPACHELOG grok -> deadletter: in both the healthy and the
+    dead-letter plan the full regex runs at most twice per line (the
+    pushed-down dead-letter filter and the projection), not once per
+    field. Per-field regexp_extract appears only in the fallback for
+    lines that contain the one-pass delimiter."""
+    line = ('10.1.2.3 c0 user1 [10/Oct/2024:10:00:00 +0000] "GET /a HTTP/1.1" 200 512 '
+            '"-" "curl/8"')
+    df = spark.createDataFrame([(line,), ("garbled",)], "value string")
+    healthy, dead = Pipeline.from_config({"steps": [
+        {"type": "grok", "source": "value", "pattern": "%{COMBINEDAPACHELOG}"},
+        {"type": "deadletter", "when": "clientip = ''", "reason": "grok_failure"},
+    ]}).apply_split(df)
+    for out in (healthy, dead):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        fallbacks = plan.count("THEN array(regexp_extract(")
+        assert 1 <= plan.count("regexp_replace(") <= 2
+        assert plan.count("regexp_extract(") == 11 * fallbacks
+    assert [(r.clientip, r.bytes, r.agent) for r in healthy.collect()] == [
+        ("10.1.2.3", "512", '"curl/8"')
+    ]
+    assert [r.value for r in dead.collect()] == ["garbled"]
+
 def test_filter_drop_prune_translate(logs):
     pipe = Pipeline.from_config(
         {

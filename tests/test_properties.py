@@ -524,3 +524,42 @@ def test_gif_lzw_roundtrip_property(idx):
     if nb:
         out.append(acc & 0xFF)
     assert _lzw_decode(bytes(out), min_size) == idx
+
+
+# Noise around and inside grok lines: the one-pass delimiter (\x01),
+# CR/LF, quotes, brackets and non-ASCII text.
+_grok_noise = st.text(alphabet=' "-[]/:.aZ1\x01\r\né日', max_size=8)
+_grok_token = st.text(alphabet="ab1.-_\x01é", min_size=1, max_size=5)
+
+
+@st.composite
+def _grok_line(draw):
+    kind = draw(st.sampled_from(["apache", "syslog", "noise"]))
+    body = ""
+    if kind == "apache":
+        version = draw(st.sampled_from(["", " HTTP/1.1", " HTTP/2"]))
+        nbytes = draw(st.sampled_from(["-", "0", "512"]))
+        agent = draw(_grok_noise).replace('"', "")
+        body = (
+            f"10.0.{draw(st.integers(0, 255))}.1 {draw(_grok_token)} {draw(_grok_token)} "
+            f'[10/Oct/2024:10:00:00 +0000] "GET /{draw(_grok_token)}{version}" '
+            f'200 {nbytes} "-" "{agent}"'
+        )
+    elif kind == "syslog":
+        body = f"Jan  2 03:04:05 {draw(_grok_token)} sshd[12]: {draw(_grok_noise)}"
+    return draw(_grok_noise) + body + draw(_grok_noise)
+
+
+@given(lines=st.lists(st.one_of(st.none(), _grok_line()), min_size=1, max_size=30))
+@settings(**SETTINGS)
+def test_grok_one_pass_matches_per_field_extract(spark, lines):
+    """The one-pass grok frame helper equals one regexp_extract per
+    field on random lines: garbage around the match, CR/LF and the
+    delimiter inside fields, absent optional groups, NULL lines."""
+    from eventstreams_spark.functions.grok import grok_extract, grok_frame
+
+    df = spark.createDataFrame(list(enumerate(lines)), "id int, line string")
+    for expr in ("%{COMBINEDAPACHELOG}", "%{SYSLOGLINE}"):
+        got = grok_frame(df, "line", expr).orderBy("id").collect()
+        want = df.withColumns(grok_extract("line", expr)).orderBy("id").collect()
+        assert got == want, expr

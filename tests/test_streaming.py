@@ -14,8 +14,10 @@ from eventstreams_spark.streaming import session_agg, stream_dedup, tumbling_agg
 from tests.util import split_half
 from eventstreams_spark.streaming.replay import replay_table, run_to_memory
 
-# ~22 min of micro-batch/restart goldens — the slow tier (pytest.ini)
-pytestmark = pytest.mark.slow
+# Most of these micro-batch/restart goldens (~22 min) are marked for the
+# slow tier (pytest.ini). The default tier keeps a streaming smoke set:
+# one GroupState happy path, one GroupState restart, the exactly-once
+# file sink across restarts, and the Spark-free state-blob parsers.
 
 
 @pytest.fixture()
@@ -30,6 +32,7 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+@pytest.mark.slow
 def test_tumbling_stream_equals_batch(spark, events_slice, tmp_path):
     aggs = [F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv")]
     stream = replay_table(spark, events_slice, str(tmp_path), chunks=3, order_col="ts")
@@ -49,6 +52,7 @@ def test_tumbling_stream_equals_batch(spark, events_slice, tmp_path):
     assert _rows(got) == _rows(want)
 
 
+@pytest.mark.slow
 def test_session_stream_equals_batch(spark, events_slice, tmp_path):
     ev = events_slice.filter(F.col("user_id") <= 20)
     aggs = [F.count(F.lit(1)).alias("n")]
@@ -65,6 +69,7 @@ def test_session_stream_equals_batch(spark, events_slice, tmp_path):
     assert _rows(got) == _rows(want)
 
 
+@pytest.mark.slow
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Three micro-batches: (1) on-time rows advance the watermark,
     (2) a too-late row arrives and must be dropped, (3) flush.
@@ -110,6 +115,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     assert (10, 2) not in got
 
 
+@pytest.mark.slow
 def test_stream_dedup_within_watermark(spark, events_slice, tmp_path):
     dup = events_slice.unionAll(events_slice)  # every event twice
     stream = replay_table(spark, dup, str(tmp_path), chunks=2, order_col="ts")
@@ -119,6 +125,7 @@ def test_stream_dedup_within_watermark(spark, events_slice, tmp_path):
     assert n == events_slice.count()
 
 
+@pytest.mark.slow
 def test_stream_static_join(spark, sf_dir, events_slice, tmp_path):
     """T10/J10: streaming events enriched against a static dim table."""
     dim = load_table(spark, sf_dir, "customer").select(
@@ -154,6 +161,7 @@ def test_throttle_stream_state_across_batches(spark, tmp_path):
     assert by_key["b"] == (1, 1), by_key
 
 
+@pytest.mark.slow
 def test_accumulate_stream_running_totals(spark, tmp_path):
     from eventstreams_spark.streaming.stateful import accumulate_stream
 
@@ -169,6 +177,7 @@ def test_accumulate_stream_running_totals(spark, tmp_path):
     assert got["a"] == (3.0, 2) and got["b"] == (10.0, 1)
 
 
+@pytest.mark.slow
 def test_stream_stream_join_matches_batch(spark, events_slice, tmp_path):
     """J11: click→purchase pairing per user within 30 minutes, both
     sides streamed; inner-join output must equal the batch range join."""
@@ -211,6 +220,7 @@ def test_stream_stream_join_matches_batch(spark, events_slice, tmp_path):
     assert _rows(got) == _rows(want)
 
 
+@pytest.mark.slow
 def test_sliding_stream_equals_batch(spark, events_slice, tmp_path):
     """T2: 1h window sliding by 15m — streamed result must equal the
     batch builder for all windows closed by the final watermark."""
@@ -235,6 +245,7 @@ def test_sliding_stream_equals_batch(spark, events_slice, tmp_path):
     assert _rows(got) == _rows(want)
 
 
+@pytest.mark.slow
 def test_foreach_batch_sink(spark, events_slice, tmp_path):
     """K6: arbitrary per-batch handler through the pipeline sink config."""
     from eventstreams_spark.pipeline import write_sink
@@ -257,6 +268,7 @@ def test_foreach_batch_sink(spark, events_slice, tmp_path):
     assert len(seen) >= 2  # chunked replay -> multiple batches
 
 
+@pytest.mark.slow
 def test_foreach_batch_idempotent_retry(spark, tmp_path):
     """K6/T9 retry contract: after a handler crash mid-batch, restarting
     from the SAME checkpoint re-delivers the SAME batch_id with the SAME
@@ -312,6 +324,7 @@ def test_foreach_batch_idempotent_retry(spark, tmp_path):
     assert got == list(range(12))
 
 
+@pytest.mark.slow
 def test_stream_static_dim_refreshes_per_batch(spark, tmp_path):
     """Stream-static join re-reads the static side per micro-batch, so
     a dim table updated between batches enriches later events with the
@@ -358,6 +371,7 @@ def test_stream_static_dim_refreshes_per_batch(spark, tmp_path):
     assert sorted(seen) == [(1, "v1"), (2, "v2")]
 
 
+@pytest.mark.slow
 def test_tumbling_update_mode_final_state_equals_batch(spark, events_slice, tmp_path):
     """T8 output modes: update-mode emits a row per changed window per
     batch; the LAST emission per (window, key) must equal the batch
@@ -382,6 +396,7 @@ def test_tumbling_update_mode_final_state_equals_batch(spark, events_slice, tmp_
     assert _rows(got) == _rows(want)
 
 
+@pytest.mark.slow
 def test_stream_stream_left_outer_null_emission(spark, tmp_path):
     """J11 LEFT OUTER: matched pairs emit immediately; an unmatched
     left row emits with a NULL right side only once the watermark
@@ -435,6 +450,7 @@ def test_stream_stream_left_outer_null_emission(spark, tmp_path):
     assert not open_left
 
 
+@pytest.mark.slow
 def test_session_dynamic_gap_stream_equals_batch(spark, events_slice, tmp_path):
     """T3 dynamic gap, streamed: error events close after 10 minutes,
     others after 30 — the streamed result must equal the batch
@@ -459,6 +475,7 @@ def test_session_dynamic_gap_stream_equals_batch(spark, events_slice, tmp_path):
     assert got.count() > 0
 
 
+@pytest.mark.slow
 def test_stream_stream_full_outer_both_null_sides(spark, tmp_path):
     """J11 FULL OUTER: expired unmatched rows emit null-padded from
     BOTH sides once the watermark passes their windows."""
@@ -495,6 +512,7 @@ def test_stream_stream_full_outer_both_null_sides(spark, tmp_path):
     assert (9, None, 1) in got         # right expired unmatched
 
 
+@pytest.mark.slow
 def test_chained_window_aggregation_single_query(spark, events_slice, tmp_path):
     """Window-on-window in ONE streaming query (Spark >= 3.4): 5-min
     partial counts re-aggregated to 1-hour totals without an
@@ -561,6 +579,7 @@ def test_file_sink_exactly_once_across_restarts(spark, tmp_path):
     assert got == [("a", 1), ("b", 2), ("c", 3)]
 
 
+@pytest.mark.slow
 def test_cdc_keep_latest_update_mode(spark, events_slice, tmp_path):
     """Streaming CDC keep-latest: update-mode max_by aggregation per
     key; the final state must equal the batch changelog compaction
@@ -593,6 +612,7 @@ def test_cdc_keep_latest_update_mode(spark, events_slice, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_multiline_stream_reassembles_across_batches(spark, tmp_path):
     """S-codec streamed: a stack trace whose continuation lines arrive
     in a LATER micro-batch must still glue onto the open event held in
@@ -627,6 +647,7 @@ def test_multiline_stream_reassembles_across_batches(spark, tmp_path):
     assert len(got) == 2
 
 
+@pytest.mark.slow
 def test_throttle_periodic_resets_per_bucket_across_batches(spark, tmp_path):
     """T7 full semantic: at most 2 events per key per hour bucket,
     counter carried across micro-batches WITHIN a bucket and reset on
@@ -667,6 +688,7 @@ def test_throttle_periodic_resets_per_bucket_across_batches(spark, tmp_path):
     assert sum(n for n, _ in by.values()) == 4
 
 
+@pytest.mark.slow
 def test_throttle_periodic_drops_late_buckets(spark, tmp_path):
     """A late row whose bucket is OLDER than the key's current bucket
     is dropped, never re-admitted — re-opening a past bucket would
@@ -705,6 +727,7 @@ def test_throttle_periodic_drops_late_buckets(spark, tmp_path):
     assert len(admitted_ts) == 4, admitted_ts
 
 
+@pytest.mark.slow
 def test_correlate_tasks_stream_across_batches(spark, tmp_path):
     """Logstash aggregate, streamed (T6): a task whose start arrives in
     batch 1 and end in batch 2 must still emit one summary row — the
@@ -739,6 +762,7 @@ def test_correlate_tasks_stream_across_batches(spark, tmp_path):
     assert got["A"].t_end is not None
 
 
+@pytest.mark.slow
 def test_correlate_batch_equals_stream_at_boundaries(spark, tmp_path):
     """The batch `aggregate` step and correlate_tasks_stream must agree
     on BOUNDARY timestamps (ADVICE r2): events sharing t_start, events
@@ -785,6 +809,7 @@ def test_correlate_batch_equals_stream_at_boundaries(spark, tmp_path):
     assert s[0].t_start == b.t_start and s[0].t_end == b.t_end
 
 
+@pytest.mark.slow
 def test_heavy_hitters_state_survives_separator_tokens(spark, tmp_path):
     """MG state is JSON-encoded (ADVICE r2): tokens containing the old
     record/field separator bytes must round-trip through GroupState
@@ -810,6 +835,7 @@ def test_heavy_hitters_state_survives_separator_tokens(spark, tmp_path):
     assert got == {evil: 7, "plain": 4}, got
 
 
+@pytest.mark.slow
 def test_zscore_anomaly_stream_welford_across_batches(spark, tmp_path):
     """Online z-score: each event scored against PRIOR events only,
     Welford state carried across micro-batches — the spike after the
@@ -845,6 +871,7 @@ def test_zscore_anomaly_stream_welford_across_batches(spark, tmp_path):
     assert got[4].is_anomaly
 
 
+@pytest.mark.slow
 def test_heavy_hitters_stream_misra_gries_fold(spark, tmp_path):
     """Streaming MG: counters fold across micro-batches exactly as the
     sequential algorithm — decrement-all on overflow, state carried.
@@ -870,6 +897,7 @@ def test_heavy_hitters_stream_misra_gries_fold(spark, tmp_path):
     assert final[0].cnt >= 1
 
 
+@pytest.mark.slow
 def test_streaming_topk_rank_at_read_equals_batch(spark, events_slice, tmp_path):
     """Windowed top-k via rank-at-read: stream maintains tumbling
     per-type counts (append mode), ranking runs over the sink — the
@@ -946,6 +974,7 @@ def test_stateful_throttle_state_recovers_across_restarts(spark, tmp_path):
     assert got2 == [1, 2, 3], got2
 
 
+@pytest.mark.slow
 def test_cusum_changepoint_fires_and_resets_across_batches(spark, tmp_path):
     """Page's CUSUM: deviations accumulate ACROSS micro-batches, the
     alarm fires when S+ crosses the threshold, and the fired side
@@ -971,6 +1000,7 @@ def test_cusum_changepoint_fires_and_resets_across_batches(spark, tmp_path):
     assert got[4].s_neg == pytest.approx(2.0)
 
 
+@pytest.mark.slow
 def test_cusum_batch_equals_stream(spark, tmp_path):
     """The batch applyInPandas CUSUM and the streaming GroupState
     CUSUM must produce identical per-event statistics — same fold,
@@ -1006,6 +1036,7 @@ def test_cusum_batch_equals_stream(spark, tmp_path):
     assert got_stream == got_batch
 
 
+@pytest.mark.slow
 def test_page_hinkley_stream_matches_single_pass(spark, tmp_path):
     """Page-Hinkley: the micro-batched GroupState fold must equal a
     single-pass reference loop over the same time-ordered values —
@@ -1044,6 +1075,7 @@ def test_page_hinkley_stream_matches_single_pass(spark, tmp_path):
         assert ga == wa and gp == pytest.approx(wp)
 
 
+@pytest.mark.slow
 def test_session_dynamic_gap_late_data_golden(spark, tmp_path):
     """T3×T4 interaction (VERDICT r2 #7): dynamic-gap session windows
     under LATE data in one availableNow run — a late row older than
@@ -1109,6 +1141,7 @@ def test_session_dynamic_gap_late_data_golden(spark, tmp_path):
     assert got == want, got
 
 
+@pytest.mark.slow
 def test_throttle_state_machine_on_rocksdb(spark, tmp_path):
     """T7 on the RocksDB provider (VERDICT r2 #7): the GroupState
     throttle counter must behave identically on the production state
@@ -1141,6 +1174,7 @@ def test_throttle_state_machine_on_rocksdb(spark, tmp_path):
     assert by_key["b"] == (1, 1), by_key
 
 
+@pytest.mark.slow
 def test_counter_rate_batch_equals_stream(spark, events_slice, tmp_path):
     """T14 twin equality: the streaming GroupState counter-rate fold's
     final snapshot must equal the batch lag-window aggregate over the
@@ -1193,6 +1227,7 @@ def test_counter_rate_batch_equals_stream(spark, events_slice, tmp_path):
         assert got[k][3] == pytest.approx(want[k][3], abs=1e-6), k
 
 
+@pytest.mark.slow
 def test_holt_batch_equals_stream(spark, tmp_path):
     """T21 twin equality: streaming Holt (GroupState) must reproduce
     the batch applyInPandas fold per event — level, trend, forecast
@@ -1228,6 +1263,7 @@ def test_holt_batch_equals_stream(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_stream_static_dim_refresh_foreachbatch(spark, tmp_path):
     """J10 refresh semantics, pinned BOTH ways: a plain static-frame
     join caches the dim's FILE LISTING at plan time, so overwriting
@@ -1288,6 +1324,7 @@ def test_stream_static_dim_refresh_foreachbatch(spark, tmp_path):
     assert results == [(100, "v1-one"), (200, "v2-two")], results
 
 
+@pytest.mark.slow
 def test_session_path_batch_equals_stream(spark, events_slice, tmp_path):
     """T6 twin equality: the streaming session-path fold (GroupState,
     gap-closed sessions with '>'-joined first-5 paths) must equal the
@@ -1350,6 +1387,7 @@ def test_session_path_batch_equals_stream(spark, events_slice, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_tdigest_stream_accuracy_and_bounded_state(spark, events_slice, tmp_path):
     """T6 sketch twin: the streaming t-digest's final per-key snapshot
     must satisfy the same contracts as the batch gate — ≤2% rank error
@@ -1389,6 +1427,7 @@ def test_tdigest_stream_accuracy_and_bounded_state(spark, events_slice, tmp_path
             assert abs(rank - q) <= tol, (et, q, rank)
 
 
+@pytest.mark.slow
 def test_decayed_topk_stream_matches_reference_fold(spark, events_slice, tmp_path):
     """T-series trending top-k: the streamed final snapshot must equal
     a Python reference fold of the same (ts, event_id)-ordered events
@@ -1445,6 +1484,7 @@ def test_decayed_topk_stream_matches_reference_fold(spark, events_slice, tmp_pat
     assert got == want
 
 
+@pytest.mark.slow
 def test_streaming_winnowing_contamination_stream_static(spark, sf_dir, tmp_path):
     """L5×T crossover: the contamination check runs as a STREAM-STATIC
     join — crawled docs stream in, the benchmark's rare winnowing
@@ -1505,6 +1545,7 @@ def test_streaming_winnowing_contamination_stream_static(spark, sf_dir, tmp_path
     assert got == want
 
 
+@pytest.mark.slow
 def test_streaming_ann_probe_matches_batch(spark, sf_dir, tmp_path):
     """Online vector search: STREAMED query vectors are LSH-bucketed
     map-side (lsh_bucket_tables now runs on streams), probe the
@@ -1580,6 +1621,7 @@ def test_streaming_ann_probe_matches_batch(spark, sf_dir, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_kll_stream_matches_offline_fold(spark, tmp_path):
     """Streaming KLL: the per-key sketch folded across micro-batches
     must equal the offline KLL fed the same chunks in the same order
@@ -1643,6 +1685,7 @@ def test_mg_state_legacy_blob_migration():
     assert _parse_mg_state("x\x1fy\x1f7") == {"x\x1fy": 7}
 
 
+@pytest.mark.slow
 def test_alert_fsm_batch_equals_stream(spark, tmp_path):
     """Round-4 FSM twin equality: the streaming GroupState alert fold
     over the replayed daily breach series must end at exactly the
@@ -1675,6 +1718,7 @@ def test_alert_fsm_batch_equals_stream(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_ohlc_bars_batch_equals_stream(spark, events_slice, tmp_path):
     """Round-4 market twin: daily OHLCV bars as a NATIVE streaming
     windowed aggregation (no GroupState — min_by/max_by over the
@@ -1736,6 +1780,7 @@ def test_ohlc_bars_batch_equals_stream(spark, events_slice, tmp_path):
     assert _daily_bars is not None  # helper stays importable for twins
 
 
+@pytest.mark.slow
 def test_kalman_batch_equals_stream(spark, tmp_path):
     """T15 twin equality: streaming Kalman level filter (GroupState)
     must reproduce the batch applyInPandas fold per event — level,
@@ -1772,6 +1817,7 @@ def test_kalman_batch_equals_stream(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_hmm_batch_equals_stream(spark, tmp_path):
     """T14 twin equality: the streaming HMM burst filter (GroupState)
     must reproduce BOTH the batch applyInPandas fold and the JVM
@@ -1852,6 +1898,7 @@ def test_hmm_batch_equals_stream(spark, tmp_path):
     assert got_jvm == want_jvm
 
 
+@pytest.mark.slow
 def test_forecast_error_batch_equals_stream(spark, tmp_path):
     """T15/T14 twin equality: the streaming forecast-error monitor
     (naive + seasonal-naive absolute errors from a GroupState ring)
@@ -1888,6 +1935,7 @@ def test_forecast_error_batch_equals_stream(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_hmm_stream_state_recovers_across_restarts(spark, tmp_path):
     """T6 checkpoint recovery for the HMM burst filter: the carried
     (n, log-odds) state must SURVIVE a full query restart (new query
@@ -1967,6 +2015,7 @@ def _token_bucket_reference(rows, capacity=5, rate_milli=100):
     return out
 
 
+@pytest.mark.slow
 def test_token_bucket_stream_matches_reference_and_batching(spark, tmp_path):
     """T7 refill semantics: the token bucket admits bursts up to
     capacity, refills at the configured rate, and the admitted set +
@@ -2010,6 +2059,7 @@ def test_token_bucket_stream_matches_reference_and_batching(spark, tmp_path):
     assert got_by_chunks[0] == got_by_chunks[1]
 
 
+@pytest.mark.slow
 def test_slo_burn_stream_matches_batch(spark, sf_dir, tmp_path):
     """T14/OPS twin equality: the streaming multiwindow burn monitor
     must emit, for every CLOSED hour, exactly the batch timeline's
@@ -2058,6 +2108,7 @@ def test_slo_burn_stream_matches_batch(spark, sf_dir, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_token_bucket_stream_out_of_order_no_rewind(spark, tmp_path):
     """ADVICE r4: an out-of-order event arriving in a LATER
     micro-batch with t < last must not rewind the refill clock —
@@ -2094,6 +2145,7 @@ def test_token_bucket_stream_out_of_order_no_rewind(spark, tmp_path):
     assert admitted == [0, 1, 2, 3, 4, 5], admitted
 
 
+@pytest.mark.slow
 def test_slo_burn_stream_late_hour_merges_into_ring(spark, tmp_path):
     """ADVICE r4: an event whose hour already CLOSED (late across a
     micro-batch boundary) must not inflate the open hour's counters;
@@ -2142,6 +2194,7 @@ def test_slo_burn_stream_late_hour_merges_into_ring(spark, tmp_path):
     assert got[H + 1] == (2, 0, 0.0, round(8 / 7, 6))
 
 
+@pytest.mark.slow
 def test_slo_burn_stream_late_gap_hour_appends_ring_entry(spark, tmp_path):
     """ADVICE r5: a late event for an hour that saw ZERO on-time
     events (a gap hour — it never became `cur`, so it has no ring
@@ -2211,6 +2264,7 @@ def test_mg_state_legacy_blob_starting_with_brace():
     assert _parse_mg_state(blob) == {"{tok": 3, "beta": 2}
 
 
+@pytest.mark.slow
 def test_conformal_monitor_stream_matches_batch(spark, sf_dir, tmp_path):
     """FC-conformal twin equality: the streaming online-conformal
     monitor (expanding sorted-multiset calibration in GroupState)
@@ -2251,6 +2305,7 @@ def test_conformal_monitor_stream_matches_batch(spark, sf_dir, tmp_path):
     assert got == want
 
 
+@pytest.mark.slow
 def test_reservoir_es_stream_matches_batch_topk(spark, sf_dir, tmp_path):
     """P7 streaming twin: replaying the documents table through the
     weighted reservoir must end with EXACTLY the batch
@@ -2286,6 +2341,7 @@ def test_reservoir_es_stream_matches_batch_topk(spark, sf_dir, tmp_path):
     assert finals[0] == finals[1]
 
 
+@pytest.mark.slow
 def test_kll_quantile_monitor_stream_rank_guarantee(spark, sf_dir, tmp_path):
     """Streaming KLL monitor: after replaying each channel's values
     the final p50/p90/p99 estimates must satisfy the KLL rank
@@ -2334,6 +2390,7 @@ def test_kll_quantile_monitor_stream_rank_guarantee(spark, sf_dir, tmp_path):
         assert err <= 0.03 * len(vals) + 1, (r.event_type, r.q, err)
 
 
+@pytest.mark.slow
 def test_conformal_monitor_state_recovers_across_restarts(spark, sf_dir, tmp_path):
     """T6 checkpoint recovery for the conformal monitor: the
     (rn, ring, calibration-multiset) state must survive a full query
@@ -2395,6 +2452,7 @@ def test_conformal_monitor_state_recovers_across_restarts(spark, sf_dir, tmp_pat
     assert got == want
 
 
+@pytest.mark.slow
 def test_kll_monitor_state_recovers_across_restarts(spark, sf_dir, tmp_path):
     """T6 checkpoint recovery for the KLL monitor: the serialized
     sketch must resume EXACTLY — a run split across two drains (same
@@ -2459,6 +2517,7 @@ def test_kll_monitor_state_recovers_across_restarts(spark, sf_dir, tmp_path):
     assert split[0][2] == n
 
 
+@pytest.mark.slow
 def test_tdigest_quantile_monitor_stream_rank_guarantee(spark, sf_dir, tmp_path):
     """Streaming t-digest monitor (the KLL monitor's merging-digest
     twin): after replaying each channel's values the final
@@ -2509,6 +2568,7 @@ def test_tdigest_quantile_monitor_stream_rank_guarantee(spark, sf_dir, tmp_path)
         assert err <= 0.03 * len(vals) + 1, (r.event_type, r.q, err)
 
 
+@pytest.mark.slow
 def test_tdigest_monitor_state_recovers_across_restarts(spark, sf_dir, tmp_path):
     """T6 checkpoint recovery for the t-digest monitor: the JSON
     (means, weights) centroid state must resume EXACTLY — a run
@@ -2581,6 +2641,7 @@ def test_tdigest_monitor_state_recovers_across_restarts(spark, sf_dir, tmp_path)
     assert split[0][2] == n
 
 
+@pytest.mark.slow
 def test_dgim_window_count_error_bound(spark, sf_dir, tmp_path):
     """DGIM sliding-window counter: after replaying each channel's
     events, the final estimate of 'events in the trailing hour of
@@ -2628,6 +2689,7 @@ def test_dgim_window_count_error_bound(spark, sf_dir, tmp_path):
         assert nb <= 2 * (int(math.log2(max(exact, 2))) + 2), (et, nb)
 
 
+@pytest.mark.slow
 def test_dgim_state_recovers_across_restarts(spark, sf_dir, tmp_path):
     """T6 checkpoint recovery for the DGIM counter: integer bucket
     folding is deterministic in arrival order, so a run split across
@@ -2702,6 +2764,7 @@ def _contained_patterns(steps, max_len=3, max_events=20):
     return out
 
 
+@pytest.mark.slow
 def test_sequence_pattern_stream_equals_batch_census(
     spark, events_slice, tmp_path
 ):
@@ -2751,6 +2814,7 @@ def test_sequence_pattern_stream_equals_batch_census(
     assert sup == want_sup
 
 
+@pytest.mark.slow
 def test_sequence_pattern_stream_restart_resumes_containment(spark, tmp_path):
     """T6/T9: the containment set survives a full query restart (new
     query object, same checkpoint) — a pattern contained before the
@@ -2799,6 +2863,7 @@ def test_sequence_pattern_stream_restart_resumes_containment(spark, tmp_path):
     ], got2
 
 
+@pytest.mark.slow
 def test_bloom_dedup_stream_drops_all_dups_keeps_uniques(
     spark, events_slice, tmp_path
 ):
@@ -2823,6 +2888,7 @@ def test_bloom_dedup_stream_drops_all_dups_keeps_uniques(
     assert set(got) == want
 
 
+@pytest.mark.slow
 def test_bloom_dedup_stream_bitmap_survives_restart(spark, tmp_path):
     """T5/T9: the Bloom bitmap recovers from the checkpoint — an id
     seen before a full query restart is still dropped after it."""
@@ -2866,6 +2932,7 @@ def test_bloom_dedup_stream_bitmap_survives_restart(spark, tmp_path):
     assert got2 == ["1", "2", "3", "4"], got2
 
 
+@pytest.mark.slow
 def test_session_timeout_stream_emits_final_sessions(
     spark, events_slice, tmp_path
 ):
@@ -2937,6 +3004,7 @@ def test_session_timeout_stream_emits_final_sessions(
     assert got == want
 
 
+@pytest.mark.slow
 def test_psi_drift_stream_equals_batch_gate(spark, sf_dir, tmp_path):
     """Streaming PSI monitor ≡ the batch psi_distribution_drift gate:
     PSI is a pure function of the two integer bucket-count vectors,
@@ -2989,6 +3057,7 @@ def test_psi_drift_stream_equals_batch_gate(spark, sf_dir, tmp_path):
         assert got[et].n_ref + got[et].n_cur == counts[et]
 
 
+@pytest.mark.slow
 def test_psi_drift_stream_state_recovers_across_restarts(spark, sf_dir, tmp_path):
     """T6 checkpoint recovery for the PSI monitor: a run split across
     two availableNow drains (shared checkpoint) must end with the
@@ -3066,6 +3135,7 @@ def _basket_lines(spark, sf_dir):
     )
 
 
+@pytest.mark.slow
 def test_pair_rules_stream_equals_batch_pair_rules(spark, sf_dir, tmp_path):
     """Streaming association-rule monitor ≡ the batch
     association_rules_confidence_lift restricted to its pair
@@ -3112,6 +3182,7 @@ def test_pair_rules_stream_equals_batch_pair_rules(spark, sf_dir, tmp_path):
         assert abs(g.lift - w.lift) <= 1e-9, (k, g, w)
 
 
+@pytest.mark.slow
 def test_pair_rules_stream_state_recovers_across_restarts(spark, sf_dir, tmp_path):
     """T6 checkpoint recovery for the association monitor: a run split
     across a restart must emit the exact same (basket, kind, a, b)
@@ -3165,6 +3236,7 @@ def test_pair_rules_stream_state_recovers_across_restarts(spark, sf_dir, tmp_pat
     assert diff.count() == 0
 
 
+@pytest.mark.slow
 def test_schema_drift_stream_equals_batch_census(spark, sf_dir, tmp_path):
     """The live schema-drift monitor ≡ the batch json_schema_census:
     integer per-shape counts are batching-invariant, so after a full
@@ -3205,6 +3277,7 @@ def test_schema_drift_stream_equals_batch_census(spark, sf_dir, tmp_path):
     assert finals == dict(want)
 
 
+@pytest.mark.slow
 def test_schema_drift_stream_restart_keeps_emit_once(spark, sf_dir, tmp_path):
     """T6 checkpoint recovery for the drift monitor: a replay split
     across a restart must (a) reproduce the same snapshot census and
@@ -3258,6 +3331,7 @@ def test_schema_drift_stream_restart_keeps_emit_once(spark, sf_dir, tmp_path):
     assert bad.count() == 0
 
 
+@pytest.mark.slow
 def test_split_half_order_cols_gives_time_prefix(spark):
     """ADVICE r8 #5: split_half's default total order (ALL columns)
     interleaves per-key rows; order_cols lets a recovery scenario ask
