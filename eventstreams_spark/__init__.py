@@ -22,6 +22,11 @@ Layout:
 - sources/      custom Python data sources AND sinks (generator, spool, kafka, es_bulk)
 - plans/        physical-plan inspection/assertion helpers
 - __main__.py   CLI: run/validate pipeline configs
+- zipcache.py   stat-keyed zipimporter cache refresh, installed on import
 """
+
+from . import zipcache as _zipcache
+
+_zipcache.install()
 
 __version__ = "0.1.0"

@@ -19,25 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.spread import spread_to_cores
 from ..registry import query
-
-
-def _spread_for_python(df: DataFrame) -> DataFrame:
-    """Guarded round-robin repartition before a heavy Python stage
-    (guide §2.5/§4, the aho_corasick/poisson pattern): the bench's
-    single-row-group parquet plans every scan as ONE partition, which
-    pins the whole mapInPandas stage — here the per-doc media mint
-    (hundreds of md5 calls each) plus the decode pool that follows —
-    onto one Python worker. Repartition moves only the tiny pre-mint
-    rows (doc ids), and only when the scan's parallelism is below the
-    session's cores; a many-partition cluster scan pays nothing.
-    Round-robin is deterministic (sortBeforeRepartition) and every
-    downstream mint/decode is keyed per row, so results are
-    partitioning-independent."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
 
 
 @query(
@@ -2412,7 +2395,7 @@ def multimodal_ppm_decode_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out.append((str(d), b"P6\n24 16\n255\n" + body))
             yield pd.DataFrame(out, columns=["path", "content"])
 
-    media = _spread_for_python(docs).mapInPandas(
+    media = spread_to_cores(docs).mapInPandas(
         mint, "path string, content binary"
     )
     tiles = decode_ppm_blocks(media, key_col="path", content_col="content")
@@ -2525,7 +2508,7 @@ def multimodal_wav_decode_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out.append((str(d), wav))
             yield pd.DataFrame(out, columns=["path", "content"])
 
-    media = _spread_for_python(docs).mapInPandas(
+    media = spread_to_cores(docs).mapInPandas(
         mint, "path string, content binary"
     )
     wins = decode_wav_windows(media, key_col="path", content_col="content")
@@ -2675,7 +2658,7 @@ def multimodal_png_decode_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out.append((str(d), png))
             yield pd.DataFrame(out, columns=["path", "content"])
 
-    media = _spread_for_python(docs).mapInPandas(
+    media = spread_to_cores(docs).mapInPandas(
         mint, "path string, content binary"
     )
     tiles = decode_png_blocks(media, key_col="path", content_col="content")
@@ -2831,7 +2814,7 @@ def multimodal_gif_decode_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append((str(d), gif))
             yield pd.DataFrame(rows, columns=["path", "content"])
 
-    media = _spread_for_python(docs).mapInPandas(
+    media = spread_to_cores(docs).mapInPandas(
         mint, "path string, content binary"
     )
     tiles = decode_gif_blocks(media, key_col="path", content_col="content")
@@ -2943,7 +2926,7 @@ def multimodal_bmp_decode_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append((str(d), bytes(filehdr + info + body)))
             yield pd.DataFrame(rows, columns=["path", "content"])
 
-    media = _spread_for_python(docs).mapInPandas(
+    media = spread_to_cores(docs).mapInPandas(
         mint, "path string, content binary"
     )
     tiles = decode_bmp_blocks(media, key_col="path", content_col="content")

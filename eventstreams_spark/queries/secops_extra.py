@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.spread import spread_to_cores
 from ..registry import query
 
 
@@ -463,12 +464,8 @@ def aho_corasick_watchlist_scan(
     # (guide §2.5/§4): the single-row-group bench input plans the scan
     # as ONE partition, so without this the whole corpus walks the
     # automaton on one Python worker (measured 2.5 s warm at sf0.01 →
-    # ~0.7 s). The repartition moves only (doc_id, text) once and only
-    # when the scan's parallelism is below the session's cores — at
-    # cluster scale a many-partition scan skips it entirely.
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
+    # ~0.7 s).
+    docs = spread_to_cores(docs)
     ac = (
         docs.mapInPandas(scan, ac_schema)
         .groupBy("keyword")

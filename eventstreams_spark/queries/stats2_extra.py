@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.spread import spread_to_cores
 from ..registry import query
 
 _CENTS = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
@@ -470,16 +471,8 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pins all rows×B hashing to ONE task: measured 16.5 s warm at
     # sf0.01, ~1 s after. Round-robin repartition is deterministic
     # (sortBeforeRepartition) and the draw is keyed by (b, event_id),
-    # so results are partitioning-independent. Guarded like the
-    # aho_corasick scan spread: a many-partition cluster scan already
-    # has the parallelism and skips the extra exchange.
-    par = spark.sparkContext.defaultParallelism
-    fanout_base = (
-        base.repartition(par)
-        if base.rdd.getNumPartitions() < par
-        else base
-    )
-    hashed = fanout_base.select(
+    # so results are partitioning-independent.
+    hashed = spread_to_cores(base).select(
         "event_id", "cents",
         F.explode(F.sequence(F.lit(0), F.lit(_B_REPS - 1))).alias("b"),
     ).select(

@@ -50,6 +50,36 @@ def default_parallelism() -> int:
 
 
 _shipped_apps: set[str] = set()
+_package_zip: str | None = None
+
+
+def _write_package_zip() -> str:
+    """Zip this checkout's package into a fresh temp file, once per
+    process, removed at exit. A fixed per-pid name would let a later
+    process with the same pid (common in containers) ship an earlier
+    checkout's archive."""
+    global _package_zip
+    if _package_zip is None:
+        import atexit
+        import pathlib
+        import tempfile
+        import zipfile
+
+        pkg_root = pathlib.Path(__file__).resolve().parent
+        fd, zpath = tempfile.mkstemp(prefix="eventstreams_spark_pkg_", suffix=".zip")
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+            for p in sorted(pkg_root.rglob("*.py")):
+                z.write(p, arcname=f"eventstreams_spark/{p.relative_to(pkg_root)}")
+        atexit.register(_remove, zpath)
+        _package_zip = zpath
+    return _package_zip
+
+
+def _remove(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -70,19 +100,7 @@ def ship_package(spark: SparkSession) -> None:
         app = sc.applicationId
         if app in _shipped_apps:
             return
-        import pathlib
-        import tempfile
-        import zipfile
-
-        pkg_root = pathlib.Path(__file__).resolve().parent
-        zpath = os.path.join(
-            tempfile.gettempdir(), f"eventstreams_spark_pkg_{os.getpid()}.zip"
-        )
-        if not os.path.exists(zpath):
-            with zipfile.ZipFile(zpath, "w") as z:
-                for p in sorted(pkg_root.rglob("*.py")):
-                    z.write(p, arcname=f"eventstreams_spark/{p.relative_to(pkg_root)}")
-        sc.addPyFile(zpath)
+        sc.addPyFile(_write_package_zip())
         _shipped_apps.add(app)
     except Exception:  # pragma: no cover - e.g. Spark Connect sessions
         pass
@@ -103,13 +121,24 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    48g, capped at half of physical RAM so a local JVM's heap cannot
+    grow into the host's OOM killer."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    except (AttributeError, ValueError, OSError):  # no sysconf (non-POSIX)
+        half_mb = 0
+    return f"{min(48 << 10, half_mb)}m" if half_mb > 0 else "48g"
+
+
 def get_spark(app_name: str = "eventstreams-spark", cpus: int | None = None) -> SparkSession:
     cpus = cpus or default_parallelism()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
     )

@@ -442,19 +442,19 @@ def test_decode_bmp_blocks_padding_flip_and_bgr(spark):
 
 
 def test_spread_for_python_guard(spark):
-    """_spread_for_python (the mint-chain guard, r11): a frame whose
+    """spread_to_cores (the mint-chain guard, r11): a frame whose
     scan parallelism is below the session's cores is round-robin
     repartitioned to defaultParallelism so the Python mint/decode
     stage doesn't serialize onto one worker; an already-parallel
     frame passes through untouched (the cluster-scan case must pay
     nothing)."""
-    from eventstreams_spark.queries.longtail import _spread_for_python
+    from eventstreams_spark.operators.spread import spread_to_cores
 
     par = spark.sparkContext.defaultParallelism
     narrow = spark.createDataFrame(
         [(i,) for i in range(64)], "doc_id long"
     ).coalesce(1)
-    spread = _spread_for_python(narrow)
+    spread = spread_to_cores(narrow)
     assert spread.rdd.getNumPartitions() == par
     if par >= 2:
         assert "RoundRobinPartitioning" in spread._jdf.queryExecution().toString()
@@ -465,4 +465,4 @@ def test_spread_for_python_guard(spark):
     assert sorted(r.doc_id for r in spread.collect()) == list(range(64))
 
     wide = spark.range(0, 64).repartition(par)
-    assert _spread_for_python(wide) is wide
+    assert spread_to_cores(wide) is wide

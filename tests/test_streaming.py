@@ -3236,7 +3236,6 @@ def test_pair_rules_stream_state_recovers_across_restarts(spark, sf_dir, tmp_pat
     assert diff.count() == 0
 
 
-@pytest.mark.slow
 def test_schema_drift_stream_equals_batch_census(spark, sf_dir, tmp_path):
     """The live schema-drift monitor ≡ the batch json_schema_census:
     integer per-shape counts are batching-invariant, so after a full
