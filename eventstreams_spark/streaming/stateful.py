@@ -24,7 +24,10 @@ well-distributed; a hot key serializes through one Python worker.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
+import hashlib
+import json
 import math
 
 import pandas as pd
@@ -92,6 +95,26 @@ def throttle_stream(
     )
 
 
+def _accumulate_fold(
+    key: tuple,
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+    *,
+    key_col: str,
+    value_col: str,
+) -> Iterator[pd.DataFrame]:
+    """Per-key fold of :func:`accumulate_stream` (module-level, see
+    module notes)."""
+    total, count = state.get if state.exists else (0.0, 0)
+    for pdf in pdfs:
+        total += float(pdf[value_col].sum())
+        count += len(pdf)
+    state.update((total, count))
+    yield pd.DataFrame(
+        {key_col: [key[0]], "running_sum": [total], "running_count": [count]}
+    )
+
+
 def accumulate_stream(
     df: DataFrame,
     key_col: str,
@@ -102,21 +125,8 @@ def accumulate_stream(
     arbitrary state)."""
 
     out_schema = f"{key_col} string, running_sum double, running_count long"
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        total, count = state.get if state.exists else (0.0, 0)
-        for pdf in pdfs:
-            total += float(pdf[value_col].sum())
-            count += len(pdf)
-        state.update((total, count))
-        yield pd.DataFrame(
-            {key_col: [key[0]], "running_sum": [total], "running_count": [count]}
-        )
-
     return df.groupBy(key_col).applyInPandasWithState(
-        fn,
+        partial(_accumulate_fold, key_col=key_col, value_col=value_col),
         outputStructType=out_schema,
         stateStructType="total double, cnt long",
         outputMode="update",
@@ -1748,6 +1758,50 @@ def conformal_monitor_stream(
     )
 
 
+def _es_key(ident: int, w: int) -> float:
+    h = hashlib.md5(str(ident).encode()).hexdigest()[:8]
+    u = (int(h, 16) + 0.5) / 4294967296.0
+    return math.log(u) / w
+
+
+def _reservoir_es_fold(
+    key: tuple,
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+    *,
+    id_col: str,
+    weight_col: str,
+    k: int,
+) -> Iterator[pd.DataFrame]:
+    """Reservoir fold of :func:`reservoir_es_stream` (module-level,
+    see module notes)."""
+    if state.exists:
+        seq, blob = state.get
+        res = [tuple(r) for r in json.loads(blob)]
+    else:
+        seq, res = 0, []
+    for pdf in pdfs:
+        for ident, w in zip(
+            pdf[id_col].astype("int64"), pdf[weight_col].astype("int64")
+        ):
+            ident, w = int(ident), int(w)
+            res.append((_es_key(ident, w), ident, w))
+        # top-k under (key DESC, id ASC); rebuilt per batch from
+        # <= k + batch rows — membership is order-free
+        res.sort(key=lambda t: (-t[0], t[1]))
+        del res[k:]
+    seq += 1
+    state.update((seq, json.dumps([list(t) for t in res])))
+    yield pd.DataFrame(
+        {
+            "seq": [seq] * len(res),
+            "id": [t[1] for t in res],
+            "weight": [t[2] for t in res],
+            "es_key": [t[0] for t in res],
+        }
+    )
+
+
 def reservoir_es_stream(
     df: DataFrame,
     id_col: str,
@@ -1775,9 +1829,6 @@ def reservoir_es_stream(
     stratum key and take per-stratum reservoirs, which is what the
     batch stratified variant does with a partitioned window.
     """
-    import hashlib
-    import json
-
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -1795,45 +1846,11 @@ def reservoir_es_stream(
         ]
     )
 
-    def es_key(ident: int, w: int) -> float:
-        h = hashlib.md5(str(ident).encode()).hexdigest()[:8]
-        u = (int(h, 16) + 0.5) / 4294967296.0
-        return math.log(u) / w
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            seq, blob = state.get
-            res = [tuple(r) for r in json.loads(blob)]
-        else:
-            seq, res = 0, []
-        for pdf in pdfs:
-            for ident, w in zip(
-                pdf[id_col].astype("int64"), pdf[weight_col].astype("int64")
-            ):
-                ident, w = int(ident), int(w)
-                res.append((es_key(ident, w), ident, w))
-            # top-k under (key DESC, id ASC); rebuilt per batch from
-            # <= k + batch rows — membership is order-free
-            res.sort(key=lambda t: (-t[0], t[1]))
-            del res[k:]
-        seq += 1
-        state.update((seq, json.dumps([list(t) for t in res])))
-        yield pd.DataFrame(
-            {
-                "seq": [seq] * len(res),
-                "id": [t[1] for t in res],
-                "weight": [t[2] for t in res],
-                "es_key": [t[0] for t in res],
-            }
-        )
-
     return (
         df.withColumn("_g", F.lit("all"))
         .groupBy("_g")
         .applyInPandasWithState(
-            fn,
+            partial(_reservoir_es_fold, id_col=id_col, weight_col=weight_col, k=k),
             outputStructType=out_schema,
             stateStructType="seq long, blob string",
             outputMode="update",
@@ -2402,6 +2419,61 @@ def session_timeout_stream(
     )
 
 
+def _psi_drift_fold(
+    key: tuple,
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+    *,
+    key_col: str,
+    value_col: str,
+    ts_col: str,
+    cutoff: pd.Timestamp,
+    n_buckets: int,
+    width: float,
+    threshold: float,
+) -> Iterator[pd.DataFrame]:
+    """Per-key histogram fold of :func:`psi_drift_stream`
+    (module-level, see module notes)."""
+    if state.exists:
+        seq, ref_j, cur_j = state.get
+        ref = json.loads(ref_j)
+        cur = json.loads(cur_j)
+    else:
+        seq = 0
+        ref = [0] * n_buckets
+        cur = [0] * n_buckets
+    for pdf in pdfs:
+        is_ref = (pdf[ts_col] < cutoff).to_numpy()
+        vals = pdf[value_col].to_numpy(dtype="float64")
+        for v, r in zip(vals, is_ref):
+            if math.isnan(v):
+                continue
+            b = min(n_buckets - 1, max(0, int(v // width)))
+            if r:
+                ref[b] += 1
+            else:
+                cur[b] += 1
+    seq += 1
+    state.update((seq, json.dumps(ref), json.dumps(cur)))
+    n_ref, n_cur = sum(ref), sum(cur)
+    half = 0.5 * n_buckets
+    psi = 0.0
+    for b in range(n_buckets):
+        p = (ref[b] + 0.5) / (n_ref + half)
+        q = (cur[b] + 0.5) / (n_cur + half)
+        psi += (p - q) * math.log(p / q)
+    yield pd.DataFrame(
+        {
+            key_col: [key[0]],
+            "seq": [seq],
+            "n_ref": [n_ref],
+            "n_cur": [n_cur],
+            "psi": [psi],
+            "drift_flag": [psi > threshold],
+        }
+    )
+
+
 def psi_drift_stream(
     df: DataFrame,
     key_col: str,
@@ -2434,64 +2506,63 @@ def psi_drift_stream(
     the ref histogram for a DGIM-style decaying one; the emit logic
     is unchanged.
     """
-    import json
-    import math
-
     out_schema = (
         f"{key_col} string, seq long, n_ref long, n_cur long, "
         "psi double, drift_flag boolean"
     )
-    cutoff = pd.Timestamp(ref_cutoff)
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            seq, ref_j, cur_j = state.get
-            ref = json.loads(ref_j)
-            cur = json.loads(cur_j)
-        else:
-            seq = 0
-            ref = [0] * n_buckets
-            cur = [0] * n_buckets
-        for pdf in pdfs:
-            is_ref = (pdf[ts_col] < cutoff).to_numpy()
-            vals = pdf[value_col].to_numpy(dtype="float64")
-            for v, r in zip(vals, is_ref):
-                if math.isnan(v):
-                    continue
-                b = min(n_buckets - 1, max(0, int(v // width)))
-                if r:
-                    ref[b] += 1
-                else:
-                    cur[b] += 1
-        seq += 1
-        state.update((seq, json.dumps(ref), json.dumps(cur)))
-        n_ref, n_cur = sum(ref), sum(cur)
-        half = 0.5 * n_buckets
-        psi = 0.0
-        for b in range(n_buckets):
-            p = (ref[b] + 0.5) / (n_ref + half)
-            q = (cur[b] + 0.5) / (n_cur + half)
-            psi += (p - q) * math.log(p / q)
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "seq": [seq],
-                "n_ref": [n_ref],
-                "n_cur": [n_cur],
-                "psi": [psi],
-                "drift_flag": [psi > threshold],
-            }
-        )
-
+    fold = partial(
+        _psi_drift_fold,
+        key_col=key_col,
+        value_col=value_col,
+        ts_col=ts_col,
+        cutoff=pd.Timestamp(ref_cutoff),
+        n_buckets=n_buckets,
+        width=width,
+        threshold=threshold,
+    )
     return df.groupBy(key_col).applyInPandasWithState(
-        fn,
+        fold,
         outputStructType=out_schema,
         stateStructType="seq long, ref string, cur string",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+
+
+def _pair_rules_fold(key, pdfs, state: GroupState, *, basket_col: str, item_col: str):
+    """Per-basket emit-once fold of :func:`pair_rules_stream`
+    (module-level, see module notes)."""
+    items_s = state.get[0] if state.exists else ""
+    items = set(items_s.split("|")) if items_s else set()
+    rows: list[tuple[str, str, str]] = []
+    for pdf in pdfs:
+        for s in pdf[item_col].astype(str).values:
+            if "|" in s:
+                # the delimiter invariant is load-bearing: a '|'
+                # inside an item would silently split into phantom
+                # items on the next batch's state decode, breaking
+                # emit-once with no error — fail loud instead.
+                raise ValueError(
+                    "pair_rules_stream: item %r contains the state "
+                    "delimiter '|'" % s
+                )
+            if s in items:
+                continue
+            rows.append(("item", s, ""))
+            rows.extend(
+                ("pair", min(s, t), max(s, t)) for t in items
+            )
+            items.add(s)
+    state.update(("|".join(sorted(items)),))
+    if rows:
+        yield pd.DataFrame(
+            {
+                basket_col: [key[0]] * len(rows),
+                "kind": [r[0] for r in rows],
+                "a": [r[1] for r in rows],
+                "b": [r[2] for r in rows],
+            }
+        )
 
 
 def pair_rules_stream(
@@ -2534,41 +2605,8 @@ def pair_rules_stream(
         ]
     )
 
-    def fn(key, pdfs, state: GroupState):
-        items_s = state.get[0] if state.exists else ""
-        items = set(items_s.split("|")) if items_s else set()
-        rows: list[tuple[str, str, str]] = []
-        for pdf in pdfs:
-            for s in pdf[item_col].astype(str).values:
-                if "|" in s:
-                    # the delimiter invariant is load-bearing: a '|'
-                    # inside an item would silently split into phantom
-                    # items on the next batch's state decode, breaking
-                    # emit-once with no error — fail loud instead.
-                    raise ValueError(
-                        "pair_rules_stream: item %r contains the state "
-                        "delimiter '|'" % s
-                    )
-                if s in items:
-                    continue
-                rows.append(("item", s, ""))
-                rows.extend(
-                    ("pair", min(s, t), max(s, t)) for t in items
-                )
-                items.add(s)
-        state.update(("|".join(sorted(items)),))
-        if rows:
-            yield pd.DataFrame(
-                {
-                    basket_col: [key[0]] * len(rows),
-                    "kind": [r[0] for r in rows],
-                    "a": [r[1] for r in rows],
-                    "b": [r[2] for r in rows],
-                }
-            )
-
     return df.groupBy(basket_col).applyInPandasWithState(
-        fn,
+        partial(_pair_rules_fold, basket_col=basket_col, item_col=item_col),
         outputStructType=out_schema,
         stateStructType="items string",
         outputMode="append",

@@ -1,0 +1,151 @@
+"""The plan digest's parser and comparison (eventstreams_spark/plans),
+over literal plan strings and digest records: no Spark session.
+
+tests/test_scan_budgets.py applies both to every registry query
+against tests/plan_digest.json.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+
+import __spark_entry__ as entry
+from eventstreams_spark.plans import DIGEST_GENERATOR as GENERATOR
+from eventstreams_spark.plans import digest_mismatches, digest_plan_text
+
+DIGEST_PATH = os.path.join(os.path.dirname(__file__), "plan_digest.json")
+
+with open(DIGEST_PATH) as _f:
+    DIGEST = json.load(_f)
+
+QUERIES = entry.queries()
+
+
+def test_digest_names_only_registry_queries():
+    stale = sorted(set(DIGEST["queries"]) - set(QUERIES))
+    stale += sorted(set(DIGEST["parallelism_dependent"]) - set(QUERIES))
+    assert not stale, f"digest entries for queries not in the registry: {stale}; run `{GENERATOR}`"
+
+
+# -- the parser, over literal plan strings (no Spark) --------------------
+
+_PLAN = """\
+AdaptiveSparkPlan isFinalPlan=false
++- TakeOrderedAndProject(limit=10, orderBy=[n#3L DESC NULLS LAST], output=[k#1,n#3L])
+   +- HashAggregate(keys=[k#1], functions=[count(1)], output=[k#1, n#3L])
+      +- Exchange hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS, [plan_id=20]
+         +- HashAggregate(keys=[k#1], functions=[partial_count(1)], output=[k#1, count#5L])
+            +- BroadcastHashJoin [k#1], [k#2], Inner, BuildRight, false
+               :- Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=11]
+               :  +- FileScan parquet [k#1] Batched: true, Format: Parquet, ReadSchema: struct<k:string>
+               +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, string, true]),false), [plan_id=15]
+                  +- BroadcastNestedLoopJoin BuildRight, Cross
+                     :- InMemoryTableScan [k#2]
+                     :     +- InMemoryRelation [k#2], StorageLevel(disk, memory, deserialized, 1 replicas)
+                     :           +- *(1) ColumnarToRow
+                     :              +- FileScan parquet [k#2] Batched: true, Format: Parquet, ReadSchema: struct<k:string>
+                     +- BroadcastExchange IdentityBroadcastMode, [plan_id=14]
+                        +- Scan ExistingRDD[n#9L]
+"""
+
+
+def test_digest_counts_each_column():
+    assert digest_plan_text(_PLAN) == {
+        "exchange.broadcast": 2,
+        "exchange.hash": 1,
+        "join.BroadcastHashJoin": 1,
+        "join.BroadcastNestedLoopJoin": 1,
+        "op.HashAggregate": 2,
+        "op.InMemoryTableScan": 1,
+        "op.TakeOrderedAndProject": 1,
+        "scan.parquet": 2,
+        "scan.rdd": 1,
+    }
+
+
+def test_digest_reads_operators_behind_codegen_marker():
+    plan = "*(2) Project [a#1]\n+- *(2) Window [rank(a#1) windowspecdefinition(...)]\n   +- *(1) Generate explode(xs#2), [a#1]\n"
+    assert digest_plan_text(plan) == {"op.Generate": 1, "op.Window": 1}
+
+
+def test_digest_skips_repartition_by_num_exchanges_of_any_kind():
+    plan = (
+        "Exchange SinglePartition, REPARTITION_BY_NUM, [plan_id=1]\n"
+        "+- Exchange RoundRobinPartitioning(8), REPARTITION_BY_NUM, [plan_id=2]\n"
+        "   +- Exchange hashpartitioning(k#1, 4), REPARTITION_BY_NUM, [plan_id=3]\n"
+        "      +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=4]\n"
+        "         +- Exchange rangepartitioning(k#1 ASC NULLS FIRST, 4), ENSURE_REQUIREMENTS, [plan_id=5]\n"
+    )
+    assert digest_plan_text(plan) == {"exchange.range": 1, "exchange.single": 1}
+
+
+def test_digest_counts_broadcast_exchange_and_nested_loop_apart():
+    plan = (
+        "BroadcastNestedLoopJoin BuildRight, Inner\n"
+        ":- CartesianProduct\n"
+        "+- BroadcastExchange IdentityBroadcastMode, [plan_id=1]\n"
+    )
+    assert digest_plan_text(plan) == {
+        "exchange.broadcast": 1,
+        "join.BroadcastNestedLoopJoin": 1,
+        "join.CartesianProduct": 1,
+    }
+
+
+def test_digest_counts_file_scans_not_formatted_scan_lines():
+    plan = (
+        "Union\n"
+        ":- FileScan parquet [a#1] Batched: true, Location: InMemoryFileIndex[file:/d/Scan parquet]\n"
+        "+- Scan parquet  (2)\n"
+    )
+    assert digest_plan_text(plan) == {"scan.parquet": 1}
+
+
+def test_digest_names_python_eval_nodes():
+    plan = (
+        "MapInPandas probe(id#1), [pid#2L], false\n"
+        "+- ArrowEvalPython [f(x#3)#4], [pythonUDF0#5], 200\n"
+        "   +- BatchEvalPython [g(x#3)#6], [pythonUDF1#7]\n"
+        "      +- FlatMapGroupsInPandasWithState fold(k#8), [k#8]\n"
+    )
+    assert digest_plan_text(plan) == {
+        "python.ArrowEvalPython": 1,
+        "python.BatchEvalPython": 1,
+        "python.FlatMapGroupsInPandasWithState": 1,
+        "python.MapInPandas": 1,
+    }
+
+
+_FILE = {
+    "parallelism": 4,
+    "parallelism_dependent": {"par_q": "reads defaultParallelism"},
+    "queries": {"q": {"scan.parquet": 1, "join.BroadcastHashJoin": 2}, "par_q": {"scan.parquet": 2, "op.Window": 1}},
+}
+
+
+def test_missing_query_names_the_generator():
+    (msg,) = digest_mismatches("new_q", {"scan.parquet": 1}, _FILE, 4)
+    assert "new_q" in msg and f"{GENERATOR} new_q" in msg
+
+
+def test_mismatch_names_query_and_column():
+    got = {"scan.parquet": 1, "join.BroadcastHashJoin": 1, "join.SortMergeJoin": 1}
+    msgs = digest_mismatches("q", got, _FILE, 4)
+    assert len(msgs) == 2
+    assert all(m.startswith("q: join.") for m in msgs)
+    assert digest_mismatches("q", dict(_FILE["queries"]["q"]), _FILE, 4) == []
+
+
+def test_invariants_fail_even_when_recorded():
+    rec = {"queries": {"q": {"join.CartesianProduct": 1, "exchange.range": 1}}, "parallelism_dependent": {}, "parallelism": 4}
+    msgs = digest_mismatches("q", dict(rec["queries"]["q"]), rec, 4)
+    assert [m.split(" =")[0] for m in msgs] == ["q: join.CartesianProduct", "q: exchange.range"]
+
+
+def test_parallelism_dependent_query_compares_scans_elsewhere():
+    drifted = {"scan.parquet": 2, "op.Window": 3}
+    assert digest_mismatches("par_q", drifted, _FILE, 1) == []
+    assert digest_mismatches("par_q", drifted, _FILE, 4) == ["par_q: op.Window planned 3, recorded 1 (intended? `python tools/gen_plan_digest.py par_q`)"]
+    assert digest_mismatches("par_q", {"scan.parquet": 3, "op.Window": 1}, _FILE, 1)
+    assert digest_mismatches("par_q", {"scan.parquet": 2, "join.CartesianProduct": 1}, _FILE, 1)

@@ -5,6 +5,17 @@ These lock in the physical-plan properties that make each operator
 scan, TakeOrderedAndProject for top-k, two-phase aggregation, and the
 absence of cartesian products outside the explicitly-quarantined
 brute-force baselines.
+
+Registry-wide, tests/test_scan_budgets.py diffs every query's plan
+digest (scans, exchanges by kind, joins by operator, Python-eval
+nodes, window/aggregate/top-k operators) against its line in
+tests/plan_digest.json, and holds two invariants for all of them: no
+CartesianProduct and no range-partitioning exchange. The tests here
+name the reason behind one query's shape and check what a count does
+not hold: pushed filters, pruned read schemas, join types, operator
+order and collected results. After an intended plan change, update the
+test here and regenerate the digest line with
+`python tools/gen_plan_digest.py <query>`.
 """
 
 from __future__ import annotations

@@ -1,21 +1,33 @@
-"""Registry-wide lineage-fan-out tripwire (SCALE.md §12, VERDICT r4
-#7): every registry query's physical plan must not contain MORE
-parquet scans than the budget recorded in scan_budgets.json.
+"""Registry-wide plan digest (SCALE.md §15, eventstreams_spark/plans).
 
-The round-4 lesson this generalizes: every extra consumer of a
-derived frame re-derives it back to the scan unless the frame is
-persisted — Kaplan-Meier risk sets cost 4 fact scans until the
-suffix-sum rewrite (→1), the matrix profile 4 until windows carried
-their values as arrays (→1). The hand-written plan tests catch this
-for ~200 queries; this gate covers ALL of them: an edit that adds a
-consumer without persisting (or un-persists a shared frame) grows
-the scan count and fails here, at plan-build time, before any bench
-regression.
+Every registry query is built once (cache cleared,
+``spark.sql.shuffle.partitions`` pinned to the digest's recorded
+parallelism and restored afterwards) and its executed plan's digest
+(`plan_digest`: parquet scans, checkpoint scans, exchanges by kind,
+joins by operator, Python-eval nodes, window/aggregate/top-k/
+generate/expand/cache operators) must EQUAL its line in
+plan_digest.json. A changed count is a changed plan: a join that
+falls back to sort-merge, a new consumer of an unpersisted frame
+(one more parquet scan: the round-4 lineage fan-out lesson), a UDF
+where a JVM expression was. If the change is intended, regenerate the
+entry (`python tools/gen_plan_digest.py <query>`) and commit the
+one-line diff; a query with no entry fails the same way.
 
-A query missing from the budget file fails too — adding a query
-requires recording its budget (`python tools/gen_scan_budgets.py
-<name>`), which is the moment to LOOK at the count and ask whether
-it should be 1.
+The test names date from when this gate recorded parquet scans only
+(one budget per query); the scan count is now the ``scan.parquet``
+column of the digest, compared for equality like every other column.
+
+Two invariants hold for every registry query, with no allowlist: no
+CartesianProduct and no range-partitioning exchange (a global sort).
+"No SinglePartition exchange" is NOT an invariant: 157 queries end a
+global aggregate with ``Exchange SinglePartition, ENSURE_REQUIREMENTS``,
+which moves one partial row per partition and is cheap and correct.
+It is recorded as the ``exchange.single`` column only.
+
+Queries listed under "parallelism_dependent" read
+``defaultParallelism`` in their builders, so their plans follow the
+core count; at another core count only their ``scan.`` columns and
+the invariants are compared.
 """
 
 from __future__ import annotations
@@ -26,45 +38,34 @@ import os
 import pytest
 
 import __spark_entry__ as entry
+from eventstreams_spark.plans import DIGEST_GENERATOR, digest_mismatches, plan_digest
 
+DIGEST_PATH = os.path.join(os.path.dirname(__file__), "plan_digest.json")
 
-def count_parquet_scans(df) -> int:
-    """Parquet file-scan leaves in the physical plan (same counter
-    as tools/gen_scan_budgets.py — keep the two in sync)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # "Scan parquet " is a substring of "FileScan parquet " — count
-    # the FileScan form only (the one executedPlan().toString() emits)
-    return plan.count("FileScan parquet")
-
-
-BUDGETS_PATH = os.path.join(os.path.dirname(__file__), "scan_budgets.json")
-
-if os.path.exists(BUDGETS_PATH):
-    with open(BUDGETS_PATH) as _f:
-        BUDGETS = json.load(_f)
-else:  # missing file = every query unbudgeted; the gate below fails
-    BUDGETS = {}
+with open(DIGEST_PATH) as _f:
+    DIGEST = json.load(_f)
 
 QUERIES = entry.queries()
 
 
 def test_every_query_has_a_budget():
-    missing = sorted(set(QUERIES) - set(BUDGETS))
-    assert not missing, (
-        f"queries without a scan budget (run tools/gen_scan_budgets.py "
-        f"{' '.join(missing)}): {missing}"
-    )
+    missing = sorted(set(QUERIES) - set(DIGEST["queries"]))
+    assert not missing, f"queries without a plan digest (run `{DIGEST_GENERATOR} {' '.join(missing)}`): {missing}"
+
+
+@pytest.fixture(scope="module")
+def pinned_partitions(spark):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(DIGEST["parallelism"]))
+    yield
+    spark.conf.set(key, before)
+    spark.catalog.clearCache()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_scan_count_within_budget(spark, sf_dir, name):
-    if name not in BUDGETS:
-        pytest.skip("no budget recorded (test_every_query_has_a_budget fails)")
+def test_scan_count_within_budget(spark, sf_dir, pinned_partitions, name):
     spark.catalog.clearCache()
-    df = QUERIES[name](spark, sf_dir)
-    got = count_parquet_scans(df)
-    assert got <= BUDGETS[name], (
-        f"{name}: {got} parquet scans, budget {BUDGETS[name]} — a new "
-        f"consumer re-derives shared lineage back to the scan; persist "
-        f"the shared frame or restructure (SCALE.md §12)"
-    )
+    got = plan_digest(QUERIES[name](spark, sf_dir))
+    problems = digest_mismatches(name, got, DIGEST, spark.sparkContext.defaultParallelism)
+    assert not problems, "\n".join(problems)

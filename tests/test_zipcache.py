@@ -159,27 +159,9 @@ def test_default_driver_memory_fits_the_host():
     assert 0 < int(mem[:-1]) <= min(48 << 10, total_mb // 2)
 
 
-def test_worker_that_ran_drift_fold_has_patched_method(spark, tmp_path):
-    """The drift fold is module-level, so unpickling it imports the
-    engine on the worker, which installs the patch: every worker that
-    has loaded the engine then reports the stat-keyed method."""
-    from eventstreams_spark.streaming.stateful import schema_drift_stream
-
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "a.txt").write_text("".join(
-        '{"a": 1}\n' if i % 2 else '{"b": 2}\n' for i in range(40)
-    ))
-    q = (
-        schema_drift_stream(spark.readStream.text(str(src)), "value")
-        .writeStream.format("memory").queryName("t_zipcache_drift")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {r.key_set: r.total_rows for r in spark.table("t_zipcache_drift").collect()}
-    assert got == {"a": 20, "b": 20}
+def _assert_engine_workers_patched(spark):
+    """Every Python worker that has loaded the engine reports the
+    stat-keyed method, and at least one has loaded it."""
 
     def probe(it):
         import sys
@@ -205,3 +187,51 @@ def test_worker_that_ran_drift_fold_has_patched_method(spark, tmp_path):
     assert engine_workers, seen
     if sys.version_info < (3, 13):
         assert all(engine_workers), seen
+
+
+def test_worker_that_ran_drift_fold_has_patched_method(spark, tmp_path):
+    """The drift fold is module-level, so unpickling it imports the
+    engine on the worker, which installs the patch: every worker that
+    has loaded the engine then reports the stat-keyed method."""
+    from eventstreams_spark.streaming.stateful import schema_drift_stream
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.txt").write_text("".join(
+        '{"a": 1}\n' if i % 2 else '{"b": 2}\n' for i in range(40)
+    ))
+    q = (
+        schema_drift_stream(spark.readStream.text(str(src)), "value")
+        .writeStream.format("memory").queryName("t_zipcache_drift")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = {r.key_set: r.total_rows for r in spark.table("t_zipcache_drift").collect()}
+    assert got == {"a": 20, "b": 20}
+    _assert_engine_workers_patched(spark)
+
+
+def test_worker_that_ran_accumulate_fold_has_patched_method(spark, tmp_path):
+    """The accumulate fold is a module-level function bound with
+    functools.partial, so it too is unpickled by reference and its
+    worker imports the engine."""
+    from eventstreams_spark.streaming.stateful import accumulate_stream
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.csv").write_text("".join(f"{'xy'[i % 2]},{i}\n" for i in range(40)))
+    stream = spark.readStream.schema("k string, v double").csv(str(src))
+    q = (
+        accumulate_stream(stream, "k", "v")
+        .writeStream.format("memory").queryName("t_zipcache_acc")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = {r.k: (r.running_sum, r.running_count) for r in spark.table("t_zipcache_acc").collect()}
+    assert got == {"x": (380.0, 20), "y": (400.0, 20)}
+    _assert_engine_workers_patched(spark)
