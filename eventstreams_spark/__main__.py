@@ -16,22 +16,27 @@ Config shape (YAML or JSON):
     sink: {format: parquet, path: /data/out,
            checkpointLocation: /data/ck, availableNow: true}
 
-Multi-output fan-out (Logstash `output { if ... }`): replace `sink`
-with a `sinks` list; each entry takes an optional per-sink `filter`
-expression (rows may match several sinks — filters are independent):
+Multi-output (Logstash `output { if ... }`): replace `sink` with a
+`sinks` list; each entry takes an optional per-sink `filter`
+expression (rows may match several sinks — filters are independent).
+A `dlq` output takes the dead-letter rows, and the sinks then get the
+healthy rows:
 
     sinks:
       - {filter: "status_class = 'server_error'", format: parquet,
-         path: /data/errors}
+         path: /data/errors, checkpointLocation: /data/ck,
+         availableNow: true}
       - {format: parquet, path: /data/all}
+    dlq: {format: parquet, path: /data/dlq}
 
-Streaming fan-out defaults to one query per sink (independent
-checkpoints + exactly-once file logs). Add `fanout:` for the
-single-pass shape — ONE foreachBatch query, each micro-batch
-persisted and written to every sink from the cache (source scanned
-once per batch; sink writes at-least-once on retry):
-
-    fanout: {checkpointLocation: /data/ck, availableNow: true}
+Every output is written from one pass over the pipeline's rows: with
+2 or more outputs the frame (or each micro-batch) is persisted once
+and every output reads the cache. A streaming config with one output
+runs Spark's own `writeStream` sink. A streaming config with 2 or more
+outputs runs ONE foreachBatch query, whose checkpointLocation,
+queryName and availableNow come from the primary output (`sink`, else
+`sinks[0]`); each output then commits each micro-batch exactly once
+(`_commit_batch`), so every output needs a `path` and a file format.
 
 Custom sources (event_generator / event_spool / es_bulk) are
 registered automatically so configs can name them like built-ins.
@@ -62,14 +67,87 @@ def cmd_validate(config: dict) -> None:
     Pipeline.from_config(config)  # compile errors surface here
     if "source" not in config:
         raise SystemExit("config missing 'source'")
+    _outputs(config)
+    print("config OK:", len(config.get("steps", [])), "steps")
+
+
+_CONFIG_KEYS = frozenset({"source", "steps", "sink", "sinks", "dlq"})
+
+# Streaming formats that write no files: a micro-batch written to them
+# cannot be staged and renamed, so only a single-output config may use
+# them (through Spark's own sink).
+_PATHLESS = ("memory", "console", "foreachBatch")
+
+
+def _select(flt: str | None, side: int | None):
+    """The rows one output writes: the healthy (``side`` 0) or dead
+    (1) rows of the dead-letter split, or all rows (None), then the
+    output's own ``filter``."""
+
+    def select(frame):
+        from .pipeline import split_dead_letters
+
+        if side is not None:
+            frame = split_dead_letters(frame)[side]
+        return frame.filter(flt) if flt else frame
+
+    return select
+
+
+def _outputs(config: dict) -> list[tuple]:
+    """``(name, select, conf)`` per output of ``config``: ``sink`` or
+    each ``sinks`` entry, then ``dlq``. The first is the primary
+    output. Raises SystemExit for a config `validate` rejects."""
+    unknown = sorted(set(config) - _CONFIG_KEYS)
+    if unknown:
+        raise SystemExit(
+            f"unknown config key(s) {unknown}; known: {sorted(_CONFIG_KEYS)}. "
+            "A streaming config with 2 or more outputs always runs ONE "
+            "foreachBatch query that writes each output exactly once, with the "
+            "checkpointLocation, queryName and availableNow of the primary "
+            "output (`sink`, else `sinks[0]`)"
+        )
     if "sink" not in config and "sinks" not in config:
         raise SystemExit("config missing 'sink' (or 'sinks')")
     if "sink" in config and "sinks" in config:
         raise SystemExit("config has both 'sink' and 'sinks'; pick one")
-    for i, s in enumerate(config.get("sinks") or []):
-        if "format" not in s:
-            raise SystemExit(f"sinks[{i}] missing 'format'")
-    print("config OK:", len(config.get("steps", [])), "steps")
+    side = 0 if "dlq" in config else None
+    named = [("sink", config["sink"])] if "sink" in config else [
+        (f"sinks.{i}", s) for i, s in enumerate(config["sinks"])
+    ]
+    if "dlq" in config:
+        named.append(("dlq", config["dlq"]))
+    outputs = []
+    for name, conf in named:
+        if "format" not in conf:
+            raise SystemExit(f"{name} missing 'format'")
+        conf = dict(conf)
+        flt = conf.pop("filter", None)
+        outputs.append((name, _select(flt, 1 if name == "dlq" else side), conf))
+    if config["source"].get("stream") and len(outputs) > 1:
+        primary = outputs[0][2]
+        if "checkpointLocation" not in primary:
+            raise SystemExit(
+                f"{outputs[0][0]}: a streaming config with 2 or more outputs "
+                "needs a checkpointLocation on its primary output"
+            )
+        for name, _, conf in outputs:
+            if conf["format"] in _PATHLESS or "path" not in conf:
+                raise SystemExit(
+                    f"{name}: format '{conf['format']}'"
+                    + ("" if "path" in conf else " without a path")
+                    + " cannot be one of 2 or more streaming outputs; each output "
+                    "commits its micro-batch files by rename, so it needs a file "
+                    "format and a path"
+                )
+            if "availableNow" in conf and bool(conf["availableNow"]) != bool(
+                primary.get("availableNow")
+            ):
+                raise SystemExit(
+                    f"{name}: availableNow differs from the primary output's; "
+                    "the one streaming query takes its trigger from the primary output"
+                )
+    return outputs
 
 
 def _compile(config: dict, app_name: str):
@@ -89,116 +167,161 @@ def _compile(config: dict, app_name: str):
     return spark, pipe.apply(df)
 
 
-def _fanout_single_pass(out, sinks: list[dict], fanout_conf: dict):
-    """Single-pass streaming fan-out: ONE foreachBatch query, the
-    micro-batch persisted once, every sink written from the cache —
-    the source/parse chain runs once per batch no matter how many
-    sinks. The fan-out query owns the ONE checkpoint
-    (``fanout.checkpointLocation``); per-sink checkpointLocation /
-    availableNow keys are rejected (they belong to the
-    one-query-per-sink shape). Sink writes inside foreachBatch are
-    at-least-once on batch retry (Logstash-output semantics); use the
-    default per-sink-query shape when per-sink exactly-once file
-    logs matter more than single-scan ingest."""
+def _write_outputs(frame, outputs: list[tuple], batch_id: int | None = None) -> None:
+    """Write every output of ``frame`` from one pass: with 2 or more
+    outputs the frame is persisted once and each output filters the
+    cached rows, so the source scan and the step chain run once. A
+    batch ``frame`` is written with `write_sink`; a micro-batch
+    (``batch_id`` set) is committed per output by `_commit_batch`."""
     from .pipeline import write_sink
 
-    sink_confs = []
-    for i, sconf in enumerate(sinks):
-        sconf = dict(sconf)
-        for bad in ("checkpointLocation", "availableNow"):
-            if bad in sconf:
-                raise SystemExit(
-                    f"sinks[{i}]: '{bad}' belongs on `fanout:` when "
-                    "single-pass fan-out is enabled"
-                )
-        sink_confs.append(sconf)
+    shared = len(outputs) > 1
+    if shared:
+        frame = frame.persist()
+    try:
+        for name, select, conf in outputs:
+            if batch_id is None:
+                write_sink(select(frame), conf)
+            else:
+                _commit_batch(select(frame), name, conf, batch_id)
+    finally:
+        if shared:
+            frame.unpersist()
 
-    def fn(batch_df, batch_id):
-        batch_df.persist()
-        try:
-            for sconf in sink_confs:
-                sconf = dict(sconf)
-                flt = sconf.pop("filter", None)
-                branch = batch_df.filter(flt) if flt else batch_df
-                sconf.setdefault("mode", "append")
-                write_sink(branch, sconf)
-        finally:
-            batch_df.unpersist()
 
+def _start_stream(out, outputs: list[tuple]):
+    """Start the ONE streaming query that writes ``outputs``: Spark's
+    own sink for a single output (exactly-once through its sink log),
+    else a foreachBatch query over `_write_outputs` that commits every
+    output under the primary output's checkpoint."""
+    from .pipeline import write_sink
+
+    if len(outputs) == 1:
+        _, select, conf = outputs[0]
+        return write_sink(select(out), conf)
+    fs = _HadoopFs(out.sparkSession)
+    for name, _, conf in outputs:
+        if fs.exists(f"{conf['path']}/_spark_metadata"):
+            raise SystemExit(
+                f"{name}: {conf['path']} holds _spark_metadata, the log of a "
+                "streaming file sink; readers of that directory list only the "
+                "files in that log and would ignore every file this run commits. "
+                "Write this output to a new path."
+            )
+    primary = outputs[0][2]
+    committed = [
+        (name, select, {**conf, "checkpointLocation": primary["checkpointLocation"]})
+        for name, select, conf in outputs
+    ]
+    query = {k: primary[k] for k in ("checkpointLocation", "queryName", "availableNow") if k in primary}
     return write_sink(
-        out, {"format": "foreachBatch", "function": fn, **fanout_conf}
+        out,
+        {"format": "foreachBatch",
+         "function": lambda frame, batch_id: _write_outputs(frame, committed, batch_id),
+         **query},
     )
 
 
-def cmd_run(config: dict, await_seconds: int | None) -> None:
-    from .pipeline import split_dead_letters, write_sink
+class _HadoopFs:
+    """The Hadoop FileSystem calls of the commit protocol, each on the
+    FileSystem of its own path (local, HDFS or an object store)."""
 
+    def __init__(self, spark) -> None:
+        self._jvm = spark.sparkContext._jvm
+        self._conf = spark._jsparkSession.sessionState().newHadoopConf()
+
+    def _at(self, path: str):
+        p = self._jvm.org.apache.hadoop.fs.Path(path)
+        return p.getFileSystem(self._conf), p
+
+    def exists(self, path: str) -> bool:
+        fs, p = self._at(path)
+        return fs.exists(p)
+
+    def glob(self, pattern: str) -> list[str]:
+        """The paths matching ``pattern`` (none if its directory is absent)."""
+        fs, p = self._at(pattern)
+        return [st.getPath().toString() for st in fs.globStatus(p) or []]
+
+    def rename(self, src: str, dst: str) -> None:
+        fs, p = self._at(src)
+        if not fs.rename(p, self._at(dst)[1]):
+            raise OSError(f"rename {src} -> {dst} failed")
+
+    def delete(self, path: str) -> None:
+        fs, p = self._at(path)
+        fs.delete(p, True)
+
+    def read(self, path: str) -> str:
+        fs, p = self._at(path)
+        stream = fs.open(p)
+        try:
+            return self._jvm.java.util.Scanner(stream, "UTF-8").useDelimiter("\\A").next()
+        finally:
+            stream.close()
+
+    def touch(self, path: str) -> None:
+        fs, p = self._at(path)
+        fs.create(p, True).close()
+
+
+def _commit_batch(df, name: str, conf: dict, batch_id: int) -> None:
+    """Write micro-batch ``batch_id`` of output ``name`` exactly once.
+
+    The commit is marked by the file ``<checkpoint>/outputs/<name>/<batch_id>``;
+    a replayed batch whose marker exists is skipped. Otherwise the batch
+    is staged under ``<path>/_staging/<batch_id>`` (readers skip
+    ``_``-prefixed names), its files are renamed into ``<path>`` with the
+    prefix ``<query id>-b<batch_id>-``, and the marker is written. A
+    replay that finds no marker first deletes the files with its own
+    prefix, left by an attempt that failed between rename and marker;
+    files of other queries or batches are never touched. The query id
+    is the one in ``<checkpoint>/metadata``, stable across restarts."""
+    from .pipeline import write_sink
+
+    fs = _HadoopFs(df.sparkSession)
+    ck = conf["checkpointLocation"]
+    marker = f"{ck}/outputs/{name}/{batch_id}"
+    if fs.exists(marker):
+        return
+    path = conf["path"]
+    prefix = f"{json.loads(fs.read(f'{ck}/metadata'))['id']}-b{batch_id}-"
+    for earlier in fs.glob(f"{path}/{prefix}*"):
+        fs.delete(earlier)
+    staging = f"{path}/_staging/{batch_id}"
+    options = {k: v for k, v in conf.items()
+               if k not in ("checkpointLocation", "queryName", "availableNow", "mode")}
+    write_sink(df, {**options, "path": staging, "mode": "overwrite"})
+    for staged in fs.glob(f"{staging}/*"):
+        fname = staged.rsplit("/", 1)[1]
+        if not fname.startswith(("_", ".")):  # _SUCCESS
+            fs.rename(staged, f"{path}/{prefix}{fname}")
+    fs.delete(staging)
+    fs.touch(marker)
+
+
+def cmd_run(config: dict, await_seconds: int | None) -> None:
+    outputs = _outputs(config)
     _, out = _compile(config, "eventstreams-pipeline")
-    queries = []
-    if "dlq" in config:
-        # dead-letter routing (Logstash DLQ): rows tagged by
-        # deadletter/date/range/... steps go to the dlq sink, healthy
-        # rows to the main sink — tag-don't-drop ends here
-        out, dead = split_dead_letters(out)
-        queries.append(write_sink(dead, config["dlq"]))
-    persisted = False
-    if "sinks" in config:
-        # multi-output fan-out (the Logstash `output { if ... }`
-        # idiom): ONE source/pipeline, N sinks, each with an optional
-        # per-sink `filter` expression. A row can land in several
-        # sinks (filters are independent, not a partition). Streaming:
-        # one query per sink over the shared plan — Spark's standard
-        # fan-out shape (each sink keeps its own checkpoint and
-        # exactly-once file-sink log) — or, with `fanout: {...}`,
-        # a SINGLE foreachBatch query that persists each micro-batch
-        # and writes every sink from the cache, so the source is
-        # scanned once per batch regardless of sink count (the
-        # 100 TB/day ingest shape, SCALE.md §26; sink writes become
-        # at-least-once on batch retry, like Logstash outputs).
-        # Batch: each write is its own action, so the shared frame is
-        # persisted once and every sink filters the cached rows
-        # instead of re-running the source scan + parse chain N times.
-        if out.isStreaming and "fanout" in config:
-            queries.append(
-                _fanout_single_pass(out, config["sinks"], config["fanout"])
-            )
-        else:
-            if not out.isStreaming and len(config["sinks"]) > 1:
-                out = out.persist()
-                persisted = True
-            for sconf in config["sinks"]:
-                sconf = dict(sconf)
-                flt = sconf.pop("filter", None)
-                branch = out.filter(flt) if flt else out
-                queries.append(write_sink(branch, sconf))
+    if not out.isStreaming:
+        _write_outputs(out, outputs)
     else:
-        queries.append(write_sink(out, config["sink"]))
-    for q in queries:
-        if q is not None:  # streaming query
-            q.awaitTermination(await_seconds) if await_seconds else q.awaitTermination()
-    if persisted:
-        out.unpersist()
+        q = _start_stream(out, outputs)
+        q.awaitTermination(await_seconds) if await_seconds else q.awaitTermination()
     print("done")
 
 
 def cmd_explain(config: dict) -> None:
-    """Compile the pipeline and print its physical plan plus a
-    scale summary (shuffle/scan/Python-eval operator counts) WITHOUT
+    """Compile the pipeline and print its physical plan plus its plan
+    digest (the scan, exchange, join, Python-eval and operator counts
+    that tests/plan_digest.json holds for registry queries) WITHOUT
     running it — the pre-flight check for 'will this config shuffle
     my 100 TB corpus more than it must'."""
-    from .plans import formatted_plan, operator_counts
+    from .plans import formatted_plan, plan_digest
 
     _, out = _compile(config, "eventstreams-explain")
     print(formatted_plan(out))
-    counts = operator_counts(out)
-    shuffles = sum(n for op, n in counts.items() if op.startswith("Exchange"))
-    scans = sum(n for op, n in counts.items() if op.startswith("Scan"))
-    python = sum(
-        n
-        for op, n in counts.items()
-        if op.startswith(("BatchEvalPython", "ArrowEvalPython", "MapInPandas"))
-    )
-    print(f"-- shuffles: {shuffles}  scans: {scans}  python-evals: {python}")
+    print("-- digest:", json.dumps(plan_digest(out), sort_keys=True))
 
 
 def cmd_index(sf_dir: str, prune: bool = False) -> None:

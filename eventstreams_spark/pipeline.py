@@ -53,10 +53,9 @@ def _tag_dlq(df: DataFrame, cond, reason) -> DataFrame:
 def split_dead_letters(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(healthy, dead) frames from a chain run with dead_letter steps.
 
-    Both are filters over the SAME lineage — at scale write them in one
-    pass via foreachBatch (stream) or persist the parsed frame (batch);
-    the DLQ side is typically a tiny fraction so the double scan is
-    also acceptable and keeps each output a single Catalyst plan.
+    Both are filters over the SAME lineage; the CLI's `run` persists
+    the frame (batch) or each micro-batch (foreachBatch) once and
+    writes both from the cache, so the chain runs once.
     """
     if DLQ_COL not in df.columns:
         return df, df.limit(0)
@@ -1278,10 +1277,10 @@ def write_sink(df: DataFrame, conf: dict):
         return writer.start(path) if path else writer.start()
     if "path" not in conf:
         raise ValueError(
-            f"batch sink '{fmt}' requires a path — note that under "
-            "single-pass `fanout:` every sink is written as a BATCH "
-            "write per micro-batch, so path-less streaming formats "
-            "(console/memory) belong to the one-query-per-sink shape"
+            f"batch sink '{fmt}' requires a path — a streaming config with "
+            "2 or more outputs writes each micro-batch to every output as a "
+            "BATCH write, so path-less streaming formats (console/memory) "
+            "need a single-output config"
         )
     path = conf.pop("path")
     mode = conf.pop("mode", "overwrite")

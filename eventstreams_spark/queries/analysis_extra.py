@@ -51,7 +51,7 @@ def triangle_count_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: compact-forward counting — edges are oriented low→high under
     the (degree, id) total order, wedges enumerate only at each edge's
     LOW-degree endpoint, and the closing edge check is a semi join.
-    Degree orientation bounds per-vertex wedge fanout by O(sqrt(m)) on
+    Degree orientation bounds per-vertex wedge fan-out by O(sqrt(m)) on
     skew-free-by-construction keys (total wedge work O(m^1.5) instead
     of sum-of-degrees-squared, the difference between feasible and
     exploding on power-law graphs at 100 TB). The triangle count is

@@ -90,7 +90,7 @@ def fuzzy_blocked_typo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate on low-entropy prefixes: customer names share a long
     constant prefix, so the 'first half' block collapsed to one
     V-sized bucket and the join went quadratic (341 s at sf0.1 vs
-    ~2 s for this form — the bench_families run that caught it). The
+    ~2 s for this form — the `tools/bench_families.py` at commit `95c524d` run that caught it). The
     mask index has no such data dependence: only genuine pairs (plus
     exact duplicates) ever collide.
 

@@ -2081,7 +2081,7 @@ def contamination_winnowing_bipartite(spark: SparkSession, sf_dir: str) -> DataF
     Here the gram windows are built directly as min-over-4 of the
     md5-prefix gram hashes (one nested transform — identical list
     algebra on both engines); benchmark fingerprints with df > 4 are
-    dropped as boilerplate (blocking bound: pair fanout per
+    dropped as boilerplate (blocking bound: pair fan-out per
     fingerprint ≤ 4·|train dups|).
 
     Scale: the benchmark side is the small side by construction
@@ -2196,7 +2196,7 @@ def weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: numerator and totals are exact BIGINTs; the single
     division rounds to 6 at the very end (oracle_conventions).
 
-    Scale: token counts are one groupBy; blocking bounds pair fanout
+    Scale: token counts are one groupBy; blocking bounds pair fan-out
     per token at 8; the per-pair Σmin join is keyed on (doc, token)
     equi pairs. At ICWS-sketch scale the same blocking feeds the
     sketch instead of the exact join — this query is the ground-truth
@@ -2453,7 +2453,7 @@ def _suffix_array_lcp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge, bwt_run_length_census, fm_index_backward_search,
     lcp_interval_tree_nodes, repeat_family_census, cross_group_lcs)
     each paid the full 20-28 s rebuild per call at sf0.01
-    (tools/bench_families.py, round 8). A production pipeline builds
+    (`tools/bench_families.py` at commit `95c524d`, round 8). A production pipeline builds
     the suffix array once and serves every query from it; this
     mirrors that: build on miss, write to a fingerprint-keyed parquet
     path (:func:`_sa_cache_path`), and serve ALL calls — across

@@ -172,7 +172,7 @@ def gopher_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     second Exchange (its key is a subset of the count's partitioning)
     and no join: one text scan, one shuffle of (gram, partial count)
     pairs, versus the naive two-branch plan that scans and shuffles
-    the corpus twice (plan pinned in PLANS.md)."""
+    the corpus twice (plan pinned in `PLANS.md` at commit `95c524d`)."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("tk")
     )

@@ -72,8 +72,8 @@ def test_cli_json_config_and_validation_errors(tmp_path):
 
 
 def test_cli_explain_prints_plan_and_scale_summary(spark, tmp_path, capsys):
-    """`explain` compiles and prints the physical plan + shuffle/scan
-    counts without executing the pipeline (no output files appear)."""
+    """`explain` compiles and prints the physical plan + its plan
+    digest without executing the pipeline (no output files appear)."""
     src = tmp_path / "in"
     src.mkdir()
     (src / "a.log").write_text("10.0.0.9 GET 200\n")
@@ -92,16 +92,13 @@ def test_cli_explain_prints_plan_and_scale_summary(spark, tmp_path, capsys):
     main(["explain", str(cfg_path)])
     printed = capsys.readouterr().out
     assert "Physical Plan" in printed
-    assert "-- shuffles:" in printed
+    assert "-- digest:" in printed
     assert not out.exists()  # nothing ran
 
 
-def test_cli_logstash_replacement_soak(spark, tmp_path):
-    """The full Logstash-replacement story in ONE config (VERDICT r3
-    #7): multiline reassembly → grok(COMBINEDAPACHELOG) → date →
-    translate → deadletter → sessionize → parquet sink with DLQ
-    routing, over a replayed weblog fixture, asserted against a
-    golden."""
+def _soak_config(tmp_path):
+    """The soak YAML over its replayed weblog fixture: (config path,
+    sink dir, dlq dir)."""
     src = tmp_path / "logs"
     src.mkdir()
     (src / "access.log").write_text(
@@ -160,6 +157,28 @@ dlq:
 """
     cfg_path = tmp_path / "soak.yaml"
     cfg_path.write_text(cfg)
+    return cfg_path, out, dlq
+
+
+def test_cli_explain_prints_soak_digest(spark, tmp_path, capsys):
+    """`explain` prints `plans.plan_digest` of the compiled chain, the
+    columns tests/plan_digest.json holds for registry queries: the soak
+    chain plans three windows (multiline, sessionize) behind one
+    single-partition exchange (multiline's global order)."""
+    cfg_path, out, _ = _soak_config(tmp_path)
+    main(["explain", str(cfg_path)])
+    digest = [ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("-- digest:")]
+    assert digest == ['-- digest: {"exchange.single": 1, "op.Window": 3}']
+    assert not out.exists()
+
+
+def test_cli_logstash_replacement_soak(spark, tmp_path):
+    """The full Logstash-replacement story in ONE config (VERDICT r3
+    #7): multiline reassembly → grok(COMBINEDAPACHELOG) → date →
+    translate → deadletter → sessionize → parquet sink with DLQ
+    routing, over a replayed weblog fixture, asserted against a
+    golden."""
+    cfg_path, out, dlq = _soak_config(tmp_path)
     main(["run", str(cfg_path)])
 
     healthy = sorted(
@@ -542,7 +561,8 @@ def test_cli_multi_sink_fanout_batch(spark, tmp_path, capsys):
 def test_cli_multi_sink_fanout_streaming_with_dlq(spark, tmp_path):
     """Fan-out composes with DLQ routing on a STREAMING source: dead
     letters go to the dlq sink, healthy rows fan out to N filtered
-    sinks, one availableNow query per sink."""
+    sinks, all written by ONE foreachBatch query that takes its
+    checkpoint and availableNow trigger from sinks[0]."""
     src = tmp_path / "in"
     src.mkdir()
     (src / "a.log").write_text(
@@ -629,12 +649,12 @@ def test_file_stream_ingestion_pacing_max_files_per_trigger(spark, tmp_path):
 
 
 def test_cli_single_pass_fanout_foreachbatch(spark, tmp_path):
-    """SCALE.md §26's ingest shape as code: `fanout:` turns streaming
-    multi-sink into ONE foreachBatch query — each micro-batch is
-    persisted and every sink written from the cache, so the source is
-    scanned once per batch regardless of sink count. Row-exact
-    against the per-sink filters; exactly one checkpoint (the
-    fan-out's own) exists; per-sink checkpoint keys are rejected."""
+    """SCALE.md §26's ingest shape as code: a streaming multi-sink
+    config runs ONE foreachBatch query — each micro-batch is persisted
+    and every sink written from the cache, so the source is scanned
+    once per batch regardless of sink count. Row-exact against the
+    per-sink filters; exactly one checkpoint (sinks[0]'s) exists; a
+    `fanout:` key is rejected."""
     src = tmp_path / "in"
     src.mkdir()
     (src / "a.log").write_text(
@@ -652,17 +672,17 @@ def test_cli_single_pass_fanout_foreachbatch(spark, tmp_path):
         ],
         "sinks": [
             {"filter": "status = '500'", "format": "parquet",
-             "path": str(errs)},
+             "path": str(errs), "checkpointLocation": str(ck),
+             "availableNow": True},
             {"format": "parquet", "path": str(all_out)},
         ],
-        "fanout": {"checkpointLocation": str(ck), "availableNow": True},
     }
     cfg_path = tmp_path / "fan1p.json"
     cfg_path.write_text(json.dumps(base))
     main(["run", str(cfg_path)])
     assert [r.verb for r in spark.read.parquet(str(errs)).collect()] == ["POST"]
     assert spark.read.parquet(str(all_out)).count() == 4
-    # one checkpoint: the fan-out query's; sinks have none of their own
+    # one checkpoint: the query's, named by sinks[0]
     assert ck.exists()
     cks = [p for p in tmp_path.iterdir() if p.name.startswith("ck")]
     assert cks == [ck]
@@ -672,15 +692,11 @@ def test_cli_single_pass_fanout_foreachbatch(spark, tmp_path):
     main(["run", str(cfg_path)])
     assert spark.read.parquet(str(all_out)).count() == 4
 
-    # per-sink checkpoint keys are rejected under single-pass fan-out
-    bad = dict(base)
-    bad["sinks"] = [
-        {"format": "parquet", "path": str(tmp_path / "x"),
-         "checkpointLocation": str(tmp_path / "ckx")},
-    ]
+    # the removed `fanout:` option is rejected, naming the rule
+    bad = dict(base, fanout={"checkpointLocation": str(ck)})
     bad_path = tmp_path / "bad.json"
     bad_path.write_text(json.dumps(bad))
     import pytest
 
-    with pytest.raises(SystemExit, match="checkpointLocation"):
+    with pytest.raises(SystemExit, match="ONE foreachBatch query"):
         main(["run", str(bad_path)])

@@ -8,15 +8,13 @@ representative pipeline. This tool records three:
 1. **Parse pipeline** — the CLI SOAK chain's streaming-native core
    (grok(COMBINEDAPACHELOG) → date → translate → deadletter split →
    parquet sink + parquet DLQ), driven exactly through the CLI code
-   path (`read_source` → `Pipeline.from_config` →
-   `split_dead_letters` → `write_sink`) over a self-minted
-   N-line weblog corpus in K chunk files, availableNow with
-   maxFilesPerTrigger=1 so each chunk is one micro-batch. Note the
-   CLI's DLQ routing starts TWO queries over the shared plan (one
-   per sink), so the corpus is scanned twice — the reported
-   `events_per_sec_wall` is end-to-end for that faithful shape,
-   while `events_per_sec_main` is the healthy-path query alone
-   (rows / its summed trigger time): the single-sink ceiling.
+   path (`__main__._outputs` → `_compile` → `_start_stream`, whose ONE
+   foreachBatch query calls `_write_outputs` per micro-batch) over a self-minted N-line weblog
+   corpus in K chunk files, availableNow with maxFilesPerTrigger=1 so
+   each chunk is one micro-batch. Each micro-batch is parsed once and
+   both outputs are committed from its cache, so
+   `events_per_sec_wall` is end-to-end for the one query and
+   `events_per_sec_main` is rows over its summed trigger time.
 
 2. **Stateful GroupState op** — `schema_drift_stream` (the live
    producer-drift monitor) over a minted JSON corpus whose key-set
@@ -145,12 +143,7 @@ def bench_parse(spark, work: str, paced: bool) -> dict:
     tail deployment sees. ``paced=False``: availableNow swallows the
     whole backlog in one batch (one partition per file) — the
     sustained catch-up throughput with full parallelism."""
-    from eventstreams_spark.pipeline import (
-        Pipeline,
-        read_source,
-        split_dead_letters,
-        write_sink,
-    )
+    from eventstreams_spark.__main__ import _compile, _outputs, _start_stream
 
     mint = os.path.join(work, "weblog")
     mint_s = 0.0
@@ -160,47 +153,37 @@ def bench_parse(spark, work: str, paced: bool) -> dict:
         _mint_weblog(mint)
         mint_s = time.time() - t0
 
-    pipe = Pipeline.from_config(
-        {
-            "steps": [
-                {"type": "grok", "source": "value",
-                 "pattern": "%{COMBINEDAPACHELOG}"},
-                {"type": "date", "source": "timestamp",
-                 "formats": ["dd/MMM/yyyy:HH:mm:ss Z"],
-                 "target": "@timestamp"},
-                {"type": "translate", "source": "response",
-                 "mapping": {"200": "ok", "301": "redirect",
-                             "404": "not_found", "500": "server_error"},
-                 "target": "status_class", "default": "other"},
-                {"type": "deadletter", "when": "clientip = ''",
-                 "reason": "grok_failure"},
-            ]
-        }
-    )
-    src_conf = {"format": "text", "path": mint, "stream": True,
-                "schema": "value string"}
-    if paced:
-        src_conf["maxFilesPerTrigger"] = 1
-    df = read_source(spark, src_conf)
-    healthy, dead = split_dead_letters(pipe.apply(df))
     tag = "paced" if paced else "backlog"
+    config = {
+        "source": {"format": "text", "path": mint, "stream": True,
+                   "schema": "value string"},
+        "steps": [
+            {"type": "grok", "source": "value",
+             "pattern": "%{COMBINEDAPACHELOG}"},
+            {"type": "date", "source": "timestamp",
+             "formats": ["dd/MMM/yyyy:HH:mm:ss Z"],
+             "target": "@timestamp"},
+            {"type": "translate", "source": "response",
+             "mapping": {"200": "ok", "301": "redirect",
+                         "404": "not_found", "500": "server_error"},
+             "target": "status_class", "default": "other"},
+            {"type": "deadletter", "when": "clientip = ''",
+             "reason": "grok_failure"},
+        ],
+        "sink": {"format": "parquet", "path": os.path.join(work, f"out-{tag}"),
+                 "checkpointLocation": os.path.join(work, f"ck-{tag}"),
+                 "availableNow": True, "queryName": f"soak-{tag}"},
+        "dlq": {"format": "parquet", "path": os.path.join(work, f"dlq-{tag}")},
+    }
+    if paced:
+        config["source"]["maxFilesPerTrigger"] = 1
+    outputs = _outputs(config)
+    _, out = _compile(config, "bench-stream")
     t0 = time.time()
-    q1 = write_sink(
-        healthy,
-        {"format": "parquet", "path": os.path.join(work, f"out-{tag}"),
-         "checkpointLocation": os.path.join(work, f"ck1-{tag}"),
-         "availableNow": True, "queryName": f"soak-main-{tag}"},
-    )
-    q2 = write_sink(
-        dead,
-        {"format": "parquet", "path": os.path.join(work, f"dlq-{tag}"),
-         "checkpointLocation": os.path.join(work, f"ck2-{tag}"),
-         "availableNow": True, "queryName": f"soak-dlq-{tag}"},
-    )
-    q1.awaitTermination()
-    q2.awaitTermination()
+    q = _start_stream(out, outputs)
+    q.awaitTermination()
     wall = time.time() - t0
-    st = _progress_stats(q1)
+    st = _progress_stats(q)
     n_out = spark.read.parquet(os.path.join(work, f"out-{tag}")).count()
     n_dlq = spark.read.parquet(os.path.join(work, f"dlq-{tag}")).count()
     assert n_out + n_dlq == LINES, (n_out, n_dlq, LINES)
