@@ -77,6 +77,9 @@ _CONFIG_KEYS = frozenset({"source", "steps", "sink", "sinks", "dlq"})
 # cannot be staged and renamed, so only a single-output config may use
 # them (through Spark's own sink).
 _PATHLESS = ("memory", "console", "foreachBatch")
+# Formats a streaming query writes through Spark's FileStreamSink, which
+# keeps the `_spark_metadata` log in its output path.
+_FILE_SINK_FORMATS = ("parquet", "json", "csv", "text", "orc")
 
 
 def _select(flt: str | None, side: int | None):
@@ -193,13 +196,26 @@ def _start_stream(out, outputs: list[tuple]):
     """Start the ONE streaming query that writes ``outputs``: Spark's
     own sink for a single output (exactly-once through its sink log),
     else a foreachBatch query over `_write_outputs` that commits every
-    output under the primary output's checkpoint."""
+    output under the primary output's checkpoint. Either way, an output
+    path is refused where the reader of the directory would not list
+    the rows already in it, or would not list the rows this run adds."""
     from .pipeline import write_sink
 
-    if len(outputs) == 1:
-        _, select, conf = outputs[0]
-        return write_sink(select(out), conf)
     fs = _HadoopFs(out.sparkSession)
+    if len(outputs) == 1:
+        name, select, conf = outputs[0]
+        path = conf.get("path")
+        if conf["format"] in _FILE_SINK_FORMATS and path and not fs.exists(f"{path}/_spark_metadata"):
+            data = [f for f in fs.glob(f"{path}/*") if not f.rsplit("/", 1)[1].startswith(("_", "."))]
+            if data:
+                raise SystemExit(
+                    f"{name}: {path} holds data files but no _spark_metadata; a "
+                    "one-output streaming run writes through Spark's file sink, "
+                    "which starts that log here, and readers of the directory then "
+                    "list only the logged files, hiding the rows already there. "
+                    "Write this output to a new path."
+                )
+        return write_sink(select(out), conf)
     for name, _, conf in outputs:
         if fs.exists(f"{conf['path']}/_spark_metadata"):
             raise SystemExit(

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity
+from .spread import leaf_parallelism
 
 
 def cosine_topk(
@@ -68,7 +69,7 @@ def _plane_component(plane: Column, dim_idx: Column) -> Column:
 
 def hyperplanes(spark, n_planes: int, dim: int) -> DataFrame:
     """1-row frame: ordered array of n_planes hash-derived unit-cube vectors."""
-    planes = spark.range(n_planes).select(
+    planes = spark.range(n_planes, numPartitions=leaf_parallelism(spark)).select(
         F.col("id").alias("plane"),
         F.transform(
             F.sequence(F.lit(0), F.lit(dim - 1)),

@@ -1,12 +1,15 @@
-"""Plan inspection & assertion helpers (SURVEY §4, SCALE.md).
+"""The plan digest and plan-text readers (SURVEY §4, SCALE.md).
 
-The scale contract of every operator is a *plan shape* — broadcast vs
-shuffle join, pushed filters, pruned read schema, TakeOrderedAndProject
-instead of a global sort. `plan_digest` counts those shapes for every
-registry query (tests/plan_digest.json, regenerated with
-`python tools/gen_plan_digest.py [query ...]`); the helpers below read
-the formatted physical plan for the properties a count cannot hold
-(pushed filters, read schemas). A regression that turns a broadcast
+The scale contract of every operator is a *plan shape*: broadcast vs
+shuffle join, two-phase aggregation, TakeOrderedAndProject instead of
+a global sort, one scan where a naive plan reads twice. `plan_digest`
+counts those shapes, and equality with each registry query's line in
+tests/plan_digest.json (regenerated with
+`python tools/gen_plan_digest.py [query ...]`) is the one check on
+those counts. `pinned_digest_confs` is what a digest run pins, so the
+same line holds at any core count. The readers below return the
+formatted physical plan's text for what the digest cannot hold:
+pushed filters and read schemas. A regression that turns a broadcast
 chain into a sort-merge cascade fails CI long before anyone runs it at
 100 TB.
 """
@@ -14,8 +17,10 @@ chain into a sort-merge cascade fails CI long before anyone runs it at
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 # One executedPlan().toString() line: tree prefix, optional
@@ -92,13 +97,36 @@ DIGEST_INVARIANTS = {
 }
 
 
-def digest_mismatches(name: str, got: dict, digest: dict, parallelism: int) -> list[str]:
+# What a digest run pins, each to the digest's recorded parallelism:
+# the shuffle width, and the leaf parallelism that stands in for the
+# core count in every builder (operators/spread.py::leaf_parallelism)
+# and in Spark's own leaf scans.
+DIGEST_CONFS = ("spark.sql.shuffle.partitions", "spark.sql.leafNodeDefaultParallelism")
+
+
+@contextmanager
+def pinned_digest_confs(spark: SparkSession, parallelism: int) -> Iterator[None]:
+    """Set every `DIGEST_CONFS` key to ``parallelism`` and restore the
+    session's values afterwards (unsetting a key that was unset), then
+    clear the cache."""
+    before = {key: spark.conf.get(key, None) for key in DIGEST_CONFS}
+    for key in DIGEST_CONFS:
+        spark.conf.set(key, str(parallelism))
+    try:
+        yield
+    finally:
+        for key, value in before.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+        spark.catalog.clearCache()
+
+
+def digest_mismatches(name: str, got: dict, digest: dict) -> list[str]:
     """One message per differing column of query ``name``'s digest
     ``got`` against the loaded tests/plan_digest.json ``digest``; each
-    names the query and the column. ``parallelism`` is the session's
-    defaultParallelism: a "parallelism_dependent" query built at
-    another one is compared on its ``scan.`` columns and the
-    invariants only."""
+    names the query and the column."""
     recorded = digest["queries"].get(name)
     if recorded is None:
         return [f"{name}: no digest entry; record one with `{DIGEST_GENERATOR} {name}` and read it"]
@@ -107,13 +135,10 @@ def digest_mismatches(name: str, got: dict, digest: dict, parallelism: int) -> l
         for col, what in DIGEST_INVARIANTS.items()
         if got.get(col)
     ]
-    cols = sorted(set(recorded) | set(got))
-    if name in digest["parallelism_dependent"] and parallelism != digest["parallelism"]:
-        cols = [c for c in cols if c.startswith("scan.")]
     problems += [
         f"{name}: {col} planned {got.get(col, 0)}, recorded {recorded.get(col, 0)}"
         f" (intended? `{DIGEST_GENERATOR} {name}`)"
-        for col in cols
+        for col in sorted(set(recorded) | set(got))
         if got.get(col, 0) != recorded.get(col, 0)
     ]
     return problems
@@ -127,23 +152,6 @@ def formatted_plan(df: DataFrame) -> str:
     return qe.explainString(mode)
 
 
-def operator_counts(df: DataFrame) -> dict[str, int]:
-    """Physical operator name → occurrence count (tree section only)."""
-    tree = formatted_plan(df).split("\n\n")[0]
-    counts: dict[str, int] = {}
-    # "* " is the whole-stage-codegen marker: plans without an AQE
-    # wrapper (no exchange anywhere) print it in the tree section,
-    # e.g. "+- * Scan ExistingRDD (1)" — count those too
-    for m in re.finditer(r"[+:]- (?:\* )?(\w[\w ]*?) [(\[]", tree + "\n"):
-        name = m.group(1).strip()
-        counts[name] = counts.get(name, 0) + 1
-    # root operator (no +- prefix)
-    first = re.search(r"^(?:\* )?(\w[\w]*)", tree.splitlines()[1] if len(tree.splitlines()) > 1 else "")
-    if first:
-        counts[first.group(1)] = counts.get(first.group(1), 0) + 1
-    return counts
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """Every PushedFilters entry across the plan's scans."""
     return re.findall(r"PushedFilters: \[([^\]]*)\]", formatted_plan(df))
@@ -152,24 +160,6 @@ def pushed_filters(df: DataFrame) -> list[str]:
 def read_schemas(df: DataFrame) -> list[str]:
     """Every scan's ReadSchema struct string (column-pruning evidence)."""
     return re.findall(r"ReadSchema: struct<([^>]*)>", formatted_plan(df))
-
-
-def assert_no_operator(df: DataFrame, *names: str) -> None:
-    plan = formatted_plan(df)
-    for name in names:
-        assert name not in plan, f"forbidden operator {name!r} in plan:\n{plan[:2000]}"
-
-
-def assert_has_operator(df: DataFrame, *names: str) -> None:
-    plan = formatted_plan(df)
-    for name in names:
-        assert name in plan, f"expected operator {name!r} missing from plan:\n{plan[:2000]}"
-
-
-def assert_all_joins_broadcast(df: DataFrame) -> None:
-    """Every join in the plan is a broadcast hash join (dim-enrichment
-    contract: the fact side is never shuffled)."""
-    assert_no_operator(df, "SortMergeJoin", "ShuffledHashJoin", "CartesianProduct")
 
 
 def assert_read_schema_at_most(df: DataFrame, table_marker: str, allowed: set[str]) -> None:

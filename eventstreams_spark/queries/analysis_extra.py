@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.vectors import cosine_similarity, to_double_array
 from ..operators.graph import interaction_edges, truncate_lineage
+from ..operators.spread import leaf_parallelism
 from ..registry import query
 from ._shared import INTERACTION_UND_CTE, md5_uniform_sql
 
@@ -62,10 +63,10 @@ def triangle_count_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # set runs at shuffle-partition width (200), but a cached frame
     # pins that width for every downstream stage AND blocks AQE
     # coalescing — 400-task stages over a KB-scale frontier are pure
-    # task-launch overhead. defaultParallelism tracks the cluster.
+    # task-launch overhead. leaf_parallelism tracks the cluster.
     und = truncate_lineage(
         interaction_edges(ev, undirected=True),
-        spark.sparkContext.defaultParallelism,
+        leaf_parallelism(spark),
     )
 
     deg = (
@@ -154,7 +155,7 @@ def kcore_peel_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole subtree, growing the plan string multiplicatively; the
     # checkpoint also narrows partitions (coalesce-before-persist,
     # SCALE.md §3b)
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     edges = truncate_lineage(interaction_edges(ev, undirected=True), par)
 
     def degrees(e: DataFrame) -> DataFrame:
@@ -734,7 +735,7 @@ def _sampled_bfs_levels(spark, sf_dir):
     cache at cluster parallelism — see the SCALE.md §3b width lesson.
     """
     ev = load_table(spark, sf_dir, "events")
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     und = truncate_lineage(
         interaction_edges(ev, undirected=True), par
     )
@@ -914,7 +915,7 @@ def betweenness_sampled_brandes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truncate_lineage (VERDICT r5): d2 is consumed by d2p (broadcast)
     # and the bc union; checkpointing stops the level-2 subtree from
     # reprinting (and re-optimizing) under both consumers
-    d2 = truncate_lineage(d2, spark.sparkContext.defaultParallelism)
+    d2 = truncate_lineage(d2, leaf_parallelism(spark))
     d2p = F.broadcast(d2.select(F.col("s").alias("ws"), F.col("v").alias("wv"),
                                 F.col("sig").alias("wsig"),
                                 F.col("delta").alias("wdelta"))).join(

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.spread import leaf_parallelism
 from ..registry import query
 from ._shared import (
     INTERACTION_EDGES_CTE,
@@ -1853,7 +1854,7 @@ def bellman_ford_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             d.unionByName(relaxed)
             .groupBy("u")
             .agg(F.min("dist").cast("long").alias("dist")),
-            spark.sparkContext.defaultParallelism,
+            leaf_parallelism(spark),
         )
     return (
         d.select(F.col("u").alias("user_id"), F.col("dist").alias("cost_units"))
@@ -2063,7 +2064,7 @@ def louvain_first_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (and print) the full upstream subtree; the eager localCheckpoint
     # materializes once, truncates the plan, and narrows partitions
     # (coalesce-before-persist, SCALE.md §3b)
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     und = truncate_lineage(interaction_edges(ev, undirected=True), par)
     adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
@@ -2297,7 +2298,7 @@ def louvain_coarsened_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (and print) the full upstream subtree; the eager localCheckpoint
     # materializes once, truncates the plan, and narrows partitions
     # (coalesce-before-persist, SCALE.md §3b)
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     und = truncate_lineage(interaction_edges(ev, undirected=True), par)
     adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
@@ -3517,7 +3518,7 @@ def prefixspan_projected_census(
     """
     from ..operators.graph import truncate_lineage
 
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # truncate_lineage, not persist: pos feeds u, p1, and the three

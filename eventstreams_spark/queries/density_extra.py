@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.sampling import md5_uniform
+from ..operators.spread import leaf_parallelism
 from ..registry import query
 from ._shared import md5_uniform_sql
 
@@ -134,7 +135,7 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         truncate_lineage,
     )
 
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     cust = load_table(spark, sf_dir, "customer")
     lat = (md5_uniform("concat('clat|', cast(c_custkey as string))") - 0.5) * 180.0
     lon = (md5_uniform("concat('clon|', cast(c_custkey as string))") - 0.5) * 360.0
@@ -331,9 +332,10 @@ def point_in_polygon_raycast(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((md5_uniform("concat('clon|', cast(c_custkey as string))") - 0.5)
          * 360.0).alias("lon"),
     )
+    par = leaf_parallelism(spark)
     pv = (
-        spark.range(6).select(F.col("id").alias("p"))
-        .crossJoin(spark.range(8).select(F.col("id").alias("v")))
+        spark.range(6, numPartitions=par).select(F.col("id").alias("p"))
+        .crossJoin(spark.range(8, numPartitions=par).select(F.col("id").alias("v")))
         .select(
             "p", "v",
             (

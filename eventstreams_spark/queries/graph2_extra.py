@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.graph import interaction_edges, truncate_lineage
+from ..operators.spread import leaf_parallelism
 from ..registry import query
 from ._shared import INTERACTION_UND_CTE
 
@@ -38,7 +39,7 @@ _TRIS_SQL = """tris AS (
 
 def _und_tris(spark: SparkSession, sf_dir: str):
     ev = load_table(spark, sf_dir, "events")
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     und = truncate_lineage(interaction_edges(ev, undirected=True), par)
     e1 = und.select(F.col("a").alias("ta"), F.col("b").alias("tb"))
     e2 = und.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
@@ -167,7 +168,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is a single row.
     """
     ev = load_table(spark, sf_dir, "events")
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     und = truncate_lineage(interaction_edges(ev, undirected=True), par)
     deg = (
         und.select(F.col("a").alias("u"))
@@ -243,7 +244,7 @@ def ktruss_support_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the cached survivor frames narrow under vanilla sessions.
     """
     ev = load_table(spark, sf_dir, "events")
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     edges0 = truncate_lineage(interaction_edges(ev, undirected=True), par)
 
     def survivors(e: DataFrame) -> DataFrame:
@@ -307,7 +308,7 @@ def ktruss_fixpoint_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor frame keeps stages narrow and plans bounded (SCALE.md §17).
     """
     ev = load_table(spark, sf_dir, "events")
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     edges = truncate_lineage(interaction_edges(ev, undirected=True), par)
     n0 = edges.count()
 
@@ -468,7 +469,7 @@ def leiden_refine_connectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components_star
 
     ev = load_table(spark, sf_dir, "events")
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     und = truncate_lineage(interaction_edges(ev, undirected=True), par)
     adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))

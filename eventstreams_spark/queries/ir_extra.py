@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.spread import leaf_parallelism
 from ..registry import query
 from ._shared import md5_uniform_sql
 
@@ -488,7 +489,7 @@ def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("wc"))
         .withColumn("wrapped", F.regexp_replace("tok", "(.)", S + "$1" + S))
-        .coalesce(spark.sparkContext.defaultParallelism)
+        .coalesce(leaf_parallelism(spark))
         .persist()
     )
     merges = []

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.vectors import cosine_similarity, norm, to_double_array
 from ..operators.graph import interaction_edges
+from ..operators.spread import leaf_parallelism
 from ..registry import query
 from ._shared import INTERACTION_EDGES_CTE, INTERACTION_UND_CTE
 
@@ -1148,7 +1149,7 @@ def louvain_full_loop_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded metadata, the same shape as kmeans' convergence check).
     """
     ev = load_table(spark, sf_dir, "events")
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     und = interaction_edges(ev, undirected=True).coalesce(par).persist()
     m_edges = und.count()  # bounded metadata scalar
 

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.spread import leaf_parallelism
 from ..registry import query
 from ._shared import md5_uniform_sql
 
@@ -2596,7 +2597,7 @@ def _build_suffix_array_lcp(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import truncate_lineage
     from ..operators.ranking import exact_global_rank
 
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     # ONE parquet scan for the whole frame: checkpoint (doc_id, text,
     # len) and derive chars / prefixes / lengths from the block cache.
     base = truncate_lineage(
@@ -2966,7 +2967,7 @@ def exact_substring_dup_coverage(
     """
     from ..operators.graph import truncate_lineage
 
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     pairs = _suffix_array_lcp_frame(spark, sf_dir)
     prev = pairs.select(
         (F.col("sa_idx") + 1).alias("sa_idx"),
@@ -3330,7 +3331,7 @@ def fm_index_backward_search(
     """
     from ..operators.graph import truncate_lineage
 
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     patterns = [
         "a", "data", "stream", "merge part", "batch batch", "event",
     ]
@@ -3551,7 +3552,7 @@ def lcp_interval_tree_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.graph import truncate_lineage
 
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     pairs = _suffix_array_lcp_frame(spark, sf_dir)
     el = truncate_lineage(
         pairs.select(
@@ -3803,7 +3804,7 @@ def allpairs_prefix_filter_join(
     # re-prints the documents scan under each (the PrefixSpan lesson)
     tok = truncate_lineage(
         corpus.select("id", F.explode(shingles).alias("tok")).distinct(),
-        spark.sparkContext.defaultParallelism,
+        leaf_parallelism(spark),
     )
     dfreq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     ordered = (

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.spread import leaf_parallelism
 from ..registry import query
 from .analysis_extra import MD5_UNIFORM_DOC
 
@@ -2271,7 +2272,7 @@ def skyline_pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n^2). d>2 skylines fall back to block-nested local skylines per
     grid cell — this query pins the 2-D fast path.
     """
-    par = spark.sparkContext.defaultParallelism
+    par = leaf_parallelism(spark)
     pts = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_retailprice", F.col("p_size").cast("long").alias("p_size")
     )

@@ -7,7 +7,7 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from eventstreams_spark import registry
-from eventstreams_spark.plans import assert_no_operator, operator_counts
+from tests.util import assert_recorded
 
 registry._ensure_loaded()
 
@@ -60,16 +60,13 @@ def test_cohort_offsets_nonnegative_and_day0_full(spark, sf_dir):
     assert all(abs(r["retention"] - 1.0) < 1e-9 for r in day0)
 
 
-def test_cohort_sizes_join_is_broadcast(spark, sf_dir):
-    counts = operator_counts(q("cohort_daily_retention", spark, sf_dir))
-    assert sum(n for op, n in counts.items()
-               if op.startswith("BroadcastHashJoin")) >= 1
+def test_cohort_sizes_join_is_broadcast():
+    assert_recorded("cohort_daily_retention", {"join.BroadcastHashJoin": ">=1"})
 
 
 def test_centroid_shape_and_no_python(spark, sf_dir):
-    df = q("embedding_centroid_per_label", spark, sf_dir)
-    assert_no_operator(df, "BatchEvalPython", "ArrowEvalPython")
-    rows = df.collect()
+    assert_recorded("embedding_centroid_per_label", {"python": 0})
+    rows = q("embedding_centroid_per_label", spark, sf_dir).collect()
     labels = {r["label"] for r in rows}
     assert len(rows) == len(labels) * 64  # one row per (label, dim)
     # centroid of unit-ish embeddings stays in a sane range
@@ -89,12 +86,7 @@ def test_cep_chain_ordering_invariants(spark, sf_dir):
 
 
 def test_unpivot_is_expand_no_python(spark, sf_dir):
-    df = q("unpivot_melt_metrics", spark, sf_dir)
-    from eventstreams_spark.plans import assert_no_operator, operator_counts
-
-    assert_no_operator(df, "BatchEvalPython", "ArrowEvalPython")
-    counts = operator_counts(df)
-    assert any(op.startswith("Expand") for op in counts)
-    rows = df.collect()
+    assert_recorded("unpivot_melt_metrics", {"op.Expand": ">=1", "python": 0})
+    rows = q("unpivot_melt_metrics", spark, sf_dir).collect()
     types = {r["event_type"] for r in rows}
     assert len(rows) == 3 * len(types)  # 3 metrics per type

@@ -127,6 +127,46 @@ def test_output_with_a_file_sink_log_is_refused(spark, tmp_path):
         main(["run", _write(tmp_path, _stream_config(tmp_path, ck="ck2"))])
 
 
+def test_one_output_into_committed_files_is_refused(spark, tmp_path):
+    """(d) The converse: a multi-output run commits plain files with no
+    `_spark_metadata`; a one-output run into that path would start
+    Spark's sink log there and hide them, so it is refused and every
+    committed row stays readable."""
+    main(["run", _write(tmp_path, _stream_config(tmp_path))])
+    one = _stream_config(tmp_path, ck="ck2")
+    one.pop("dlq")
+    with pytest.raises(SystemExit, match="no _spark_metadata.*new path"):
+        main(["run", _write(tmp_path, one, "one.json")])
+    assert not (tmp_path / "out" / "_spark_metadata").exists()
+    assert _rows(spark, tmp_path / "out") == HEALTHY
+
+
+def test_one_output_es_bulk_run_restarts(tmp_path):
+    """(d) Only Spark's file-sink formats keep `_spark_metadata`. The
+    es_bulk sink commits ``bulk-*.ndjson`` payloads and
+    ``_batch-<id>.committed`` markers into its path with no such log,
+    so a restart of its one-output run is accepted and adds the new
+    lines."""
+    cfg = _stream_config(tmp_path)
+    cfg.pop("dlq")
+    cfg["sink"] = {"format": "es_bulk", "path": str(tmp_path / "es"), "index": "logs",
+                   "checkpointLocation": str(tmp_path / "ck"), "availableNow": True}
+    run = _write(tmp_path, cfg)
+
+    def actions():
+        return sum(
+            len(p.read_text().splitlines()) // 2 for p in (tmp_path / "es").glob("bulk-*.ndjson")
+        )
+
+    main(["run", run])
+    assert list((tmp_path / "es").glob("_batch-*.committed"))
+    assert not (tmp_path / "es" / "_spark_metadata").exists()
+    assert actions() == 3
+    (tmp_path / "in" / "b.log").write_text("10.0.0.7 GET 404\n")
+    main(["run", run])
+    assert actions() == 4
+
+
 @pytest.mark.parametrize("cmd", ["validate", "run"])
 @pytest.mark.parametrize(
     "change, message",

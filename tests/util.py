@@ -1,15 +1,20 @@
-"""Oracle-parity comparison harness mirroring the driver's t2 check.
+"""Shared test helpers: the oracle-parity comparison harness, and bounds
+on recorded plan digest lines.
 
-The driver compares row-count + schema (column names) + order-insensitive
-value hash. Locally we compare sorted rows exactly, with a float
-tolerance fallback so we can distinguish "wrong logic" from "last-ulp
-float accumulation drift" — the former must be fixed, the latter
-surfaced as a warning (tighten the query if it appears).
+Oracle parity mirrors the driver's t2 check. The driver compares
+row-count + schema (column names) + order-insensitive value hash.
+Locally we compare sorted rows exactly, with a float tolerance
+fallback so we can distinguish "wrong logic" from "last-ulp float
+accumulation drift" — the former must be fixed, the latter surfaced
+as a warning (tighten the query if it appears).
 """
 
 from __future__ import annotations
 
+import json
 import math
+import os
+import re
 from typing import Any
 
 import duckdb
@@ -123,3 +128,53 @@ def split_half(df, n: int, order_cols=None):
     first = ranked.filter(F.col("_rn") <= n // 2).drop("_rn")
     rest = ranked.filter(F.col("_rn") > n // 2).drop("_rn")
     return first, rest
+
+
+# -- bounds on recorded plan digest lines (tests/plan_digest.json) -------
+
+with open(os.path.join(os.path.dirname(__file__), "plan_digest.json")) as _f:
+    RECORDED_DIGEST = json.load(_f)["queries"]
+
+_DIGEST_GROUPS = {
+    "join": lambda col: col.startswith("join."),
+    "python": lambda col: col.startswith("python."),
+    "window": lambda col: col in ("op.Window", "op.WindowGroupLimit"),
+}
+
+
+def assert_recorded(query: str, bounds: dict[str, int | str]) -> None:
+    """Fail with one message per bound that ``query``'s recorded digest
+    line breaks.
+
+    A bound maps a digest column, or a group (``join``: every join,
+    ``python``: every Python eval node, ``window``: Window and
+    WindowGroupLimit), to a count: ``0`` is absence, ``">=n"`` and
+    ``"<=n"`` are one-sided. The digest test holds each query's plan to
+    its exact recorded line; a bound holds the line to the reason a test
+    was written for, so a regenerated line that crosses it fails by
+    name. Exchange counts are not bounded here: the digest leaves out
+    REPARTITION_BY_NUM exchanges (see `shuffle_exchanges`)."""
+    line = RECORDED_DIGEST[query]
+    problems = []
+    for key, bound in bounds.items():
+        match = _DIGEST_GROUPS.get(key, lambda col, key=key: col == key)
+        got = sum(n for col, n in line.items() if match(col))
+        if bound == 0:
+            ok = got == 0
+        else:
+            ok = got >= int(bound[2:]) if bound.startswith(">=") else got <= int(bound[2:])
+        if not ok:
+            problems.append(f"{query}: {key} recorded {got}, bound {bound}")
+    assert not problems, "\n".join(problems)
+
+
+_EXCHANGE_NODE = re.compile(r"^[ :+-]*(?:\*\(\d+\) )?Exchange ", re.M)
+
+
+def shuffle_exchanges(df) -> int:
+    """Every shuffle Exchange node of ``df``'s executed plan (broadcast
+    and reused exchanges aside), the REPARTITION_BY_NUM ones of
+    ``spread_to_cores`` and ``repartition(n)`` included. The digest
+    leaves those out because their kind follows the core count, so a
+    test on the number of shuffles reads the plan."""
+    return len(_EXCHANGE_NODE.findall(df._jdf.queryExecution().executedPlan().toString()))
