@@ -22,9 +22,13 @@ O(batch), not O(partition).
 
 from __future__ import annotations
 
+import re
 import struct
-from collections.abc import Iterator
+import zlib
+from collections.abc import Callable, Iterator
+from functools import partial
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -253,6 +257,82 @@ def sample_frames(df: DataFrame, *, every_n_bytes: int = 4096, max_frames: int =
     return df.select("path", "content").mapInPandas(gen, schema)
 
 
+def _tile_blocks(
+    df: DataFrame,
+    decode: Callable[[bytes, str], list[np.ndarray]],
+    key_col: str,
+    content_col: str,
+    block: int,
+) -> DataFrame:
+    """The image decoders' shared tile pooler: ``decode(bytes, key)``
+    returns the content's images as (H, W, 3) int64 RGB arrays, and
+    each image becomes one row per ``block``×``block`` tile of
+    (key, width, height, by, bx, n_px, sum_r, sum_g, sum_b)."""
+    schema = (
+        f"{key_col} string, width int, height int, by int, bx int, "
+        "n_px long, sum_r long, sum_g long, sum_b long"
+    )
+    return df.select(key_col, content_col).mapInPandas(
+        partial(_pool_tiles, decode=decode, key_col=key_col, content_col=content_col, block=block),
+        schema,
+    )
+
+
+def _pool_tiles(
+    batches: Iterator[pd.DataFrame],
+    *,
+    decode: Callable[[bytes, str], list[np.ndarray]],
+    key_col: str,
+    content_col: str,
+    block: int,
+) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        rows = []
+        for key, content in zip(pdf[key_col], pdf[content_col]):
+            for px in decode(bytes(content), key):
+                h, w = px.shape[:2]
+                for by in range(0, h, block):
+                    for bx in range(0, w, block):
+                        tile = px[by : by + block, bx : bx + block]
+                        s = tile.sum(axis=(0, 1))
+                        rows.append(
+                            (
+                                key, w, h, by // block, bx // block,
+                                tile.shape[0] * tile.shape[1],
+                                int(s[0]), int(s[1]), int(s[2]),
+                            )
+                        )
+        yield pd.DataFrame(
+            rows,
+            columns=[
+                key_col, "width", "height", "by", "bx",
+                "n_px", "sum_r", "sum_g", "sum_b",
+            ],
+        )
+
+
+_PPM_HEAD = re.compile(rb"^P6\s+(\d+)\s+(\d+)\s+(\d+)\s")
+
+
+def _ppm_frames(b: bytes, key: str) -> list[np.ndarray]:
+    m = _PPM_HEAD.match(b)
+    if not m:
+        raise ValueError(f"not a binary PPM (P6): {key!r}")
+    w, h, maxval = (int(g) for g in m.groups())
+    if maxval != 255:
+        raise NotImplementedError(
+            "only 8-bit-per-channel PPM supported"
+        )
+    raw = b[m.end():]
+    if len(raw) < w * h * 3:
+        raise ValueError(
+            f"short pixel buffer for {key!r}: "
+            f"{len(raw)} < {w * h * 3}"
+        )
+    px = np.frombuffer(raw[: w * h * 3], dtype=np.uint8)
+    return [px.reshape(h, w, 3).astype(np.int64)]
+
+
 def decode_ppm_blocks(
     df: DataFrame,
     key_col: str = "path",
@@ -275,58 +355,7 @@ def decode_ppm_blocks(
     (tile sums leave the executor, pixels don't). Malformed headers
     or short pixel buffers raise loudly.
     """
-    import re
-
-    import numpy as np
-    import pandas as pd
-
-    schema = (
-        f"{key_col} string, width int, height int, by int, bx int, "
-        "n_px long, sum_r long, sum_g long, sum_b long"
-    )
-    head_re = re.compile(rb"^P6\s+(\d+)\s+(\d+)\s+(\d+)\s")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key, content in zip(pdf[key_col], pdf[content_col]):
-                b = bytes(content)
-                m = head_re.match(b)
-                if not m:
-                    raise ValueError(f"not a binary PPM (P6): {key!r}")
-                w, h, maxval = (int(g) for g in m.groups())
-                if maxval != 255:
-                    raise NotImplementedError(
-                        "only 8-bit-per-channel PPM supported"
-                    )
-                raw = b[m.end():]
-                if len(raw) < w * h * 3:
-                    raise ValueError(
-                        f"short pixel buffer for {key!r}: "
-                        f"{len(raw)} < {w * h * 3}"
-                    )
-                px = np.frombuffer(raw[: w * h * 3], dtype=np.uint8)
-                px = px.reshape(h, w, 3).astype(np.int64)
-                for by in range(0, h, block):
-                    for bx in range(0, w, block):
-                        tile = px[by : by + block, bx : bx + block]
-                        s = tile.sum(axis=(0, 1))
-                        rows.append(
-                            (
-                                key, w, h, by // block, bx // block,
-                                tile.shape[0] * tile.shape[1],
-                                int(s[0]), int(s[1]), int(s[2]),
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    key_col, "width", "height", "by", "bx",
-                    "n_px", "sum_r", "sum_g", "sum_b",
-                ],
-            )
-
-    return df.select(key_col, content_col).mapInPandas(gen, schema)
+    return _tile_blocks(df, _ppm_frames, key_col, content_col, block)
 
 
 def decode_wav_windows(
@@ -455,6 +484,51 @@ def _png_unfilter(raw: bytes, w: int, h: int, bpp: int = 3) -> bytearray:
     return out
 
 
+_PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+
+def _png_frames(b: bytes, key: str) -> list[np.ndarray]:
+    if b[:8] != _PNG_SIG:
+        raise ValueError(f"not a PNG: {key!r}")
+    pos, ihdr, idat = 8, None, bytearray()
+    while pos + 8 <= len(b):
+        (clen,) = struct.unpack(">I", b[pos : pos + 4])
+        ctype = b[pos + 4 : pos + 8]
+        data = b[pos + 8 : pos + 8 + clen]
+        (crc,) = struct.unpack(
+            ">I", b[pos + 8 + clen : pos + 12 + clen]
+        )
+        if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
+            raise ValueError(
+                f"PNG CRC mismatch in {ctype!r} of {key!r}"
+            )
+        if ctype == b"IHDR":
+            ihdr = struct.unpack(">IIBBBBB", data)
+        elif ctype == b"IDAT":
+            idat += data
+        elif ctype == b"IEND":
+            break
+        pos += 12 + clen
+    if ihdr is None:
+        raise ValueError(f"PNG missing IHDR: {key!r}")
+    w, h, depth, ctype_, comp, filt, interlace = ihdr
+    if (depth, ctype_, comp, filt, interlace) != (8, 2, 0, 0, 0):
+        raise NotImplementedError(
+            "only 8-bit RGB non-interlaced PNG supported "
+            f"(got depth={depth} color={ctype_} "
+            f"interlace={interlace})"
+        )
+    raw = zlib.decompress(bytes(idat))
+    if len(raw) != h * (1 + w * 3):
+        raise ValueError(
+            f"PNG scanline size mismatch for {key!r}"
+        )
+    return [
+        np.frombuffer(bytes(_png_unfilter(raw, w, h)), dtype=np.uint8)
+        .reshape(h, w, 3).astype(np.int64)
+    ]
+
+
 def decode_png_blocks(
     df: DataFrame,
     key_col: str = "path",
@@ -475,81 +549,7 @@ def decode_png_blocks(
     Output: (key, width, height, by, bx, n_px, sum_r, sum_g, sum_b).
     Only tile sums shuffle; bytes stay at the scan.
     """
-    import struct as _struct
-    import zlib as _zlib
-
-    import numpy as np
-    import pandas as pd
-
-    schema = (
-        f"{key_col} string, width int, height int, by int, bx int, "
-        "n_px long, sum_r long, sum_g long, sum_b long"
-    )
-    sig = b"\x89PNG\r\n\x1a\n"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key, content in zip(pdf[key_col], pdf[content_col]):
-                b = bytes(content)
-                if b[:8] != sig:
-                    raise ValueError(f"not a PNG: {key!r}")
-                pos, ihdr, idat = 8, None, bytearray()
-                while pos + 8 <= len(b):
-                    (clen,) = _struct.unpack(">I", b[pos : pos + 4])
-                    ctype = b[pos + 4 : pos + 8]
-                    data = b[pos + 8 : pos + 8 + clen]
-                    (crc,) = _struct.unpack(
-                        ">I", b[pos + 8 + clen : pos + 12 + clen]
-                    )
-                    if _zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-                        raise ValueError(
-                            f"PNG CRC mismatch in {ctype!r} of {key!r}"
-                        )
-                    if ctype == b"IHDR":
-                        ihdr = _struct.unpack(">IIBBBBB", data)
-                    elif ctype == b"IDAT":
-                        idat += data
-                    elif ctype == b"IEND":
-                        break
-                    pos += 12 + clen
-                if ihdr is None:
-                    raise ValueError(f"PNG missing IHDR: {key!r}")
-                w, h, depth, ctype_, comp, filt, interlace = ihdr
-                if (depth, ctype_, comp, filt, interlace) != (8, 2, 0, 0, 0):
-                    raise NotImplementedError(
-                        "only 8-bit RGB non-interlaced PNG supported "
-                        f"(got depth={depth} color={ctype_} "
-                        f"interlace={interlace})"
-                    )
-                raw = _zlib.decompress(bytes(idat))
-                if len(raw) != h * (1 + w * 3):
-                    raise ValueError(
-                        f"PNG scanline size mismatch for {key!r}"
-                    )
-                px = np.frombuffer(
-                    bytes(_png_unfilter(raw, w, h)), dtype=np.uint8
-                ).reshape(h, w, 3).astype(np.int64)
-                for by in range(0, h, block):
-                    for bx in range(0, w, block):
-                        tile = px[by : by + block, bx : bx + block]
-                        s = tile.sum(axis=(0, 1))
-                        rows.append(
-                            (
-                                key, w, h, by // block, bx // block,
-                                tile.shape[0] * tile.shape[1],
-                                int(s[0]), int(s[1]), int(s[2]),
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    key_col, "width", "height", "by", "bx",
-                    "n_px", "sum_r", "sum_g", "sum_b",
-                ],
-            )
-
-    return df.select(key_col, content_col).mapInPandas(gen, schema)
+    return _tile_blocks(df, _png_frames, key_col, content_col, block)
 
 
 def _lzw_decode(data: bytes, min_size: int) -> list[int]:
@@ -604,6 +604,71 @@ def _lzw_decode(data: bytes, min_size: int) -> list[int]:
         prev = entry
 
 
+def _gif_frames(b: bytes, key: str) -> list[np.ndarray]:
+    if b[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError(f"not a GIF: {key!r}")
+    w0, h0, packed, _bg, _ar = struct.unpack(
+        "<HHBBB", b[6:13]
+    )
+    pos = 13
+    palette = None
+    if packed & 0x80:
+        n_colors = 2 << (packed & 0x07)
+        palette = np.frombuffer(
+            b[pos : pos + 3 * n_colors], dtype=np.uint8
+        ).reshape(n_colors, 3).astype(np.int64)
+        pos += 3 * n_colors
+    frames = []
+    while pos < len(b):
+        marker = b[pos]
+        pos += 1
+        if marker == 0x21:  # extension: label + sub-blocks
+            pos += 1
+            while b[pos] != 0:
+                pos += 1 + b[pos]
+            pos += 1
+        elif marker == 0x2C:  # image descriptor
+            left, top, w, h, ipacked = struct.unpack(
+                "<HHHHB", b[pos : pos + 9]
+            )
+            pos += 9
+            if ipacked & 0x80:
+                raise NotImplementedError(
+                    "local color tables not supported"
+                )
+            if ipacked & 0x40:
+                raise NotImplementedError(
+                    "interlaced GIF not supported"
+                )
+            if palette is None:
+                raise ValueError(
+                    f"GIF without a color table: {key!r}"
+                )
+            min_size = b[pos]
+            pos += 1
+            lzw = bytearray()
+            while b[pos] != 0:
+                n = b[pos]
+                lzw += b[pos + 1 : pos + 1 + n]
+                pos += 1 + n
+            pos += 1
+            idx = _lzw_decode(bytes(lzw), min_size)
+            if len(idx) < w * h:
+                raise ValueError(
+                    f"short GIF index stream: {key!r}"
+                )
+            frames.append(
+                palette[np.asarray(idx[: w * h], dtype=np.int64)].reshape(h, w, 3)
+            )
+        elif marker == 0x3B:  # trailer
+            break
+        else:
+            raise ValueError(
+                f"unknown GIF block 0x{marker:02x} in {key!r}"
+            )
+    return frames
+
+
 def decode_gif_blocks(
     df: DataFrame,
     key_col: str = "path",
@@ -621,102 +686,32 @@ def decode_gif_blocks(
 
     Output: (key, width, height, by, bx, n_px, sum_r, sum_g, sum_b).
     """
-    import struct as _struct
+    return _tile_blocks(df, _gif_frames, key_col, content_col, block)
 
-    import numpy as np
-    import pandas as pd
 
-    schema = (
-        f"{key_col} string, width int, height int, by int, bx int, "
-        "n_px long, sum_r long, sum_g long, sum_b long"
+def _bmp_frames(b: bytes, key: str) -> list[np.ndarray]:
+    if b[:2] != b"BM":
+        raise ValueError(f"not a BMP: {key!r}")
+    (data_off,) = struct.unpack("<I", b[10:14])
+    hsize, w, h, planes, bpp, comp = struct.unpack(
+        "<IiiHHI", b[14:34]
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key, content in zip(pdf[key_col], pdf[content_col]):
-                b = bytes(content)
-                if b[:6] not in (b"GIF87a", b"GIF89a"):
-                    raise ValueError(f"not a GIF: {key!r}")
-                w0, h0, packed, _bg, _ar = _struct.unpack(
-                    "<HHBBB", b[6:13]
-                )
-                pos = 13
-                palette = None
-                if packed & 0x80:
-                    n_colors = 2 << (packed & 0x07)
-                    palette = np.frombuffer(
-                        b[pos : pos + 3 * n_colors], dtype=np.uint8
-                    ).reshape(n_colors, 3).astype(np.int64)
-                    pos += 3 * n_colors
-                while pos < len(b):
-                    marker = b[pos]
-                    pos += 1
-                    if marker == 0x21:  # extension: label + sub-blocks
-                        pos += 1
-                        while b[pos] != 0:
-                            pos += 1 + b[pos]
-                        pos += 1
-                    elif marker == 0x2C:  # image descriptor
-                        left, top, w, h, ipacked = _struct.unpack(
-                            "<HHHHB", b[pos : pos + 9]
-                        )
-                        pos += 9
-                        if ipacked & 0x80:
-                            raise NotImplementedError(
-                                "local color tables not supported"
-                            )
-                        if ipacked & 0x40:
-                            raise NotImplementedError(
-                                "interlaced GIF not supported"
-                            )
-                        if palette is None:
-                            raise ValueError(
-                                f"GIF without a color table: {key!r}"
-                            )
-                        min_size = b[pos]
-                        pos += 1
-                        lzw = bytearray()
-                        while b[pos] != 0:
-                            n = b[pos]
-                            lzw += b[pos + 1 : pos + 1 + n]
-                            pos += 1 + n
-                        pos += 1
-                        idx = _lzw_decode(bytes(lzw), min_size)
-                        if len(idx) < w * h:
-                            raise ValueError(
-                                f"short GIF index stream: {key!r}"
-                            )
-                        px = palette[
-                            np.asarray(idx[: w * h], dtype=np.int64)
-                        ].reshape(h, w, 3)
-                        for by in range(0, h, block):
-                            for bx in range(0, w, block):
-                                tile = px[by : by + block, bx : bx + block]
-                                s = tile.sum(axis=(0, 1))
-                                rows.append(
-                                    (
-                                        key, w, h,
-                                        by // block, bx // block,
-                                        tile.shape[0] * tile.shape[1],
-                                        int(s[0]), int(s[1]), int(s[2]),
-                                    )
-                                )
-                    elif marker == 0x3B:  # trailer
-                        break
-                    else:
-                        raise ValueError(
-                            f"unknown GIF block 0x{marker:02x} in {key!r}"
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    key_col, "width", "height", "by", "bx",
-                    "n_px", "sum_r", "sum_g", "sum_b",
-                ],
-            )
-
-    return df.select(key_col, content_col).mapInPandas(gen, schema)
+    if hsize < 40 or bpp != 24 or comp != 0:
+        raise NotImplementedError(
+            "only uncompressed 24-bit BITMAPINFOHEADER BMPs "
+            f"supported (hsize={hsize} bpp={bpp} comp={comp})"
+        )
+    bottom_up = h > 0
+    h = abs(h)
+    stride = (w * 3 + 3) & ~3  # rows pad to 4 bytes
+    raw = b[data_off : data_off + stride * h]
+    if len(raw) < stride * h:
+        raise ValueError(f"short BMP pixel array: {key!r}")
+    arr = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride)
+    arr = arr[:, : w * 3].reshape(h, w, 3)
+    if bottom_up:
+        arr = arr[::-1]
+    return [arr[:, :, ::-1].astype(np.int64)]  # BGR -> RGB
 
 
 def decode_bmp_blocks(
@@ -733,60 +728,4 @@ def decode_bmp_blocks(
     BGR, and every row is padded to a 4-byte boundary. Emits the
     family's block×block mean-pool tile features in R, G, B order.
     """
-    import struct as _struct
-
-    import numpy as np
-    import pandas as pd
-
-    schema = (
-        f"{key_col} string, width int, height int, by int, bx int, "
-        "n_px long, sum_r long, sum_g long, sum_b long"
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for key, content in zip(pdf[key_col], pdf[content_col]):
-                b = bytes(content)
-                if b[:2] != b"BM":
-                    raise ValueError(f"not a BMP: {key!r}")
-                (data_off,) = _struct.unpack("<I", b[10:14])
-                hsize, w, h, planes, bpp, comp = _struct.unpack(
-                    "<IiiHHI", b[14:34]
-                )
-                if hsize < 40 or bpp != 24 or comp != 0:
-                    raise NotImplementedError(
-                        "only uncompressed 24-bit BITMAPINFOHEADER BMPs "
-                        f"supported (hsize={hsize} bpp={bpp} comp={comp})"
-                    )
-                bottom_up = h > 0
-                h = abs(h)
-                stride = (w * 3 + 3) & ~3  # rows pad to 4 bytes
-                raw = b[data_off : data_off + stride * h]
-                if len(raw) < stride * h:
-                    raise ValueError(f"short BMP pixel array: {key!r}")
-                arr = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride)
-                arr = arr[:, : w * 3].reshape(h, w, 3)
-                if bottom_up:
-                    arr = arr[::-1]
-                px = arr[:, :, ::-1].astype(np.int64)  # BGR -> RGB
-                for by in range(0, h, block):
-                    for bx in range(0, w, block):
-                        tile = px[by : by + block, bx : bx + block]
-                        s = tile.sum(axis=(0, 1))
-                        rows.append(
-                            (
-                                key, w, h, by // block, bx // block,
-                                tile.shape[0] * tile.shape[1],
-                                int(s[0]), int(s[1]), int(s[2]),
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    key_col, "width", "height", "by", "bx",
-                    "n_px", "sum_r", "sum_g", "sum_b",
-                ],
-            )
-
-    return df.select(key_col, content_col).mapInPandas(gen, schema)
+    return _tile_blocks(df, _bmp_frames, key_col, content_col, block)

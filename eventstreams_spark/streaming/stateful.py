@@ -3,6 +3,9 @@
 applyInPandasWithState gives per-key state with Arrow-batched Python —
 the escape hatch for semantics Spark's built-in stateful ops can't
 express (Logstash ``throttle``/``aggregate``-style accumulation).
+Every GroupState operator of the engine (these, ``elapsed.py`` and
+``multiline.py``) makes that call through :func:`keyed_state`, which
+owns the output schema, its column order and the fold contract below.
 
 Scale notes: state is partitioned by key group (one shuffle), batched
 through Arrow, and stored in the state store per (key, operator). The
@@ -15,25 +18,105 @@ vCPUs, against a few ms for a counting fold), plus the worker's
 one-time start-up.
 The engine package replaces that re-read by a stat-keyed one when it
 is imported (``eventstreams_spark/zipcache.py``), and a worker imports
-it only to unpickle a module-level engine function. So folds are
-module-level functions, not closures: a closure over ``pd`` alone is
-pickled by value and the worker never loads the engine. Keys must be
-well-distributed; a hot key serializes through one Python worker.
+it only to unpickle a module-level engine function. A closure over
+``pd`` alone is pickled by value and the worker never loads the
+engine, so :func:`keyed_state` refuses a fold defined inside a
+function (``TypeError``) and binds its parameters with
+``functools.partial`` instead. Keys must be well-distributed; a hot
+key serializes through one Python worker.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from functools import partial
 
+import bisect
 import hashlib
 import json
 import math
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import StructField, StructType
+
+from ..operators import tdigest as td
+from ..operators.kll import KLL
+from ..operators.smoothing import (
+    _HMM_CLAMP,
+    _hmm_init,
+    _round_half_away,
+    hmm_step_py,
+)
+from ..session import ship_package
+
+def keyed_state(
+    df: DataFrame,
+    by: str,
+    fold: Callable[..., Iterator[pd.DataFrame]],
+    *,
+    added: str,
+    state: str,
+    keep: str | None = "key",
+    mode: str = "append",
+    timeout: str = GroupStateTimeout.NoTimeout,
+    **params,
+) -> DataFrame:
+    """Group ``df`` by ``by`` and run ``fold(key, pdfs, state, **params)``
+    per key with GroupState: the engine's one ``applyInPandasWithState``
+    call.
+
+    The output schema is the columns ``keep`` names followed by the
+    ``added`` DDL: ``"input"`` keeps every input column (the fold yields
+    input rows with ``added`` appended), ``"key"`` keeps the ``by``
+    column with its input type, and ``None`` keeps nothing, so ``added``
+    is the whole schema. Each frame the fold yields is reordered to the
+    schema's columns. ``state`` is the state DDL, ``mode`` the output
+    mode and ``timeout`` a ``GroupStateTimeout``.
+
+    ``fold`` must be a module-level function (see the module notes); a
+    nested function or lambda raises ``TypeError``.
+    """
+    if "<" in getattr(fold, "__qualname__", ""):
+        raise TypeError(
+            "GroupState folds must be module-level functions, so that a worker "
+            f"unpickles them by reference and imports the engine; got {fold.__qualname__}"
+        )
+    if keep == "input":
+        lead = list(df.schema.fields)
+    elif keep == "key":
+        lead = [StructField(by, df.schema[by].dataType)]
+    else:
+        lead = []
+    tail = list(df.sparkSession._parse_ddl(added).fields) if added else []
+    schema = StructType(lead + tail)
+    ship_package(df.sparkSession)
+    run = partial(_ordered_fold, fold=partial(fold, **params), columns=schema.fieldNames())
+    run.__name__ = fold.__name__  # the UDF's name in plans
+    return df.groupBy(by).applyInPandasWithState(
+        run,
+        outputStructType=schema,
+        stateStructType=state,
+        outputMode=mode,
+        timeoutConf=timeout,
+    )
+
+
+def _ordered_fold(
+    key: tuple,
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+    *,
+    fold: Callable[..., Iterator[pd.DataFrame]],
+    columns: list[str],
+) -> Iterator[pd.DataFrame]:
+    """Run ``fold`` and yield its frames in the output schema's column
+    order."""
+    for pdf in fold(key, pdfs, state):
+        yield pdf if list(pdf.columns) == columns else pdf[columns]
 
 
 def _fold_sort(pdf: pd.DataFrame, ts_col: str) -> pd.DataFrame:
@@ -50,6 +133,20 @@ def _fold_sort(pdf: pd.DataFrame, ts_col: str) -> pd.DataFrame:
     return pdf.sort_values(cols, kind="mergesort")
 
 
+def _throttle_fold(key, pdfs, state: GroupState, *, ts_col: str, limit: int):
+    """Per-key fold of :func:`throttle_stream`."""
+    (admitted,) = state.get if state.exists else (0,)
+    for pdf in pdfs:
+        if admitted >= limit:
+            continue
+        take = _fold_sort(pdf, ts_col).head(limit - admitted).copy()
+        take["n_admitted"] = range(admitted + 1, admitted + len(take) + 1)
+        admitted += len(take)
+        if len(take):
+            yield take
+    state.update((admitted,))
+
+
 def throttle_stream(
     df: DataFrame,
     key_col: str,
@@ -63,35 +160,9 @@ def throttle_stream(
     Output schema = input schema plus ``n_admitted`` (running count per
     key at admission time).
     """
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    # copy, don't .add(): StructType.add mutates in place and would
-    # poison the input DataFrame's cached schema object
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("n_admitted", LongType())]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (admitted,) = state.get if state.exists else (0,)
-        for pdf in pdfs:
-            if admitted >= limit:
-                continue
-            take = _fold_sort(pdf, ts_col).head(limit - admitted).copy()
-            take["n_admitted"] = range(admitted + 1, admitted + len(take) + 1)
-            admitted += len(take)
-            if len(take):
-                yield take[out_cols]
-        state.update((admitted,))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="admitted long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        df, key_col, _throttle_fold, keep="input", added="n_admitted long",
+        state="admitted long", ts_col=ts_col, limit=limit,
     )
 
 
@@ -103,8 +174,7 @@ def _accumulate_fold(
     key_col: str,
     value_col: str,
 ) -> Iterator[pd.DataFrame]:
-    """Per-key fold of :func:`accumulate_stream` (module-level, see
-    module notes)."""
+    """Per-key fold of :func:`accumulate_stream`."""
     total, count = state.get if state.exists else (0.0, 0)
     for pdf in pdfs:
         total += float(pdf[value_col].sum())
@@ -123,15 +193,41 @@ def accumulate_stream(
     """Logstash ``aggregate`` analog: per-key running sum + count
     emitted once per micro-batch (update-style accumulation over
     arbitrary state)."""
-
-    out_schema = f"{key_col} string, running_sum double, running_count long"
-    return df.groupBy(key_col).applyInPandasWithState(
-        partial(_accumulate_fold, key_col=key_col, value_col=value_col),
-        outputStructType=out_schema,
-        stateStructType="total double, cnt long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        df, key_col, _accumulate_fold, added="running_sum double, running_count long",
+        state="total double, cnt long", mode="update", key_col=key_col, value_col=value_col,
     )
+
+
+def _throttle_periodic_fold(
+    key, pdfs, state: GroupState, *, ts_col: str, limit: int, period_seconds: int
+):
+    """Per-key fold of :func:`throttle_stream_periodic`."""
+    bucket, admitted = state.get if state.exists else (-1, 0)
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if not chunks:
+        state.update((bucket, admitted))
+        return
+    batch = _fold_sort(pd.concat(chunks), ts_col)
+    epochs = (batch[ts_col].astype("int64") // 1_000_000_000).astype("int64")
+    b = (epochs // period_seconds) * period_seconds
+    batch = batch.assign(bucket_start=b)
+    batch = batch[batch["bucket_start"] >= bucket]  # drop late buckets
+    if len(batch):
+        # 1-based admission index within each bucket, continuing the
+        # carried-in count for the bucket the state is already in
+        idx = batch.groupby("bucket_start").cumcount() + 1
+        carry = (batch["bucket_start"] == bucket) * admitted
+        batch = batch.assign(n_admitted=idx + carry)
+        last_b = int(batch["bucket_start"].iloc[-1])
+        admitted_last = int(
+            batch.loc[batch["bucket_start"] == last_b, "n_admitted"].max()
+        )
+        out = batch[batch["n_admitted"] <= limit]
+        bucket, admitted = last_b, min(admitted_last, limit)
+        if len(out):
+            yield out
+    state.update((bucket, admitted))
 
 
 def throttle_stream_periodic(
@@ -161,50 +257,87 @@ def throttle_stream_periodic(
     Vectorized: bucket assignment + per-bucket cumcount, no per-row
     Python loop.
     """
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField("bucket_start", LongType()), StructField("n_admitted", LongType())]
+    return keyed_state(
+        df, key_col, _throttle_periodic_fold, keep="input",
+        added="bucket_start long, n_admitted long", state="bucket long, admitted long",
+        ts_col=ts_col, limit=limit, period_seconds=period_seconds,
     )
-    out_cols = [f.name for f in out_schema.fields]
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        bucket, admitted = state.get if state.exists else (-1, 0)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            state.update((bucket, admitted))
-            return
-        batch = _fold_sort(pd.concat(chunks), ts_col)
-        epochs = (batch[ts_col].astype("int64") // 1_000_000_000).astype("int64")
-        b = (epochs // period_seconds) * period_seconds
-        batch = batch.assign(bucket_start=b)
-        batch = batch[batch["bucket_start"] >= bucket]  # drop late buckets
-        if len(batch):
-            # 1-based admission index within each bucket, continuing the
-            # carried-in count for the bucket the state is already in
-            idx = batch.groupby("bucket_start").cumcount() + 1
-            carry = (batch["bucket_start"] == bucket) * admitted
-            batch = batch.assign(n_admitted=idx + carry)
-            last_b = int(batch["bucket_start"].iloc[-1])
-            admitted_last = int(
-                batch.loc[batch["bucket_start"] == last_b, "n_admitted"].max()
+
+def _correlate_row(key_col, key, t_start_us, t_end_us, n, cents, completed):
+    return pd.DataFrame(
+        {
+            key_col: [key],
+            "t_start": [pd.Timestamp(t_start_us, unit="us")],
+            "t_end": [
+                pd.Timestamp(t_end_us, unit="us") if t_end_us is not None else pd.NaT
+            ],
+            "n_steps": [n],
+            "step_value_cents": [cents],
+            "completed": [completed],
+        }
+    )
+
+
+# Strict-between semantics (ADVICE r2): steps are events with
+# t_start < ts < t_end, matching the batch `aggregate` step and
+# the oracle-checked aggregate_task_correlate query exactly.
+# - rows at ts == t_start never count (skip below);
+# - rows at ts == t_end must not count either, but the close event
+#   is only seen when we reach it — so contributions are staged in
+#   a (cur_ts, n_cur, cents_cur) buffer, committed when a LATER
+#   timestamp arrives and discarded when the close lands on cur_ts.
+# Equality with batch holds when the task's opening start event is
+# first (by event_id) among same-timestamp events, which the
+# (ts, event_id) fold order guarantees for replayed event logs.
+def _correlate_tasks_fold(
+    key, pdfs, state: GroupState, *, key_col: str, type_col: str, ts_col: str,
+    value_col: str, start_value: str, end_value: str, timeout_ms: int | None
+):
+    """Per-key fold of :func:`correlate_tasks_stream`."""
+    if state.hasTimedOut:
+        started, t_start_us, n, cents, cur_ts, n_cur, cents_cur = state.get
+        state.remove()
+        if started:
+            # no close → no t_end bound; pending rows count
+            yield _correlate_row(
+                key_col, key[0], t_start_us, None, n + n_cur, cents + cents_cur, False
             )
-            out = batch[batch["n_admitted"] <= limit]
-            bucket, admitted = last_b, min(admitted_last, limit)
-            if len(out):
-                yield out[out_cols]
-        state.update((bucket, admitted))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="bucket long, admitted long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        return
+    started, t_start_us, n, cents, cur_ts, n_cur, cents_cur = (
+        state.get if state.exists else (0, 0, 0, 0, 0, 0, 0)
     )
+    for pdf in pdfs:
+        for r in _fold_sort(pdf, ts_col).itertuples(index=False):
+            ev_type = getattr(r, type_col)
+            ts_us = getattr(r, ts_col).value // 1000
+            if not started:
+                if ev_type == start_value:
+                    started, t_start_us, n, cents = 1, ts_us, 0, 0
+                    cur_ts, n_cur, cents_cur = ts_us, 0, 0
+            elif ev_type == end_value and ts_us >= t_start_us:
+                if cur_ts != ts_us:  # strict <t_end: drop same-ts stage
+                    n += n_cur
+                    cents += cents_cur
+                yield _correlate_row(key_col, key[0], t_start_us, ts_us, n, cents, True)
+                started, t_start_us, n, cents = 0, 0, 0, 0
+                cur_ts, n_cur, cents_cur = 0, 0, 0
+            elif ts_us > t_start_us:  # strict >t_start
+                if ts_us != cur_ts:
+                    n += n_cur
+                    cents += cents_cur
+                    cur_ts, n_cur, cents_cur = ts_us, 0, 0
+                n_cur += 1
+                v = getattr(r, value_col)
+                # floor(v*100 + 0.5): exact_money_sum rounding —
+                # int() would truncate negatives toward zero
+                cents_cur += math.floor(v * 100 + 0.5) if v == v else 0
+    if started:
+        state.update((started, t_start_us, n, cents, cur_ts, n_cur, cents_cur))
+        if timeout_ms is not None:
+            state.setTimeoutDuration(timeout_ms)
+    elif state.exists:
+        state.remove()
 
 
 def correlate_tasks_stream(
@@ -251,110 +384,53 @@ def correlate_tasks_stream(
     pre-r3 checkpoint requires a FRESH checkpoint directory (state
     rows cannot be migrated in place).
     """
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField(key_col, StringType()),
-            StructField("t_start", TimestampType()),
-            StructField("t_end", TimestampType()),
-            StructField("n_steps", LongType()),
-            StructField("step_value_cents", LongType()),
-            StructField("completed", BooleanType()),
-        ]
-    )
-
-    def _emit(key, t_start_us, t_end_us, n, cents, completed):
-        return pd.DataFrame(
-            {
-                key_col: [key],
-                "t_start": [pd.Timestamp(t_start_us, unit="us")],
-                "t_end": [
-                    pd.Timestamp(t_end_us, unit="us") if t_end_us is not None else pd.NaT
-                ],
-                "n_steps": [n],
-                "step_value_cents": [cents],
-                "completed": [completed],
-            }
-        )
-
-    # Strict-between semantics (ADVICE r2): steps are events with
-    # t_start < ts < t_end, matching the batch `aggregate` step and
-    # the oracle-checked aggregate_task_correlate query exactly.
-    # - rows at ts == t_start never count (skip below);
-    # - rows at ts == t_end must not count either, but the close event
-    #   is only seen when we reach it — so contributions are staged in
-    #   a (cur_ts, n_cur, cents_cur) buffer, committed when a LATER
-    #   timestamp arrives and discarded when the close lands on cur_ts.
-    # Equality with batch holds when the task's opening start event is
-    # first (by event_id) among same-timestamp events, which the
-    # (ts, event_id) fold order guarantees for replayed event logs.
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            started, t_start_us, n, cents, cur_ts, n_cur, cents_cur = state.get
-            state.remove()
-            if started:
-                # no close → no t_end bound; pending rows count
-                yield _emit(key[0], t_start_us, None, n + n_cur, cents + cents_cur, False)
-            return
-        started, t_start_us, n, cents, cur_ts, n_cur, cents_cur = (
-            state.get if state.exists else (0, 0, 0, 0, 0, 0, 0)
-        )
-        for pdf in pdfs:
-            for r in _fold_sort(pdf, ts_col).itertuples(index=False):
-                ev_type = getattr(r, type_col)
-                ts_us = getattr(r, ts_col).value // 1000
-                if not started:
-                    if ev_type == start_value:
-                        started, t_start_us, n, cents = 1, ts_us, 0, 0
-                        cur_ts, n_cur, cents_cur = ts_us, 0, 0
-                elif ev_type == end_value and ts_us >= t_start_us:
-                    if cur_ts != ts_us:  # strict <t_end: drop same-ts stage
-                        n += n_cur
-                        cents += cents_cur
-                    yield _emit(key[0], t_start_us, ts_us, n, cents, True)
-                    started, t_start_us, n, cents = 0, 0, 0, 0
-                    cur_ts, n_cur, cents_cur = 0, 0, 0
-                elif ts_us > t_start_us:  # strict >t_start
-                    if ts_us != cur_ts:
-                        n += n_cur
-                        cents += cents_cur
-                        cur_ts, n_cur, cents_cur = ts_us, 0, 0
-                    n_cur += 1
-                    v = getattr(r, value_col)
-                    # floor(v*100 + 0.5): exact_money_sum rounding —
-                    # int() would truncate negatives toward zero
-                    cents_cur += math.floor(v * 100 + 0.5) if v == v else 0
-        if started:
-            state.update((started, t_start_us, n, cents, cur_ts, n_cur, cents_cur))
-            if timeout_ms is not None:
-                state.setTimeoutDuration(timeout_ms)
-        elif state.exists:
-            state.remove()
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return keyed_state(
+        df, key_col, _correlate_tasks_fold,
+        added=(
+            "t_start timestamp, t_end timestamp, n_steps long, "
+            "step_value_cents long, completed boolean"
+        ),
+        state=(
             "started long, t_start_us long, n long, cents long, "
             "cur_ts long, n_cur long, cents_cur long"
         ),
-        outputMode="append",
-        timeoutConf=(
+        timeout=(
             GroupStateTimeout.ProcessingTimeTimeout
             if timeout_ms is not None
             else GroupStateTimeout.NoTimeout
         ),
+        key_col=key_col, type_col=type_col, ts_col=ts_col, value_col=value_col,
+        start_value=start_value, end_value=end_value, timeout_ms=timeout_ms,
     )
+
+
+def _zscore_anomaly_fold(
+    key, pdfs, state: GroupState, *, ts_col: str, value_col: str, threshold: float,
+    min_n: int
+):
+    """Per-key fold of :func:`zscore_anomaly_stream`."""
+    n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col).copy()
+        n_prior, zs, flags = [], [], []
+        for x in pdf[value_col]:
+            if n >= min_n and m2 > 0.0:
+                std = math.sqrt(m2 / (n - 1))
+                z = (x - mean) / std
+            else:
+                z = None
+            n_prior.append(n)
+            zs.append(z)
+            flags.append(z is not None and abs(z) > threshold)
+            n += 1
+            d = x - mean
+            mean += d / n
+            m2 += d * (x - mean)
+        pdf["n_prior"] = n_prior
+        pdf["z"] = pd.array(zs, dtype="float64")
+        pdf["is_anomaly"] = flags
+        yield pdf
+    state.update((n, mean, m2))
 
 
 def zscore_anomaly_stream(
@@ -382,58 +458,11 @@ def zscore_anomaly_stream(
     count; a hot key serializes through one Python worker — pre-split
     hot keys upstream if a single series outruns one core.
     """
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("n_prior", LongType()),
-            StructField("z", DoubleType()),
-            StructField("is_anomaly", BooleanType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import math
-
-        n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            n_prior, zs, flags = [], [], []
-            for x in pdf[value_col]:
-                if n >= min_n and m2 > 0.0:
-                    std = math.sqrt(m2 / (n - 1))
-                    z = (x - mean) / std
-                else:
-                    z = None
-                n_prior.append(n)
-                zs.append(z)
-                flags.append(z is not None and abs(z) > threshold)
-                n += 1
-                d = x - mean
-                mean += d / n
-                m2 += d * (x - mean)
-            pdf["n_prior"] = n_prior
-            pdf["z"] = pd.array(zs, dtype="float64")
-            pdf["is_anomaly"] = flags
-            yield pdf[out_cols]
-        state.update((n, mean, m2))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="n long, mean double, m2 double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        df, key_col, _zscore_anomaly_fold, keep="input",
+        added="n_prior long, z double, is_anomaly boolean",
+        state="n long, mean double, m2 double",
+        ts_col=ts_col, value_col=value_col, threshold=threshold, min_n=min_n,
     )
 
 
@@ -444,7 +473,6 @@ def _parse_mg_state(summary_s: str) -> dict[str, int]:
     (\\x1e-separated ``token\\x1fcount`` entries) are detected by
     their non-'{' first byte and migrated on read so restarts across
     the format change keep their counters (ADVICE r3)."""
-    import json
 
     def _legacy(blob: str) -> dict[str, int]:
         counters: dict[str, int] = {}
@@ -471,6 +499,33 @@ def _parse_mg_state(summary_s: str) -> dict[str, int]:
         if "\x1f" in summary_s:
             return _legacy(summary_s)
         raise
+
+
+def _heavy_hitters_fold(
+    key, pdfs, state: GroupState, *, token_col: str, order_col: str, k: int
+):
+    """Per-bucket fold of :func:`heavy_hitters_stream`."""
+    summary_s, snap = state.get if state.exists else ("", 0)
+    counters = _parse_mg_state(summary_s)
+    for pdf in pdfs:
+        for tok in _fold_sort(pdf, order_col)[token_col]:
+            tok = str(tok)
+            if tok in counters:
+                counters[tok] += 1
+            elif len(counters) < k:
+                counters[tok] = 1
+            else:
+                # decrement-all round; drop exhausted counters
+                for t in list(counters):
+                    counters[t] -= 1
+                    if counters[t] == 0:
+                        del counters[t]
+    snap += 1
+    state.update((json.dumps(counters, sort_keys=True), snap))
+    yield pd.DataFrame(
+        [(key[0], snap, t, c) for t, c in sorted(counters.items())],
+        columns=["bucket", "snap", "token", "cnt"],
+    )
 
 
 def heavy_hitters_stream(
@@ -501,59 +556,42 @@ def heavy_hitters_stream(
     format (\\x1e/\\x1f separators) are detected on read and migrated
     to JSON in place, so restarts across the upgrade keep counters.
     """
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("bucket", LongType()),
-            StructField("snap", LongType()),
-            StructField("token", StringType()),
-            StructField("cnt", LongType()),
-        ]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import json
-
-        summary_s, snap = state.get if state.exists else ("", 0)
-        counters = _parse_mg_state(summary_s)
-        for pdf in pdfs:
-            for tok in _fold_sort(pdf, order_col)[token_col]:
-                tok = str(tok)
-                if tok in counters:
-                    counters[tok] += 1
-                elif len(counters) < k:
-                    counters[tok] = 1
-                else:
-                    # decrement-all round; drop exhausted counters
-                    for t in list(counters):
-                        counters[t] -= 1
-                        if counters[t] == 0:
-                            del counters[t]
-        snap += 1
-        state.update((json.dumps(counters, sort_keys=True), snap))
-        yield pd.DataFrame(
-            [(key[0], snap, t, c) for t, c in sorted(counters.items())],
-            columns=["bucket", "snap", "token", "cnt"],
-        )
-
     bucketed = df.withColumn(
         "_bucket", F.pmod(F.hash(F.col(token_col)), F.lit(n_buckets)).cast("long")
     )
-    return bucketed.groupBy("_bucket").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="summary string, snap long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        bucketed, "_bucket", _heavy_hitters_fold, keep=None,
+        added="bucket long, snap long, token string, cnt long",
+        state="summary string, snap long",
+        token_col=token_col, order_col=order_col, k=k,
     )
+
+
+def _cusum_changepoint_fold(
+    key, pdfs, state: GroupState, *, ts_col: str, value_col: str, target: float,
+    slack: float, threshold: float
+):
+    """Per-key fold of :func:`cusum_changepoint_stream`."""
+    s_pos, s_neg = state.get if state.exists else (0.0, 0.0)
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col).copy()
+        pos_out, neg_out, alarms = [], [], []
+        for x in pdf[value_col]:
+            s_pos = max(0.0, s_pos + (x - target - slack))
+            s_neg = max(0.0, s_neg + (target - x - slack))
+            fired = s_pos > threshold or s_neg > threshold
+            pos_out.append(s_pos)
+            neg_out.append(s_neg)
+            alarms.append(fired)
+            if s_pos > threshold:
+                s_pos = 0.0
+            if s_neg > threshold:
+                s_neg = 0.0
+        pdf["s_pos"] = pos_out
+        pdf["s_neg"] = neg_out
+        pdf["alarm"] = alarms
+        yield pdf
+    state.update((s_pos, s_neg))
 
 
 def cusum_changepoint_stream(
@@ -583,54 +621,39 @@ def cusum_changepoint_stream(
     over Arrow batches (the fold is inherently sequential per key —
     parallelism comes from key count, like all keyed stateful ops).
     """
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        StructField,
-        StructType,
+    return keyed_state(
+        df, key_col, _cusum_changepoint_fold, keep="input",
+        added="s_pos double, s_neg double, alarm boolean",
+        state="s_pos double, s_neg double",
+        ts_col=ts_col, value_col=value_col, target=target, slack=slack, threshold=threshold,
     )
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("s_pos", DoubleType()),
-            StructField("s_neg", DoubleType()),
-            StructField("alarm", BooleanType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        s_pos, s_neg = state.get if state.exists else (0.0, 0.0)
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            pos_out, neg_out, alarms = [], [], []
-            for x in pdf[value_col]:
-                s_pos = max(0.0, s_pos + (x - target - slack))
-                s_neg = max(0.0, s_neg + (target - x - slack))
-                fired = s_pos > threshold or s_neg > threshold
-                pos_out.append(s_pos)
-                neg_out.append(s_neg)
-                alarms.append(fired)
-                if s_pos > threshold:
-                    s_pos = 0.0
-                if s_neg > threshold:
-                    s_neg = 0.0
-            pdf["s_pos"] = pos_out
-            pdf["s_neg"] = neg_out
-            pdf["alarm"] = alarms
-            yield pdf[out_cols]
-        state.update((s_pos, s_neg))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="s_pos double, s_neg double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+def _page_hinkley_fold(
+    key, pdfs, state: GroupState, *, ts_col: str, value_col: str, delta: float,
+    lam: float
+):
+    """Per-key fold of :func:`page_hinkley_stream`."""
+    n, total, m, m_min = state.get if state.exists else (0, 0.0, 0.0, 0.0)
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col).copy()
+        phs, alarms = [], []
+        for x in pdf[value_col]:
+            n += 1
+            total += x
+            mean = total / n
+            m += x - mean - delta
+            m_min = min(m_min, m)
+            ph = m - m_min
+            fired = ph > lam
+            phs.append(ph)
+            alarms.append(fired)
+            if fired:
+                n, total, m, m_min = 0, 0.0, 0.0, 0.0
+        pdf["ph"] = phs
+        pdf["alarm"] = alarms
+        yield pdf
+    state.update((n, total, m, m_min))
 
 
 def page_hinkley_stream(
@@ -651,52 +674,51 @@ def page_hinkley_stream(
     State: (n, sum, m, M) — four numbers per key; batching-invariant
     given time-ordered arrival (rows sorted per batch).
     """
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        StructField,
-        StructType,
+    return keyed_state(
+        df, key_col, _page_hinkley_fold, keep="input",
+        added="ph double, alarm boolean",
+        state="n long, total double, m double, m_min double",
+        ts_col=ts_col, value_col=value_col, delta=delta, lam=lam,
     )
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("ph", DoubleType()),
-            StructField("alarm", BooleanType()),
-        ]
+
+def _counter_rate_fold(
+    key, pdfs, state: GroupState, *, key_col: str, ts_col: str, value_col: str
+):
+    """Per-series fold of :func:`counter_rate_stream`."""
+    has_prev, prev, min_es, max_es, n, resets, cents = (
+        state.get if state.exists else (0, 0.0, 0.0, 0.0, 0, 0, 0)
     )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, total, m, m_min = state.get if state.exists else (0, 0.0, 0.0, 0.0)
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            phs, alarms = [], []
-            for x in pdf[value_col]:
-                n += 1
-                total += x
-                mean = total / n
-                m += x - mean - delta
-                m_min = min(m_min, m)
-                ph = m - m_min
-                fired = ph > lam
-                phs.append(ph)
-                alarms.append(fired)
-                if fired:
-                    n, total, m, m_min = 0, 0.0, 0.0, 0.0
-            pdf["ph"] = phs
-            pdf["alarm"] = alarms
-            yield pdf[out_cols]
-        state.update((n, total, m, m_min))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="n long, total double, m double, m_min double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    for pdf in pdfs:
+        for r in _fold_sort(pdf, ts_col).itertuples(index=False):
+            v = getattr(r, value_col)
+            es = getattr(r, ts_col).value / 1e9
+            if not n:
+                min_es = es
+            max_es = es
+            n += 1
+            if not has_prev:
+                inc = 0.0
+            elif v >= prev:
+                inc = v - prev
+            else:
+                inc = v
+                resets += 1
+            cents += math.floor(inc * 100 + 0.5)
+            has_prev, prev = 1, v
+    state.update((has_prev, prev, min_es, max_es, n, resets, cents))
+    rate = (
+        round(cents / 100.0 / (max_es - min_es), 6)
+        if max_es > min_es else None
+    )
+    yield pd.DataFrame(
+        {
+            key_col: [key[0]],
+            "n_samples": [n],
+            "n_resets": [resets],
+            "total_increase_cents": [cents],
+            "rate_per_sec": [rate],
+        }
     )
 
 
@@ -719,59 +741,49 @@ def counter_rate_stream(
     Python fold is the sequential-semantics price, parallel across
     series as usual.
     """
-    out_schema = (
-        f"{key_col} string, n_samples long, n_resets long, "
-        "total_increase_cents long, rate_per_sec double"
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        has_prev, prev, min_es, max_es, n, resets, cents = (
-            state.get if state.exists else (0, 0.0, 0.0, 0.0, 0, 0, 0)
-        )
-        for pdf in pdfs:
-            for r in _fold_sort(pdf, ts_col).itertuples(index=False):
-                v = getattr(r, value_col)
-                es = getattr(r, ts_col).value / 1e9
-                if not n:
-                    min_es = es
-                max_es = es
-                n += 1
-                if not has_prev:
-                    inc = 0.0
-                elif v >= prev:
-                    inc = v - prev
-                else:
-                    inc = v
-                    resets += 1
-                cents += math.floor(inc * 100 + 0.5)
-                has_prev, prev = 1, v
-        state.update((has_prev, prev, min_es, max_es, n, resets, cents))
-        rate = (
-            round(cents / 100.0 / (max_es - min_es), 6)
-            if max_es > min_es else None
-        )
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "n_samples": [n],
-                "n_resets": [resets],
-                "total_increase_cents": [cents],
-                "rate_per_sec": [rate],
-            }
-        )
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return keyed_state(
+        df, key_col, _counter_rate_fold,
+        added="n_samples long, n_resets long, total_increase_cents long, rate_per_sec double",
+        state=(
             "has_prev long, prev double, min_es double, max_es double, "
             "n long, resets long, cents long"
         ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        mode="update", key_col=key_col, ts_col=ts_col, value_col=value_col,
     )
+
+
+def _holt_linear_fold(
+    key, pdfs, state: GroupState, *, ts_col: str, value_col: str, alpha: float,
+    beta: float
+):
+    """Per-key fold of :func:`holt_linear_stream`."""
+    n, lvl, trend, sse = state.get if state.exists else (0, 0.0, 0.0, 0.0)
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col).copy()
+        rns, lvls, trends, fcs, sses = [], [], [], [], []
+        for x in pdf[value_col]:
+            if n == 0:
+                lvl, trend, fc = x, 0.0, None
+            else:
+                fc = lvl + trend
+                err = x - fc
+                sse = sse + err * err
+                new_lvl = alpha * x + (1.0 - alpha) * (lvl + trend)
+                trend = beta * (new_lvl - lvl) + (1.0 - beta) * trend
+                lvl = new_lvl
+            n += 1
+            rns.append(n)
+            lvls.append(lvl)
+            trends.append(trend)
+            fcs.append(fc)
+            sses.append(sse)
+        pdf["rn"] = rns
+        pdf["level"] = lvls
+        pdf["trend"] = trends
+        pdf["forecast"] = pd.array(fcs, dtype="float64")
+        pdf["sse_running"] = sses
+        yield pdf
+    state.update((n, lvl, trend, sse))
 
 
 def holt_linear_stream(
@@ -789,58 +801,50 @@ def holt_linear_stream(
     post-update level/trend, pre-update forecast, and running SSE,
     identical to the batch fold however the stream is micro-batched
     (pinned by test_holt_batch_equals_stream)."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-            StructField("forecast", DoubleType()),
-            StructField("sse_running", DoubleType()),
-        ]
+    return keyed_state(
+        df, key_col, _holt_linear_fold, keep="input",
+        added="rn long, level double, trend double, forecast double, sse_running double",
+        state="n long, lvl double, trend double, sse double",
+        ts_col=ts_col, value_col=value_col, alpha=alpha, beta=beta,
     )
-    out_cols = [f.name for f in out_schema.fields]
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, lvl, trend, sse = state.get if state.exists else (0, 0.0, 0.0, 0.0)
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            rns, lvls, trends, fcs, sses = [], [], [], [], []
-            for x in pdf[value_col]:
-                if n == 0:
-                    lvl, trend, fc = x, 0.0, None
-                else:
-                    fc = lvl + trend
-                    err = x - fc
-                    sse = sse + err * err
-                    new_lvl = alpha * x + (1.0 - alpha) * (lvl + trend)
-                    trend = beta * (new_lvl - lvl) + (1.0 - beta) * trend
-                    lvl = new_lvl
+
+def _session_path_fold(
+    key, pdfs, state: GroupState, *, key_col: str, ts_col: str, step_col: str,
+    gap_ns: int, max_steps: int
+):
+    """Per-key fold of :func:`session_path_stream`."""
+    if state.exists:
+        start_ns, last_ns, n, path = state.get
+    else:
+        start_ns, last_ns, n, path = (-1, -1, 0, "")
+    closed: list[tuple[int, int, int, str]] = []
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col)
+        ts_ns = pdf[ts_col].values.astype("datetime64[ns]").astype("int64")
+        steps = pdf[step_col].astype(str).values
+        for t, s in zip(ts_ns, steps):
+            if start_ns < 0:
+                start_ns, last_ns, n, path = (int(t), int(t), 1, s)
+            elif t - last_ns > gap_ns:
+                closed.append((start_ns, last_ns, n, path))
+                start_ns, last_ns, n, path = (int(t), int(t), 1, s)
+            else:
                 n += 1
-                rns.append(n)
-                lvls.append(lvl)
-                trends.append(trend)
-                fcs.append(fc)
-                sses.append(sse)
-            pdf["rn"] = rns
-            pdf["level"] = lvls
-            pdf["trend"] = trends
-            pdf["forecast"] = pd.array(fcs, dtype="float64")
-            pdf["sse_running"] = sses
-            yield pdf[out_cols]
-        state.update((n, lvl, trend, sse))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="n long, lvl double, trend double, sse double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+                last_ns = int(t)
+                if n <= max_steps:
+                    path = path + ">" + s
+    state.update((start_ns, last_ns, n, path))
+    if closed:
+        yield pd.DataFrame(
+            {
+                key_col: [key[0]] * len(closed),
+                "session_start": pd.to_datetime([c[0] for c in closed]),
+                "session_end": pd.to_datetime([c[1] for c in closed]),
+                "n_events": [c[2] for c in closed],
+                "path": [c[3] for c in closed],
+            }
+        )
 
 
 def session_path_stream(
@@ -867,62 +871,38 @@ def session_path_stream(
     fold equals the batch window fold. State is O(1) per key
     (4 scalars + a ≤max_steps path string).
     """
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType, TimestampType,
+    return keyed_state(
+        df, key_col, _session_path_fold,
+        added="session_start timestamp, session_end timestamp, n_events long, path string",
+        state="start_ns long, last_ns long, n long, path string",
+        key_col=key_col, ts_col=ts_col, step_col=step_col,
+        gap_ns=int(gap_seconds) * 1_000_000_000, max_steps=max_steps,
     )
 
-    gap_ns = int(gap_seconds) * 1_000_000_000
-    key_type = df.schema[key_col].dataType
-    out_schema = StructType(
-        [
-            StructField(key_col, key_type),
-            StructField("session_start", TimestampType()),
-            StructField("session_end", TimestampType()),
-            StructField("n_events", LongType()),
-            StructField("path", StringType()),
-        ]
-    )
 
-    def fn(key, pdfs, state: GroupState):
-        if state.exists:
-            start_ns, last_ns, n, path = state.get
-        else:
-            start_ns, last_ns, n, path = (-1, -1, 0, "")
-        closed: list[tuple[int, int, int, str]] = []
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col)
-            ts_ns = pdf[ts_col].values.astype("datetime64[ns]").astype("int64")
-            steps = pdf[step_col].astype(str).values
-            for t, s in zip(ts_ns, steps):
-                if start_ns < 0:
-                    start_ns, last_ns, n, path = (int(t), int(t), 1, s)
-                elif t - last_ns > gap_ns:
-                    closed.append((start_ns, last_ns, n, path))
-                    start_ns, last_ns, n, path = (int(t), int(t), 1, s)
-                else:
-                    n += 1
-                    last_ns = int(t)
-                    if n <= max_steps:
-                        path = path + ">" + s
-        state.update((start_ns, last_ns, n, path))
-        if closed:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(closed),
-                    "session_start": pd.to_datetime([c[0] for c in closed]),
-                    "session_end": pd.to_datetime([c[1] for c in closed]),
-                    "n_events": [c[2] for c in closed],
-                    "path": [c[3] for c in closed],
-                }
-            )
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="start_ns long, last_ns long, n long, path string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+def _tdigest_fold(
+    key, pdfs, state: GroupState, *, key_col: str, value_col: str, qs: list,
+    delta: float
+):
+    """Per-key fold of :func:`tdigest_stream`."""
+    if state.exists:
+        means, weights = state.get
+        m = np.asarray(means, dtype=np.float64)
+        w = np.asarray(weights, dtype=np.float64)
+    else:
+        m = np.empty(0)
+        w = np.empty(0)
+    for pdf in pdfs:
+        vals = pdf[value_col].to_numpy(dtype=np.float64)
+        if len(vals):
+            m, w = td.merge([(m, w), td.build(vals, delta=delta)], delta=delta)
+    state.update((m.tolist(), w.tolist()))
+    row = {key_col: [key[0]]}
+    for q in qs:
+        row[f"q{int(q * 1000)}"] = [td.quantile(m, w, q)]
+    row["n_centroids"] = [int(len(m))]
+    row["total_weight"] = [float(w.sum())]
+    yield pd.DataFrame(row)
 
 
 def tdigest_stream(
@@ -946,42 +926,54 @@ def tdigest_stream(
     (rank error ≤ 2%), not bitwise equality — same discipline as the
     batch gate.
     """
-    import numpy as np
-
-    from ..operators.tdigest import build as td_build
-    from ..operators.tdigest import merge as td_merge
-    from ..operators.tdigest import quantile as td_quantile
-
-    qs = list(qs)
     q_fields = ", ".join(f"q{int(q * 1000)} double" for q in qs)
-    out_schema = f"{key_col} string, {q_fields}, n_centroids int, total_weight double"
+    return keyed_state(
+        df, key_col, _tdigest_fold,
+        added=f"{q_fields}, n_centroids int, total_weight double",
+        state="means array<double>, weights array<double>", mode="update",
+        key_col=key_col, value_col=value_col, qs=list(qs), delta=delta,
+    )
 
-    def fn(key, pdfs, state: GroupState):
-        if state.exists:
-            means, weights = state.get
-            m = np.asarray(means, dtype=np.float64)
-            w = np.asarray(weights, dtype=np.float64)
-        else:
-            m = np.empty(0)
-            w = np.empty(0)
-        for pdf in pdfs:
-            vals = pdf[value_col].to_numpy(dtype=np.float64)
-            if len(vals):
-                m, w = td_merge([(m, w), td_build(vals, delta=delta)], delta=delta)
-        state.update((m.tolist(), w.tolist()))
-        row = {key_col: [key[0]]}
-        for q in qs:
-            row[f"q{int(q * 1000)}"] = [td_quantile(m, w, q)]
-        row["n_centroids"] = [int(len(m))]
-        row["total_weight"] = [float(w.sum())]
-        yield pd.DataFrame(row)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="means array<double>, weights array<double>",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def _decayed_topk_fold(
+    key, pdfs, state: GroupState, *, token_col: str, ts_col: str, hl_ns: float, k: int,
+    max_tokens: int
+):
+    """Per-key fold of :func:`decayed_topk_stream`."""
+    blob, snap = state.get if state.exists else ("", 0)
+    w: dict[str, list] = json.loads(blob) if blob else {}
+    max_ts = max((v[1] for v in w.values()), default=0)
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col)
+        ts_ns = pdf[ts_col].values.astype("datetime64[ns]").astype("int64")
+        toks = pdf[token_col].astype(str).values
+        for t, tok in zip(ts_ns, toks):
+            t = int(t)
+            max_ts = max(max_ts, t)
+            if tok in w:
+                wt, ref = w[tok]
+                w[tok] = [wt * 2.0 ** (-(t - ref) / hl_ns) + 1.0, t]
+            else:
+                w[tok] = [1.0, t]
+        if len(w) > max_tokens:
+            decayed = {
+                tok: wt * 2.0 ** (-(max_ts - ref) / hl_ns)
+                for tok, (wt, ref) in w.items()
+            }
+            keep = sorted(decayed, key=lambda x: (-decayed[x], x))[:max_tokens]
+            w = {tok: w[tok] for tok in keep}
+    snap += 1
+    state.update((json.dumps(w, sort_keys=True), snap))
+    decayed = sorted(
+        (
+            (tok, wt * 2.0 ** (-(max_ts - ref) / hl_ns))
+            for tok, (wt, ref) in w.items()
+        ),
+        key=lambda x: (-x[1], x[0]),
+    )[:k]
+    yield pd.DataFrame(
+        [(str(key[0]), snap, tok, round(wt, 6)) for tok, wt in decayed],
+        columns=["key", "snap", "token", "weight"],
     )
 
 
@@ -1012,66 +1004,41 @@ def decayed_topk_stream(
 
     State: JSON token → (weight, ref_ts_ns), O(max_tokens) per key.
     """
-    import json
-
-    from pyspark.sql.types import (
-        DoubleType, LongType, StringType, StructField, StructType,
+    return keyed_state(
+        df, key_col, _decayed_topk_fold, keep=None,
+        added="key string, snap long, token string, weight double",
+        state="blob string, snap long",
+        token_col=token_col, ts_col=ts_col, hl_ns=float(half_life_seconds) * 1e9,
+        k=k, max_tokens=max_tokens,
     )
 
-    hl_ns = float(half_life_seconds) * 1e9
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("snap", LongType()),
-            StructField("token", StringType()),
-            StructField("weight", DoubleType()),
-        ]
-    )
 
-    def fn(key, pdfs, state: GroupState):
-        blob, snap = state.get if state.exists else ("", 0)
-        w: dict[str, list] = json.loads(blob) if blob else {}
-        max_ts = max((v[1] for v in w.values()), default=0)
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col)
-            ts_ns = pdf[ts_col].values.astype("datetime64[ns]").astype("int64")
-            toks = pdf[token_col].astype(str).values
-            for t, tok in zip(ts_ns, toks):
-                t = int(t)
-                max_ts = max(max_ts, t)
-                if tok in w:
-                    wt, ref = w[tok]
-                    w[tok] = [wt * 2.0 ** (-(t - ref) / hl_ns) + 1.0, t]
-                else:
-                    w[tok] = [1.0, t]
-            if len(w) > max_tokens:
-                decayed = {
-                    tok: wt * 2.0 ** (-(max_ts - ref) / hl_ns)
-                    for tok, (wt, ref) in w.items()
-                }
-                keep = sorted(decayed, key=lambda x: (-decayed[x], x))[:max_tokens]
-                w = {tok: w[tok] for tok in keep}
-        snap += 1
-        state.update((json.dumps(w, sort_keys=True), snap))
-        decayed = sorted(
-            (
-                (tok, wt * 2.0 ** (-(max_ts - ref) / hl_ns))
-                for tok, (wt, ref) in w.items()
-            ),
-            key=lambda x: (-x[1], x[0]),
-        )[:k]
-        yield pd.DataFrame(
-            [(str(key[0]), snap, tok, round(wt, 6)) for tok, wt in decayed],
-            columns=["key", "snap", "token", "weight"],
-        )
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="blob string, snap long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def _kll_quantile_fold(
+    key, pdfs, state: GroupState, *, ts_col: str, value_col: str, qs: list, k: int
+):
+    """Per-key fold of :func:`kll_quantile_stream`."""
+    blob, snap = state.get if state.exists else ("", 0)
+    if blob:
+        d = json.loads(blob)
+        sk = KLL.deserialize(d["items"], d["levels"], d["flips"], k=k)
+    else:
+        sk = KLL(k=k)
+    for pdf in pdfs:
+        sk.update_batch(_fold_sort(pdf, ts_col)[value_col].to_numpy())
+    snap += 1
+    items, levels, flips = sk.serialize()
+    state.update(
+        (json.dumps({"items": items, "levels": levels, "flips": flips}), snap)
     )
+    row = {
+        "key": [str(key[0])],
+        "snap": [snap],
+        "total_weight": [sk.total_weight()],
+        "n_retained": [sk.n_retained()],
+    }
+    for q in qs:
+        row[f"q{int(q * 1000)}"] = [sk.quantile(q)]
+    yield pd.DataFrame(row)
 
 
 def kll_quantile_stream(
@@ -1104,62 +1071,46 @@ def kll_quantile_stream(
     key; JSON-serialized (separator-safe, same discipline as
     heavy_hitters_stream).
     """
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    q_fields = "".join(f", q{int(q * 1000)} double" for q in qs)
+    return keyed_state(
+        df, key_col, _kll_quantile_fold, keep=None,
+        added=f"key string, snap long, total_weight double, n_retained int{q_fields}",
+        state="blob string, snap long",
+        ts_col=ts_col, value_col=value_col, qs=list(qs), k=k,
     )
 
-    from ..operators.kll import KLL
 
-    qs = list(qs)
-    out_schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("snap", LongType()),
-            StructField("total_weight", DoubleType()),
-            StructField("n_retained", IntegerType()),
-        ]
-        + [StructField(f"q{int(q * 1000)}", DoubleType()) for q in qs]
+def _alert_fsm_fold(
+    key, pdfs, state: GroupState, *, key_col: str, order_col: str, breach_col: str,
+    raise_after: int, clear_after: int
+):
+    """Per-key fold of :func:`alert_fsm_stream`."""
+    alert, cb, cg, n_obs, n_breach, n_alert, n_supp = (
+        state.get if state.exists else (0, 0, 0, 0, 0, 0, 0)
     )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import json
-
-        blob, snap = state.get if state.exists else ("", 0)
-        if blob:
-            d = json.loads(blob)
-            sk = KLL.deserialize(d["items"], d["levels"], d["flips"], k=k)
-        else:
-            sk = KLL(k=k)
-        for pdf in pdfs:
-            sk.update_batch(_fold_sort(pdf, ts_col)[value_col].to_numpy())
-        snap += 1
-        items, levels, flips = sk.serialize()
-        state.update(
-            (json.dumps({"items": items, "levels": levels, "flips": flips}), snap)
-        )
-        row = {
-            "key": [str(key[0])],
-            "snap": [snap],
-            "total_weight": [sk.total_weight()],
-            "n_retained": [sk.n_retained()],
+    for pdf in pdfs:
+        for r in _fold_sort(pdf, order_col).itertuples(index=False):
+            b = int(getattr(r, breach_col))
+            if alert == 0 and b == 1 and cb + 1 >= raise_after:
+                alert = 1
+            elif alert == 1 and b == 0 and cg + 1 >= clear_after:
+                alert = 0
+            cb = cb + 1 if b == 1 else 0
+            cg = cg + 1 if b == 0 else 0
+            n_obs += 1
+            n_breach += b
+            n_alert += alert
+            n_supp += 1 if (alert == 1 and b == 0) else 0
+    state.update((alert, cb, cg, n_obs, n_breach, n_alert, n_supp))
+    yield pd.DataFrame(
+        {
+            key_col: [key[0]],
+            "n_obs": [n_obs],
+            "n_breach": [n_breach],
+            "n_alert": [n_alert],
+            "n_suppressed": [n_supp],
+            "alert_now": [alert],
         }
-        for q in qs:
-            row[f"q{int(q * 1000)}"] = [sk.quantile(q)]
-        yield pd.DataFrame(row)
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="blob string, snap long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -1185,52 +1136,46 @@ def alert_fsm_stream(
     be the pre-aggregated breach series (e.g. daily flags), not raw
     events — the same contract as the batch query.
     """
-    out_schema = (
-        f"{key_col} string, n_obs long, n_breach long, "
-        "n_alert long, n_suppressed long, alert_now long"
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        alert, cb, cg, n_obs, n_breach, n_alert, n_supp = (
-            state.get if state.exists else (0, 0, 0, 0, 0, 0, 0)
-        )
-        for pdf in pdfs:
-            for r in _fold_sort(pdf, order_col).itertuples(index=False):
-                b = int(getattr(r, breach_col))
-                if alert == 0 and b == 1 and cb + 1 >= raise_after:
-                    alert = 1
-                elif alert == 1 and b == 0 and cg + 1 >= clear_after:
-                    alert = 0
-                cb = cb + 1 if b == 1 else 0
-                cg = cg + 1 if b == 0 else 0
-                n_obs += 1
-                n_breach += b
-                n_alert += alert
-                n_supp += 1 if (alert == 1 and b == 0) else 0
-        state.update((alert, cb, cg, n_obs, n_breach, n_alert, n_supp))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "n_obs": [n_obs],
-                "n_breach": [n_breach],
-                "n_alert": [n_alert],
-                "n_suppressed": [n_supp],
-                "alert_now": [alert],
-            }
-        )
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
+    return keyed_state(
+        df, key_col, _alert_fsm_fold,
+        added="n_obs long, n_breach long, n_alert long, n_suppressed long, alert_now long",
+        state=(
             "alert long, cb long, cg long, n_obs long, "
             "n_breach long, n_alert long, n_supp long"
         ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        mode="update", key_col=key_col, order_col=order_col, breach_col=breach_col,
+        raise_after=raise_after, clear_after=clear_after,
     )
+
+
+def _kalman_level_fold(
+    key, pdfs, state: GroupState, *, ts_col: str, value_col: str, q_var: float,
+    r_var: float
+):
+    """Per-key fold of :func:`kalman_level_stream`."""
+    n, x, p = state.get if state.exists else (0, 0.0, 0.0)
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col).copy()
+        rns, xs, ps, ks = [], [], [], []
+        for z in pdf[value_col]:
+            if n == 0:
+                x, p, k = z, r_var, None
+            else:
+                pp = p + q_var
+                k = pp / (pp + r_var)
+                x = x + k * (z - x)
+                p = (1.0 - k) * pp
+            n += 1
+            rns.append(n)
+            xs.append(x)
+            ps.append(p)
+            ks.append(k)
+        pdf["rn"] = rns
+        pdf["level"] = xs
+        pdf["variance"] = ps
+        pdf["gain"] = pd.array(ks, dtype="float64")
+        yield pdf
+    state.update((n, x, p))
 
 
 def kalman_level_stream(
@@ -1250,53 +1195,34 @@ def kalman_level_stream(
     test_kalman_batch_equals_stream). The data-adaptive gain is the
     point: after a restart the state picks up mid-Riccati instead of
     re-warming like a fixed-α EWMA would."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("level", DoubleType()),
-            StructField("variance", DoubleType()),
-            StructField("gain", DoubleType()),
-        ]
+    return keyed_state(
+        df, key_col, _kalman_level_fold, keep="input",
+        added="rn long, level double, variance double, gain double",
+        state="n long, x double, p double",
+        ts_col=ts_col, value_col=value_col, q_var=q_var, r_var=r_var,
     )
-    out_cols = [f.name for f in out_schema.fields]
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, x, p = state.get if state.exists else (0, 0.0, 0.0)
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            rns, xs, ps, ks = [], [], [], []
-            for z in pdf[value_col]:
-                if n == 0:
-                    x, p, k = z, r_var, None
-                else:
-                    pp = p + q_var
-                    k = pp / (pp + r_var)
-                    x = x + k * (z - x)
-                    p = (1.0 - k) * pp
-                n += 1
-                rns.append(n)
-                xs.append(x)
-                ps.append(p)
-                ks.append(k)
-            pdf["rn"] = rns
-            pdf["level"] = xs
-            pdf["variance"] = ps
-            pdf["gain"] = pd.array(ks, dtype="float64")
-            yield pdf[out_cols]
-        state.update((n, x, p))
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="n long, x double, p double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+def _hmm_burst_fold(
+    key, pdfs, state: GroupState, *, ts_col: str, k_col: str, lam0_col: str
+):
+    """Per-key fold of :func:`hmm_burst_stream`."""
+    n, L = state.get if state.exists else (0, _hmm_init())
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col).copy()
+        rns, lods, pbs = [], [], []
+        for k, lam0 in zip(pdf[k_col], pdf[lam0_col]):
+            L = hmm_step_py(L, int(k), float(lam0))
+            lo = max(min(L, _HMM_CLAMP), -_HMM_CLAMP)
+            n += 1
+            rns.append(n)
+            lods.append(_round_half_away(lo, 6))
+            pbs.append(_round_half_away(1.0 / (1.0 + math.exp(-lo)), 6))
+        pdf["rn"] = rns
+        pdf["log_odds"] = lods
+        pdf["p_burst"] = pbs
+        yield pdf
+    state.update((n, L))
 
 
 def hmm_burst_stream(
@@ -1317,52 +1243,41 @@ def hmm_burst_stream(
     requantization makes the stream bit-equal to the batch fold
     across any micro-batch boundary (test_hmm_batch_equals_stream);
     state is O(1) per key and restart-safe like every fold here."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    from ..operators.smoothing import (
-        _HMM_CLAMP,
-        _hmm_init,
-        _round_half_away,
-        hmm_step_py,
+    return keyed_state(
+        df, key_col, _hmm_burst_fold, keep="input",
+        added="rn long, log_odds double, p_burst double", state="n long, l double",
+        ts_col=ts_col, k_col=k_col, lam0_col=lam0_col,
     )
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("log_odds", DoubleType()),
-            StructField("p_burst", DoubleType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, L = state.get if state.exists else (0, _hmm_init())
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            rns, lods, pbs = [], [], []
-            for k, lam0 in zip(pdf[k_col], pdf[lam0_col]):
-                L = hmm_step_py(L, int(k), float(lam0))
-                lo = max(min(L, _HMM_CLAMP), -_HMM_CLAMP)
-                n += 1
-                rns.append(n)
-                lods.append(_round_half_away(lo, 6))
-                pbs.append(_round_half_away(1.0 / (1.0 + math.exp(-lo)), 6))
-            pdf["rn"] = rns
-            pdf["log_odds"] = lods
-            pdf["p_burst"] = pbs
-            yield pdf[out_cols]
-        state.update((n, L))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="n long, l double",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+def _forecast_error_fold(
+    key, pdfs, state: GroupState, *, ts_col: str, value_col: str, season: int
+):
+    """Per-key fold of :func:`forecast_error_stream`."""
+    if state.exists:
+        n, ring_json = state.get
+        ring = json.loads(ring_json)
+    else:
+        n, ring = 0, []
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col).copy()
+        rns, naives, snaives = [], [], []
+        for v in pdf[value_col]:
+            v = int(v)
+            naives.append(abs(v - ring[-1]) if ring else None)
+            snaives.append(
+                abs(v - ring[-season]) if len(ring) >= season else None
+            )
+            ring.append(v)
+            if len(ring) > season:
+                ring = ring[-season:]
+            n += 1
+            rns.append(n)
+        pdf["rn"] = rns
+        pdf["ae_naive"] = pd.array(naives, dtype="Int64")
+        pdf["ae_snaive"] = pd.array(snaives, dtype="Int64")
+        yield pdf
+    state.update((n, json.dumps(ring)))
 
 
 def forecast_error_stream(
@@ -1384,55 +1299,51 @@ def forecast_error_stream(
     exact (test_forecast_error_batch_equals_stream). State is O(season)
     per key; a model's own predictions would join in as a dimension
     and score identically."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("ae_naive", LongType()),
-            StructField("ae_snaive", LongType()),
-        ]
+    return keyed_state(
+        df, key_col, _forecast_error_fold, keep="input",
+        added="rn long, ae_naive long, ae_snaive long", state="n long, ring string",
+        ts_col=ts_col, value_col=value_col, season=season,
     )
-    out_cols = [f.name for f in out_schema.fields]
 
-    import json
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, ring_json = state.get
-            ring = json.loads(ring_json)
-        else:
-            n, ring = 0, []
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            rns, naives, snaives = [], [], []
-            for v in pdf[value_col]:
-                v = int(v)
-                naives.append(abs(v - ring[-1]) if ring else None)
-                snaives.append(
-                    abs(v - ring[-season]) if len(ring) >= season else None
-                )
-                ring.append(v)
-                if len(ring) > season:
-                    ring = ring[-season:]
-                n += 1
-                rns.append(n)
-            pdf["rn"] = rns
-            pdf["ae_naive"] = pd.array(naives, dtype="Int64")
-            pdf["ae_snaive"] = pd.array(snaives, dtype="Int64")
-            yield pdf[out_cols]
-        state.update((n, json.dumps(ring)))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="n long, ring string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+def _token_bucket_fold(
+    key, pdfs, state: GroupState, *, ts_col: str, cap_milli: int,
+    refill_per_sec_milli: int
+):
+    """Per-key fold of :func:`token_bucket_stream`."""
+    if state.exists:
+        tokens, last = state.get
+        last = None if last < 0 else last  # -1 encodes "no event yet"
+    else:
+        tokens, last = cap_milli, None
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col).copy()
+        secs = (pdf[ts_col].astype("int64") // 1_000_000_000).astype(
+            "int64"
+        )
+        keep, toks = [], []
+        for t in secs:
+            t = int(t)
+            if last is not None and t > last:
+                tokens = min(cap_milli, tokens + (t - last) * refill_per_sec_milli)
+            # Refill clock only moves FORWARD: an out-of-order event
+            # arriving in a later micro-batch with t < last must not
+            # rewind it, else the next in-order event re-credits refill
+            # time already granted and over-admits past the bucket rate
+            # (ADVICE r4). Late events still spend a token if available.
+            last = t if last is None else max(last, t)
+            if tokens >= 1000:
+                tokens -= 1000
+                keep.append(True)
+                toks.append(tokens)
+            else:
+                keep.append(False)
+                toks.append(None)
+        pdf["tokens_after_milli"] = pd.array(toks, dtype="Int64")
+        out = pdf[pd.Series(keep, index=pdf.index)]
+        if len(out):
+            yield out
+    state.update((tokens, -1 if last is None else last))
 
 
 def token_bucket_stream(
@@ -1455,58 +1366,103 @@ def token_bucket_stream(
     Emits admitted rows with tokens_after_milli; rejected rows are
     dropped (route them to a DLQ by diffing against the input).
     State is O(1) per key."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField("tokens_after_milli", LongType())]
+    return keyed_state(
+        df, key_col, _token_bucket_fold, keep="input",
+        added="tokens_after_milli long", state="tokens long, last long",
+        ts_col=ts_col, cap_milli=capacity * 1000, refill_per_sec_milli=refill_per_sec_milli,
     )
-    out_cols = [f.name for f in out_schema.fields]
-    cap_milli = capacity * 1000
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            tokens, last = state.get
-            last = None if last < 0 else last  # -1 encodes "no event yet"
-        else:
-            tokens, last = cap_milli, None
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col).copy()
-            secs = (pdf[ts_col].astype("int64") // 1_000_000_000).astype(
-                "int64"
-            )
-            keep, toks = [], []
-            for t in secs:
-                t = int(t)
-                if last is not None and t > last:
-                    tokens = min(cap_milli, tokens + (t - last) * refill_per_sec_milli)
-                # Refill clock only moves FORWARD: an out-of-order event
-                # arriving in a later micro-batch with t < last must not
-                # rewind it, else the next in-order event re-credits refill
-                # time already granted and over-admits past the bucket rate
-                # (ADVICE r4). Late events still spend a token if available.
-                last = t if last is None else max(last, t)
-                if tokens >= 1000:
-                    tokens -= 1000
-                    keep.append(True)
-                    toks.append(tokens)
-                else:
-                    keep.append(False)
-                    toks.append(None)
-            pdf["tokens_after_milli"] = pd.array(toks, dtype="Int64")
-            out = pdf[pd.Series(keep, index=pdf.index)]
-            if len(out):
-                yield out[out_cols]
-        state.update((tokens, -1 if last is None else last))
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="tokens long, last long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def _round6(x):
+    s = 1000000.0
+    return (
+        math.floor(x * s + 0.5) / s
+        if x >= 0
+        else -math.floor(-x * s + 0.5) / s
+    )
+
+
+def _slo_burn_row(key_col, key, ring, hr, n, e):
+    window = ring + [(hr, n, e)]
+    n6 = sum(nn for (h, nn, _) in window if h > hr - 6)
+    e6 = sum(ee for (h, _, ee) in window if h > hr - 6)
+    n24 = sum(nn for (h, nn, _) in window if h > hr - 24)
+    e24 = sum(ee for (h, _, ee) in window if h > hr - 24)
+    return {
+        key_col: key,
+        "hr": hr,
+        "n": n,
+        "e": e,
+        "burn_1h": _round6(4.0 * e / n),
+        "burn_6h": _round6(4.0 * e6 / n6),
+        "burn_24h": _round6(4.0 * e24 / n24),
+        "fast_alert": bool(4 * e >= n and 4 * e6 >= n6),
+        "slow_alert": bool(40 * e6 >= 9 * n6 and 40 * e24 >= 9 * n24),
+    }
+
+
+def _slo_burn_fold(
+    key, pdfs, state: GroupState, *, key_col: str, ts_col: str, error_col: str
+):
+    """Per-key fold of :func:`slo_burn_stream`."""
+    if state.exists:
+        cur_hr, n, e, ring_json = state.get
+        ring = [tuple(x) for x in json.loads(ring_json)]
+        cur = None if cur_hr < 0 else cur_hr
+    else:
+        cur, n, e, ring = None, 0, 0, []
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col)
+        hrs = (pdf[ts_col].astype("int64") // 1_000_000_000 // 3600).astype(
+            "int64"
+        )
+        errs = pdf[error_col].astype("int64")
+        rows = []
+        for h, is_e in zip(hrs, errs):
+            h = int(h)
+            if cur is not None and h > cur:
+                rows.append(_slo_burn_row(key_col, key[0], ring, cur, n, e))
+                ring = [r for r in ring + [(cur, n, e)] if r[0] > cur - 24]
+                n, e = 0, 0
+                cur = h
+            elif cur is None:
+                cur = h
+            elif h < cur:
+                # Late event for an already-closed hour (crossed a
+                # micro-batch boundary): folding it into the OPEN
+                # hour would misattribute the error and skew the 1h
+                # burn rate (ADVICE r4). Merge into the matching
+                # ring entry so FUTURE 6h/24h sums use corrected
+                # counts (the closed hour's own row was already
+                # emitted and is not retracted). A late event for
+                # an hour with NO ring entry — a gap hour that saw
+                # zero on-time events — appends a fresh sorted
+                # entry rather than being dropped (ADVICE r5);
+                # only hours aged past the 24h horizon are dropped.
+                if h > cur - 24:
+                    if any(rh == h for (rh, _, _) in ring):
+                        ring = [
+                            (
+                                (rh, rn + 1, re_ + int(is_e))
+                                if rh == h
+                                else (rh, rn, re_)
+                            )
+                            for (rh, rn, re_) in ring
+                        ]
+                    else:
+                        ring = sorted(ring + [(h, 1, int(is_e))])
+                continue
+            n += 1
+            e += int(is_e)
+        if rows:
+            yield pd.DataFrame(rows)
+    state.update(
+        (
+            -1 if cur is None else cur,
+            n,
+            e,
+            json.dumps([list(r) for r in ring]),
+        )
     )
 
 
@@ -1528,129 +1484,59 @@ def slo_burn_stream(
     rows bit-match the batch timeline
     (test_slo_burn_stream_matches_batch). State is O(24) per key;
     the still-open hour emits on the next hour's first arrival."""
-    import json
-
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    return keyed_state(
+        df, key_col, _slo_burn_fold,
+        added=(
+            "hr long, n long, e long, burn_1h double, burn_6h double, "
+            "burn_24h double, fast_alert boolean, slow_alert boolean"
+        ),
+        state="cur long, n long, e long, ring string",
+        key_col=key_col, ts_col=ts_col, error_col=error_col,
     )
 
-    out_schema = StructType(
-        [
-            StructField(key_col, StringType()),
-            StructField("hr", LongType()),
-            StructField("n", LongType()),
-            StructField("e", LongType()),
-            StructField("burn_1h", DoubleType()),
-            StructField("burn_6h", DoubleType()),
-            StructField("burn_24h", DoubleType()),
-            StructField("fast_alert", BooleanType()),
-            StructField("slow_alert", BooleanType()),
-        ]
-    )
 
-    def _round6(x):
-        import math
-
-        s = 1000000.0
-        return (
-            math.floor(x * s + 0.5) / s
-            if x >= 0
-            else -math.floor(-x * s + 0.5) / s
-        )
-
-    def _emit_row(key, ring, hr, n, e):
-        window = ring + [(hr, n, e)]
-        n6 = sum(nn for (h, nn, _) in window if h > hr - 6)
-        e6 = sum(ee for (h, _, ee) in window if h > hr - 6)
-        n24 = sum(nn for (h, nn, _) in window if h > hr - 24)
-        e24 = sum(ee for (h, _, ee) in window if h > hr - 24)
-        return {
-            key_col: key,
-            "hr": hr,
-            "n": n,
-            "e": e,
-            "burn_1h": _round6(4.0 * e / n),
-            "burn_6h": _round6(4.0 * e6 / n6),
-            "burn_24h": _round6(4.0 * e24 / n24),
-            "fast_alert": bool(4 * e >= n and 4 * e6 >= n6),
-            "slow_alert": bool(40 * e6 >= 9 * n6 and 40 * e24 >= 9 * n24),
-        }
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            cur_hr, n, e, ring_json = state.get
-            ring = [tuple(x) for x in json.loads(ring_json)]
-            cur = None if cur_hr < 0 else cur_hr
-        else:
-            cur, n, e, ring = None, 0, 0, []
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col)
-            hrs = (pdf[ts_col].astype("int64") // 1_000_000_000 // 3600).astype(
-                "int64"
-            )
-            errs = pdf[error_col].astype("int64")
-            rows = []
-            for h, is_e in zip(hrs, errs):
-                h = int(h)
-                if cur is not None and h > cur:
-                    rows.append(_emit_row(key[0], ring, cur, n, e))
-                    ring = [r for r in ring + [(cur, n, e)] if r[0] > cur - 24]
-                    n, e = 0, 0
-                    cur = h
-                elif cur is None:
-                    cur = h
-                elif h < cur:
-                    # Late event for an already-closed hour (crossed a
-                    # micro-batch boundary): folding it into the OPEN
-                    # hour would misattribute the error and skew the 1h
-                    # burn rate (ADVICE r4). Merge into the matching
-                    # ring entry so FUTURE 6h/24h sums use corrected
-                    # counts (the closed hour's own row was already
-                    # emitted and is not retracted). A late event for
-                    # an hour with NO ring entry — a gap hour that saw
-                    # zero on-time events — appends a fresh sorted
-                    # entry rather than being dropped (ADVICE r5);
-                    # only hours aged past the 24h horizon are dropped.
-                    if h > cur - 24:
-                        if any(rh == h for (rh, _, _) in ring):
-                            ring = [
-                                (
-                                    (rh, rn + 1, re_ + int(is_e))
-                                    if rh == h
-                                    else (rh, rn, re_)
-                                )
-                                for (rh, rn, re_) in ring
-                            ]
-                        else:
-                            ring = sorted(ring + [(h, 1, int(is_e))])
-                    continue
-                n += 1
-                e += int(is_e)
-            if rows:
-                yield pd.DataFrame(rows)
-        state.update(
-            (
-                -1 if cur is None else cur,
-                n,
-                e,
-                json.dumps([list(r) for r in ring]),
-            )
-        )
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="cur long, n long, e long, ring string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+def _conformal_monitor_fold(
+    key, pdfs, state: GroupState, *, day_col: str, x_col: str, season: int, min_cal: int
+):
+    """Per-key fold of :func:`conformal_monitor_stream`."""
+    if state.exists:
+        rn, ring_json, cal_json = state.get
+        ring = json.loads(ring_json)
+        cal = json.loads(cal_json)
+    else:
+        rn, ring, cal = 0, [], []
+    for pdf in pdfs:
+        pdf = pdf.sort_values(day_col, kind="mergesort")
+        rows = []
+        for x in pdf[x_col].astype("int64"):
+            x = int(x)
+            rn += 1
+            if len(ring) == season:
+                pred = ring[0]
+                r = abs(x - pred)
+                n_cal = len(cal)
+                if n_cal >= min_cal:
+                    k = math.ceil(0.9 * (n_cal + 1))
+                    q90 = cal[k - 1]
+                    rows.append(
+                        {
+                            "k": key[0],
+                            "rn": rn,
+                            "x": x,
+                            "pred": pred,
+                            "r": r,
+                            "n_cal": n_cal,
+                            "q90": q90,
+                            "covered": r <= q90,
+                        }
+                    )
+                bisect.insort(cal, r)
+                ring = ring[1:] + [x]
+            else:
+                ring = ring + [x]
+        if rows:
+            yield pd.DataFrame(rows)
+    state.update((rn, json.dumps(ring), json.dumps(cal)))
 
 
 def conformal_monitor_stream(
@@ -1683,78 +1569,14 @@ def conformal_monitor_stream(
     outlive years. Input must be replayed in day order per key, like
     the other sequential folds.
     """
-    import bisect
-    import json
-
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("k", StringType()),
-            StructField("rn", LongType()),
-            StructField("x", LongType()),
-            StructField("pred", LongType()),
-            StructField("r", LongType()),
-            StructField("n_cal", LongType()),
-            StructField("q90", LongType()),
-            StructField("covered", BooleanType()),
-        ]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            rn, ring_json, cal_json = state.get
-            ring = json.loads(ring_json)
-            cal = json.loads(cal_json)
-        else:
-            rn, ring, cal = 0, [], []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(day_col, kind="mergesort")
-            rows = []
-            for x in pdf[x_col].astype("int64"):
-                x = int(x)
-                rn += 1
-                if len(ring) == season:
-                    pred = ring[0]
-                    r = abs(x - pred)
-                    n_cal = len(cal)
-                    if n_cal >= min_cal:
-                        k = math.ceil(0.9 * (n_cal + 1))
-                        q90 = cal[k - 1]
-                        rows.append(
-                            {
-                                "k": key[0],
-                                "rn": rn,
-                                "x": x,
-                                "pred": pred,
-                                "r": r,
-                                "n_cal": n_cal,
-                                "q90": q90,
-                                "covered": r <= q90,
-                            }
-                        )
-                    bisect.insort(cal, r)
-                    ring = ring[1:] + [x]
-                else:
-                    ring = ring + [x]
-            if rows:
-                yield pd.DataFrame(rows)
-        state.update((rn, json.dumps(ring), json.dumps(cal)))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="rn long, ring string, cal string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        df, key_col, _conformal_monitor_fold, keep=None,
+        added=(
+            "k string, rn long, x long, pred long, r long, "
+            "n_cal long, q90 long, covered boolean"
+        ),
+        state="rn long, ring string, cal string",
+        day_col=day_col, x_col=x_col, season=season, min_cal=min_cal,
     )
 
 
@@ -1773,8 +1595,7 @@ def _reservoir_es_fold(
     weight_col: str,
     k: int,
 ) -> Iterator[pd.DataFrame]:
-    """Reservoir fold of :func:`reservoir_es_stream` (module-level,
-    see module notes)."""
+    """Reservoir fold of :func:`reservoir_es_stream`."""
     if state.exists:
         seq, blob = state.get
         res = [tuple(r) for r in json.loads(blob)]
@@ -1829,33 +1650,44 @@ def reservoir_es_stream(
     stratum key and take per-stratum reservoirs, which is what the
     batch stratified variant does with a partitioned window.
     """
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    return keyed_state(
+        df.withColumn("_g", F.lit("all")), "_g", _reservoir_es_fold, keep=None,
+        added="seq long, id long, weight long, es_key double",
+        state="seq long, blob string",
+        mode="update", id_col=id_col, weight_col=weight_col, k=k,
     )
 
-    out_schema = StructType(
-        [
-            StructField("seq", LongType()),
-            StructField("id", LongType()),
-            StructField("weight", LongType()),
-            StructField("es_key", DoubleType()),
-        ]
-    )
 
-    return (
-        df.withColumn("_g", F.lit("all"))
-        .groupBy("_g")
-        .applyInPandasWithState(
-            partial(_reservoir_es_fold, id_col=id_col, weight_col=weight_col, k=k),
-            outputStructType=out_schema,
-            stateStructType="seq long, blob string",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+def _kll_quantile_monitor_fold(
+    key, pdfs, state: GroupState, *, key_col: str, value_col: str, qs: tuple, k: int
+):
+    """Per-key fold of :func:`kll_quantile_monitor_stream`."""
+    if state.exists:
+        seq, n_seen, items_j, levels_j, flips = state.get
+        sk = KLL.deserialize(
+            json.loads(items_j), json.loads(levels_j), flips, k=k
         )
+    else:
+        seq, n_seen, sk = 0, 0, KLL(k=k)
+    for pdf in pdfs:
+        vals = pdf[value_col].to_numpy(dtype="float64")
+        vals = vals[~np.isnan(vals)]
+        if len(vals):
+            sk.update_batch(vals)
+            n_seen += len(vals)
+    seq += 1
+    items, levels, flips = sk.serialize()
+    state.update(
+        (seq, n_seen, json.dumps(items), json.dumps(levels), flips)
+    )
+    yield pd.DataFrame(
+        {
+            key_col: [key[0]] * len(qs),
+            "seq": [seq] * len(qs),
+            "q": list(qs),
+            "estimate": [sk.quantile(q) for q in qs],
+            "n_seen": [n_seen] * len(qs),
+        }
     )
 
 
@@ -1887,56 +1719,58 @@ def kll_quantile_monitor_stream(
     (Arrow-batched numpy); a million keys is a million independent
     O(k log n) sketches in the state store.
     """
-    import json
-
-    import numpy as np
-
-    from ..operators.kll import KLL
-
-    out_schema = (
-        f"{key_col} string, seq long, q double, estimate double, "
-        "n_seen long"
+    return keyed_state(
+        df, key_col, _kll_quantile_monitor_fold,
+        added="seq long, q double, estimate double, n_seen long",
+        state="seq long, n_seen long, items string, levels string, flips long",
+        mode="update", key_col=key_col, value_col=value_col, qs=qs, k=k,
     )
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            seq, n_seen, items_j, levels_j, flips = state.get
-            sk = KLL.deserialize(
-                json.loads(items_j), json.loads(levels_j), flips, k=k
-            )
-        else:
-            seq, n_seen, sk = 0, 0, KLL(k=k)
-        for pdf in pdfs:
-            vals = pdf[value_col].to_numpy(dtype="float64")
-            vals = vals[~np.isnan(vals)]
-            if len(vals):
-                sk.update_batch(vals)
-                n_seen += len(vals)
-        seq += 1
-        items, levels, flips = sk.serialize()
-        state.update(
-            (seq, n_seen, json.dumps(items), json.dumps(levels), flips)
-        )
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]] * len(qs),
-                "seq": [seq] * len(qs),
-                "q": list(qs),
-                "estimate": [sk.quantile(q) for q in qs],
-                "n_seen": [n_seen] * len(qs),
-            }
-        )
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
-            "seq long, n_seen long, items string, levels string, flips long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def _tdigest_quantile_monitor_fold(
+    key, pdfs, state: GroupState, *, key_col: str, value_col: str, qs: tuple,
+    delta: float
+):
+    """Per-key fold of :func:`tdigest_quantile_monitor_stream`."""
+    if state.exists:
+        seq, n_seen, means_j, weights_j = state.get
+        means = np.asarray(json.loads(means_j), dtype="float64")
+        weights = np.asarray(json.loads(weights_j), dtype="float64")
+    else:
+        seq, n_seen = 0, 0
+        means = np.empty(0)
+        weights = np.empty(0)
+    for pdf in pdfs:
+        vals = pdf[value_col].to_numpy(dtype="float64")
+        vals = vals[~np.isnan(vals)]
+        if len(vals):
+            bm, bw = td.build(vals, delta=delta)
+            if len(means):
+                means, weights = td.merge(
+                    [(means, weights), (bm, bw)], delta=delta
+                )
+            else:
+                means, weights = bm, bw
+            n_seen += len(vals)
+    seq += 1
+    state.update(
+        (
+            seq,
+            n_seen,
+            json.dumps(list(map(float, means))),
+            json.dumps(list(map(float, weights))),
+        )
+    )
+    yield pd.DataFrame(
+        {
+            key_col: [key[0]] * len(qs),
+            "seq": [seq] * len(qs),
+            "q": list(qs),
+            "estimate": [
+                td.quantile(means, weights, q) for q in qs
+            ],
+            "n_seen": [n_seen] * len(qs),
+        }
     )
 
 
@@ -1973,69 +1807,68 @@ def tdigest_quantile_monitor_stream(
     stream length; a million keys is a million independent digests
     in the state store.
     """
-    import json
-
-    import numpy as np
-
-    from ..operators import tdigest as td
-
-    out_schema = (
-        f"{key_col} string, seq long, q double, estimate double, "
-        "n_seen long"
+    return keyed_state(
+        df, key_col, _tdigest_quantile_monitor_fold,
+        added="seq long, q double, estimate double, n_seen long",
+        state="seq long, n_seen long, means string, weights string",
+        mode="update", key_col=key_col, value_col=value_col, qs=qs, delta=delta,
     )
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            seq, n_seen, means_j, weights_j = state.get
-            means = np.asarray(json.loads(means_j), dtype="float64")
-            weights = np.asarray(json.loads(weights_j), dtype="float64")
-        else:
-            seq, n_seen = 0, 0
-            means = np.empty(0)
-            weights = np.empty(0)
-        for pdf in pdfs:
-            vals = pdf[value_col].to_numpy(dtype="float64")
-            vals = vals[~np.isnan(vals)]
-            if len(vals):
-                bm, bw = td.build(vals, delta=delta)
-                if len(means):
-                    means, weights = td.merge(
-                        [(means, weights), (bm, bw)], delta=delta
-                    )
-                else:
-                    means, weights = bm, bw
-                n_seen += len(vals)
-        seq += 1
-        state.update(
-            (
-                seq,
-                n_seen,
-                json.dumps(list(map(float, means))),
-                json.dumps(list(map(float, weights))),
-            )
-        )
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]] * len(qs),
-                "seq": [seq] * len(qs),
-                "q": list(qs),
-                "estimate": [
-                    td.quantile(means, weights, q) for q in qs
-                ],
-                "n_seen": [n_seen] * len(qs),
-            }
-        )
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
-            "seq long, n_seen long, means string, weights string"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def _dgim_window_count_fold(
+    key, pdfs, state: GroupState, *, key_col: str, ts_col: str, window_s: int
+):
+    """Per-key fold of :func:`dgim_window_count_stream`."""
+    if state.exists:
+        seq, last_ts, bj = state.get
+        buckets = [tuple(b) for b in json.loads(bj)]  # (ts, size) newest-first
+    else:
+        seq, last_ts, buckets = 0, -1, []
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col)
+        tss = (
+            pdf[ts_col].astype("int64") // 1_000_000_000
+        ).astype("int64")
+        for t in tss:
+            t = int(t)
+            if t > last_ts:
+                last_ts = t
+            # new singleton bucket at the front (newest)
+            buckets.insert(0, (t, 1))
+            # cascade: when 3 buckets share a size, merge the two
+            # OLDEST of that size into one of double size stamped
+            # with the NEWER of the two (the newest 1 it covers)
+            size = 1
+            while True:
+                idxs = [
+                    i for i, (_, s) in enumerate(buckets) if s == size
+                ]
+                if len(idxs) <= 2:
+                    break
+                i2, i1 = idxs[-1], idxs[-2]  # two oldest
+                merged = (buckets[i1][0], size * 2)
+                del buckets[i2]
+                buckets[i1] = merged
+                size *= 2
+            # expire buckets wholly outside the window
+            lo = last_ts - window_s
+            buckets = [(ts, s) for (ts, s) in buckets if ts > lo]
+    seq += 1
+    if buckets:
+        est = sum(s for _, s in buckets) - buckets[-1][1] // 2
+    else:
+        est = 0
+    state.update(
+        (seq, last_ts, json.dumps([list(b) for b in buckets]))
+    )
+    yield pd.DataFrame(
+        {
+            key_col: [key[0]],
+            "seq": [seq],
+            "last_ts": [last_ts],
+            "est_count": [est],
+            "n_buckets": [len(buckets)],
+        }
     )
 
 
@@ -2077,75 +1910,50 @@ def dgim_window_count_stream(
     Scale: one shuffle by key; O(log² W) state per key; a million
     keys is a million independent bucket lists in the state store.
     """
-    import json
-
-    out_schema = (
-        f"{key_col} string, seq long, last_ts long, est_count long, "
-        "n_buckets long"
+    return keyed_state(
+        df, key_col, _dgim_window_count_fold,
+        added="seq long, last_ts long, est_count long, n_buckets long",
+        state="seq long, last_ts long, buckets string",
+        mode="update", key_col=key_col, ts_col=ts_col, window_s=window_s,
     )
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            seq, last_ts, bj = state.get
-            buckets = [tuple(b) for b in json.loads(bj)]  # (ts, size) newest-first
-        else:
-            seq, last_ts, buckets = 0, -1, []
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col)
-            tss = (
-                pdf[ts_col].astype("int64") // 1_000_000_000
-            ).astype("int64")
-            for t in tss:
-                t = int(t)
-                if t > last_ts:
-                    last_ts = t
-                # new singleton bucket at the front (newest)
-                buckets.insert(0, (t, 1))
-                # cascade: when 3 buckets share a size, merge the two
-                # OLDEST of that size into one of double size stamped
-                # with the NEWER of the two (the newest 1 it covers)
-                size = 1
-                while True:
-                    idxs = [
-                        i for i, (_, s) in enumerate(buckets) if s == size
-                    ]
-                    if len(idxs) <= 2:
-                        break
-                    i2, i1 = idxs[-1], idxs[-2]  # two oldest
-                    merged = (buckets[i1][0], size * 2)
-                    del buckets[i2]
-                    buckets[i1] = merged
-                    size *= 2
-                # expire buckets wholly outside the window
-                lo = last_ts - window_s
-                buckets = [(ts, s) for (ts, s) in buckets if ts > lo]
-        seq += 1
-        if buckets:
-            est = sum(s for _, s in buckets) - buckets[-1][1] // 2
-        else:
-            est = 0
-        state.update(
-            (seq, last_ts, json.dumps([list(b) for b in buckets]))
-        )
+
+def _sequence_pattern_fold(
+    key, pdfs, state: GroupState, *, key_col: str, ts_col: str, step_col: str,
+    max_len: int, max_events: int
+):
+    """Per-key fold of :func:`sequence_pattern_stream`."""
+    if state.exists:
+        n_seen, contained_s = state.get
+    else:
+        n_seen, contained_s = 0, ""
+    contained = set(contained_s.split("|")) if contained_s else set()
+    fresh_all: list[str] = []
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col)
+        for s in pdf[step_col].astype(str).values:
+            if n_seen >= max_events:
+                break
+            n_seen += 1
+            fresh = set()
+            if s not in contained:
+                fresh.add(s)
+            for p in contained:
+                if p.count(">") + 1 < max_len:
+                    q = p + ">" + s
+                    if q not in contained:
+                        fresh.add(q)
+            contained |= fresh
+            fresh_all.extend(sorted(fresh))
+    state.update((int(n_seen), "|".join(sorted(contained))))
+    if fresh_all:
         yield pd.DataFrame(
             {
-                key_col: [key[0]],
-                "seq": [seq],
-                "last_ts": [last_ts],
-                "est_count": [est],
-                "n_buckets": [len(buckets)],
+                key_col: [key[0]] * len(fresh_all),
+                "pattern": fresh_all,
+                "length": [q.count(">") + 1 for q in fresh_all],
             }
         )
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="seq long, last_ts long, buckets string",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def sequence_pattern_stream(
@@ -2181,59 +1989,54 @@ def sequence_pattern_stream(
     work is O(|contained|) set probes; emission is the sparse delta
     (new patterns only), so output volume decays as keys saturate.
     """
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
+    return keyed_state(
+        df, key_col, _sequence_pattern_fold,
+        added="pattern string, length long", state="n_seen long, contained string",
+        key_col=key_col, ts_col=ts_col, step_col=step_col,
+        max_len=max_len, max_events=max_events,
     )
 
-    key_type = df.schema[key_col].dataType
-    out_schema = StructType(
-        [
-            StructField(key_col, key_type),
-            StructField("pattern", StringType()),
-            StructField("length", LongType()),
-        ]
-    )
 
-    def fn(key, pdfs, state: GroupState):
-        if state.exists:
-            n_seen, contained_s = state.get
-        else:
-            n_seen, contained_s = 0, ""
-        contained = set(contained_s.split("|")) if contained_s else set()
-        fresh_all: list[str] = []
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col)
-            for s in pdf[step_col].astype(str).values:
-                if n_seen >= max_events:
-                    break
-                n_seen += 1
-                fresh = set()
-                if s not in contained:
-                    fresh.add(s)
-                for p in contained:
-                    if p.count(">") + 1 < max_len:
-                        q = p + ">" + s
-                        if q not in contained:
-                            fresh.add(q)
-                contained |= fresh
-                fresh_all.extend(sorted(fresh))
-        state.update((int(n_seen), "|".join(sorted(contained))))
-        if fresh_all:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(fresh_all),
-                    "pattern": fresh_all,
-                    "length": [q.count(">") + 1 for q in fresh_all],
-                }
-            )
+def _bloom_bits(sid: str, m_bits: int, n_hashes: int):
+    for hi in range(n_hashes):
+        h = int(
+            hashlib.md5(f"bf{hi}|{sid}".encode()).hexdigest()[:8], 16
+        ) % m_bits
+        yield h // 62, 1 << (h % 62)
 
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="n_seen long, contained string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+
+def _bloom_dedup_fold(
+    key, pdfs, state: GroupState, *, id_col: str, ts_col: str, m_bits: int,
+    n_hashes: int
+):
+    """Per-shard fold of :func:`bloom_dedup_stream`."""
+    W = (m_bits + 61) // 62
+    if state.exists:
+        words, n_ins = state.get
+        words = list(words)
+    else:
+        words, n_ins = [0] * W, 0
+    out_ids, out_ts = [], []
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col)
+        for sid, ts in zip(pdf[id_col].astype(str), pdf[ts_col]):
+            pos = list(_bloom_bits(sid, m_bits, n_hashes))
+            if all(words[w] & m for w, m in pos):
+                continue  # possibly-seen: drop (dup, or rare fp)
+            for w, m in pos:
+                words[w] |= m
+            n_ins += 1
+            out_ids.append(sid)
+            out_ts.append(ts)
+    state.update((words, int(n_ins)))
+    if out_ids:
+        yield pd.DataFrame(
+            {
+                "shard": [key[0]] * len(out_ids),
+                id_col: out_ids,
+                ts_col: out_ts,
+            }
+        )
 
 
 def bloom_dedup_stream(
@@ -2266,73 +2069,62 @@ def bloom_dedup_stream(
     while key cardinality x entry size fits the store — this is the
     graceful-degradation path beyond it.
     """
-    import hashlib
-
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType, TimestampType,
-    )
-
-    W = (m_bits + 61) // 62
-    out_schema = StructType(
-        [
-            StructField("shard", LongType()),
-            StructField(id_col, StringType()),
-            StructField(ts_col, TimestampType()),
-        ]
-    )
-
-    def bits_for(sid: str):
-        for hi in range(n_hashes):
-            h = int(
-                hashlib.md5(f"bf{hi}|{sid}".encode()).hexdigest()[:8], 16
-            ) % m_bits
-            yield h // 62, 1 << (h % 62)
-
-    def fn(key, pdfs, state: GroupState):
-        if state.exists:
-            words, n_ins = state.get
-            words = list(words)
-        else:
-            words, n_ins = [0] * W, 0
-        out_ids, out_ts = [], []
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col)
-            for sid, ts in zip(pdf[id_col].astype(str), pdf[ts_col]):
-                pos = list(bits_for(sid))
-                if all(words[w] & m for w, m in pos):
-                    continue  # possibly-seen: drop (dup, or rare fp)
-                for w, m in pos:
-                    words[w] |= m
-                n_ins += 1
-                out_ids.append(sid)
-                out_ts.append(ts)
-        state.update((words, int(n_ins)))
-        if out_ids:
-            yield pd.DataFrame(
-                {
-                    "shard": [key[0]] * len(out_ids),
-                    id_col: out_ids,
-                    ts_col: out_ts,
-                }
-            )
-
     shard = (
         F.expr(
             f"CAST(conv(substr(md5(CAST({id_col} AS STRING)), 1, 8),"
             f" 16, 10) AS BIGINT) % {shards}"
         )
     ).alias("shard")
-    return (
-        df.select(shard, F.col(id_col).cast("string").alias(id_col), ts_col)
-        .groupBy("shard")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType="words array<long>, n_inserted long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_state(
+        df.select(shard, F.col(id_col).cast("string").alias(id_col), ts_col),
+        "shard", _bloom_dedup_fold, keep="input", added="",
+        state="words array<long>, n_inserted long",
+        id_col=id_col, ts_col=ts_col, m_bits=m_bits, n_hashes=n_hashes,
     )
+
+
+def _timeout_sessions(key_col, key, sessions):
+    return pd.DataFrame(
+        {
+            key_col: [key[0]] * len(sessions),
+            "session_start": pd.to_datetime([s[0] for s in sessions]),
+            "session_end": pd.to_datetime([s[1] for s in sessions]),
+            "n_events": [s[2] for s in sessions],
+        }
+    )
+
+
+def _session_timeout_fold(
+    key, pdfs, state: GroupState, *, key_col: str, ts_col: str, gap_ns: int,
+    gap_seconds: int
+):
+    """Per-key fold of :func:`session_timeout_stream`."""
+    if state.hasTimedOut:
+        start_ns, last_ns, n = state.get
+        state.remove()
+        yield _timeout_sessions(key_col, key, [(start_ns, last_ns, n)])
+        return
+    if state.exists:
+        start_ns, last_ns, n = state.get
+    else:
+        start_ns, last_ns, n = (-1, -1, 0)
+    closed = []
+    for pdf in pdfs:
+        pdf = _fold_sort(pdf, ts_col)
+        ts_ns = pdf[ts_col].values.astype("datetime64[ns]").astype("int64")
+        for t in ts_ns:
+            if start_ns < 0:
+                start_ns, last_ns, n = (int(t), int(t), 1)
+            elif t - last_ns > gap_ns:
+                closed.append((start_ns, last_ns, n))
+                start_ns, last_ns, n = (int(t), int(t), 1)
+            else:
+                last_ns, n = int(t), n + 1
+    state.update((start_ns, last_ns, n))
+    # close the open session when the watermark passes last + gap
+    state.setTimeoutTimestamp(last_ns // 1_000_000 + gap_seconds * 1000)
+    if closed:
+        yield _timeout_sessions(key_col, key, closed)
 
 
 def session_timeout_stream(
@@ -2357,65 +2149,13 @@ def session_timeout_stream(
     only, removed at close — the TTL pattern that keeps unbounded key
     spaces from accreting state forever.
     """
-    from pyspark.sql.types import (
-        LongType, StructField, StructType, TimestampType,
-    )
-
-    gap_ns = int(gap_seconds) * 1_000_000_000
-    key_type = df.schema[key_col].dataType
-    out_schema = StructType(
-        [
-            StructField(key_col, key_type),
-            StructField("session_start", TimestampType()),
-            StructField("session_end", TimestampType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-
-    def emit(key, sessions):
-        return pd.DataFrame(
-            {
-                key_col: [key[0]] * len(sessions),
-                "session_start": pd.to_datetime([s[0] for s in sessions]),
-                "session_end": pd.to_datetime([s[1] for s in sessions]),
-                "n_events": [s[2] for s in sessions],
-            }
-        )
-
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            start_ns, last_ns, n = state.get
-            state.remove()
-            yield emit(key, [(start_ns, last_ns, n)])
-            return
-        if state.exists:
-            start_ns, last_ns, n = state.get
-        else:
-            start_ns, last_ns, n = (-1, -1, 0)
-        closed = []
-        for pdf in pdfs:
-            pdf = _fold_sort(pdf, ts_col)
-            ts_ns = pdf[ts_col].values.astype("datetime64[ns]").astype("int64")
-            for t in ts_ns:
-                if start_ns < 0:
-                    start_ns, last_ns, n = (int(t), int(t), 1)
-                elif t - last_ns > gap_ns:
-                    closed.append((start_ns, last_ns, n))
-                    start_ns, last_ns, n = (int(t), int(t), 1)
-                else:
-                    last_ns, n = int(t), n + 1
-        state.update((start_ns, last_ns, n))
-        # close the open session when the watermark passes last + gap
-        state.setTimeoutTimestamp(last_ns // 1_000_000 + gap_seconds * 1000)
-        if closed:
-            yield emit(key, closed)
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="start_ns long, last_ns long, n long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return keyed_state(
+        df, key_col, _session_timeout_fold,
+        added="session_start timestamp, session_end timestamp, n_events long",
+        state="start_ns long, last_ns long, n long",
+        timeout=GroupStateTimeout.EventTimeTimeout,
+        key_col=key_col, ts_col=ts_col,
+        gap_ns=int(gap_seconds) * 1_000_000_000, gap_seconds=gap_seconds,
     )
 
 
@@ -2432,8 +2172,7 @@ def _psi_drift_fold(
     width: float,
     threshold: float,
 ) -> Iterator[pd.DataFrame]:
-    """Per-key histogram fold of :func:`psi_drift_stream`
-    (module-level, see module notes)."""
+    """Per-key histogram fold of :func:`psi_drift_stream`."""
     if state.exists:
         seq, ref_j, cur_j = state.get
         ref = json.loads(ref_j)
@@ -2506,32 +2245,17 @@ def psi_drift_stream(
     the ref histogram for a DGIM-style decaying one; the emit logic
     is unchanged.
     """
-    out_schema = (
-        f"{key_col} string, seq long, n_ref long, n_cur long, "
-        "psi double, drift_flag boolean"
-    )
-    fold = partial(
-        _psi_drift_fold,
-        key_col=key_col,
-        value_col=value_col,
-        ts_col=ts_col,
-        cutoff=pd.Timestamp(ref_cutoff),
-        n_buckets=n_buckets,
-        width=width,
-        threshold=threshold,
-    )
-    return df.groupBy(key_col).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType="seq long, ref string, cur string",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        df, key_col, _psi_drift_fold,
+        added="seq long, n_ref long, n_cur long, psi double, drift_flag boolean",
+        state="seq long, ref string, cur string", mode="update",
+        key_col=key_col, value_col=value_col, ts_col=ts_col,
+        cutoff=pd.Timestamp(ref_cutoff), n_buckets=n_buckets, width=width, threshold=threshold,
     )
 
 
 def _pair_rules_fold(key, pdfs, state: GroupState, *, basket_col: str, item_col: str):
-    """Per-basket emit-once fold of :func:`pair_rules_stream`
-    (module-level, see module notes)."""
+    """Per-basket emit-once fold of :func:`pair_rules_stream`."""
     items_s = state.get[0] if state.exists else ""
     items = set(items_s.split("|")) if items_s else set()
     rows: list[tuple[str, str, str]] = []
@@ -2593,24 +2317,9 @@ def pair_rules_stream(
     O(|basket|) set probes; emission volume is Sum |basket|^2 / 2
     spread over arrivals and decaying as baskets saturate.
     """
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    key_type = df.schema[basket_col].dataType
-    out_schema = StructType(
-        [
-            StructField(basket_col, key_type),
-            StructField("kind", StringType()),
-            StructField("a", StringType()),
-            StructField("b", StringType()),
-        ]
-    )
-
-    return df.groupBy(basket_col).applyInPandasWithState(
-        partial(_pair_rules_fold, basket_col=basket_col, item_col=item_col),
-        outputStructType=out_schema,
-        stateStructType="items string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        df, basket_col, _pair_rules_fold, added="kind string, a string, b string",
+        state="items string", basket_col=basket_col, item_col=item_col,
     )
 
 
@@ -2672,8 +2381,7 @@ def pair_rules_snapshot(emitted: DataFrame, basket_col: str) -> DataFrame:
 
 def _schema_drift_fold(key, pdfs, state: GroupState):
     """Per-shape fold of :func:`schema_drift_stream`: add the batch's
-    rows to the shape's running count and emit one row. Module-level so
-    the worker imports the engine to unpickle it (see module notes)."""
+    rows to the shape's running count and emit one row."""
     prev = state.get[0] if state.exists else 0
     is_new = not state.exists
     n = 0
@@ -2729,16 +2437,9 @@ def schema_drift_stream(df: DataFrame, json_col: str) -> DataFrame:
         )
         .alias("key_set")
     )
-    keyed = df.select(key_set)
-    return keyed.groupBy("key_set").applyInPandasWithState(
-        _schema_drift_fold,
-        outputStructType=(
-            "key_set string, batch_rows long, total_rows long, "
-            "is_new boolean"
-        ),
-        stateStructType="n long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        df.select(key_set), "key_set", _schema_drift_fold,
+        added="batch_rows long, total_rows long, is_new boolean", state="n long",
     )
 
 

@@ -450,7 +450,11 @@ def test_neardup_dedup_step_plan_no_python_no_doc_cross(spark):
 # REPARTITION_BY_NUM exchanges of `spread_to_cores` and `repartition(n)`.
 
 
-def test_q5_is_pure_broadcast_chain():
+def test_q5_is_pure_broadcast_chain(spark, sf_dir):
+    """At the test scale factor Catalyst broadcasts every dim on its
+    size estimate, so the recorded line cannot see a dropped
+    ``F.broadcast`` hint. With size-based broadcasting off, only the
+    hinted supplier, nation and region joins still broadcast."""
     assert_recorded(
         "join_multiway_tpch_q5",
         {
@@ -460,6 +464,14 @@ def test_q5_is_pure_broadcast_chain():
             "op.HashAggregate": ">=2",
         },
     )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        hinted = plan_digest(q("join_multiway_tpch_q5", spark, sf_dir))
+    finally:
+        spark.conf.set(key, before)
+    assert hinted.get("join.BroadcastHashJoin", 0) == 3, hinted
 
 
 def test_topk_uses_heap_not_global_sort():

@@ -16,8 +16,10 @@ from eventstreams_spark.streaming.replay import replay_table, run_to_memory
 
 # Most of these micro-batch/restart goldens (~22 min) are marked for the
 # slow tier (pytest.ini). The default tier keeps a streaming smoke set:
-# one GroupState happy path, one GroupState restart, the exactly-once
-# file sink across restarts, and the Spark-free state-blob parsers.
+# one GroupState happy path, one GroupState restart, a GroupState
+# operator over a long key (the output key keeps the input key's type),
+# the exactly-once file sink across restarts, and the Spark-free
+# state-blob parsers.
 
 
 @pytest.fixture()
@@ -161,20 +163,26 @@ def test_throttle_stream_state_across_batches(spark, tmp_path):
     assert by_key["b"] == (1, 1), by_key
 
 
-@pytest.mark.slow
-def test_accumulate_stream_running_totals(spark, tmp_path):
+@pytest.mark.parametrize(
+    "key_type, a, b",
+    [pytest.param("string", "a", "b", marks=pytest.mark.slow), ("long", 1, 2)],
+)
+def test_accumulate_stream_running_totals(spark, tmp_path, key_type, a, b):
+    """The output key column keeps the input key's type: a long key
+    declared as string fails the Arrow conversion of every batch."""
     from eventstreams_spark.streaming.stateful import accumulate_stream
 
     df = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0), ("b", 10.0)], "k string, v double"
+        [(a, 1.0), (a, 2.0), (b, 10.0)], f"k {key_type}, v double"
     )
     stream = replay_table(spark, df, str(tmp_path))
     out = accumulate_stream(stream, "k", "v")
-    run_to_memory(out, "t_acc", output_mode="update")
+    assert out.schema["k"].dataType == df.schema["k"].dataType
+    run_to_memory(out, f"t_acc_{key_type}", output_mode="update")
     got = {r.k: (r.running_sum, r.running_count) for r in spark.sql(
         "SELECT k, max(running_sum) AS running_sum, max(running_count) AS running_count"
-        " FROM t_acc GROUP BY k").collect()}
-    assert got["a"] == (3.0, 2) and got["b"] == (10.0, 1)
+        f" FROM t_acc_{key_type} GROUP BY k").collect()}
+    assert got[a] == (3.0, 2) and got[b] == (10.0, 1)
 
 
 @pytest.mark.slow

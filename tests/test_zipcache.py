@@ -1,8 +1,11 @@
-"""The stat-keyed zipimporter cache refresh (eventstreams_spark/zipcache.py)
-and the engine archive that ``session.ship_package`` sends to workers."""
+"""The stat-keyed zipimporter cache refresh (eventstreams_spark/zipcache.py),
+the engine archive that ``session.ship_package`` sends to workers, and
+the rule that every GroupState fold is a module-level engine function
+unpickled through ``streaming.stateful.keyed_state``."""
 
 from __future__ import annotations
 
+import inspect
 import os
 import sys
 import zipfile
@@ -11,6 +14,7 @@ import zipimport
 import pytest
 
 from eventstreams_spark import session, zipcache
+from eventstreams_spark.streaming import stateful
 
 STOCK = getattr(
     zipimport.zipimporter.invalidate_caches, "__wrapped__",
@@ -150,6 +154,38 @@ def test_ship_package_ignores_stale_archive_at_pid_path(tmp_path, monkeypatch):
     assert again.sparkContext.py_files == [shipped]
     session._remove(shipped)
     assert not os.path.exists(shipped)
+
+
+ENGINE = os.path.dirname(os.path.abspath(session.__file__))
+GROUP_STATE_CALL = ".applyInPandasWithState("
+
+
+def test_group_state_is_called_only_by_the_helper():
+    """A GroupState operator that calls Spark itself skips the
+    module-level check, so a closure fold would again be pickled by
+    value and its worker would never import the engine. The helper's
+    own check cannot see such a call, so this guard reads the source."""
+    callers = {}
+    for root, dirs, files in os.walk(ENGINE):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(root, f), encoding="utf-8") as src:
+                    n = src.read().count(GROUP_STATE_CALL)
+                if n:
+                    callers[os.path.relpath(os.path.join(root, f), ENGINE)] = n
+    assert callers == {os.path.join("streaming", "stateful.py"): 1}, (
+        f"call applyInPandasWithState through streaming.stateful.keyed_state: {callers}"
+    )
+    assert GROUP_STATE_CALL in inspect.getsource(stateful.keyed_state)
+
+
+def test_keyed_state_rejects_a_nested_fold():
+    def fold(key, pdfs, state):
+        yield from ()
+
+    with pytest.raises(TypeError, match="must be module-level functions.*<locals>"):
+        stateful.keyed_state(None, "k", fold, added="n long", state="n long")
 
 
 def test_default_driver_memory_fits_the_host():
