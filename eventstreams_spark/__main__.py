@@ -332,12 +332,17 @@ def cmd_explain(config: dict) -> None:
     digest (the scan, exchange, join, Python-eval and operator counts
     that tests/plan_digest.json holds for registry queries) WITHOUT
     running it — the pre-flight check for 'will this config shuffle
-    my 100 TB corpus more than it must'."""
+    my 100 TB corpus more than it must'. A streaming chain has no
+    executed plan until a query starts, so for it the digest line says
+    that the digest covers batch configs only."""
     from .plans import formatted_plan, plan_digest
 
     _, out = _compile(config, "eventstreams-explain")
     print(formatted_plan(out))
-    print("-- digest:", json.dumps(plan_digest(out), sort_keys=True))
+    if out.isStreaming:
+        print("-- digest: none for a streaming config; the digest covers batch configs only")
+    else:
+        print("-- digest:", json.dumps(plan_digest(out), sort_keys=True))
 
 
 def cmd_index(sf_dir: str, prune: bool = False) -> None:

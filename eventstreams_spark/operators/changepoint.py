@@ -1,12 +1,14 @@
 """Change-point detection (CUSUM) — batch form.
 
 Page's CUSUM is a per-key SEQUENTIAL fold (each step depends on the
-previous), which no window function expresses. The batch form runs the
-identical loop inside ``applyInPandas`` over each key's time-sorted
-rows; the streaming twin (``streaming/stateful.py::
-cusum_changepoint_stream``) runs the same loop with the carry in
-GroupState — the two are asserted equal by
-``tests/test_streaming.py::test_cusum_batch_equals_stream``.
+previous), which no window function expresses. Its one loop is the
+GroupState fold ``streaming/stateful.py::_cusum_changepoint_fold``:
+the streaming operator carries its state across micro-batches, and
+the batch form runs it once per key over the key's rows through
+``grouped_fold``. ``tests/test_streaming.py::
+test_cusum_batch_equals_stream`` pins the two carries equal, and the
+``cusum_reference_check`` query certifies the batch form against a
+DuckDB recursive-CTE replay.
 
 Scale: one shuffle by key; the fold is O(rows-per-key) Python over
 Arrow batches — parallelism comes from key count (pre-split hot keys
@@ -16,8 +18,9 @@ like two-level sessionize).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..streaming.stateful import _cusum_changepoint_fold, grouped_fold
 
 
 def cusum_batch(
@@ -31,46 +34,8 @@ def cusum_batch(
 ) -> DataFrame:
     """Batch CUSUM: same output schema and semantics as the streaming
     form — (input columns) + s_pos, s_neg, alarm per event."""
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        StructField,
-        StructType,
+    return grouped_fold(
+        df, key_col, _cusum_changepoint_fold,
+        added="s_pos double, s_neg double, alarm boolean",
+        ts_col=ts_col, value_col=value_col, target=target, slack=slack, threshold=threshold,
     )
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("s_pos", DoubleType()),
-            StructField("s_neg", DoubleType()),
-            StructField("alarm", BooleanType()),
-        ]
-    )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        # (ts, event_id) fold order — ts alone leaves duplicate
-        # timestamps in nondeterministic partition order (ADVICE r2)
-        cols = [ts_col] + [
-            c for c in ("event_id",) if c in pdf.columns and c != ts_col
-        ]
-        pdf = pdf.sort_values(cols, kind="mergesort").copy()
-        s_pos = s_neg = 0.0
-        pos_out, neg_out, alarms = [], [], []
-        for x in pdf[value_col]:
-            s_pos = max(0.0, s_pos + (x - target - slack))
-            s_neg = max(0.0, s_neg + (target - x - slack))
-            fired = s_pos > threshold or s_neg > threshold
-            pos_out.append(s_pos)
-            neg_out.append(s_neg)
-            alarms.append(fired)
-            if s_pos > threshold:
-                s_pos = 0.0
-            if s_neg > threshold:
-                s_neg = 0.0
-        pdf["s_pos"] = pos_out
-        pdf["s_neg"] = neg_out
-        pdf["alarm"] = alarms
-        return pdf[out_cols]
-
-    return df.groupBy(key_col).applyInPandas(fold, schema=out_schema)

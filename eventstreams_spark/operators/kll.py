@@ -18,11 +18,11 @@ repartition cannot change the sketch), which is the property the
 hash-checked gates need; the measured rank error at the test SFs
 stays well inside the gate tolerance.
 
-Distributed layout mirrors tdigest_quantiles: per (group, shard)
-sketches via ``applyInPandas`` (shards minted from the data, so the
-sketch is partitioning-invariant), then a deterministic shard-ordered
-merge per group. Retained items are O(k·log(n/k)) per group
-regardless of input size. Pure numpy; Arrow-batched at the boundary.
+Distributed layout is tdigest_quantiles' own build
+(``tdigest.two_level_quantiles``): per (group, shard) sketches
+(shards minted from the data, so the sketch is partitioning-invariant),
+then a deterministic shard-ordered merge per group. Retained items
+are O(k·log(n/k)) per group regardless of input size. Pure numpy; Arrow-batched at the boundary.
 """
 
 from __future__ import annotations
@@ -143,52 +143,33 @@ def kll_quantiles(
     shard order, output one row per group with the estimates plus the
     sketch's retained-item count and total weight.
     """
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    qs = list(qs)
+    from .tdigest import two_level_quantiles
 
-    def shard_sketch(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = KLL(k=k)
-        sk.update_batch(pdf["_v"].to_numpy())
-        items, levels, flips = sk.serialize()
-        return pd.DataFrame(
-            {
-                "g": [pdf["_g"].iloc[0]],
-                "shard": [int(pdf["_s"].iloc[0])],
-                "items": [items],
-                "levels": [levels],
-                "flips": [flips],
-            }
-        )
+    return two_level_quantiles(df, group_col, F.col(value_col), shard_col, qs, _KLLParts(k))
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("shard", kind="mergesort")
-        sk = KLL(k=k)
-        for _, r in pdf.iterrows():
-            sk.merge(KLL.deserialize(r["items"], r["levels"], r["flips"], k=k))
-        row = {"g": [pdf["g"].iloc[0]]}
-        for q in qs:
-            row[f"q{int(q * 1000)}"] = [sk.quantile(q)]
-        row["n_retained"] = [sk.n_retained()]
-        row["total_weight"] = [sk.total_weight()]
-        return pd.DataFrame(row)
 
-    shards = (
-        df.select(
-            F.col(group_col).alias("_g"),
-            F.col(value_col).cast("double").alias("_v"),
-            shard_col.cast("int").alias("_s"),
-        )
-        .groupBy("_g", "_s")
-        .applyInPandas(
-            shard_sketch,
-            "g string, shard int, items array<double>, levels array<int>,"
-            " flips long",
-        )
-    )
-    q_fields = ", ".join(f"q{int(q * 1000)} double" for q in qs)
-    return shards.groupBy("g").applyInPandas(
-        merge_group,
-        f"g string, {q_fields}, n_retained int, total_weight double",
-    )
+class _KLLParts:
+    """KLL's parts for ``tdigest.two_level_quantiles``."""
+
+    dtype = "double"
+    parts = "items array<double>, levels array<int>, flips long"
+    size = "n_retained"
+
+    def __init__(self, k: int):
+        self.k = k
+
+    def shard(self, values: np.ndarray) -> dict:
+        sk = KLL(k=self.k)
+        sk.update_batch(values)
+        return dict(zip(("items", "levels", "flips"), sk.serialize()))
+
+    def merge(self, shards) -> KLL:
+        sk = KLL(k=self.k)
+        for items, levels, flips in zip(shards["items"], shards["levels"], shards["flips"]):
+            sk.merge(KLL.deserialize(items, levels, flips, k=self.k))
+        return sk
+
+    def summary(self, sk: KLL, qs) -> list:
+        return [sk.quantile(q) for q in qs] + [sk.n_retained(), sk.total_weight()]

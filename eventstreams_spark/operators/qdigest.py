@@ -141,52 +141,31 @@ def qdigest_quantiles(
     as the t-digest/KLL wrappers: data-derived shard, shard-ordered
     merge, partitioning-invariant result.
     """
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from .tdigest import two_level_quantiles
 
-    qs = list(qs)
+    return two_level_quantiles(df, group_col, value_col, shard_col, qs, _QDigestParts(bits, k))
 
-    def shard_sketch(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = QDigest(bits=bits, k=k)
-        sk.update_batch(pdf["_v"].to_numpy())
-        ids, weights, n = sk.serialize()
-        return pd.DataFrame(
-            {
-                "g": [pdf["_g"].iloc[0]],
-                "shard": [int(pdf["_s"].iloc[0])],
-                "ids": [ids],
-                "weights": [weights],
-                "n": [n],
-            }
-        )
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("shard", kind="mergesort")
-        sk = QDigest(bits=bits, k=k)
-        for _, r in pdf.iterrows():
-            sk.merge(QDigest.deserialize(r["ids"], r["weights"], r["n"],
-                                         bits=bits, k=k))
-        row = {"g": [pdf["g"].iloc[0]]}
-        for q in qs:
-            row[f"q{int(q * 1000)}"] = [sk.quantile(q)]
-        row["n_nodes"] = [sk.n_nodes()]
-        row["total_weight"] = [sk.total_weight()]
-        return pd.DataFrame(row)
+class _QDigestParts:
+    """The q-digest's parts for ``tdigest.two_level_quantiles``."""
 
-    shards = (
-        df.select(
-            F.col(group_col).alias("_g"),
-            value_col.cast("long").alias("_v"),
-            shard_col.cast("int").alias("_s"),
-        )
-        .groupBy("_g", "_s")
-        .applyInPandas(
-            shard_sketch,
-            "g string, shard int, ids array<long>, weights array<long>, n long",
-        )
-    )
-    q_fields = ", ".join(f"q{int(q * 1000)} long" for q in qs)
-    return shards.groupBy("g").applyInPandas(
-        merge_group,
-        f"g string, {q_fields}, n_nodes int, total_weight long",
-    )
+    dtype = "long"
+    parts = "ids array<long>, weights array<long>, n long"
+    size = "n_nodes"
+
+    def __init__(self, bits: int, k: int):
+        self.bits, self.k = bits, k
+
+    def shard(self, values) -> dict:
+        sk = QDigest(bits=self.bits, k=self.k)
+        sk.update_batch(values)
+        return dict(zip(("ids", "weights", "n"), sk.serialize()))
+
+    def merge(self, shards) -> QDigest:
+        sk = QDigest(bits=self.bits, k=self.k)
+        for ids, weights, n in zip(shards["ids"], shards["weights"], shards["n"]):
+            sk.merge(QDigest.deserialize(ids, weights, n, bits=self.bits, k=self.k))
+        return sk
+
+    def summary(self, sk: QDigest, qs) -> list:
+        return [sk.quantile(q) for q in qs] + [sk.n_nodes(), sk.total_weight()]

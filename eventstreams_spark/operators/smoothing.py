@@ -1,10 +1,15 @@
-"""Holt double-exponential smoothing (level + trend) — batch form.
+"""Holt double-exponential smoothing (level + trend), Holt-Winters,
+the 1-D Kalman level filter and the 2-state HMM burst filter — batch
+forms.
 
-Like CUSUM (changepoint.py), Holt's method is a per-key SEQUENTIAL
-fold — level and trend are COUPLED recurrences (each step needs both
-previous states), so no window function expresses it; ``applyInPandas``
-over each key's (ts, event_id)-sorted rows is the right home, with the
-same hot-series split strategy as every keyed fold.
+Like CUSUM (changepoint.py), each is a per-key SEQUENTIAL fold — Holt's
+level and trend are COUPLED recurrences (each step needs both previous
+states), so no window function expresses it. Holt linear, Kalman and
+the HMM filter have one loop each, the GroupState folds in
+``streaming/stateful.py``: the batch forms here run those folds once per
+key over the key's (ts, event_id)-sorted rows through ``grouped_fold``,
+and ``tests/test_streaming.py`` pins each batch form equal to its
+stream. Holt-Winters has no stream twin; its fold lives here.
 
 The one-step forecast error sum (SSE) accumulates INSIDE the fold:
 a post-hoc float SUM over shuffled rows would be order-dependent
@@ -31,51 +36,65 @@ def holt_linear_batch(
     b_t = β(l_t − l_prev) + (1−β)b; initialized l₁ = x₁, b₁ = 0.
     Output = input + (rn, level, trend, forecast, sse_running) where
     forecast is the PRE-update one-step-ahead prediction (null for
-    the first row) and sse_running the sequential Σ(x−forecast)²."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+    the first row) and sse_running the sequential Σ(x−forecast)².
+    The fold is ``stateful.py::_holt_linear_fold``, shared with
+    ``holt_linear_stream``."""
+    from ..streaming.stateful import _holt_linear_fold, grouped_fold
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-            StructField("forecast", DoubleType()),
-            StructField("sse_running", DoubleType()),
-        ]
+    return grouped_fold(
+        df, key_col, _holt_linear_fold,
+        added="rn long, level double, trend double, forecast double, sse_running double",
+        ts_col=ts_col, value_col=value_col, alpha=alpha, beta=beta,
     )
-    out_cols = [f.name for f in out_schema.fields]
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [ts_col] + [
-            c for c in ("event_id",) if c in pdf.columns and c != ts_col
-        ]
-        pdf = pdf.sort_values(cols, kind="mergesort").copy()
-        lvl = trend = sse = 0.0
-        rns, lvls, trends, fcs, sses = [], [], [], [], []
-        for i, x in enumerate(pdf[value_col]):
-            if i == 0:
-                lvl, trend, fc = x, 0.0, None
-            else:
-                fc = lvl + trend
-                err = x - fc
-                sse = sse + err * err
-                new_lvl = alpha * x + (1.0 - alpha) * (lvl + trend)
-                trend = beta * (new_lvl - lvl) + (1.0 - beta) * trend
-                lvl = new_lvl
-            rns.append(i + 1)
-            lvls.append(lvl)
-            trends.append(trend)
-            fcs.append(fc)
-            sses.append(sse)
+
+def _holt_winters_fold(
+    key, pdfs, state, *, order_col: str, value_col: str, m: int, alpha: float,
+    beta: float, gamma: float
+):
+    """Per-key fold of :func:`holt_winters_batch`."""
+    (pdf,) = pdfs
+    pdf = pdf.sort_values(order_col, kind="mergesort").copy()
+    ys = list(pdf[value_col])
+    n = len(ys)
+    rns = list(range(1, n + 1))
+    lvls, trends, seas, fcs, sses = [], [], [], [], []
+    if n < m:
         pdf["rn"] = rns
-        pdf["level"] = lvls
-        pdf["trend"] = trends
-        pdf["forecast"] = pd.array(fcs, dtype="float64")
-        pdf["sse_running"] = sses
-        return pdf[out_cols]
-
-    return df.groupBy(key_col).applyInPandas(fold, schema=out_schema)
+        for c in ("level", "trend", "season", "forecast", "sse_running"):
+            pdf[c] = pd.array([None] * n, dtype="float64")
+        yield pdf
+        return
+    lvl = sum(ys[:m]) / float(m)
+    trend, sse = 0.0, 0.0
+    seed = [y - lvl for y in ys[:m]]
+    sarr = list(seed)
+    for i in range(n):
+        if i < m - 1:
+            lvls.append(None); trends.append(None)
+            seas.append(seed[i]); fcs.append(None); sses.append(None)
+        elif i == m - 1:
+            lvls.append(lvl); trends.append(0.0)
+            seas.append(seed[i]); fcs.append(None); sses.append(0.0)
+        else:
+            y = ys[i]
+            s_old = sarr[0]
+            fc = lvl + trend + s_old
+            sse = sse + (y - fc) * (y - fc)
+            new_lvl = alpha * (y - s_old) + (1.0 - alpha) * (lvl + trend)
+            trend = beta * (new_lvl - lvl) + (1.0 - beta) * trend
+            s_new = gamma * (y - new_lvl) + (1.0 - gamma) * s_old
+            sarr = sarr[1:] + [s_new]
+            lvl = new_lvl
+            lvls.append(lvl); trends.append(trend)
+            seas.append(s_new); fcs.append(fc); sses.append(sse)
+    pdf["rn"] = rns
+    pdf["level"] = pd.array(lvls, dtype="float64")
+    pdf["trend"] = pd.array(trends, dtype="float64")
+    pdf["season"] = pd.array(seas, dtype="float64")
+    pdf["forecast"] = pd.array(fcs, dtype="float64")
+    pdf["sse_running"] = pd.array(sses, dtype="float64")
+    yield pdf
 
 
 def holt_winters_batch(
@@ -102,65 +121,17 @@ def holt_winters_batch(
     production shape for per-series seasonal forecasting at millions
     of keys.
     """
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+    from ..streaming.stateful import grouped_fold
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("level", DoubleType()),
-            StructField("trend", DoubleType()),
-            StructField("season", DoubleType()),
-            StructField("forecast", DoubleType()),
-            StructField("sse_running", DoubleType()),
-        ]
+    return grouped_fold(
+        df, key_col, _holt_winters_fold,
+        added=(
+            "rn long, level double, trend double, season double, forecast double,"
+            " sse_running double"
+        ),
+        order_col=order_col, value_col=value_col, m=int(period), alpha=alpha, beta=beta,
+        gamma=gamma,
     )
-    out_cols = [f.name for f in out_schema.fields]
-    m = int(period)
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort").copy()
-        ys = list(pdf[value_col])
-        n = len(ys)
-        rns = list(range(1, n + 1))
-        lvls, trends, seas, fcs, sses = [], [], [], [], []
-        if n < m:
-            pdf["rn"] = rns
-            for c in ("level", "trend", "season", "forecast", "sse_running"):
-                pdf[c] = pd.array([None] * n, dtype="float64")
-            return pdf[out_cols]
-        lvl = sum(ys[:m]) / float(m)
-        trend, sse = 0.0, 0.0
-        seed = [y - lvl for y in ys[:m]]
-        sarr = list(seed)
-        for i in range(n):
-            if i < m - 1:
-                lvls.append(None); trends.append(None)
-                seas.append(seed[i]); fcs.append(None); sses.append(None)
-            elif i == m - 1:
-                lvls.append(lvl); trends.append(0.0)
-                seas.append(seed[i]); fcs.append(None); sses.append(0.0)
-            else:
-                y = ys[i]
-                s_old = sarr[0]
-                fc = lvl + trend + s_old
-                sse = sse + (y - fc) * (y - fc)
-                new_lvl = alpha * (y - s_old) + (1.0 - alpha) * (lvl + trend)
-                trend = beta * (new_lvl - lvl) + (1.0 - beta) * trend
-                s_new = gamma * (y - new_lvl) + (1.0 - gamma) * s_old
-                sarr = sarr[1:] + [s_new]
-                lvl = new_lvl
-                lvls.append(lvl); trends.append(trend)
-                seas.append(s_new); fcs.append(fc); sses.append(sse)
-        pdf["rn"] = rns
-        pdf["level"] = pd.array(lvls, dtype="float64")
-        pdf["trend"] = pd.array(trends, dtype="float64")
-        pdf["season"] = pd.array(seas, dtype="float64")
-        pdf["forecast"] = pd.array(fcs, dtype="float64")
-        pdf["sse_running"] = pd.array(sses, dtype="float64")
-        return pdf[out_cols]
-
-    return df.groupBy(key_col).applyInPandas(fold, schema=out_schema)
 
 
 def kalman_level_batch(
@@ -175,51 +146,19 @@ def kalman_level_batch(
     key — the data-adaptive cousin of holt_linear_batch: predict
     P' = P + Q, gain K = P'/(P'+R), update x += K(z−x), P = (1−K)P'.
     Initialized x₁ = z₁ with diffuse P₁ = R (gain null on row 1).
-    Output = input + (rn, level, variance, gain). Same sequential-fold
-    contract as Holt: the recurrence is coupled and data-dependent, so
-    applyInPandas over each key's (ts, event_id)-sorted rows; the
-    registered batch query kalman_level_filter_check certifies the
-    identical recurrence as a JVM ``aggregate()`` fold against a
-    recursive-CTE oracle."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+    Output = input + (rn, level, variance, gain). The fold is
+    ``stateful.py::_kalman_level_fold``, shared with
+    ``kalman_level_stream``; the registered batch query
+    kalman_level_filter_check certifies the identical recurrence as a
+    JVM ``aggregate()`` fold against a recursive-CTE oracle, and
+    test_kalman_batch_equals_stream pins this form to that fold."""
+    from ..streaming.stateful import _kalman_level_fold, grouped_fold
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("level", DoubleType()),
-            StructField("variance", DoubleType()),
-            StructField("gain", DoubleType()),
-        ]
+    return grouped_fold(
+        df, key_col, _kalman_level_fold,
+        added="rn long, level double, variance double, gain double",
+        ts_col=ts_col, value_col=value_col, q_var=q_var, r_var=r_var,
     )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [ts_col] + [
-            c for c in ("event_id",) if c in pdf.columns and c != ts_col
-        ]
-        pdf = pdf.sort_values(cols, kind="mergesort").copy()
-        x = p = 0.0
-        rns, xs, ps, ks = [], [], [], []
-        for i, z in enumerate(pdf[value_col]):
-            if i == 0:
-                x, p, k = z, r_var, None
-            else:
-                pp = p + q_var
-                k = pp / (pp + r_var)
-                x = x + k * (z - x)
-                p = (1.0 - k) * pp
-            rns.append(i + 1)
-            xs.append(x)
-            ps.append(p)
-            ks.append(k)
-        pdf["rn"] = rns
-        pdf["level"] = xs
-        pdf["variance"] = ps
-        pdf["gain"] = pd.array(ks, dtype="float64")
-        return pdf[out_cols]
-
-    return df.groupBy(key_col).applyInPandas(fold, schema=out_schema)
 
 
 # --- 2-state HMM burst filter (forward log-odds) ---------------------------
@@ -281,37 +220,15 @@ def hmm_forward_batch(
     """Batch 2-state HMM burst filter over a pre-aggregated count
     frame (key, order, k, lam0): per key, fold the forward log-odds
     recursion in order and emit (rn, log_odds, p_burst) per row —
-    log_odds clamped at ±30, p_burst = sigmoid. Python twin of the
-    registered JVM-fold query hmm_burst_forward_filter; the streaming
-    GroupState twin is streaming/stateful.py::hmm_burst_stream, and
-    test_hmm_batch_equals_stream pins all three equal."""
-    import math
+    log_odds clamped at ±30, p_burst = sigmoid. The fold is
+    ``stateful.py::_hmm_burst_fold``, shared with ``hmm_burst_stream``;
+    the registered JVM-fold query hmm_burst_forward_filter is the
+    independent twin, and test_hmm_batch_equals_stream pins all three
+    equal."""
+    from ..streaming.stateful import _hmm_burst_fold, grouped_fold
 
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("rn", LongType()),
-            StructField("log_odds", DoubleType()),
-            StructField("p_burst", DoubleType()),
-        ]
+    return grouped_fold(
+        df, key_col, _hmm_burst_fold,
+        added="rn long, log_odds double, p_burst double",
+        ts_col=order_col, k_col=k_col, lam0_col=lam0_col,
     )
-    out_cols = [f.name for f in out_schema.fields]
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([order_col], kind="mergesort").copy()
-        L = _hmm_init()
-        rns, lods, pbs = [], [], []
-        for k, lam0 in zip(pdf[k_col], pdf[lam0_col]):
-            L = hmm_step_py(L, int(k), float(lam0))
-            lo = max(min(L, _HMM_CLAMP), -_HMM_CLAMP)
-            rns.append(len(rns) + 1)
-            lods.append(_round_half_away(lo, 6))
-            pbs.append(_round_half_away(1.0 / (1.0 + math.exp(-lo)), 6))
-        pdf["rn"] = rns
-        pdf["log_odds"] = lods
-        pdf["p_burst"] = pbs
-        return pdf[out_cols]
-
-    return df.groupBy(key_col).applyInPandas(fold, schema=out_schema)

@@ -10,11 +10,13 @@ toward the tails and extreme quantiles (p99/p999) stay tight where a
 fixed-width histogram goes coarse.
 
 Layout (the 100 TB shape): values are digested per (group, shard)
-with ``applyInPandas`` — each shard builds one bounded O(δ) summary
-from its sorted slice — then shard digests MERGE per group in a
-second ``applyInPandas`` (sorted by shard id, so merge order is
-deterministic). Nothing corpus-sized ever leaves an executor; the
-merged digest is O(δ) floats per group regardless of input size.
+— each shard builds one bounded O(δ) summary from its sorted slice —
+then shard digests MERGE per group (sorted by shard id, so merge order
+is deterministic). :func:`two_level_quantiles` is that build for all
+three quantile sketches (t-digest, KLL, q-digest): two ``grouped_fold``
+passes over a small per-sketch adapter. Nothing corpus-sized ever
+leaves an executor; the merged digest is O(δ) floats per group
+regardless of input size.
 Shards are minted from the data (hash % n_shards), not from Spark
 partitioning, so the digest is partitioning-invariant and re-runs
 bit-identically.
@@ -124,52 +126,88 @@ def tdigest_quantiles(
     Returns one row per group: the quantile estimates, the merged
     digest's centroid count, and the total weight it carries.
     """
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    qs = list(qs)
+    return two_level_quantiles(df, group_col, F.col(value_col), shard_col, qs, _TDigestParts(delta))
 
-    def shard_digest(pdf: pd.DataFrame) -> pd.DataFrame:
-        m, w = build(pdf["_v"].to_numpy(), delta=delta)
-        return pd.DataFrame(
-            {
-                "g": [pdf["_g"].iloc[0]],
-                "shard": [int(pdf["_s"].iloc[0])],
-                "means": [m.tolist()],
-                "weights": [w.tolist()],
-            }
-        )
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("shard", kind="mergesort")  # deterministic merge order
-        m, w = merge(
+class _TDigestParts:
+    """The t-digest's parts for :func:`two_level_quantiles`."""
+
+    dtype = "double"
+    parts = "means array<double>, weights array<double>"
+    size = "n_centroids"
+
+    def __init__(self, delta: float):
+        self.delta = delta
+
+    def shard(self, values: np.ndarray) -> dict:
+        m, w = build(values, delta=self.delta)
+        return {"means": m.tolist(), "weights": w.tolist()}
+
+    def merge(self, shards):
+        return merge(
             [
                 (np.asarray(mm, dtype=np.float64), np.asarray(ww, dtype=np.float64))
-                for mm, ww in zip(pdf["means"], pdf["weights"])
+                for mm, ww in zip(shards["means"], shards["weights"])
             ],
-            delta=delta,
+            delta=self.delta,
         )
-        row = {"g": [pdf["g"].iloc[0]]}
-        for q in qs:
-            row[f"q{int(q * 1000)}"] = [quantile(m, w, q)]
-        row["n_centroids"] = [int(len(m))]
-        row["total_weight"] = [float(w.sum())]
-        return pd.DataFrame(row)
 
-    shards = (
+    def summary(self, digest, qs) -> list:
+        m, w = digest
+        return [quantile(m, w, q) for q in qs] + [int(len(m)), float(w.sum())]
+
+
+def two_level_quantiles(df, group_col: str, value, shard_col, qs, sketch):
+    """The one two-level sketch build behind tdigest_quantiles,
+    kll_quantiles and qdigest_quantiles: each (group, shard) slice is
+    sketched (``sketch.shard`` of its values, cast to ``sketch.dtype``,
+    serialised as the ``sketch.parts`` DDL), then each group merges its
+    shards in shard order (``sketch.merge``) and reports one row ``g``,
+    ``q<1000·q>`` per quantile, ``sketch.size`` and ``total_weight``
+    (``sketch.summary``). ``sketch`` is an instance of a module-level
+    adapter class, so the worker unpickles the class by reference."""
+    from pyspark.sql import functions as F
+
+    from ..streaming.stateful import grouped_fold
+
+    qs = list(qs)
+    shards = grouped_fold(
         df.select(
-            F.col(group_col).alias("_g"),
-            F.col(value_col).cast("double").alias("_v"),
-            shard_col.cast("int").alias("_s"),
-        )
-        .groupBy("_g", "_s")
-        .applyInPandas(
-            shard_digest,
-            "g string, shard int, means array<double>, weights array<double>",
-        )
+            F.col(group_col).alias("g"),
+            value.cast(sketch.dtype).alias("_v"),
+            shard_col.cast("int").alias("shard"),
+        ),
+        ["g", "shard"], _shard_fold, keep="key", added=sketch.parts, sketch=sketch,
     )
-    q_fields = ", ".join(f"q{int(q * 1000)} double" for q in qs)
-    return shards.groupBy("g").applyInPandas(
-        merge_group,
-        f"g string, {q_fields}, n_centroids int, total_weight double",
+    q_fields = ", ".join(f"{_q_name(q)} {sketch.dtype}" for q in qs)
+    return grouped_fold(
+        shards, "g", _merge_fold, keep="key",
+        added=f"{q_fields}, {sketch.size} int, total_weight {sketch.dtype}",
+        sketch=sketch, qs=qs,
     )
+
+
+def _q_name(q: float) -> str:
+    return f"q{int(q * 1000)}"
+
+
+def _shard_fold(key, pdfs, state, *, sketch):
+    """One (group, shard) slice of :func:`two_level_quantiles`."""
+    import pandas as pd
+
+    (pdf,) = pdfs
+    parts = sketch.shard(pdf["_v"].to_numpy())
+    yield pd.DataFrame({"g": [key[0]], "shard": [int(key[1])], **{c: [v] for c, v in parts.items()}})
+
+
+def _merge_fold(key, pdfs, state, *, sketch, qs):
+    """One group of :func:`two_level_quantiles`: shards merge in shard
+    order, so the merged sketch is deterministic."""
+    import pandas as pd
+
+    (pdf,) = pdfs
+    merged = sketch.merge(pdf.sort_values("shard", kind="mergesort"))
+    names = [_q_name(q) for q in qs] + [sketch.size, "total_weight"]
+    yield pd.DataFrame([[key[0], *sketch.summary(merged, qs)]], columns=["g", *names])

@@ -1226,14 +1226,7 @@ def read_source(spark: SparkSession, conf: dict) -> DataFrame:
     path = conf.pop("path", None)
     streaming = conf.pop("stream", False)
     schema = conf.pop("schema", None)
-    if streaming:
-        reader = spark.readStream.format(fmt)
-        if schema:
-            reader = reader.schema(schema)
-        for k, v in conf.items():
-            reader = reader.option(k, v)
-        return reader.load(path) if path else reader.load()
-    reader = spark.read.format(fmt)
+    reader = (spark.readStream if streaming else spark.read).format(fmt)
     if schema:
         reader = reader.schema(schema)
     for k, v in conf.items():
@@ -1258,16 +1251,10 @@ def write_sink(df: DataFrame, conf: dict):
         if fmt == "foreachBatch":
             # K6 escape hatch: arbitrary per-micro-batch handler
             # fn(batch_df, batch_id) — the Logstash ruby-output analog.
-            fn = conf.pop("function")
-            writer = df.writeStream.foreachBatch(fn)
-            if query_name:
-                writer = writer.queryName(query_name)
-            for k, v in conf.items():
-                writer = writer.option(k, v)
-            if available_now:
-                writer = writer.trigger(availableNow=True)
-            return writer.start()
-        writer = df.writeStream.format(fmt)
+            writer = df.writeStream.foreachBatch(conf.pop("function"))
+            path = None  # the handler writes where it likes
+        else:
+            writer = df.writeStream.format(fmt)
         if query_name:
             writer = writer.queryName(query_name)
         for k, v in conf.items():

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from ..streaming.stateful import grouped_fold
 
 
 # Engine-shared autocovariance formulas (identical text in the oracle
@@ -800,11 +801,9 @@ _MP24_D2 = (
 )
 
 
-@query(
-    "matrix_profile_mass_gate",
-    category="FC-matrixprofile",
-    oracle=f"""
-        WITH hourly AS (
+# The m=24 oracles' shared CTEs, up to each window's ranked matches
+# (``scored``): the DuckDB replay of _mp24_quadratic_profile.
+_MP24_SCORED_CTE = f"""hourly AS (
             SELECT event_type,
                    CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS hr,
                    CAST(count(*) AS BIGINT) AS x
@@ -852,7 +851,14 @@ _MP24_D2 = (
                        ORDER BY CAST(round({_MP24_D2}, 6) AS DOUBLE), j
                    ) AS rk
             FROM dots
-        )
+        )"""
+
+
+@query(
+    "matrix_profile_mass_gate",
+    category="FC-matrixprofile",
+    oracle=f"""
+        WITH {_MP24_SCORED_CTE}
         SELECT event_type, i AS window_start, j AS motif_match,
                d2 AS znorm_dist_sq, TRUE AS mass_agrees
         FROM scored WHERE rk = 1
@@ -893,9 +899,74 @@ def matrix_profile_mass_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     channels (applyInPandas one shuffle); the dense grid +
     prefix-moment construction is a rollup + window, not a self-join.
     """
-    import numpy as np
-    import pandas as pd
+    series, quad = _mp24_quadratic_profile(spark, sf_dir)
+    mass_profile = grouped_fold(
+        series, "event_type", _matrix_profile_mass_fold, keep="key",
+        added="i long, mass_d2 double",
+    )
+    return (
+        quad.join(mass_profile, ["event_type", "i"])
+        .select(
+            "event_type",
+            F.col("i").alias("window_start"),
+            F.col("j").alias("motif_match"),
+            F.col("d2").alias("znorm_dist_sq"),
+            (F.abs(F.col("d2_raw") - F.col("mass_d2")) <= 1e-4).alias(
+                "mass_agrees"
+            ),
+        )
+    )
 
+
+def _matrix_profile_mass_fold(key, pdfs, state):
+    """Per-channel MASS profile of :func:`matrix_profile_mass_gate`."""
+    import numpy as np
+
+    m, excl = _MP24_M, _MP24_EXCL
+    (pdf,) = pdfs
+    pdf = pdf.sort_values("rn")
+    # the builder's dense grid delivers exactly N rows per group;
+    # fail loudly if that contract ever breaks (ADVICE r5)
+    n = len(pdf)
+    assert n == _MP24_N, f"dense grid gave {n} rows, want {_MP24_N}"
+    x = pdf["x"].to_numpy(dtype="float64")
+    et = pdf["event_type"].iloc[0]
+    nw = n - m + 1
+    L = 2 * n  # >= n + m - 1: linear convolution, no wraparound
+    xf = np.fft.rfft(x, L)
+    c1 = np.concatenate([[0.0], np.cumsum(x)])
+    c2 = np.concatenate([[0.0], np.cumsum(x * x)])
+    sw = c1[m : nw + m] - c1[:nw]
+    sww = c2[m : nw + m] - c2[:nw]
+    var24 = m * sww - sw * sw  # exact integers in float64
+    valid = var24 > 0.5
+    js = np.arange(nw)
+    rows = []
+    for i in range(nw):
+        if not valid[i]:
+            continue
+        qf = np.fft.rfft(x[i : i + m][::-1], L)
+        dp = np.fft.irfft(xf * qf, L)[m - 1 : m - 1 + nw]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            d2 = 2.0 * m * (
+                1.0 - (m * dp - sw[i] * sw) / np.sqrt(var24[i] * var24)
+            )
+        mask = valid & (np.abs(js - i) >= excl)
+        if not mask.any():
+            continue
+        rows.append(
+            (et, i + 1, float(np.where(mask, d2, np.inf).min()))
+        )
+    yield pd.DataFrame(rows, columns=["event_type", "i", "mass_d2"])
+
+
+def _mp24_quadratic_profile(spark: SparkSession, sf_dir: str):
+    """The hourly series and exact quadratic profile the m=24 gates
+    share: ``series`` (event_type, rn, x) is each channel's dense
+    240-hour grid, persisted because the JVM window pass and the
+    Python fold both read it; ``quad`` holds each window's nearest
+    match (event_type, i, j, d2_raw, d2 rounded to 6) from the
+    zip_with dot products the oracles replicate."""
     ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         "event_type",
@@ -913,8 +984,6 @@ def matrix_profile_mass_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("k") + 1).cast("long").alias("rn"),
         (F.col("h0") + F.col("k")).alias("hr"),
     )
-    # series feeds the JVM window pass AND the MASS UDF — persist so
-    # both consumers read the cached 240×channels frame, not the scan
     series = (
         grid.join(hourly, ["event_type", "hr"], "left")
         .select(
@@ -969,60 +1038,7 @@ def matrix_profile_mass_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") == 1)
         .drop("rk")
     )
-
-    def mass(pdf: pd.DataFrame) -> pd.DataFrame:
-        m, excl = _MP24_M, _MP24_EXCL
-        pdf = pdf.sort_values("rn")
-        # the builder's dense grid delivers exactly N rows per group;
-        # fail loudly if that contract ever breaks (ADVICE r5)
-        n = len(pdf)
-        assert n == _MP24_N, f"dense grid gave {n} rows, want {_MP24_N}"
-        x = pdf["x"].to_numpy(dtype="float64")
-        et = pdf["event_type"].iloc[0]
-        nw = n - m + 1
-        L = 2 * n  # >= n + m - 1: linear convolution, no wraparound
-        xf = np.fft.rfft(x, L)
-        c1 = np.concatenate([[0.0], np.cumsum(x)])
-        c2 = np.concatenate([[0.0], np.cumsum(x * x)])
-        sw = c1[m : nw + m] - c1[:nw]
-        sww = c2[m : nw + m] - c2[:nw]
-        var24 = m * sww - sw * sw  # exact integers in float64
-        valid = var24 > 0.5
-        js = np.arange(nw)
-        rows = []
-        for i in range(nw):
-            if not valid[i]:
-                continue
-            qf = np.fft.rfft(x[i : i + m][::-1], L)
-            dp = np.fft.irfft(xf * qf, L)[m - 1 : m - 1 + nw]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                d2 = 2.0 * m * (
-                    1.0 - (m * dp - sw[i] * sw) / np.sqrt(var24[i] * var24)
-                )
-            mask = valid & (np.abs(js - i) >= excl)
-            if not mask.any():
-                continue
-            rows.append(
-                (et, i + 1, float(np.where(mask, d2, np.inf).min()))
-            )
-        return pd.DataFrame(rows, columns=["event_type", "i", "mass_d2"])
-
-    mass_profile = series.groupBy("event_type").applyInPandas(
-        mass, "event_type string, i long, mass_d2 double"
-    )
-    return (
-        quad.join(mass_profile, ["event_type", "i"])
-        .select(
-            "event_type",
-            F.col("i").alias("window_start"),
-            F.col("j").alias("motif_match"),
-            F.col("d2").alias("znorm_dist_sq"),
-            (F.abs(F.col("d2_raw") - F.col("mass_d2")) <= 1e-4).alias(
-                "mass_agrees"
-            ),
-        )
-    )
-
+    return series, quad
 
 def _dtw_banded_dp(xa, xb, band: int = 7):
     """Sakoe-Chiba banded DTW on integer series: exact int64 min/+
@@ -1816,50 +1832,7 @@ def gotoh_affine_alignment_shapes(
     "matrix_profile_stomp_gate",
     category="FC-matrixprofile",
     oracle=f"""
-        WITH hourly AS (
-            SELECT event_type,
-                   CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS hr,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events
-            GROUP BY event_type, CAST(floor(epoch(ts)) AS BIGINT) // 3600
-        ), bounds AS (
-            SELECT event_type, min(hr) AS h0 FROM hourly GROUP BY event_type
-        ), grid AS (
-            SELECT b.event_type, CAST(ks.k + 1 AS BIGINT) AS rn,
-                   b.h0 + ks.k AS hr
-            FROM bounds b CROSS JOIN
-                 (SELECT unnest(generate_series(0, {_MP24_N - 1})) AS k) ks
-        ), series AS (
-            SELECT g.event_type, g.rn, COALESCE(h.x, 0) AS x
-            FROM grid g LEFT JOIN hourly h
-              ON g.event_type = h.event_type AND g.hr = h.hr
-        ), wins AS (
-            SELECT event_type, rn AS i,
-                   CAST(sum(x) OVER w24 AS BIGINT) AS sw,
-                   CAST(sum(x * x) OVER w24 AS BIGINT) AS sww,
-                   list(x) OVER w24 AS vec
-            FROM series
-            WINDOW w24 AS (PARTITION BY event_type ORDER BY rn
-                           ROWS BETWEEN CURRENT ROW AND {_MP24_M - 1} FOLLOWING)
-            QUALIFY rn <= {_MP24_NW} AND ({_MP24_M} * sww - sw * sw) > 0
-        ), dots AS (
-            SELECT a.event_type, a.i, b.i AS j,
-                   a.sw AS swi, a.sww AS swwi,
-                   b.sw AS swj, b.sww AS swwj,
-                   CAST(list_aggregate(list_transform(
-                            list_zip(a.vec, b.vec), p -> p[1] * p[2]),
-                        'sum') AS BIGINT) AS dp
-            FROM wins a JOIN wins b
-              ON a.event_type = b.event_type AND abs(a.i - b.i) >= {_MP24_EXCL}
-        ), scored AS (
-            SELECT event_type, i, j,
-                   CAST(round({_MP24_D2}, 6) AS DOUBLE) AS d2,
-                   row_number() OVER (
-                       PARTITION BY event_type, i
-                       ORDER BY CAST(round({_MP24_D2}, 6) AS DOUBLE), j
-                   ) AS rk
-            FROM dots
-        )
+        WITH {_MP24_SCORED_CTE}
         SELECT event_type, i AS window_start, j AS motif_match,
                d2 AS znorm_dist_sq, TRUE AS stomp_agrees
         FROM scored WHERE rk = 1
@@ -1892,132 +1865,10 @@ def matrix_profile_stomp_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly-parallel applyInPandas shape as MASS; a
     million-key corpus runs a million independent recurrences.
     """
-    import numpy as np
-
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type",
-        (F.unix_timestamp("ts").cast("long") / F.lit(3600))
-        .cast("long")
-        .alias("hr"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    bounds = hourly.groupBy("event_type").agg(F.min("hr").alias("h0"))
-    grid = bounds.select(
-        "event_type",
-        "h0",
-        F.explode(F.sequence(F.lit(0), F.lit(_MP24_N - 1))).alias("k"),
-    ).select(
-        "event_type",
-        (F.col("k") + 1).cast("long").alias("rn"),
-        (F.col("h0") + F.col("k")).alias("hr"),
-    )
-    series = (
-        grid.join(hourly, ["event_type", "hr"], "left")
-        .select(
-            "event_type", "rn", F.coalesce(F.col("x"), F.lit(0)).alias("x")
-        )
-        .persist()  # feeds the JVM window pass AND the STOMP UDF
-    )
-    w24 = Window.partitionBy("event_type").orderBy("rn").rowsBetween(0, _MP24_M - 1)
-    wins = series.select(
-        "event_type",
-        F.col("rn").alias("i"),
-        F.sum("x").over(w24).cast("long").alias("sw"),
-        F.sum(F.col("x") * F.col("x")).over(w24).cast("long").alias("sww"),
-        F.collect_list("x").over(w24).alias("vec"),
-    ).filter(
-        (F.col("i") <= _MP24_NW)
-        & (_MP24_M * F.col("sww") - F.col("sw") * F.col("sw") > 0)
-    )
-    a = wins.alias("a")
-    b = wins.alias("b")
-    dots = a.join(
-        b,
-        (F.col("a.event_type") == F.col("b.event_type"))
-        & (F.abs(F.col("a.i") - F.col("b.i")) >= _MP24_EXCL),
-    ).select(
-        F.col("a.event_type").alias("event_type"),
-        F.col("a.i").alias("i"),
-        F.col("b.i").alias("j"),
-        F.col("a.sw").alias("swi"),
-        F.col("a.sww").alias("swwi"),
-        F.col("b.sw").alias("swj"),
-        F.col("b.sww").alias("swwj"),
-        F.expr(
-            "aggregate(zip_with(a.vec, b.vec, (x, y) -> x * y),"
-            " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        ).alias("dp"),
-    )
-    d2_raw = F.expr(_MP24_D2)
-    w_rank = Window.partitionBy("event_type", "i").orderBy(
-        F.round(d2_raw, 6).asc(), F.col("j").asc()
-    )
-    quad = (
-        dots.select(
-            "event_type", "i", "j",
-            d2_raw.alias("d2_raw"),
-            F.round(d2_raw, 6).alias("d2"),
-            F.row_number().over(w_rank).alias("rk"),
-        )
-        .filter(F.col("rk") == 1)
-        .drop("rk")
-    )
-
-    def stomp(pdf):
-        import pandas as pd
-
-        m, excl = _MP24_M, _MP24_EXCL
-        pdf = pdf.sort_values("rn")
-        n = len(pdf)
-        assert n == _MP24_N, f"dense grid gave {n} rows, want {_MP24_N}"
-        x = pdf["x"].to_numpy(dtype="int64")
-        et = pdf["event_type"].iloc[0]
-        nw = n - m + 1
-        c1 = np.concatenate([[0], np.cumsum(x)])
-        c2 = np.concatenate([[0], np.cumsum(x * x)])
-        sw = c1[m : nw + m] - c1[:nw]
-        sww = c2[m : nw + m] - c2[:nw]
-        var24 = m * sww - sw * sw
-        valid = var24 > 0
-        js = np.arange(nw)
-        win = np.lib.stride_tricks.sliding_window_view(x, m)
-        dp = win @ win[0]  # exact int64 row 0
-        rows = []
-        for i in range(nw):
-            if i > 0:
-                # STOMP recurrence — integer, exact
-                nxt = np.empty(nw, dtype="int64")
-                nxt[1:] = (
-                    dp[:-1]
-                    - x[i - 1] * x[0 : nw - 1]
-                    + x[i + m - 1] * x[m : m + nw - 1]
-                )
-                nxt[0] = int(win[i] @ win[0])
-                dp = nxt
-            if not valid[i]:
-                continue
-            num = (m * dp - sw[i] * sw).astype("float64")
-            den = np.sqrt(
-                var24[i].astype("float64") * var24.astype("float64")
-            )
-            with np.errstate(divide="ignore", invalid="ignore"):
-                d2 = 2.0 * m * (1.0 - num / den)
-            mask = valid & (np.abs(js - i) >= excl)
-            if not mask.any():
-                continue
-            # raw (unrounded) minimum: the gate compares it to the
-            # quadratic path's raw d2 with a tight tolerance — the
-            # previous floor(x*1e6+0.5) emulation of Spark's
-            # BigDecimal HALF_UP could disagree on near-tie values
-            # and made the equality gate latently flaky (ADVICE r5)
-            mn = float(np.where(mask, d2, np.inf).min())
-            rows.append((et, i + 1, mn))
-        return pd.DataFrame(
-            rows, columns=["event_type", "i", "stomp_d2"]
-        )
-
-    stomp_profile = series.groupBy("event_type").applyInPandas(
-        stomp, "event_type string, i long, stomp_d2 double"
+    series, quad = _mp24_quadratic_profile(spark, sf_dir)
+    stomp_profile = grouped_fold(
+        series, "event_type", _matrix_profile_stomp_fold, keep="key",
+        added="i long, stomp_d2 double",
     )
     return (
         quad.join(stomp_profile, ["event_type", "i"])
@@ -2035,6 +1886,60 @@ def matrix_profile_stomp_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
+
+
+def _matrix_profile_stomp_fold(key, pdfs, state):
+    """Per-channel STOMP profile of :func:`matrix_profile_stomp_gate`."""
+    import numpy as np
+
+    m, excl = _MP24_M, _MP24_EXCL
+    (pdf,) = pdfs
+    pdf = pdf.sort_values("rn")
+    n = len(pdf)
+    assert n == _MP24_N, f"dense grid gave {n} rows, want {_MP24_N}"
+    x = pdf["x"].to_numpy(dtype="int64")
+    et = pdf["event_type"].iloc[0]
+    nw = n - m + 1
+    c1 = np.concatenate([[0], np.cumsum(x)])
+    c2 = np.concatenate([[0], np.cumsum(x * x)])
+    sw = c1[m : nw + m] - c1[:nw]
+    sww = c2[m : nw + m] - c2[:nw]
+    var24 = m * sww - sw * sw
+    valid = var24 > 0
+    js = np.arange(nw)
+    win = np.lib.stride_tricks.sliding_window_view(x, m)
+    dp = win @ win[0]  # exact int64 row 0
+    rows = []
+    for i in range(nw):
+        if i > 0:
+            # STOMP recurrence — integer, exact
+            nxt = np.empty(nw, dtype="int64")
+            nxt[1:] = (
+                dp[:-1]
+                - x[i - 1] * x[0 : nw - 1]
+                + x[i + m - 1] * x[m : m + nw - 1]
+            )
+            nxt[0] = int(win[i] @ win[0])
+            dp = nxt
+        if not valid[i]:
+            continue
+        num = (m * dp - sw[i] * sw).astype("float64")
+        den = np.sqrt(
+            var24[i].astype("float64") * var24.astype("float64")
+        )
+        with np.errstate(divide="ignore", invalid="ignore"):
+            d2 = 2.0 * m * (1.0 - num / den)
+        mask = valid & (np.abs(js - i) >= excl)
+        if not mask.any():
+            continue
+        # raw (unrounded) minimum: the gate compares it to the
+        # quadratic path's raw d2 with a tight tolerance — the
+        # previous floor(x*1e6+0.5) emulation of Spark's
+        # BigDecimal HALF_UP could disagree on near-tie values
+        # and made the equality gate latently flaky (ADVICE r5)
+        mn = float(np.where(mask, d2, np.inf).min())
+        rows.append((et, i + 1, mn))
+    yield pd.DataFrame(rows, columns=["event_type", "i", "stomp_d2"])
 
 
 def _smith_waterman_score(xa, xb, match: int = 2, mismatch: int = -1,

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.spread import spread_to_cores
 from ..registry import query
+from ..streaming.stateful import grouped_fold
 
 
 @query(
@@ -1382,27 +1383,29 @@ def grouped_map_minmax_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-element math is IEEE-identical to the SQL formulation; the
     sum is integer-scaled before accumulation so pandas' summation
     order cannot drift from the oracle's."""
+    ev = load_table(spark, sf_dir, "events").select("user_id", "value")
+    return grouped_fold(
+        ev, "user_id", _grouped_map_minmax_norm_fold, keep="key",
+        added="n long, norm_sum_scaled long",
+    )
+
+
+def _grouped_map_minmax_norm_fold(key, pdfs, state):
+    """Per-user fold of :func:`grouped_map_minmax_norm`."""
+    import numpy as np
     import pandas as pd
 
-    ev = load_table(spark, sf_dir, "events").select("user_id", "value")
-
-    def norm(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = pdf["value"]
-        mn, mx = v.min(), v.max()
-        if mx > mn:
-            import numpy as np
-
-            scaled = np.floor((v - mn) / (mx - mn) * 1e9 + 0.5).astype("int64")
-            total = int(scaled.sum())
-        else:
-            total = 0
-        return pd.DataFrame(
-            {"user_id": [pdf["user_id"].iloc[0]], "n": [len(pdf)],
-             "norm_sum_scaled": [total]}
-        )
-
-    return ev.groupBy("user_id").applyInPandas(
-        norm, "user_id long, n long, norm_sum_scaled long"
+    (pdf,) = pdfs
+    v = pdf["value"]
+    mn, mx = v.min(), v.max()
+    if mx > mn:
+        scaled = np.floor((v - mn) / (mx - mn) * 1e9 + 0.5).astype("int64")
+        total = int(scaled.sum())
+    else:
+        total = 0
+    yield pd.DataFrame(
+        {"user_id": [pdf["user_id"].iloc[0]], "n": [len(pdf)],
+         "norm_sum_scaled": [total]}
     )
 
 

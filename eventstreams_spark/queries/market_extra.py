@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from ..streaming.stateful import grouped_fold
 
 # total-order tick key: epoch microseconds then event_id, both
 # zero-padded so VARCHAR order == numeric order (min_by/max_by in
@@ -401,42 +402,37 @@ def rsi_wilder_reference_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     key); the operator shape is per-key state of two floats — the
     millions-of-series production layout.
     """
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
     bars = _daily_bars(spark, sf_dir).filter(
         F.col("event_type") == "purchase"
     ).select("event_type", "day", "close_cents")
-
-    out_schema = StructType(
-        [
-            StructField("n_days", LongType()),
-            StructField("avg_gain", DoubleType()),
-            StructField("avg_loss", DoubleType()),
-            StructField("rsi_wilder", DoubleType()),
-        ]
+    return grouped_fold(
+        bars, "event_type", _rsi_wilder_fold, keep=None,
+        added="n_days long, avg_gain double, avg_loss double, rsi_wilder double",
     )
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("day", kind="mergesort")
-        closes = list(pdf["close_cents"])
-        ds = [b - a for a, b in zip(closes, closes[1:])]
-        ag = sum(float(d) for d in ds[:14] if d > 0) / 14.0
-        al = sum(float(-d) for d in ds[:14] if d < 0) / 14.0
-        for d in ds[14:]:
-            ag = (ag * 13.0 + (float(d) if d > 0 else 0.0)) / 14.0
-            al = (al * 13.0 + (float(-d) if d < 0 else 0.0)) / 14.0
-        rsi = 100.0 - 100.0 / (1.0 + ag / al)
-        return pd.DataFrame(
-            {
-                "n_days": [len(closes)],
-                "avg_gain": [round(ag, 6)],
-                "avg_loss": [round(al, 6)],
-                "rsi_wilder": [round(rsi, 6)],
-            }
-        )
 
-    return bars.groupBy("event_type").applyInPandas(fold, schema=out_schema)
+def _rsi_wilder_fold(key, pdfs, state):
+    """Per-channel fold of :func:`rsi_wilder_reference_check`."""
+    import pandas as pd
+
+    (pdf,) = pdfs
+    pdf = pdf.sort_values("day", kind="mergesort")
+    closes = list(pdf["close_cents"])
+    ds = [b - a for a, b in zip(closes, closes[1:])]
+    ag = sum(float(d) for d in ds[:14] if d > 0) / 14.0
+    al = sum(float(-d) for d in ds[:14] if d < 0) / 14.0
+    for d in ds[14:]:
+        ag = (ag * 13.0 + (float(d) if d > 0 else 0.0)) / 14.0
+        al = (al * 13.0 + (float(-d) if d < 0 else 0.0)) / 14.0
+    rsi = 100.0 - 100.0 / (1.0 + ag / al)
+    yield pd.DataFrame(
+        {
+            "n_days": [len(closes)],
+            "avg_gain": [round(ag, 6)],
+            "avg_loss": [round(al, 6)],
+            "rsi_wilder": [round(rsi, 6)],
+        }
+    )
 
 
 # shared daily-return CTE on the bar frame (exact integer-cent

@@ -41,6 +41,39 @@ _KR_S = "1000000.0D"
 
 _TE_FOLD = "CAST(floor({u} * 5.0) AS BIGINT)"
 
+# The JVM aggregate() Kalman walk over ``series``, an array of
+# (day DATE, cents BIGINT) structs in day order: one (day, cents, x, p,
+# gain) struct per step. Shared with the batch/stream Kalman twin test,
+# which holds the Python fold to this text.
+_KALMAN_WALK = f"""
+            aggregate(
+                series,
+                CAST(array() AS ARRAY<STRUCT<day DATE, cents BIGINT,
+                                             x DOUBLE, p DOUBLE,
+                                             gain DOUBLE>>),
+                (acc, z) -> CASE WHEN size(acc) = 0 THEN array(
+                    struct(z.day AS day, z.cents AS cents,
+                           CAST(z.cents AS DOUBLE) AS x,
+                           {_KR_S} AS p, CAST(NULL AS DOUBLE) AS gain))
+                ELSE array_append(
+                    acc,
+                    struct(
+                        z.day AS day, z.cents AS cents,
+                        element_at(acc, -1).x
+                          + ((element_at(acc, -1).p + {_KQ_S})
+                             / ((element_at(acc, -1).p + {_KQ_S}) + {_KR_S}))
+                          * (CAST(z.cents AS DOUBLE)
+                             - element_at(acc, -1).x) AS x,
+                        (1.0D - ((element_at(acc, -1).p + {_KQ_S})
+                             / ((element_at(acc, -1).p + {_KQ_S}) + {_KR_S})))
+                          * (element_at(acc, -1).p + {_KQ_S}) AS p,
+                        (element_at(acc, -1).p + {_KQ_S})
+                          / ((element_at(acc, -1).p + {_KQ_S}) + {_KR_S})
+                          AS gain))
+                END
+            )
+"""
+
 
 @query(
     "kalman_level_filter_check",
@@ -107,36 +140,7 @@ def kalman_level_filter_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     folded = packed.select(
         "event_type",
-        F.expr(
-            f"""
-            aggregate(
-                series,
-                CAST(array() AS ARRAY<STRUCT<day DATE, cents BIGINT,
-                                             x DOUBLE, p DOUBLE,
-                                             gain DOUBLE>>),
-                (acc, z) -> CASE WHEN size(acc) = 0 THEN array(
-                    struct(z.day AS day, z.cents AS cents,
-                           CAST(z.cents AS DOUBLE) AS x,
-                           {_KR_S} AS p, CAST(NULL AS DOUBLE) AS gain))
-                ELSE array_append(
-                    acc,
-                    struct(
-                        z.day AS day, z.cents AS cents,
-                        element_at(acc, -1).x
-                          + ((element_at(acc, -1).p + {_KQ_S})
-                             / ((element_at(acc, -1).p + {_KQ_S}) + {_KR_S}))
-                          * (CAST(z.cents AS DOUBLE)
-                             - element_at(acc, -1).x) AS x,
-                        (1.0D - ((element_at(acc, -1).p + {_KQ_S})
-                             / ((element_at(acc, -1).p + {_KQ_S}) + {_KR_S})))
-                          * (element_at(acc, -1).p + {_KQ_S}) AS p,
-                        (element_at(acc, -1).p + {_KQ_S})
-                          / ((element_at(acc, -1).p + {_KQ_S}) + {_KR_S})
-                          AS gain))
-                END
-            )
-            """
-        ).alias("walked"),
+        F.expr(_KALMAN_WALK).alias("walked"),
     )
     return (
         folded.select("event_type", F.explode("walked").alias("w"))

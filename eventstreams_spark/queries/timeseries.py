@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from ..streaming.stateful import grouped_fold
 
 
 @query(
@@ -989,8 +990,6 @@ def clamped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers; the oracle's recursive CTE (depth = max events/user) is
     the semantic spec, not the production shape.
     """
-    import pandas as pd
-
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     deltas = ev.select(
         "user_id", "ts", "event_id",
@@ -1002,35 +1001,36 @@ def clamped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("delta"),
     )
 
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        bal, lo, hi = 0, 0, 0
-        for d in pdf["delta"]:
-            t = bal + int(d)
-            if t < 0:
-                lo += 1
-                bal = 0
-            elif t > 20000:
-                hi += 1
-                bal = 20000
-            else:
-                bal = t
-        return pd.DataFrame(
-            {
-                "user_id": [int(pdf["user_id"].iloc[0])],
-                "final_bal_cents": [bal],
-                "n_clamp_lo": [lo],
-                "n_clamp_hi": [hi],
-            }
-        )
+    return grouped_fold(
+        deltas, "user_id", _clamped_running_balance_fold, keep="key",
+        added="final_bal_cents long, n_clamp_lo long, n_clamp_hi long",
+    )
 
-    return (
-        deltas.groupBy("user_id")
-        .applyInPandas(
-            fold,
-            "user_id long, final_bal_cents long, n_clamp_lo long,"
-            " n_clamp_hi long",
-        )
+
+def _clamped_running_balance_fold(key, pdfs, state):
+    """Per-user fold of :func:`clamped_running_balance`."""
+    import pandas as pd
+
+    (pdf,) = pdfs
+    pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
+    bal, lo, hi = 0, 0, 0
+    for d in pdf["delta"]:
+        t = bal + int(d)
+        if t < 0:
+            lo += 1
+            bal = 0
+        elif t > 20000:
+            hi += 1
+            bal = 20000
+        else:
+            bal = t
+    yield pd.DataFrame(
+        {
+            "user_id": [int(pdf["user_id"].iloc[0])],
+            "final_bal_cents": [bal],
+            "n_clamp_lo": [lo],
+            "n_clamp_hi": [hi],
+        }
     )
 
 

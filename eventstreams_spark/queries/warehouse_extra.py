@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.spread import leaf_parallelism
 from ..registry import query
+from ..streaming.stateful import grouped_fold
 from .analysis_extra import MD5_UNIFORM_DOC
 
 
@@ -1793,10 +1794,6 @@ def fpgrowth_parallel_itemsets(
     shrink shards). No candidate blow-up at any point: the tree
     recursion enumerates only supported prefixes.
     """
-    import pandas as pd
-
-    from ..operators.fpgrowth import fp_growth_local
-
     G = 8
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
@@ -1856,24 +1853,34 @@ def fpgrowth_parallel_itemsets(
         )
     )
 
-    def mine(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = int(pdf["grp"].iloc[0])
-        txs = [list(p) for p in pdf["prefix"]]
-        rows = []
-        for iset, c in fp_growth_local(txs, minsup).items():
-            if max(iset) % G != g:
-                continue  # owned (and counted exactly) by its own group
-            brands = sorted(brand_of[i] for i in iset)
-            rows.append(("|".join(brands), len(iset), c))
-        return pd.DataFrame(rows, columns=["itemset", "sz", "n_co"])
-
-    mined = proj.groupBy("grp").applyInPandas(
-        mine, "itemset string, sz long, n_co long"
+    mined = grouped_fold(
+        proj, "grp", _fpgrowth_shard_fold, keep=None,
+        added="itemset string, sz long, n_co long",
+        groups=G, minsup=minsup, brand_of=brand_of,
     )
     return mined.select(
         "itemset", "sz", "n_co",
         F.round(F.col("n_co") / F.lit(n_orders), 6).alias("support"),
     )
+
+
+def _fpgrowth_shard_fold(key, pdfs, state, *, groups: int, minsup: int, brand_of: dict):
+    """One rank group of :func:`fpgrowth_parallel_itemsets`: FP-growth
+    over the group's prefixes, keeping the itemsets the group owns."""
+    import pandas as pd
+
+    from ..operators.fpgrowth import fp_growth_local
+
+    (pdf,) = pdfs
+    g = int(pdf["grp"].iloc[0])
+    txs = [list(p) for p in pdf["prefix"]]
+    rows = []
+    for iset, c in fp_growth_local(txs, minsup).items():
+        if max(iset) % groups != g:
+            continue  # owned (and counted exactly) by its own group
+        brands = sorted(brand_of[i] for i in iset)
+        rows.append(("|".join(brands), len(iset), c))
+    yield pd.DataFrame(rows, columns=["itemset", "sz", "n_co"])
 
 
 @query(

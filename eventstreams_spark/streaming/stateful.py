@@ -4,8 +4,12 @@ applyInPandasWithState gives per-key state with Arrow-batched Python —
 the escape hatch for semantics Spark's built-in stateful ops can't
 express (Logstash ``throttle``/``aggregate``-style accumulation).
 Every GroupState operator of the engine (these, ``elapsed.py`` and
-``multiline.py``) makes that call through :func:`keyed_state`, which
-owns the output schema, its column order and the fold contract below.
+``multiline.py``) makes that call through :func:`keyed_state`, and
+every batch ``applyInPandas`` fold through its twin
+:func:`grouped_fold`, which runs a fold once per key from an empty
+state. The two share the output schema, its column order and the fold
+contract below, so a sequential operator (CUSUM, Holt, Kalman, the
+HMM filter) has one fold for its batch and stream forms.
 
 Scale notes: state is partitioned by key group (one shuffle), batched
 through Arrow, and stored in the state store per (key, operator). The
@@ -20,9 +24,9 @@ The engine package replaces that re-read by a stat-keyed one when it
 is imported (``eventstreams_spark/zipcache.py``), and a worker imports
 it only to unpickle a module-level engine function. A closure over
 ``pd`` alone is pickled by value and the worker never loads the
-engine, so :func:`keyed_state` refuses a fold defined inside a
-function (``TypeError``) and binds its parameters with
-``functools.partial`` instead. Keys must be well-distributed; a hot
+engine, so both helpers refuse a fold defined inside a function
+(``TypeError``) and bind its parameters with ``functools.partial``
+instead. Keys must be well-distributed; a hot
 key serializes through one Python worker.
 """
 
@@ -80,22 +84,7 @@ def keyed_state(
     ``fold`` must be a module-level function (see the module notes); a
     nested function or lambda raises ``TypeError``.
     """
-    if "<" in getattr(fold, "__qualname__", ""):
-        raise TypeError(
-            "GroupState folds must be module-level functions, so that a worker "
-            f"unpickles them by reference and imports the engine; got {fold.__qualname__}"
-        )
-    if keep == "input":
-        lead = list(df.schema.fields)
-    elif keep == "key":
-        lead = [StructField(by, df.schema[by].dataType)]
-    else:
-        lead = []
-    tail = list(df.sparkSession._parse_ddl(added).fields) if added else []
-    schema = StructType(lead + tail)
-    ship_package(df.sparkSession)
-    run = partial(_ordered_fold, fold=partial(fold, **params), columns=schema.fieldNames())
-    run.__name__ = fold.__name__  # the UDF's name in plans
+    run, schema = _fold_udf(df, [by], fold, _ordered_fold, keep, added, params)
     return df.groupBy(by).applyInPandasWithState(
         run,
         outputStructType=schema,
@@ -103,6 +92,63 @@ def keyed_state(
         outputMode=mode,
         timeoutConf=timeout,
     )
+
+
+def grouped_fold(
+    df: DataFrame,
+    by: str | list[str],
+    fold: Callable[..., Iterator[pd.DataFrame]],
+    *,
+    added: str,
+    keep: str | None = "input",
+    **params,
+) -> DataFrame:
+    """Group ``df`` by ``by`` (a column or a list of them) and run
+    ``fold(key, pdfs, state, **params)`` once per key over all of that
+    key's rows: the engine's one ``applyInPandas`` call, and the batch
+    form of :func:`keyed_state` with the same fold contract, output
+    schema (``keep`` and ``added``) and module-level rule.
+
+    ``pdfs`` yields one frame holding the key's rows and ``state`` is
+    empty (``exists`` is false, ``update`` keeps nothing), so a stream
+    fold gives here what it gives from a fresh checkpoint over the same
+    rows in one micro-batch. A batch-only fold ignores ``state``.
+    """
+    keys = [by] if isinstance(by, str) else list(by)
+    run, schema = _fold_udf(df, keys, fold, _grouped_run, keep, added, params)
+    return df.groupBy(*keys).applyInPandas(run, schema=schema)
+
+
+def _fold_udf(
+    df: DataFrame,
+    keys: list[str],
+    fold: Callable[..., Iterator[pd.DataFrame]],
+    runner: Callable[..., object],
+    keep: str | None,
+    added: str,
+    params: dict,
+) -> tuple[Callable[..., object], StructType]:
+    """The UDF and output schema both helpers hand to Spark: ``runner``
+    bound to ``fold`` (with ``params``) and the schema's column order,
+    named after ``fold`` so plans show it; the engine zip is shipped."""
+    if "<" in getattr(fold, "__qualname__", ""):
+        raise TypeError(
+            "GroupState and grouped folds must be module-level functions, so that "
+            "a worker unpickles them by reference and imports the engine; "
+            f"got {fold.__qualname__}"
+        )
+    if keep == "input":
+        lead = list(df.schema.fields)
+    elif keep == "key":
+        lead = [StructField(k, df.schema[k].dataType) for k in keys]
+    else:
+        lead = []
+    tail = list(df.sparkSession._parse_ddl(added).fields) if added else []
+    schema = StructType(lead + tail)
+    ship_package(df.sparkSession)
+    run = partial(runner, fold=partial(fold, **params), columns=schema.fieldNames())
+    run.__name__ = fold.__name__  # the UDF's name in plans
+    return run, schema
 
 
 def _ordered_fold(
@@ -117,6 +163,26 @@ def _ordered_fold(
     order."""
     for pdf in fold(key, pdfs, state):
         yield pdf if list(pdf.columns) == columns else pdf[columns]
+
+
+class _EmptyState:
+    """The state a :func:`grouped_fold` run starts from and drops."""
+
+    exists = False
+
+    def update(self, value) -> None:
+        pass
+
+
+def _grouped_run(key, pdf, *, fold, columns):
+    """One key of :func:`grouped_fold`: ``fold`` over the key's rows
+    from an empty state, its frames in schema order as one frame.
+    Unannotated on purpose: Spark reads a grouped function's type hints
+    to choose between its frame and iterator forms."""
+    frames = list(_ordered_fold(key, iter([pdf]), _EmptyState(), fold=fold, columns=columns))
+    if len(frames) == 1:
+        return frames[0]
+    return pd.concat(frames, ignore_index=True) if frames else pd.DataFrame(columns=columns)
 
 
 def _fold_sort(pdf: pd.DataFrame, ts_col: str) -> pd.DataFrame:
@@ -609,8 +675,8 @@ def cusum_changepoint_stream(
     side, and a crossing of ``threshold`` raises an alarm and RESETS
     the side that fired. A sequential fold (each step depends on the
     last), so it is inexpressible as a window function — GroupState
-    is the right home; the batch analog would need a per-key sorted
-    applyInPandas with the same loop.
+    is the right home; ``operators/changepoint.py::cusum_batch`` runs
+    the same fold once per key through :func:`grouped_fold`.
 
     Emits one row per event with both statistics and the alarm flag;
     state is two floats per key, identical however the stream is
@@ -794,13 +860,13 @@ def holt_linear_stream(
     alpha: float = 0.5,
     beta: float = 0.3,
 ) -> DataFrame:
-    """Streaming Holt double-exponential smoothing — the GroupState
-    twin of operators/smoothing.py::holt_linear_batch: coupled
+    """Streaming Holt double-exponential smoothing, whose fold
+    operators/smoothing.py::holt_linear_batch also runs: coupled
     level/trend recurrences fold per key with four numbers of state
     (n, level, trend, sequential SSE); each event emits its rn,
     post-update level/trend, pre-update forecast, and running SSE,
-    identical to the batch fold however the stream is micro-batched
-    (pinned by test_holt_batch_equals_stream)."""
+    identical to the one-pass batch run however the stream is
+    micro-batched (pinned by test_holt_batch_equals_stream)."""
     return keyed_state(
         df, key_col, _holt_linear_fold, keep="input",
         added="rn long, level double, trend double, forecast double, sse_running double",
@@ -1186,12 +1252,13 @@ def kalman_level_stream(
     q_var: float = 100000.0,
     r_var: float = 1000000.0,
 ) -> DataFrame:
-    """Streaming 1-D Kalman level filter — the GroupState twin of
-    operators/smoothing.py::kalman_level_batch: per key the carried
-    state is three numbers (n, level x, variance P); each event runs
-    predict P'=P+Q, gain K=P'/(P'+R), update x+=K(z−x), P=(1−K)P' and
-    emits (rn, level, variance, gain), identical to the batch fold
-    however the stream is micro-batched (pinned by
+    """Streaming 1-D Kalman level filter, whose fold
+    operators/smoothing.py::kalman_level_batch also runs: per key the
+    carried state is three numbers (n, level x, variance P); each event
+    runs predict P'=P+Q, gain K=P'/(P'+R), update x+=K(z−x), P=(1−K)P'
+    and emits (rn, level, variance, gain), identical to the one-pass
+    batch run and to the JVM fold of kalman_level_filter_check however
+    the stream is micro-batched (pinned by
     test_kalman_batch_equals_stream). The data-adaptive gain is the
     point: after a restart the state picks up mid-Riccati instead of
     re-warming like a fixed-α EWMA would."""
@@ -1232,15 +1299,16 @@ def hmm_burst_stream(
     k_col: str,
     lam0_col: str,
 ) -> DataFrame:
-    """Streaming 2-state HMM burst filter — the GroupState twin of
-    operators/smoothing.py::hmm_forward_batch (and of the registered
-    JVM-fold query hmm_burst_forward_filter): per key the carried
+    """Streaming 2-state HMM burst filter, whose fold
+    operators/smoothing.py::hmm_forward_batch also runs (the registered
+    JVM-fold query hmm_burst_forward_filter is its independent twin):
+    per key the carried
     state is (n, log-odds L); each arriving count runs one forward
     step L' = round6(ln((p01+p11·e^L)/(p00+p10·e^L)) + k·ln(mult)
     − (mult−1)·λ0) and emits (rn, log_odds, p_burst = σ(L)). λ0 is a
     column (the offline-trained base rate joined onto the stream —
     model-as-a-dimension deployment). The per-step 6-decimal state
-    requantization makes the stream bit-equal to the batch fold
+    requantization makes the stream bit-equal to the JVM fold
     across any micro-batch boundary (test_hmm_batch_equals_stream);
     state is O(1) per key and restart-safe like every fold here."""
     return keyed_state(

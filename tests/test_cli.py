@@ -96,6 +96,31 @@ def test_cli_explain_prints_plan_and_scale_summary(spark, tmp_path, capsys):
     assert not out.exists()  # nothing ran
 
 
+def test_cli_explain_streaming_config_prints_plan_not_digest(spark, tmp_path, capsys):
+    """A streaming config has no executed plan before its query starts:
+    `explain` prints the formatted plan and a digest line saying the
+    digest covers batch configs only, and returns normally."""
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.json").write_text('{"a": 1}\n')
+    out = tmp_path / "out"
+    cfg = {
+        "source": {"format": "text", "path": str(src), "stream": True,
+                   "schema": "payload string"},
+        "steps": [{"type": "schema_drift", "source": "payload"}],
+        "sink": {"format": "parquet", "path": str(out),
+                 "checkpointLocation": str(tmp_path / "ck"), "availableNow": True},
+    }
+    cfg_path = tmp_path / "drift.json"
+    cfg_path.write_text(json.dumps(cfg))
+    main(["explain", str(cfg_path)])
+    printed = capsys.readouterr().out
+    assert "Physical Plan" in printed and "FlatMapGroupsInPandasWithState" in printed
+    digest = [ln for ln in printed.splitlines() if ln.startswith("-- digest:")]
+    assert digest == ["-- digest: none for a streaming config; the digest covers batch configs only"]
+    assert not out.exists()  # nothing ran
+
+
 def _soak_config(tmp_path):
     """The soak YAML over its replayed weblog fixture: (config path,
     sink dir, dlq dir)."""

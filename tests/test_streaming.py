@@ -1791,15 +1791,18 @@ def test_ohlc_bars_batch_equals_stream(spark, events_slice, tmp_path):
 @pytest.mark.slow
 def test_kalman_batch_equals_stream(spark, tmp_path):
     """T15 twin equality: streaming Kalman level filter (GroupState)
-    must reproduce the batch applyInPandas fold per event — level,
-    variance, and the data-adaptive gain — across micro-batch
-    boundaries (the state resumes mid-Riccati, not re-warmed)."""
+    must reproduce the one-pass batch run of the same fold per event —
+    level, variance, and the data-adaptive gain — across micro-batch
+    boundaries (the state resumes mid-Riccati, not re-warmed), and
+    both must equal the JVM aggregate() fold that
+    kalman_level_filter_check certifies against DuckDB."""
     from eventstreams_spark.operators.smoothing import kalman_level_batch
+    from eventstreams_spark.queries.mlfeat_extra import _KALMAN_WALK
     from eventstreams_spark.streaming.stateful import kalman_level_stream
 
     vals = [1000.0, 1200.0, 900.0, 1500.0, 1400.0, 1800.0, 1700.0, 2100.0]
     rows = [
-        (k, f"2024-01-01 10:{i:02d}:00", v)
+        (k, f"2024-01-{i + 1:02d} 00:00:00", v)
         for k in ("a", "b")
         for i, v in enumerate(vals)
     ]
@@ -1823,6 +1826,18 @@ def test_kalman_batch_equals_stream(spark, tmp_path):
         )
     )
     assert got == want
+    # independent leg: the JVM fold over the same series, whose text
+    # the registered query replays in DuckDB (vals are whole cents)
+    packed = df.groupBy("k").agg(
+        F.array_sort(F.collect_list(F.struct(
+            F.to_date("ts").alias("day"), F.col("v").cast("long").alias("cents")
+        ))).alias("series")
+    )
+    jvm = packed.select("k", F.posexplode(F.expr(_KALMAN_WALK)).alias("i", "w")).select(
+        "k", (F.col("i") + 1).cast("long").alias("rn"),
+        F.col("w.x").alias("level"), F.col("w.p").alias("variance"), F.col("w.gain").alias("gain"),
+    )
+    assert _rows(jvm) == want
 
 
 @pytest.mark.slow

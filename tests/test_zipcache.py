@@ -1,7 +1,8 @@
 """The stat-keyed zipimporter cache refresh (eventstreams_spark/zipcache.py),
 the engine archive that ``session.ship_package`` sends to workers, and
-the rule that every GroupState fold is a module-level engine function
-unpickled through ``streaming.stateful.keyed_state``."""
+the rule that every GroupState and grouped-map fold is a module-level
+engine function unpickled through ``streaming.stateful.keyed_state`` or
+``streaming.stateful.grouped_fold``."""
 
 from __future__ import annotations
 
@@ -158,6 +159,21 @@ def test_ship_package_ignores_stale_archive_at_pid_path(tmp_path, monkeypatch):
 
 ENGINE = os.path.dirname(os.path.abspath(session.__file__))
 GROUP_STATE_CALL = ".applyInPandasWithState("
+GROUPED_MAP_CALL = ".applyInPandas("
+
+
+def _engine_calls(call: str) -> dict[str, int]:
+    """How often each engine source file contains ``call``."""
+    callers = {}
+    for root, dirs, files in os.walk(ENGINE):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(root, f), encoding="utf-8") as src:
+                    n = src.read().count(call)
+                if n:
+                    callers[os.path.relpath(os.path.join(root, f), ENGINE)] = n
+    return callers
 
 
 def test_group_state_is_called_only_by_the_helper():
@@ -165,19 +181,22 @@ def test_group_state_is_called_only_by_the_helper():
     module-level check, so a closure fold would again be pickled by
     value and its worker would never import the engine. The helper's
     own check cannot see such a call, so this guard reads the source."""
-    callers = {}
-    for root, dirs, files in os.walk(ENGINE):
-        dirs[:] = [d for d in dirs if d != "__pycache__"]
-        for f in files:
-            if f.endswith(".py"):
-                with open(os.path.join(root, f), encoding="utf-8") as src:
-                    n = src.read().count(GROUP_STATE_CALL)
-                if n:
-                    callers[os.path.relpath(os.path.join(root, f), ENGINE)] = n
+    callers = _engine_calls(GROUP_STATE_CALL)
     assert callers == {os.path.join("streaming", "stateful.py"): 1}, (
         f"call applyInPandasWithState through streaming.stateful.keyed_state: {callers}"
     )
     assert GROUP_STATE_CALL in inspect.getsource(stateful.keyed_state)
+
+
+def test_grouped_map_is_called_only_by_the_helper():
+    """The batch twin of the guard above: every ``applyInPandas`` goes
+    through ``grouped_fold``, whose module-level check a direct call
+    would skip."""
+    callers = _engine_calls(GROUPED_MAP_CALL)
+    assert callers == {os.path.join("streaming", "stateful.py"): 1}, (
+        f"call applyInPandas through streaming.stateful.grouped_fold: {callers}"
+    )
+    assert GROUPED_MAP_CALL in inspect.getsource(stateful.grouped_fold)
 
 
 def test_keyed_state_rejects_a_nested_fold():
@@ -186,6 +205,14 @@ def test_keyed_state_rejects_a_nested_fold():
 
     with pytest.raises(TypeError, match="must be module-level functions.*<locals>"):
         stateful.keyed_state(None, "k", fold, added="n long", state="n long")
+
+
+def test_grouped_fold_rejects_a_nested_fold():
+    def fold(key, pdfs, state):
+        yield from ()
+
+    with pytest.raises(TypeError, match="must be module-level functions.*<locals>"):
+        stateful.grouped_fold(None, "k", fold, added="n long")
 
 
 def test_default_driver_memory_fits_the_host():
@@ -270,4 +297,21 @@ def test_worker_that_ran_accumulate_fold_has_patched_method(spark, tmp_path):
     q.awaitTermination()
     got = {r.k: (r.running_sum, r.running_count) for r in spark.table("t_zipcache_acc").collect()}
     assert got == {"x": (380.0, 20), "y": (400.0, 20)}
+    _assert_engine_workers_patched(spark)
+
+
+def test_worker_that_ran_grouped_fold_has_patched_method(spark):
+    """A batch fold goes through ``grouped_fold`` as a module-level
+    function bound with functools.partial, so its worker imports the
+    engine too; the rows are CUSUM's (target 10, threshold 4)."""
+    from eventstreams_spark.operators.changepoint import cusum_batch
+
+    df = spark.createDataFrame(
+        [("a", i, v) for i, v in enumerate([12.0, 13.0, 15.0, 10.0])], "k string, ts long, v double"
+    )
+    got = [
+        (r.s_pos, r.alarm)
+        for r in cusum_batch(df, "k", "ts", "v", target=10.0, threshold=4.0).orderBy("ts").collect()
+    ]
+    assert got == [(2.0, False), (5.0, True), (5.0, True), (0.0, False)]
     _assert_engine_workers_patched(spark)
