@@ -85,18 +85,3 @@ class MetricsListener(StreamingQueryListener):
                     out[k] = out.get(k, 0) + v
         return out
 
-
-# ---- pipeline-step bridge: observations registered by step name ----
-
-_observations: dict[str, Observation | str] = {}
-
-
-def register_observation(name: str, obs: Observation | str) -> None:
-    _observations[name] = obs
-
-
-def get_observation(name: str) -> Observation | str:
-    """Fetch the Observation attached by a ``metrics`` pipeline step
-    (batch: read ``.get`` after an action; streaming: the observation
-    name to look up in query progress / MetricsListener)."""
-    return _observations[name]

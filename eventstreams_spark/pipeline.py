@@ -236,6 +236,17 @@ def _redact(fields: list[str], patterns: dict[str, str] | None = None) -> Transf
     return t
 
 
+def _hoist(df: DataFrame, parsed, target: str | None) -> DataFrame:
+    """Land the struct column ``parsed`` under ``target``; with no
+    target, its fields flatten to top level."""
+    if target:
+        return df.withColumn(target, parsed)
+    df = df.withColumn("_parsed", parsed)
+    for fname in df.select("_parsed.*").columns:
+        df = df.withColumn(fname, F.col(f"_parsed.{fname}"))
+    return df.drop("_parsed")
+
+
 @step("json")
 def _json(
     source: str,
@@ -261,12 +272,7 @@ def _json(
                 F.col(source)
             ).isNull()
             df = _tag_dlq(df, failed, F.lit(f"json_parse_error:{source}"))
-        if target:
-            return df.withColumn(target, parsed)
-        df = df.withColumn("_parsed", parsed)
-        for fname in df.select("_parsed.*").columns:
-            df = df.withColumn(fname, F.col(f"_parsed.{fname}"))
-        return df.drop("_parsed")
+        return _hoist(df, parsed, target)
 
     return t
 
@@ -278,13 +284,7 @@ def _xml(source: str, schema: str, target: str | None = None) -> Transform:
     fields flatten to top level like the json step."""
 
     def t(df: DataFrame) -> DataFrame:
-        parsed = F.from_xml(F.col(source), schema)
-        if target:
-            return df.withColumn(target, parsed)
-        df = df.withColumn("_parsed", parsed)
-        for fname in df.select("_parsed.*").columns:
-            df = df.withColumn(fname, F.col(f"_parsed.{fname}"))
-        return df.drop("_parsed")
+        return _hoist(df, F.from_xml(F.col(source), schema), target)
 
     return t
 
@@ -714,12 +714,7 @@ def _csv(
 
     def t(df: DataFrame) -> DataFrame:
         parsed = F.from_csv(F.col(source), F.lit(schema), {"sep": separator})
-        if target:
-            return df.withColumn(target, parsed)
-        tmp = df.withColumn("_csv", parsed)
-        for c in columns:
-            tmp = tmp.withColumn(c, F.col(f"_csv.{c}"))
-        return tmp.drop("_csv")
+        return _hoist(df, parsed, target)
 
     return t
 
@@ -760,16 +755,17 @@ def _uuid(target: str = "uuid", deterministic_from: list[str] | None = None) -> 
 def _metrics(name: str = "pipeline", value_field: str | None = None) -> Transform:
     """Inline flow metrics (Logstash ``metrics``): count (+min/max/sum
     of ``value_field``) ride the existing job via ``df.observe`` —
-    zero extra scan or shuffle. Read the numbers after an action with
-    ``operators.metrics.get_observation(name)`` (batch ``.get``;
-    streaming: per-batch via MetricsListener)."""
-    from .operators.metrics import observe, register_observation, standard_metrics
+    zero extra scan or shuffle. ``Pipeline.apply`` records the
+    observation in ``pipe.observations[name]``: read it after an action
+    (batch ``.get``; streaming: the name to look up per batch via
+    MetricsListener)."""
+    from .operators.metrics import observe, standard_metrics
 
     def t(df: DataFrame) -> DataFrame:
-        observed, obs = observe(df, name, *standard_metrics(value_field))
-        register_observation(name, obs)
+        observed, t.observation = observe(df, name, *standard_metrics(value_field))
         return observed
 
+    t.observes = name
     return t
 
 
@@ -1179,9 +1175,13 @@ def _schema_drift(source: str) -> Transform:
 
 @dataclass
 class Pipeline:
-    """An ordered chain of compiled transforms (one Catalyst plan)."""
+    """An ordered chain of compiled transforms (one Catalyst plan).
+
+    ``observations`` maps each ``metrics`` step's name to the
+    observation the latest ``apply`` attached."""
 
     transforms: list[Transform] = field(default_factory=list)
+    observations: dict = field(default_factory=dict)
 
     @classmethod
     def from_config(cls, config: dict | list[dict]) -> "Pipeline":
@@ -1196,11 +1196,17 @@ class Pipeline:
                     f"step {i}: unknown type {typ!r}; known: {step_types()}"
                 )
             transforms.append(factory(**conf))
+        names = [t.observes for t in transforms if hasattr(t, "observes")]
+        dup = sorted({n for n in names if names.count(n) > 1})
+        if dup:
+            raise ValueError(f"metrics step names must be unique; repeated: {dup}")
         return cls(transforms)
 
     def apply(self, df: DataFrame) -> DataFrame:
         for t in self.transforms:
             df = t(df)
+            if hasattr(t, "observes"):
+                self.observations[t.observes] = t.observation
         return df
 
     def apply_split(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:

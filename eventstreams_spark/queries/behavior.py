@@ -22,6 +22,16 @@ from ._shared import (
 )
 
 
+def _funnel_stage(order: int, name: str, frame: DataFrame) -> DataFrame:
+    """One funnel row: the stage's order, its name and how many users
+    (rows of ``frame``) reached it."""
+    return frame.agg(
+        F.lit(order).alias("stage_order"),
+        F.lit(name).alias("stage"),
+        F.count(F.lit(1)).alias("n_users"),
+    )
+
+
 @query(
     "funnel_3step_conversion",
     category="B1-funnel",
@@ -82,17 +92,10 @@ def funnel_3step_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("ts").alias("t3"))
     )
 
-    def stage(order: int, name: str, frame: DataFrame) -> DataFrame:
-        return frame.agg(
-            F.lit(order).alias("stage_order"),
-            F.lit(name).alias("stage"),
-            F.count(F.lit(1)).alias("n_users"),
-        )
-
     return (
-        stage(1, "view", s1)
-        .unionAll(stage(2, "view>click", s2))
-        .unionAll(stage(3, "view>click>purchase", s3))
+        _funnel_stage(1, "view", s1)
+        .unionAll(_funnel_stage(2, "view>click", s2))
+        .unionAll(_funnel_stage(3, "view>click>purchase", s3))
     )
 
 
@@ -1030,17 +1033,10 @@ def funnel_3step_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("ts").alias("t3"))
     )
 
-    def stage(order: int, name: str, frame: DataFrame) -> DataFrame:
-        return frame.agg(
-            F.lit(order).alias("stage_order"),
-            F.lit(name).alias("stage"),
-            F.count(F.lit(1)).alias("n_users"),
-        )
-
     return (
-        stage(1, "view", s1)
-        .unionAll(stage(2, "click<=7d", s2))
-        .unionAll(stage(3, "purchase<=7d", s3))
+        _funnel_stage(1, "view", s1)
+        .unionAll(_funnel_stage(2, "click<=7d", s2))
+        .unionAll(_funnel_stage(3, "purchase<=7d", s3))
     )
 
 

@@ -200,6 +200,23 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ktruss_survivors(e: DataFrame) -> DataFrame:
+    """One 4-truss peeling round: the edges of ``e`` (columns a < b)
+    that lie on at least k−2 = 2 triangles among ``e`` itself."""
+    x = e.select(F.col("a").alias("ta"), F.col("b").alias("tb"))
+    y = e.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
+    z = e.select(F.col("a").alias("tb"), F.col("b").alias("tc"))
+    tris = x.join(y, "ta").filter(F.col("tc") > F.col("tb")).join(z, ["tb", "tc"])
+    sup = (
+        tris.select(F.col("ta").alias("a"), F.col("tb").alias("b"))
+        .unionAll(tris.select(F.col("ta").alias("a"), F.col("tc").alias("b")))
+        .unionAll(tris.select(F.col("tb").alias("a"), F.col("tc").alias("b")))
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).cast("long").alias("s"))
+    )
+    return sup.filter(F.col("s") >= 2).select("a", "b")
+
+
 @query(
     "ktruss_support_rounds",
     category="B7-graph2",
@@ -247,24 +264,8 @@ def ktruss_support_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = leaf_parallelism(spark)
     edges0 = truncate_lineage(interaction_edges(ev, undirected=True), par)
 
-    def survivors(e: DataFrame) -> DataFrame:
-        x = e.select(F.col("a").alias("ta"), F.col("b").alias("tb"))
-        y = e.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
-        z = e.select(F.col("a").alias("tb"), F.col("b").alias("tc"))
-        tris = (
-            x.join(y, "ta").filter(F.col("tc") > F.col("tb")).join(z, ["tb", "tc"])
-        )
-        sup = (
-            tris.select(F.col("ta").alias("a"), F.col("tb").alias("b"))
-            .unionAll(tris.select(F.col("ta").alias("a"), F.col("tc").alias("b")))
-            .unionAll(tris.select(F.col("tb").alias("a"), F.col("tc").alias("b")))
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).cast("long").alias("s"))
-        )
-        return sup.filter(F.col("s") >= 2).select("a", "b")
-
-    e1 = truncate_lineage(survivors(edges0), par)
-    e2 = truncate_lineage(survivors(e1), par)
+    e1 = truncate_lineage(_ktruss_survivors(edges0), par)
+    e2 = truncate_lineage(_ktruss_survivors(e1), par)
     return (
         edges0.agg(F.count(F.lit(1)).alias("n_edges_0"))
         .crossJoin(e1.agg(F.count(F.lit(1)).alias("n_edges_1")))
@@ -312,27 +313,11 @@ def ktruss_fixpoint_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = truncate_lineage(interaction_edges(ev, undirected=True), par)
     n0 = edges.count()
 
-    def survivors(e: DataFrame) -> DataFrame:
-        x = e.select(F.col("a").alias("ta"), F.col("b").alias("tb"))
-        y = e.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
-        z = e.select(F.col("a").alias("tb"), F.col("b").alias("tc"))
-        tris = (
-            x.join(y, "ta").filter(F.col("tc") > F.col("tb")).join(z, ["tb", "tc"])
-        )
-        sup = (
-            tris.select(F.col("ta").alias("a"), F.col("tb").alias("b"))
-            .unionAll(tris.select(F.col("ta").alias("a"), F.col("tc").alias("b")))
-            .unionAll(tris.select(F.col("tb").alias("a"), F.col("tc").alias("b")))
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).cast("long").alias("s"))
-        )
-        return sup.filter(F.col("s") >= 2).select("a", "b")
-
     counts = [n0]
     cur = edges
     fixpoint = False
     for _ in range(8):
-        nxt = truncate_lineage(survivors(cur), par)
+        nxt = truncate_lineage(_ktruss_survivors(cur), par)
         n = nxt.count()
         counts.append(n)
         if n == counts[-2]:
@@ -342,7 +327,7 @@ def ktruss_fixpoint_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur = nxt
     monotone = all(b <= a for a, b in zip(counts, counts[1:]))
     # containment: final survivors minus round-1 survivors must be empty
-    r1 = survivors(edges)
+    r1 = _ktruss_survivors(edges)
     within = cur.join(r1, ["a", "b"], "left_anti").count() == 0
     return spark.createDataFrame(
         [

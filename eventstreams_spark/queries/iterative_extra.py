@@ -210,6 +210,23 @@ def kmeans_lloyd_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lpa_round(sym: DataFrame, lbl: DataFrame) -> DataFrame:
+    """One synchronous label-propagation round over the symmetric edge
+    list ``sym`` (node, nbr): every node adopts the most frequent label
+    among its neighbours, ties to the smaller label."""
+    votes = (
+        sym.join(lbl.select(F.col("node").alias("nbr"), "label"), "nbr")
+        .groupBy("node", "label")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("label"))
+    return (
+        votes.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") == 1)
+        .select("node", "label")
+    )
+
+
 @query(
     "label_propagation_communities",
     category="B7-graph",
@@ -272,20 +289,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     labels = sym.select("node").distinct().withColumn("label", F.col("node"))
 
-    def lpa_round(lbl: DataFrame) -> DataFrame:
-        votes = (
-            sym.join(lbl.select(F.col("node").alias("nbr"), "label"), "nbr")
-            .groupBy("node", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("label"))
-        return (
-            votes.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("node", "label")
-        )
-
-    l2 = lpa_round(lpa_round(labels))
+    l2 = _lpa_round(sym, _lpa_round(sym, labels))
     return (
         l2.groupBy(F.col("label").alias("community"))
         .agg(F.count(F.lit(1)).alias("n_members"))
@@ -905,20 +909,7 @@ def community_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     labels = sym.select("node").distinct().withColumn("label", F.col("node"))
 
-    def lpa_round(lbl: DataFrame) -> DataFrame:
-        votes = (
-            sym.join(lbl.select(F.col("node").alias("nbr"), "label"), "nbr")
-            .groupBy("node", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("label"))
-        return (
-            votes.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") == 1)
-            .select("node", "label")
-        )
-
-    l2 = truncate_lineage(lpa_round(lpa_round(labels)), 8)
+    l2 = truncate_lineage(_lpa_round(sym, _lpa_round(sym, labels)), 8)
     m = und.agg(F.count(F.lit(1)).cast("long").alias("m"))
     la = l2.select(F.col("node").alias("a"), F.col("label").alias("lab_a"))
     lb = l2.select(F.col("node").alias("b"), F.col("label").alias("lab_b"))

@@ -17,7 +17,15 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import query
 
-SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
+#: Where the roundtrip queries write: ``.scratch`` in the checkout that
+#: holds this package (not the CWD), unless SPARK_GRAFT_SCRATCH is set.
+SCRATCH = os.environ.get(
+    "SPARK_GRAFT_SCRATCH",
+    os.path.join(
+        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+        ".scratch",
+    ),
+)
 
 
 @query(

@@ -356,7 +356,7 @@ sink:
     assert ws[(3, 1)] == " ".join(clean_b.split(" ")[4:8])
 
 
-def test_cli_index_prebuilds_sa_cache(spark, capsys):
+def test_cli_index_prebuilds_sa_cache(spark, sf_dir, capsys):
     """`python -m eventstreams_spark index <dir>` pre-builds the
     shared suffix-array materialization (SCALE.md §24) so the first
     analyst query doesn't pay the construction; a second invocation
@@ -365,7 +365,6 @@ def test_cli_index_prebuilds_sa_cache(spark, capsys):
 
     import eventstreams_spark.queries.llm as llm
 
-    sf_dir = "/root/testdata/sf0.001"
     main(["index", sf_dir])
     out1 = capsys.readouterr().out
     assert "index ready" in out1 and "suffixes" in out1
@@ -384,7 +383,7 @@ def test_cli_index_prebuilds_sa_cache(spark, capsys):
         llm._build_suffix_array_lcp = real
 
 
-def test_cli_index_prune_evicts_stale_fingerprints(spark, tmp_path, capsys):
+def test_cli_index_prune_evicts_stale_fingerprints(spark, sf_dir, tmp_path, capsys):
     """VERDICT r9 #7 golden: build → re-mint the input (new mtime →
     new fingerprint) → `index --prune` leaves exactly ONE live entry
     for that input dir, sweeps crashed-builder tmp dirs, and never
@@ -394,17 +393,18 @@ def test_cli_index_prune_evicts_stale_fingerprints(spark, tmp_path, capsys):
 
     import eventstreams_spark.queries.llm as llm
 
-    src = "/root/testdata/sf0.001/documents.parquet"
+    src = os.path.join(sf_dir, "documents.parquet")
     corpus = tmp_path / "corpus"
     corpus.mkdir()
     if os.path.isdir(src):
         shutil.copytree(src, corpus / "documents.parquet")
     else:
         shutil.copy(src, corpus / "documents.parquet")
-    sf_dir = str(corpus)
 
-    main(["index", sf_dir])
-    first = llm._sa_cache_path(sf_dir)
+    own = str(corpus)
+
+    main(["index", own])
+    first = llm._sa_cache_path(own)
     assert os.path.exists(os.path.join(first, "_SUCCESS"))
 
     # re-mint: same bytes, new mtime → new fingerprint
@@ -417,7 +417,7 @@ def test_cli_index_prune_evicts_stale_fingerprints(spark, tmp_path, capsys):
     for t in targets:
         st = os.stat(t)
         os.utime(t, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
-    second = llm._sa_cache_path(sf_dir)
+    second = llm._sa_cache_path(own)
     assert second != first, "fingerprint must change with mtime"
 
     # a crashed builder's leftover tmp dir must be swept too
@@ -425,10 +425,10 @@ def test_cli_index_prune_evicts_stale_fingerprints(spark, tmp_path, capsys):
     orphan = os.path.join(root, os.path.basename(second) + ".tmp-99999")
     os.makedirs(orphan, exist_ok=True)
     # a foreign entry (other input dir) must survive the prune
-    foreign = llm._sa_cache_path("/root/testdata/sf0.001")
+    foreign = llm._sa_cache_path(sf_dir)
     had_foreign = os.path.exists(foreign)
 
-    main(["index", sf_dir, "--prune"])
+    main(["index", own, "--prune"])
     out = capsys.readouterr().out
     assert "index ready" in out and "pruned" in out
     assert os.path.exists(os.path.join(second, "_SUCCESS"))
@@ -442,7 +442,7 @@ def test_cli_index_prune_evicts_stale_fingerprints(spark, tmp_path, capsys):
         if os.path.isdir(os.path.join(root, n))
         and os.path.exists(os.path.join(root, n, "_meta.json"))
         and json.load(open(os.path.join(root, n, "_meta.json")))["sf_dir"]
-        == os.path.abspath(sf_dir)
+        == os.path.abspath(own)
     ]
     assert live == [os.path.basename(second)], live
 

@@ -1,44 +1,72 @@
-"""Oracle-parity tests: mirror the driver's t2 check for every query
-in the registry that declares oracle SQL (SURVEY.md §5.3.1)."""
+"""Oracle-parity tests: the driver's t2 check, `check_query` from
+tools/driver_sim.py, for every query in the registry that declares
+oracle SQL (SURVEY.md §5.3.1)."""
 
 from __future__ import annotations
 
-import warnings as _warnings
-
+import pandas as pd
 import pytest
 
 from eventstreams_spark import registry
-from tests.util import assert_parity
+from tools.driver_sim import check_query, oracle_connection
 
 registry._ensure_loaded()
 SPECS = [s for s in registry.REGISTRY.values() if s.oracle is not None]
 
 
-@pytest.mark.slow  # ~14 min all-registry oracle replay; the driver
+@pytest.fixture(scope="module")
+def oracle_con(sf_dir):
+    con = oracle_connection(sf_dir)
+    yield con
+    con.close()
+
+
+@pytest.mark.slow  # ~6 min all-registry oracle replay; the driver
 # hash-checks declared queries against DuckDB itself, so the default
 # tier keeps only the fast structural checks below (see pytest.ini)
 @pytest.mark.parametrize("spec", SPECS, ids=[s.name for s in SPECS])
-def test_oracle_parity(spec, spark, sf_dir):
-    warns = assert_parity(spec, spark, sf_dir)
-    for w in warns:
-        _warnings.warn(f"{spec.name}: {w}")
+def test_oracle_parity(spec, spark, sf_dir, oracle_con):
+    # builders persist intermediates and never unpersist: each query
+    # starts from an empty cache, as in tools/driver_sim.py
+    spark.catalog.clearCache()
+    problems = check_query(spark, sf_dir, oracle_con, spec.builder, spec.oracle)
+    assert not problems, f"{spec.name}: {problems}"
 
 
-def test_oracle_type_audit_clean():
+class _Frame:
+    """A stand-in for a Spark DataFrame: only ``toPandas`` is read."""
+
+    def __init__(self, pdf):
+        self.pdf = pdf
+
+    def toPandas(self):
+        return self.pdf
+
+
+def test_check_query_hashes_values_with_their_dtype(sf_dir):
+    """An int64 123 against the oracle's float64 123.0 is a mismatch —
+    the driver canonicalizes them as "123" and "123.0" — while equal
+    frames pass, whatever their row order. No Spark session."""
+    import duckdb
+
+    ints = _Frame(pd.DataFrame({"k": ["a", "b"], "x": pd.Series([123, 7], dtype="int64")}))
+    both = "SELECT * FROM (VALUES ('b', 7), ('a', 123)) t(k, x)"
+    as_double = "SELECT k, CAST(x AS DOUBLE) AS x FROM (VALUES ('a', 123), ('b', 7)) t(k, x)"
+    with duckdb.connect() as con:
+        assert check_query(None, sf_dir, con, lambda spark, sf: ints, both) == []
+        assert check_query(None, sf_dir, con, lambda spark, sf: ints, as_double) == ["value-hash mismatch"]
+
+
+def test_oracle_type_audit_clean(sf_dir):
     """Every oracle's DuckDB result schema must be free of driver-
     canonicalizer trap types (HUGEINT/DECIMAL/LIST/STRUCT/MAP) — the
     failure class behind ALL eight round-1 driver reds. Wiring the
     audit into the suite makes it impossible to skip after an oracle
     edit (VERDICT r2 #8). No Spark needed: types come from DuckDB
     relation description only (~2 s)."""
-    import importlib.util
-    import os
+    from tools.oracle_type_audit import main
 
-    tool = os.path.join(os.path.dirname(__file__), "..", "tools", "oracle_type_audit.py")
-    spec = importlib.util.spec_from_file_location("oracle_type_audit", tool)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    assert mod.main("/root/testdata/sf0.001") == 0, "oracle type audit found traps/errors (see stdout)"
+    assert main(sf_dir) == 0, "oracle type audit found traps/errors (see stdout)"
 
 
 def test_entry_smoke(spark):

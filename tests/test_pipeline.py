@@ -473,8 +473,6 @@ def test_anonymize_step_stable_and_rotatable(spark):
 
 
 def test_metrics_step_inline_observation(spark):
-    from eventstreams_spark.operators.metrics import get_observation
-
     df = spark.createDataFrame(
         [(1, 10.0), (2, 30.0), (3, 20.0)], "id long, v double"
     )
@@ -486,10 +484,24 @@ def test_metrics_step_inline_observation(spark):
     )
     out = pipe.apply(df)
     assert out.count() == 2          # the action that feeds the observation
-    got = get_observation("t_obs").get
+    got = pipe.observations["t_obs"].get
     # metrics observe the PRE-filter flow (step order matters)
     assert got["events"] == 3 and got["sum_value"] == 60.0
     assert got["min_value"] == 10.0 and got["max_value"] == 30.0
+
+
+def test_metrics_observations_are_per_pipeline(spark):
+    """Two pipelines with the same metrics step name each keep their
+    own observation; one pipeline may not repeat a metrics name."""
+    conf = {"steps": [{"type": "metrics", "name": "flow"}]}
+    small, large = Pipeline.from_config(conf), Pipeline.from_config(conf)
+    out_small = small.apply(spark.range(3))
+    out_large = large.apply(spark.range(5))
+    assert out_small.count() == 3 and out_large.count() == 5
+    assert small.observations["flow"].get["events"] == 3
+    assert large.observations["flow"].get["events"] == 5
+    with pytest.raises(ValueError, match="flow"):
+        Pipeline.from_config({"steps": conf["steps"] * 2})
 
 
 def test_tld_step(spark):

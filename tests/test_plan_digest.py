@@ -1,6 +1,7 @@
 """The plan digest's parser and comparison (eventstreams_spark/plans),
-over literal plan strings and digest records, and the source guard
-that keeps the core count behind one helper: no Spark session.
+over literal plan strings and digest records, and two source guards:
+the core count is read behind one helper, and no source names the
+checkout's path. No Spark session.
 
 tests/test_scan_budgets.py applies both to every registry query
 against tests/plan_digest.json.
@@ -16,13 +17,28 @@ from eventstreams_spark.plans import DIGEST_GENERATOR as GENERATOR
 from eventstreams_spark.plans import digest_mismatches, digest_plan_text
 
 DIGEST_PATH = os.path.join(os.path.dirname(__file__), "plan_digest.json")
-ENGINE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "eventstreams_spark")
-CORE_COUNT_HELPER = os.path.join("operators", "spread.py")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CORE_COUNT_HELPER = os.path.join("eventstreams_spark", "operators", "spread.py")
 
 with open(DIGEST_PATH) as _f:
     DIGEST = json.load(_f)
 
 QUERIES = entry.queries()
+
+
+def _sources(*tops: str) -> dict[str, str]:
+    """The text of every .py file in ``tops`` (directories or files of
+    the checkout), by path relative to the checkout."""
+    paths = [os.path.join(REPO, top) for top in tops if top.endswith(".py")]
+    for top in tops:
+        for root, dirs, files in os.walk(os.path.join(REPO, top)):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
+    out = {}
+    for path in paths:
+        with open(path, encoding="utf-8") as src:
+            out[os.path.relpath(path, REPO)] = src.read()
+    return out
 
 
 def test_core_count_is_read_only_by_the_helper():
@@ -31,16 +47,20 @@ def test_core_count_is_read_only_by_the_helper():
     pins. A direct ``defaultParallelism`` read would slip past the
     registry digest test at its recorded parallelism, where the two
     values are equal, so this guard reads the source instead."""
-    readers = []
-    for root, dirs, files in os.walk(ENGINE):
-        dirs[:] = [d for d in dirs if d != "__pycache__"]
-        for f in files:
-            rel = os.path.relpath(os.path.join(root, f), ENGINE)
-            if f.endswith(".py") and rel != CORE_COUNT_HELPER:
-                with open(os.path.join(root, f), encoding="utf-8") as src:
-                    if "defaultParallelism" in src.read():
-                        readers.append(rel)
+    readers = [
+        rel for rel, text in _sources("eventstreams_spark").items()
+        if rel != CORE_COUNT_HELPER and "defaultParallelism" in text
+    ]
     assert not readers, f"read the core count through operators.spread.leaf_parallelism, not defaultParallelism: {readers}"
+
+
+def test_no_source_names_the_checkout_path():
+    """Engine, tools and tests find their checkout from ``__file__``, so
+    a copy of the tree checks and writes into itself, never into the
+    tree it was copied from."""
+    texts = _sources("eventstreams_spark", "tools", "tests", "bench.py", "__spark_entry__.py")
+    naming = sorted(rel for rel, text in texts.items() if REPO in text)
+    assert not naming, f"derive the checkout path from __file__, do not write {REPO!r}: {naming}"
 
 
 def test_digest_names_only_registry_queries():

@@ -1694,7 +1694,7 @@ def test_mg_state_legacy_blob_migration():
 
 
 @pytest.mark.slow
-def test_alert_fsm_batch_equals_stream(spark, tmp_path):
+def test_alert_fsm_batch_equals_stream(spark, sf_dir, tmp_path):
     """Round-4 FSM twin equality: the streaming GroupState alert fold
     over the replayed daily breach series must end at exactly the
     batch query's per-type census (breach days, alert days,
@@ -1703,7 +1703,6 @@ def test_alert_fsm_batch_equals_stream(spark, tmp_path):
     from eventstreams_spark.registry import REGISTRY
     from eventstreams_spark.streaming.stateful import alert_fsm_stream
 
-    sf_dir = "/root/testdata/sf0.001"
     seq = breach_series(spark, sf_dir).select("event_type", "day", "breach")
     stream = replay_table(spark, seq, str(tmp_path), chunks=4, order_col="day")
     out = alert_fsm_stream(stream, "event_type", "day", "breach")

@@ -1,106 +1,15 @@
-"""Shared test helpers: the oracle-parity comparison harness, and bounds
-on recorded plan digest lines.
+"""Shared test helpers: a deterministic two-way split of a frame, and
+bounds on recorded plan digest lines.
 
-Oracle parity mirrors the driver's t2 check. The driver compares
-row-count + schema (column names) + order-insensitive value hash.
-Locally we compare sorted rows exactly, with a float tolerance
-fallback so we can distinguish "wrong logic" from "last-ulp float
-accumulation drift" — the former must be fixed, the latter surfaced
-as a warning (tighten the query if it appears).
+The oracle-parity check is not here: tests/test_parity.py runs the
+driver's own check, ``tools/driver_sim.py::check_query``.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
 import re
-from typing import Any
-
-import duckdb
-
-from eventstreams_spark.catalog import TABLES
-
-
-def run_oracle(sql: str, sf_dir: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    cur = con.sql(sql)
-    return cur.columns, cur.fetchall()
-
-
-def _canon(v: Any) -> Any:
-    """Canonicalize a cell for cross-engine comparison."""
-    import datetime
-    import decimal
-
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    if isinstance(v, datetime.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, datetime.date):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(_canon(x) for x in v)
-    return v
-
-
-def _sort_key(row: tuple) -> tuple:
-    return tuple((x is None, str(x)) for x in row)
-
-
-def compare_results(
-    spark_cols: list[str],
-    spark_rows: list[tuple],
-    oracle_cols: list[str],
-    oracle_rows: list[tuple],
-    float_rtol: float = 1e-9,
-) -> tuple[list[str], list[str]]:
-    """Return (errors, warnings); ([], *) == parity. Column-order agnostic."""
-    errors: list[str] = []
-    warnings: list[str] = []
-    if sorted(spark_cols) != sorted(oracle_cols):
-        errors.append(f"schema mismatch: spark={sorted(spark_cols)} oracle={sorted(oracle_cols)}")
-        return errors, warnings
-    if len(spark_rows) != len(oracle_rows):
-        errors.append(f"row count mismatch: spark={len(spark_rows)} oracle={len(oracle_rows)}")
-        return errors, warnings
-
-    cols = sorted(spark_cols)
-    s_idx = [spark_cols.index(c) for c in cols]
-    o_idx = [oracle_cols.index(c) for c in cols]
-    s_rows = sorted((tuple(_canon(r[i]) for i in s_idx) for r in spark_rows), key=_sort_key)
-    o_rows = sorted((tuple(_canon(r[i]) for i in o_idx) for r in oracle_rows), key=_sort_key)
-    n_ulp = 0
-    for ri, (sr, orow) in enumerate(zip(s_rows, o_rows)):
-        for ci, (sv, ov) in enumerate(zip(sr, orow)):
-            if sv == ov:
-                continue
-            if (
-                isinstance(sv, float)
-                and isinstance(ov, float)
-                and math.isclose(sv, ov, rel_tol=float_rtol, abs_tol=1e-12)
-            ):
-                n_ulp += 1
-                continue
-            errors.append(f"value mismatch row~{ri} col={cols[ci]}: spark={sv!r} oracle={ov!r}")
-            if len(errors) >= 10:
-                return errors, warnings
-    if n_ulp:
-        warnings.append(f"{n_ulp} float cells match only within rtol={float_rtol} (not bit-exact)")
-    return errors, warnings
-
-
-def assert_parity(spec, spark, sf_dir: str) -> list[str]:
-    """Assert spark result matches oracle; returns warnings for reporting."""
-    sdf = spec.builder(spark, sf_dir)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    oracle_cols, oracle_rows = run_oracle(spec.oracle, sf_dir)
-    errors, warnings = compare_results(spark_cols, spark_rows, oracle_cols, list(oracle_rows))
-    assert not errors, f"{spec.name}: " + "; ".join(errors[:10])
-    return warnings
 
 
 def split_half(df, n: int, order_cols=None):

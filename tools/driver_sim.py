@@ -1,11 +1,15 @@
 """Simulate the external driver: vanilla SparkSession, t1 smoke +
-oracle hash compare at sf0.01. Usage: python /tmp/driver_sim.py [only...]
+oracle hash compare at sf0.01, on the engine of the checkout that holds
+this file. Usage: python tools/driver_sim.py [query ...]
 
-Canonicalization matches the REAL driver (verified from round-1 reds):
-both sides go through pandas — Spark via toPandas(), DuckDB via .df().
-So DuckDB HUGEINT -> float64 ("123.0") while Spark long -> int64
-("123"): a hash mismatch the old fetchall() path masked. List-typed
-result columns crash the driver's canonicalizer -> reported FAIL here.
+`check_query` is the one oracle check: this script, the slow test tier
+(tests/test_parity.py) and the benchmark's result hash all use it or
+its `frame_hash`. Canonicalization matches the REAL driver (verified
+from round-1 reds): both sides go through pandas — Spark via
+toPandas(), DuckDB via .df(). So DuckDB HUGEINT -> float64 ("123.0")
+while Spark long -> int64 ("123"): a hash mismatch the old fetchall()
+path masked. List-typed result columns crash the driver's
+canonicalizer -> reported FAIL here.
 """
 import datetime
 import decimal
@@ -13,16 +17,12 @@ import hashlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
 import duckdb
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = ("region nation customer supplier part orders lineitem "
-          "events documents embeddings").split()
 
 
 class Unhashable(Exception):
@@ -68,6 +68,35 @@ def frame_hash(pdf):
         h.update(ln.encode())
         h.update(b"\n")
     return h.hexdigest()
+
+
+def oracle_connection(sf_dir):
+    """A DuckDB connection with one view per catalog table over the
+    parquet files in ``sf_dir``: where every oracle runs."""
+    from eventstreams_spark import catalog
+
+    con = duckdb.connect()
+    for t in catalog.TABLES:
+        con.execute(
+            f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+def check_query(spark, sf_dir, con, builder, oracle):
+    """The driver's check of one query: ``builder(spark, sf_dir)``
+    through toPandas() against ``oracle`` through ``con``'s .df().
+    Returns the problems — row count, column set, or "value-hash
+    mismatch" (checked only when the first two agree); [] is a pass."""
+    spdf = builder(spark, sf_dir).toPandas()
+    opdf = con.execute(oracle).df()
+    problems = []
+    if len(spdf) != len(opdf):
+        problems.append(f"count {len(spdf)} vs {len(opdf)}")
+    if sorted(spdf.columns) != sorted(opdf.columns):
+        problems.append(f"cols {sorted(spdf.columns)} vs {sorted(opdf.columns)}")
+    if not problems and frame_hash(spdf) != frame_hash(opdf):
+        problems.append("value-hash mismatch")
+    return problems
 
 
 def _fresh_session():
@@ -125,22 +154,22 @@ def _session_alive(spark) -> bool:
 
 
 def main():
+    import os
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as e
+
     only = set(sys.argv[1:])
     spark = _fresh_session()
-    import __spark_entry__ as e
 
     # t1 smoke
     rows = e.entry(spark).collect()
     assert len(rows) > 0, "entry() returned no rows"
     print(f"t1 smoke: OK ({len(rows)} rows)", flush=True)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"create view {t} as select * from read_parquet('{SF_DIR}/{t}.parquet')")
-
+    con = oracle_connection(SF_DIR)
     qs, oracles = e.queries(), e.oracle_sql()
-    fails, n_ok, n_rows_only = [], 0, 0
+    fails, n_ok = [], 0
     n_run = 0
     for name in sorted(qs):
         if only and name not in only:
@@ -159,31 +188,14 @@ def main():
             # Each query must be self-contained anyway, so drop all
             # cached state between queries, like test_plans' fixture.
             spark.catalog.clearCache()
-            df = qs[name](spark, SF_DIR)
-            spdf = df.toPandas()
-            scols = list(spdf.columns)
-            if name not in oracles:
-                n_rows_only += 1
-                print(f"  {name}: rows-only {len(spdf)} rows "
-                      f"[{time.time()-t0:.1f}s]", flush=True)
-                continue
-            opdf = con.execute(oracles[name]).df()
-            ocols = list(opdf.columns)
-            problems = []
-            if len(spdf) != len(opdf):
-                problems.append(f"count {len(spdf)} vs {len(opdf)}")
-            if sorted(scols) != sorted(ocols):
-                problems.append(f"cols {sorted(scols)} vs {sorted(ocols)}")
-            if not problems and frame_hash(spdf) != frame_hash(opdf):
-                problems.append("value-hash mismatch")
+            problems = check_query(spark, SF_DIR, con, qs[name], oracles[name])
             if problems:
                 fails.append((name, "; ".join(problems)))
                 print(f"  {name}: FAIL {problems} [{time.time()-t0:.1f}s]",
                       flush=True)
             else:
                 n_ok += 1
-                print(f"  {name}: OK ({len(spdf)} rows) "
-                      f"[{time.time()-t0:.1f}s]", flush=True)
+                print(f"  {name}: OK [{time.time()-t0:.1f}s]", flush=True)
         except Exception as ex:
             fails.append((name, f"EXC {type(ex).__name__}: {str(ex)[:200]}"))
             print(f"  {name}: EXC {str(ex)[:300]}", flush=True)
@@ -191,8 +203,7 @@ def main():
                 print("  -- JVM dead after EXC; rebuilding session",
                       flush=True)
                 spark = _rebuild_session(spark)
-    print(f"\n== {n_ok} oracle-OK, {n_rows_only} rows-only, "
-          f"{len(fails)} FAIL ==", flush=True)
+    print(f"\n== {n_ok} oracle-OK, {len(fails)} FAIL ==", flush=True)
     for name, why in fails:
         print(f"FAIL {name}: {why}")
     sys.exit(1 if fails else 0)

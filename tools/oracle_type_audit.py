@@ -7,8 +7,9 @@ The driver canonicalizes the DuckDB oracle result via pandas ``.df()``:
 - LIST/STRUCT/MAP columns crash pandas ``sort_values`` ("unhashable
   type: 'list'") in the canonicalizer.
 
-This script runs every ``oracle_sql()`` against DuckDB views over
-``/root/testdata/sf0.001`` (LIMIT 0 is not enough -- types come from the
+This script runs every ``oracle_sql()`` against the DuckDB views of
+``tools/driver_sim.py::oracle_connection`` over ``sf_dir`` (default
+``/root/testdata/sf0.001``; LIMIT 0 is not enough -- types come from the
 relation, so we just describe the relation without fetching rows) and
 reports any oracle whose result schema contains a trap type. CI-style
 exit: nonzero if any trap found.
@@ -18,13 +19,13 @@ Usage: python tools/oracle_type_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-import duckdb
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from eventstreams_spark.registry import _ensure_loaded, all_oracles  # noqa: E402
+from tools.driver_sim import oracle_connection  # noqa: E402
 
 # DuckDB type names that the driver's pandas canonicalizer mishandles.
 TRAP_PREFIXES = ("HUGEINT", "UHUGEINT", "DECIMAL", "STRUCT", "MAP", "UNION")
@@ -45,15 +46,8 @@ def main(sf_dir: str | None = None) -> int:
         # argv only when invoked as a script; under pytest argv holds
         # pytest's own flags, so callers pass sf_dir explicitly
         sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    sys.path.insert(0, "/root/repo")
-    from eventstreams_spark.registry import all_oracles, _ensure_loaded
-
     _ensure_loaded()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
 
     bad: list[tuple[str, str, str, str]] = []
     errs: list[tuple[str, str]] = []
