@@ -1,4 +1,4 @@
-"""Oracle-parity tests: the driver's t2 check, `check_query` from
+"""Oracle-parity tests: the t2 oracle check, `check_query` from
 tools/driver_sim.py, for every query in the registry that declares
 oracle SQL (SURVEY.md §5.3.1)."""
 
@@ -21,7 +21,7 @@ def oracle_con(sf_dir):
     con.close()
 
 
-@pytest.mark.slow  # ~6 min all-registry oracle replay; the driver
+@pytest.mark.slow  # ~6 min all-registry oracle replay; tools/driver_sim.py
 # hash-checks declared queries against DuckDB itself, so the default
 # tier keeps only the fast structural checks below (see pytest.ini)
 @pytest.mark.parametrize("spec", SPECS, ids=[s.name for s in SPECS])
@@ -45,7 +45,7 @@ class _Frame:
 
 def test_check_query_hashes_values_with_their_dtype(sf_dir):
     """An int64 123 against the oracle's float64 123.0 is a mismatch —
-    the driver canonicalizes them as "123" and "123.0" — while equal
+    `canon` renders them as "123" and "123.0" — while equal
     frames pass, whatever their row order. No Spark session."""
     import duckdb
 

@@ -2,7 +2,7 @@
 bounds on recorded plan digest lines.
 
 The oracle-parity check is not here: tests/test_parity.py runs the
-driver's own check, ``tools/driver_sim.py::check_query``.
+one oracle check, ``tools/driver_sim.py::check_query``.
 """
 
 from __future__ import annotations

@@ -4,12 +4,11 @@ this file. Usage: python tools/driver_sim.py [query ...]
 
 `check_query` is the one oracle check: this script, the slow test tier
 (tests/test_parity.py) and the benchmark's result hash all use it or
-its `frame_hash`. Canonicalization matches the REAL driver (verified
-from round-1 reds): both sides go through pandas — Spark via
-toPandas(), DuckDB via .df(). So DuckDB HUGEINT -> float64 ("123.0")
+its `frame_hash`. Both sides go through pandas before hashing — Spark
+via toPandas(), DuckDB via .df(). So DuckDB HUGEINT -> float64 ("123.0")
 while Spark long -> int64 ("123"): a hash mismatch the old fetchall()
-path masked. List-typed result columns crash the driver's
-canonicalizer -> reported FAIL here.
+path masked. List-typed result columns cannot be canonicalized ->
+reported FAIL here.
 """
 import datetime
 import decimal
@@ -83,7 +82,7 @@ def oracle_connection(sf_dir):
 
 
 def check_query(spark, sf_dir, con, builder, oracle):
-    """The driver's check of one query: ``builder(spark, sf_dir)``
+    """The oracle check of one query: ``builder(spark, sf_dir)``
     through toPandas() against ``oracle`` through ``con``'s .df().
     Returns the problems — row count, column set, or "value-hash
     mismatch" (checked only when the first two agree); [] is a pass."""

@@ -9,7 +9,7 @@ The driver canonicalizes the DuckDB oracle result via pandas ``.df()``:
 
 This script runs every ``oracle_sql()`` against the DuckDB views of
 ``tools/driver_sim.py::oracle_connection`` over ``sf_dir`` (default
-``/root/testdata/sf0.001``; LIMIT 0 is not enough -- types come from the
+the sf0.001 test data; LIMIT 0 is not enough -- types come from the
 relation, so we just describe the relation without fetching rows) and
 reports any oracle whose result schema contains a trap type. CI-style
 exit: nonzero if any trap found.
