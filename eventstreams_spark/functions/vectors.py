@@ -25,6 +25,15 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def sq_dist(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 

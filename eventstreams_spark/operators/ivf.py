@@ -23,21 +23,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import dot, norm
+from ..functions.vectors import dot, norm, sq_dist
 
 
 def l2_normalize(vec: Column) -> Column:
     """Scale to unit L2 norm: cosine ordering == dot ordering == inverse
     squared-L2 ordering on the unit sphere (spherical k-means)."""
     return F.transform(vec, lambda x: x / norm(vec))
-
-
-def _sq_dist(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _centroid_array(centroids: DataFrame) -> DataFrame:
@@ -67,10 +59,10 @@ def assign_to_centroids(
             F.lit(float("inf")).alias("d"),
         ),
         lambda acc, c: F.when(
-            _sq_dist(F.col(vec_col), c.getField("cvec")) < acc.getField("d"),
+            sq_dist(F.col(vec_col), c.getField("cvec")) < acc.getField("d"),
             F.struct(
                 c.getField("cid").cast("int").alias("cid"),
-                _sq_dist(F.col(vec_col), c.getField("cvec")).alias("d"),
+                sq_dist(F.col(vec_col), c.getField("cvec")).alias("d"),
             ),
         ).otherwise(acc),
     )
@@ -166,7 +158,7 @@ def ivf_probe_ids(
     qn = qdf.select(l2_normalize(F.col(qvec_col)).alias(qvec_col))
     probe = (
         centroids.crossJoin(F.broadcast(qn))
-        .select("cid", _sq_dist(F.col("cvec"), F.col(qvec_col)).alias("d"))
+        .select("cid", sq_dist(F.col("cvec"), F.col(qvec_col)).alias("d"))
         .orderBy(F.col("d"), F.col("cid"))
         .limit(nprobe)
         .select("cid")

@@ -30,13 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _sq_dist(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+from ..functions.vectors import sq_dist
 
 
 def split_subvectors(df: DataFrame, vec_col: str, id_col: str, m: int) -> DataFrame:
@@ -77,7 +71,7 @@ def _assign(subs: DataFrame, codebooks: DataFrame) -> DataFrame:
     dists = F.transform(
         F.col("cents"),
         lambda c: F.struct(
-            _sq_dist(F.col("subvec"), c["cvec"]).alias("d"), c["cid"].alias("cid")
+            sq_dist(F.col("subvec"), c["cvec"]).alias("d"), c["cid"].alias("cid")
         ),
     )
     return with_c.withColumn("cid", F.array_min(dists)["cid"]).drop("cents")
@@ -154,7 +148,7 @@ def pq_adc_topk(
     qsubs = split_subvectors(query.select(F.lit(0).alias("qid"), query_vec), query_vec, "qid", m)
     lut = (
         qsubs.join(codebooks, "sub_id")
-        .select("sub_id", "cid", _sq_dist("subvec", "cvec").alias("d"))
+        .select("sub_id", "cid", sq_dist("subvec", "cvec").alias("d"))
     )
     exploded = codes.select("vid", F.posexplode("codes").alias("sub_id", "cid"))
     return (

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_similarity
+from ..functions.vectors import cosine_similarity, dot
 from .spread import leaf_parallelism
 
 
@@ -95,9 +95,6 @@ def lsh_bucket(df: DataFrame, vec_col: str, n_planes: int, dim: int) -> DataFram
     similar vectors collide with probability 1 - θ/π per bit.
     """
     spark = df.sparkSession
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     bucket = F.aggregate(
         F.col("planes"),
         F.lit(0).cast("long"),
@@ -126,9 +123,6 @@ def lsh_bucket_tables(
     """
     spark = df.sparkSession
     all_planes = hyperplanes(spark, n_planes * n_tables, dim)
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
 
     def table_bucket(t: int) -> Column:
         return F.aggregate(

@@ -402,8 +402,14 @@ def _throttle(key: str, order: str, period: str = "1 hour", limit: int = 1) -> T
     variant in streaming/stateful.py."""
     from pyspark.sql import Window
 
+    if period not in _PERIOD_TRUNC:
+        raise ValueError(
+            f"throttle: period must be one of {sorted(_PERIOD_TRUNC)}, got {period!r}"
+        )
+    unit = _PERIOD_TRUNC[period]
+
     def t(df: DataFrame) -> DataFrame:
-        bucket = F.date_trunc(_PERIOD_TRUNC[period], F.col(order))
+        bucket = F.date_trunc(unit, F.col(order))
         w = Window.partitionBy(F.col(key), bucket).orderBy(order)
         return (
             df.withColumn("_rn", F.row_number().over(w))

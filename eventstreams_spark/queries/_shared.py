@@ -1,8 +1,12 @@
-"""Shared oracle-SQL fragments.
+"""Oracle-SQL fragments used by the queries of several modules.
 
-One source of truth for constructions used by several oracles, so the
-Spark helper (operators/graph.py::interaction_edges) and the DuckDB
-side cannot drift apart query-by-query.
+A family's shared input is one Spark helper plus one oracle CTE, both
+in the family's module beside the first query that uses them (for
+example forecast_extra._daily_counts / _DAILY_CTE, or
+survival_extra._subjects / _LIFE_CTE); the two are independent
+implementations of the same construction. Only a fragment used across
+modules lives here, like the interaction graph below and its Spark
+helper operators/graph.py::interaction_edges.
 """
 
 # The user interaction graph: edge u→v when v's event immediately

@@ -21,6 +21,7 @@ import pandas as pd  # module-level: pandas_udf resolves PEP-563
                          # string annotations via module globals
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from ..catalog import load_table
 from ..registry import query
@@ -61,15 +62,30 @@ _PHI = """
 """
 
 
+# Each channel's daily event count (event_type, day, x): the series
+# every daily-grain query below starts from. _daily_counts is the
+# Spark side.
+_DAILY_CTE = """daily AS (
+            SELECT event_type, CAST(ts AS DATE) AS day,
+                   CAST(count(*) AS BIGINT) AS x
+            FROM events GROUP BY event_type, CAST(ts AS DATE)
+        )"""
+
+
+def _daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, day, x): the daily rollup of _DAILY_CTE; the one
+    pass over the events every daily-grain query makes."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
+        F.count(F.lit(1)).cast("long").alias("x")
+    )
+
+
 @query(
     "yule_walker_ar2",
     category="FC-ar2",
     oracle=f"""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
-        ), led AS (
+        WITH {_DAILY_CTE}, led AS (
             SELECT event_type, x,
                    lead(x, 1) OVER (PARTITION BY event_type
                                     ORDER BY day) AS x1,
@@ -121,10 +137,7 @@ def yule_walker_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
     leads, one hash aggregate — the fact table is touched once; the
     algebra runs on k rows.
     """
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
+    daily = _daily_counts(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("day")
     led = daily.select(
         "event_type", "x",
@@ -184,6 +197,35 @@ def yule_walker_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Each channel's daily series in day order with its seasonal-naive
+# forecast: seq (event_type, x, rn, x_lag7 = the count 7 days
+# earlier, n_days). _lag7_series is the Spark side.
+_LAG7_CTE = f"""{_DAILY_CTE}, seq AS (
+            SELECT event_type, x,
+                   CAST(row_number() OVER (PARTITION BY event_type
+                                           ORDER BY day) AS BIGINT) AS rn,
+                   lag(x, 7) OVER (PARTITION BY event_type
+                                   ORDER BY day) AS x_lag7,
+                   CAST(count(*) OVER (PARTITION BY event_type)
+                        AS BIGINT) AS n_days
+            FROM daily
+        )"""
+
+
+def _lag7_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, x, rn, x_lag7, n_days): seq of _LAG7_CTE."""
+    w = Window.partitionBy("event_type").orderBy("day")
+    return _daily_counts(spark, sf_dir).select(
+        "event_type", "x",
+        F.row_number().over(w).cast("long").alias("rn"),
+        F.lag("x", 7).over(w).alias("x_lag7"),
+        F.count(F.lit(1))
+        .over(Window.partitionBy("event_type"))
+        .cast("long")
+        .alias("n_days"),
+    )
+
+
 # Drift forecast: shared text (h, last/first train values, n_train)
 _DRIFT_F = (
     "(CAST(x_last AS DOUBLE) + CAST(h AS DOUBLE)"
@@ -209,20 +251,7 @@ _AE_DRIFT = f"abs(CAST(x AS DOUBLE) - {_DRIFT_F})"
     "forecast_backtest_scorecard",
     category="FC-backtest",
     oracle=f"""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
-        ), seq AS (
-            SELECT event_type, day, x,
-                   CAST(row_number() OVER (PARTITION BY event_type
-                                           ORDER BY day) AS BIGINT) AS rn,
-                   lag(x, 7) OVER (PARTITION BY event_type
-                                   ORDER BY day) AS x_lag7,
-                   CAST(count(*) OVER (PARTITION BY event_type)
-                        AS BIGINT) AS n_days
-            FROM daily
-        ), marked AS (
+        WITH {_LAG7_CTE}, marked AS (
             SELECT *, n_days - 7 AS n_train FROM seq
         ), train_stats AS (
             SELECT event_type,
@@ -298,20 +327,9 @@ def forecast_backtest_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame, a k-row broadcast join of train stats onto 7k test rows.
     The 100 TB fact scan feeds exactly one aggregate.
     """
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
+    seq = _lag7_series(spark, sf_dir).withColumn(
+        "n_train", F.col("n_days") - 7
     )
-    w = Window.partitionBy("event_type").orderBy("day")
-    seq = daily.select(
-        "event_type", "day", "x",
-        F.row_number().over(w).cast("long").alias("rn"),
-        F.lag("x", 7).over(w).alias("x_lag7"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("event_type"))
-        .cast("long")
-        .alias("n_days"),
-    ).withColumn("n_train", F.col("n_days") - 7)
     train_stats = seq.groupBy("event_type").agg(
         F.sum(
             F.when(
@@ -395,15 +413,37 @@ _MP_D2 = (
 )
 
 
+def _window_pair_dots(wins: DataFrame, excl: int) -> DataFrame:
+    """Every pair of a channel's windows (i, j) with |i − j| >= excl,
+    from ``wins`` (event_type, i, sw, sww, vec): both windows' moments
+    (swi, swwi, swj, swwj) and the exact dot product dp of their value
+    arrays, JVM-side zip_with/aggregate inside the pair join."""
+    a = wins.alias("a")
+    b = wins.alias("b")
+    return a.join(
+        b,
+        (F.col("a.event_type") == F.col("b.event_type"))
+        & (F.abs(F.col("a.i") - F.col("b.i")) >= excl),
+    ).select(
+        F.col("a.event_type").alias("event_type"),
+        F.col("a.i").alias("i"),
+        F.col("b.i").alias("j"),
+        F.col("a.sw").alias("swi"),
+        F.col("a.sww").alias("swwi"),
+        F.col("b.sw").alias("swj"),
+        F.col("b.sww").alias("swwj"),
+        F.expr(
+            "aggregate(zip_with(a.vec, b.vec, (x, y) -> x * y),"
+            " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+        ).alias("dp"),
+    )
+
+
 @query(
     "matrix_profile_daily",
     category="FC-matrixprofile",
     oracle=f"""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
-        ), seq AS (
+        WITH {_DAILY_CTE}, seq AS (
             SELECT event_type, x,
                    CAST(row_number() OVER (PARTITION BY event_type
                                            ORDER BY day) AS BIGINT) AS rn,
@@ -469,10 +509,7 @@ def matrix_profile_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly series swap the pair join for the MASS/FFT recurrence —
     the contract (exact z-norm distance) stays the same.
     """
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
+    daily = _daily_counts(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("day")
     seq = daily.select(
         "event_type", "x",
@@ -500,25 +537,7 @@ def matrix_profile_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("i") <= F.col("n") - 6)
         .drop("n")
     )
-    a = wins.alias("a")
-    b = wins.alias("b")
-    dots = a.join(
-        b,
-        (F.col("a.event_type") == F.col("b.event_type"))
-        & (F.abs(F.col("a.i") - F.col("b.i")) >= 4),
-    ).select(
-        F.col("a.event_type").alias("event_type"),
-        F.col("a.i").alias("i"),
-        F.col("b.i").alias("j"),
-        F.col("a.sw").alias("swi"),
-        F.col("a.sww").alias("swwi"),
-        F.col("b.sw").alias("swj"),
-        F.col("b.sww").alias("swwj"),
-        F.expr(
-            "aggregate(zip_with(a.vec, b.vec, (x, y) -> x * y),"
-            " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        ).alias("dp"),
-    )
+    dots = _window_pair_dots(wins, 4)
     d2 = F.round(F.expr(_MP_D2), 6)
     w_rank = Window.partitionBy("event_type", "i").orderBy(
         d2.asc(), F.col("j").asc()
@@ -542,21 +561,8 @@ def matrix_profile_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "conformal_interval_coverage",
     category="FC-conformal",
-    oracle="""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
-        ), seq AS (
-            SELECT event_type, x,
-                   CAST(row_number() OVER (PARTITION BY event_type
-                                           ORDER BY day) AS BIGINT) AS rn,
-                   lag(x, 7) OVER (PARTITION BY event_type
-                                   ORDER BY day) AS x_lag7,
-                   CAST(count(*) OVER (PARTITION BY event_type)
-                        AS BIGINT) AS n_days
-            FROM daily
-        ), resid AS (
+    oracle=f"""
+        WITH {_LAG7_CTE}, resid AS (
             SELECT event_type, rn, n_days, n_days - 7 AS n_train,
                    abs(x - x_lag7) AS r
             FROM seq WHERE x_lag7 IS NOT NULL
@@ -602,20 +608,7 @@ def conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the same one-rollup + window shape as the backtest
     scorecard; the q̂ frame is k rows broadcast onto 7k test rows.
     """
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    seq = daily.select(
-        "event_type", "x",
-        F.row_number().over(w).cast("long").alias("rn"),
-        F.lag("x", 7).over(w).alias("x_lag7"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("event_type"))
-        .cast("long")
-        .alias("n_days"),
-    )
+    seq = _lag7_series(spark, sf_dir)
     resid = (
         seq.filter(F.col("x_lag7").isNotNull())
         .withColumn("n_train", F.col("n_days") - 7)
@@ -661,19 +654,8 @@ def conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "conformal_monitor_timeline",
     category="FC-conformal",
-    oracle="""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
-        ), seq AS (
-            SELECT event_type, x,
-                   CAST(row_number() OVER (PARTITION BY event_type
-                                           ORDER BY day) AS BIGINT) AS rn,
-                   lag(x, 7) OVER (PARTITION BY event_type
-                                   ORDER BY day) AS x_lag7
-            FROM daily
-        ), resid AS (
+    oracle=f"""
+        WITH {_LAG7_CTE}, resid AS (
             SELECT event_type, rn, x, x_lag7 AS pred,
                    abs(x - x_lag7) AS r
             FROM seq WHERE x_lag7 IS NOT NULL
@@ -721,16 +703,7 @@ def conformal_monitor_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     key (~2k rows per key-year), not events². The rollup itself is
     the only full-data shuffle.
     """
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    seq = daily.select(
-        "event_type", "x",
-        F.row_number().over(w).cast("long").alias("rn"),
-        F.lag("x", 7).over(w).alias("x_lag7"),
-    )
+    seq = _lag7_series(spark, sf_dir)
     # resid feeds BOTH sides of the prefix self-join — persist the
     # tiny calendar-grain frame so the daily rollup (the only
     # full-data pass) is derived once, not once per join side
@@ -1005,25 +978,7 @@ def _mp24_quadratic_profile(spark: SparkSession, sf_dir: str):
             & (_MP24_M * F.col("sww") - F.col("sw") * F.col("sw") > 0)
         )
     )
-    a = wins.alias("a")
-    b = wins.alias("b")
-    dots = a.join(
-        b,
-        (F.col("a.event_type") == F.col("b.event_type"))
-        & (F.abs(F.col("a.i") - F.col("b.i")) >= _MP24_EXCL),
-    ).select(
-        F.col("a.event_type").alias("event_type"),
-        F.col("a.i").alias("i"),
-        F.col("b.i").alias("j"),
-        F.col("a.sw").alias("swi"),
-        F.col("a.sww").alias("swwi"),
-        F.col("b.sw").alias("swj"),
-        F.col("b.sww").alias("swwj"),
-        F.expr(
-            "aggregate(zip_with(a.vec, b.vec, (x, y) -> x * y),"
-            " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        ).alias("dp"),
-    )
+    dots = _window_pair_dots(wins, _MP24_EXCL)
     d2_raw = F.expr(_MP24_D2)
     w_rank = Window.partitionBy("event_type", "i").orderBy(
         F.round(d2_raw, 6).asc(), F.col("j").asc()
@@ -1039,6 +994,162 @@ def _mp24_quadratic_profile(spark: SparkSession, sf_dir: str):
         .drop("rk")
     )
     return series, quad
+
+
+# The channel-pair input of the DTW and alignment queries, oracle
+# side: each channel's first 28 daily counts (seq, rn = day order) and
+# every channel pair ca < cb with both series lengths (pairs).
+# _first_28_days and _channel_pairs are the Spark side.
+_SEQ28_PAIRS_CTE = f"""{_DAILY_CTE}, seq AS (
+            SELECT event_type, x,
+                   CAST(row_number() OVER (PARTITION BY event_type
+                                           ORDER BY day) AS BIGINT) AS rn
+            FROM daily QUALIFY rn <= 28
+        ), lens AS (
+            SELECT event_type, CAST(max(rn) AS BIGINT) AS n
+            FROM seq GROUP BY event_type
+        ), pairs AS (
+            SELECT a.event_type AS ca, b.event_type AS cb,
+                   a.n AS na, b.n AS nb
+            FROM lens a JOIN lens b ON a.event_type < b.event_type
+        )"""
+
+# ... plus the rank-tercile symbol lv of each day (sym) that the
+# alignment queries align; _shape_pairs is the Spark side.
+_SHAPE_PAIRS_CTE = _SEQ28_PAIRS_CTE + """, sym AS MATERIALIZED (
+            SELECT event_type, rn,
+                   ((CAST(row_number() OVER (PARTITION BY event_type
+                                             ORDER BY x, rn)
+                          AS BIGINT) - 1) * 3) // 28 AS lv
+            FROM seq
+        )"""
+
+
+def _antidiagonal_dp_sql(seed: str, carry: tuple[str, ...], cell: str,
+                         lookup: str = "sym", sym: str = "lv",
+                         band: str = "TRUE") -> str:
+    """The oracle's pairwise DP over ``pairs`` (ca, cb, na, nb), one
+    anti-diagonal per recursion step: the working set holds diagonal
+    d (cur = 1) and d − 1 (cur = 0), and a cell on d + 1 takes the
+    (1,0)/(0,1) moves from d and the (1,1) move from d − 1.
+
+    ``seed`` selects the first cells (ca, cb, d, i, j, <carry>, cur,
+    na, nb); ``carry`` names the values a cell holds; ``cell``
+    computes them for a new cell from its predecessor rows g (move
+    g.di, g.dj; values g.<carry>) and the symbols sa.<sym>, sb.<sym>
+    that ``lookup`` holds at the cell's i and j. ``band`` is a further
+    condition on a move. A predecessor outside the table or the band
+    is absent from the cell's group."""
+    wc = ", ".join(f"w.{c}" for c in carry)
+    nc = ", ".join(f"n.{c}" for c in carry)
+    return f"""WITH RECURSIVE dp AS (
+                {seed}
+                UNION ALL
+                SELECT * FROM (
+                    WITH w AS (SELECT * FROM dp)
+                    SELECT n.ca, n.cb, n.d, n.i, n.j, {nc},
+                           1 AS cur, n.na, n.nb
+                    FROM (
+                        SELECT g.ca, g.cb, g.d, g.i, g.j, {cell},
+                               g.na, g.nb
+                        FROM (
+                            SELECT w.ca, w.cb, w.d + 1 AS d,
+                                   w.i + c0.di AS i, w.j + c0.dj AS j,
+                                   {wc}, c0.di, c0.dj, w.na, w.nb
+                            FROM w
+                            CROSS JOIN (VALUES (1, 0), (0, 1), (1, 1))
+                                 AS c0(di, dj)
+                            WHERE ((w.cur = 1 AND c0.di + c0.dj = 1)
+                                OR (w.cur = 0 AND c0.di = 1
+                                    AND c0.dj = 1))
+                              AND w.i + c0.di <= w.na
+                              AND w.j + c0.dj <= w.nb
+                              AND {band}
+                        ) g
+                        LEFT JOIN {lookup} sa ON sa.event_type = g.ca
+                                             AND sa.rn = g.i
+                        LEFT JOIN {lookup} sb ON sb.event_type = g.cb
+                                             AND sb.rn = g.j
+                        GROUP BY g.ca, g.cb, g.d, g.i, g.j, g.na, g.nb,
+                                 sa.{sym}, sb.{sym}
+                    ) n
+                    UNION ALL
+                    SELECT w.ca, w.cb, w.d + 1, w.i, w.j, {wc},
+                           0, w.na, w.nb
+                    FROM w WHERE w.cur = 1 AND w.d < w.na + w.nb
+                )
+            )
+            SELECT * FROM dp"""
+
+
+# DTW: a cell costs |x_i − y_j| plus the min over its in-band
+# predecessors, from the seed cell (1, 1).
+_DTW_DP = _antidiagonal_dp_sql(
+    seed="""SELECT p.ca, p.cb, 2 AS d, 1 AS i, 1 AS j,
+                       CAST(abs(sa.x - sb.x) AS BIGINT) AS val,
+                       1 AS cur, p.na, p.nb
+                FROM pairs p
+                JOIN seq sa ON sa.event_type = p.ca AND sa.rn = 1
+                JOIN seq sb ON sb.event_type = p.cb AND sb.rn = 1
+                -- pairs whose length gap exceeds the band have an
+                -- unreachable end cell (|na-nb| > 7): no seed, so both
+                -- engines agree the pair carries no DTW distance
+                WHERE abs(p.na - p.nb) <= 7""",
+    carry=("val",),
+    cell="CAST(abs(sa.x - sb.x) AS BIGINT) + min(g.val) AS val",
+    lookup="seq",
+    sym="x",
+    band="abs((w.i + c0.di) - (w.j + c0.dj)) <= 7",
+)
+
+
+def _first_28_days(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, x, rn): each channel's first 28 daily counts, rn
+    the 1-based day order (seq of _SEQ28_PAIRS_CTE)."""
+    w = Window.partitionBy("event_type").orderBy("day")
+    return _daily_counts(spark, sf_dir).select(
+        "event_type", "x", F.row_number().over(w).cast("long").alias("rn")
+    ).filter(F.col("rn") <= 28)
+
+
+def _channel_pairs(seq: DataFrame, val: str) -> DataFrame:
+    """Every channel pair channel_a < channel_b of ``seq`` (event_type,
+    rn, ``val``), each side's ``val`` as an rn-ordered array (sa, sb)
+    and its length (na, nb). One row per channel is broadcast, so the
+    pair frame never shuffles."""
+    arrs = seq.groupBy("event_type").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("rn", val))),
+            lambda s: s[val],
+        ).alias("vals"),
+        F.max("rn").cast("long").alias("n"),
+    )
+    a = arrs.select(
+        F.col("event_type").alias("channel_a"),
+        F.col("vals").alias("sa"),
+        F.col("n").alias("na"),
+    )
+    b = arrs.select(
+        F.col("event_type").alias("channel_b"),
+        F.col("vals").alias("sb"),
+        F.col("n").alias("nb"),
+    )
+    return a.join(F.broadcast(b), F.col("channel_a") < F.col("channel_b"))
+
+
+def _shape_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """_channel_pairs over rank-tercile symbols: a day's symbol lv is
+    the tercile of its exact rank by (x, rn) among the channel's first
+    28 days (integer thresholds, no float quantiles)."""
+    sym = _first_28_days(spark, sf_dir).select(
+        "event_type", "rn",
+        F.expr(
+            "((CAST(row_number() OVER (PARTITION BY event_type"
+            " ORDER BY x, rn) AS BIGINT) - 1) * 3) div 28"
+        ).alias("lv"),
+    )
+    return _channel_pairs(sym, "lv")
+
 
 def _dtw_banded_dp(xa, xb, band: int = 7):
     """Sakoe-Chiba banded DTW on integer series: exact int64 min/+
@@ -1066,75 +1177,9 @@ def _dtw_banded_dp(xa, xb, band: int = 7):
 @query(
     "dtw_banded_channel_pairs",
     category="FC-dtw",
-    oracle="""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
-        ), seq AS (
-            SELECT event_type, x,
-                   CAST(row_number() OVER (PARTITION BY event_type
-                                           ORDER BY day) AS BIGINT) AS rn
-            FROM daily QUALIFY rn <= 28
-        ), lens AS (
-            SELECT event_type, CAST(max(rn) AS BIGINT) AS n
-            FROM seq GROUP BY event_type
-        ), pairs AS (
-            SELECT a.event_type AS ca, b.event_type AS cb,
-                   a.n AS na, b.n AS nb
-            FROM lens a JOIN lens b ON a.event_type < b.event_type
-            -- pairs whose length gap exceeds the band have an
-            -- unreachable end cell (|na-nb| > 7): exclude them so both
-            -- engines agree the pair carries no DTW distance
-            WHERE abs(a.n - b.n) <= 7
-        ), cells AS (
-            -- anti-diagonal DP: the working set carries diagonal d
-            -- (cur=1) plus d-1 (cur=0); a cell on d+1 takes
-            -- cost + min over its in-band predecessors ((1,0)/(0,1)
-            -- from d, (1,1) from d-1); out-of-band/missing
-            -- predecessors are simply absent from the min
-            WITH RECURSIVE dp AS (
-                SELECT p.ca, p.cb, 2 AS d, 1 AS i, 1 AS j,
-                       CAST(abs(sa.x - sb.x) AS BIGINT) AS val,
-                       1 AS cur, p.na, p.nb
-                FROM pairs p
-                JOIN seq sa ON sa.event_type = p.ca AND sa.rn = 1
-                JOIN seq sb ON sb.event_type = p.cb AND sb.rn = 1
-                UNION ALL
-                SELECT * FROM (
-                    WITH w AS (SELECT * FROM dp)
-                    SELECT n.ca, n.cb, n.d, n.i, n.j, n.val,
-                           1 AS cur, n.na, n.nb
-                    FROM (
-                        SELECT g.ca, g.cb, g.d, g.i, g.j,
-                               CAST(abs(sa.x - sb.x) AS BIGINT)
-                                   + min(g.prev) AS val,
-                               g.na, g.nb
-                        FROM (
-                            SELECT w.ca, w.cb, w.d + 1 AS d,
-                                   w.i + c0.di AS i, w.j + c0.dj AS j,
-                                   w.val AS prev, w.na, w.nb
-                            FROM w
-                            CROSS JOIN (VALUES (1, 0), (0, 1), (1, 1))
-                                 AS c0(di, dj)
-                            WHERE ((w.cur = 1 AND c0.di + c0.dj = 1)
-                                OR (w.cur = 0 AND c0.di = 1 AND c0.dj = 1))
-                              AND w.i + c0.di <= w.na
-                              AND w.j + c0.dj <= w.nb
-                              AND abs((w.i + c0.di) - (w.j + c0.dj)) <= 7
-                        ) g
-                        JOIN seq sa ON sa.event_type = g.ca AND sa.rn = g.i
-                        JOIN seq sb ON sb.event_type = g.cb AND sb.rn = g.j
-                        GROUP BY g.ca, g.cb, g.d, g.i, g.j, g.na, g.nb,
-                                 sa.x, sb.x
-                    ) n
-                    UNION ALL
-                    SELECT w.ca, w.cb, w.d + 1 AS d, w.i, w.j, w.val,
-                           0 AS cur, w.na, w.nb
-                    FROM w WHERE w.cur = 1 AND w.d < w.na + w.nb
-                )
-            )
-            SELECT * FROM dp
+    oracle=f"""
+        WITH {_SEQ28_PAIRS_CTE}, cells AS (
+            {_DTW_DP}
         )
         SELECT ca AS channel_a, cb AS channel_b, na AS len_a, nb AS len_b,
                val AS dtw_distance
@@ -1167,57 +1212,24 @@ def dtw_banded_channel_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair frame is k(k−1)/2 rows; at large k, block with the same
     LSH/bucketing used by the dedup family before pairing.
     """
-    import pandas as pd
-    from pyspark.sql.types import LongType
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    seq = daily.select(
-        "event_type", "x", F.row_number().over(w).cast("long").alias("rn")
-    ).filter(F.col("rn") <= 28)
-    arrs = seq.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("rn"), F.col("x")))
-            ),
-            lambda s: s["x"],
-        ).alias("vals"),
-        F.max("rn").cast("long").alias("n"),
-    )
-    a = arrs.select(
-        F.col("event_type").alias("channel_a"),
-        F.col("vals").alias("va"),
-        F.col("n").alias("len_a"),
-    )
-    b = arrs.select(
-        F.col("event_type").alias("channel_b"),
-        F.col("vals").alias("vb"),
-        F.col("n").alias("len_b"),
-    )
-    pairs = a.join(
-        F.broadcast(b), F.col("channel_a") < F.col("channel_b")
-    ).filter(
-        # |len_a - len_b| > band => D[n,m] is outside the Sakoe-Chiba
-        # band and unreachable: drop the pair (mirrors the oracle's
-        # pairs-CTE WHERE; ADVICE r5 medium fix)
-        F.abs(F.col("len_a") - F.col("len_b")) <= 7
+    pairs = _channel_pairs(_first_28_days(spark, sf_dir), "x").filter(
+        # |na - nb| > band => D[n,m] is outside the Sakoe-Chiba band
+        # and unreachable: drop the pair (the oracle seeds no DP for it)
+        F.abs(F.col("na") - F.col("nb")) <= 7
     )
 
     @F.pandas_udf(LongType())
-    def dtw_band(va: pd.Series, vb: pd.Series) -> pd.Series:
+    def dtw_band(sa: pd.Series, sb: pd.Series) -> pd.Series:
         out = [
-            _dtw_banded_dp(xa, xb, band=7) for xa, xb in zip(va, vb)
+            _dtw_banded_dp(xa, xb, band=7) for xa, xb in zip(sa, sb)
         ]
         return pd.Series(out, dtype="Int64")
 
-    return (
-        pairs.select(
-            "channel_a", "channel_b", "len_a", "len_b",
-            dtw_band(F.col("va"), F.col("vb")).alias("dtw_distance"),
-        )
+    return pairs.select(
+        "channel_a", "channel_b",
+        F.col("na").alias("len_a"),
+        F.col("nb").alias("len_b"),
+        dtw_band(F.col("sa"), F.col("sb")).alias("dtw_distance"),
     )
 
 
@@ -1254,11 +1266,7 @@ def _hw_snew(x: str, l_new: str, s_old: str) -> str:
     "holt_winters_additive_fit",
     category="FC-holtwinters",
     oracle=f"""
-        WITH RECURSIVE daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
-        ), seq AS (
+        WITH RECURSIVE {_DAILY_CTE}, seq AS (
             SELECT event_type, day, x,
                    CAST(row_number() OVER (PARTITION BY event_type
                                            ORDER BY day) AS BIGINT) AS rn,
@@ -1339,10 +1347,7 @@ def holt_winters_additive_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds are two integer sums per channel. Millions of keys = the
     same groupBy+fold, state is 9 doubles per key.
     """
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
+    daily = _daily_counts(spark, sf_dir)
     packed = (
         daily.groupBy("event_type")
         .agg(
@@ -1423,88 +1428,73 @@ def holt_winters_additive_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pair_scores_sql(scores: str, score_col: str, sim_col: str) -> str:
+    """The oracle side of _pair_scores: ``scores`` selects (ca, cb, na,
+    nb, score) per pair; the result names and normalises the score."""
+    return f"""
+        SELECT ca AS channel_a, cb AS channel_b,
+               CAST(score AS BIGINT) AS {score_col},
+               CAST(round(score * 1.0 / (2 * least(na, nb)), 6) AS DOUBLE)
+                   AS {sim_col}
+        FROM ({scores})
+        ORDER BY channel_a, channel_b"""
+
+
+def _pair_scores(pairs: DataFrame, score, score_col: str,
+                 sim_col: str) -> DataFrame:
+    """Score every pair of _shape_pairs with the integer alignment
+    score ``score(xa, xb)`` in one Arrow-batched pandas UDF
+    (``score_col``), and normalise it by the best possible score, all
+    matches at +2 over the shorter series: ``sim_col`` =
+    score / (2·least(na, nb)), rounded to 6."""
+
+    @F.pandas_udf(LongType())
+    def scores(sa: pd.Series, sb: pd.Series) -> pd.Series:
+        out = [score(list(xa), list(xb)) for xa, xb in zip(sa, sb)]
+        return pd.Series(out, dtype="int64")
+
+    # one UDF reference: a second would plan a second ArrowEvalPython
+    scored = pairs.select(
+        "channel_a", "channel_b", "na", "nb",
+        scores(F.col("sa"), F.col("sb")).alias(score_col),
+    )
+    return scored.select(
+        "channel_a", "channel_b", score_col,
+        F.round(
+            F.col(score_col) / (2.0 * F.least(F.col("na"), F.col("nb"))), 6
+        ).alias(sim_col),
+    )
+
+
+# NW / SW move value: a gap move costs -2, a diagonal move scores the
+# symbol pair +2 (match) / -1 (mismatch); a border symbol is NULL.
+_LINEAR_MOVE = """g.val + CASE WHEN g.di + g.dj = 1 THEN -2
+                                        WHEN sa.lv = sb.lv THEN 2
+                                        ELSE -1 END"""
+
+# NW: max over the moves, seeded at cell (0, 0); the border cells
+# (i, 0) / (0, j) arise from the gap chains.
+_NW_DP = _antidiagonal_dp_sql(
+    seed="""SELECT p.ca, p.cb, 0 AS d, 0 AS i, 0 AS j,
+                       CAST(0 AS BIGINT) AS val, 1 AS cur, p.na, p.nb
+                FROM pairs p""",
+    carry=("val",),
+    cell=f"max({_LINEAR_MOVE}) AS val",
+)
+
+
 @query(
     "nw_alignment_channel_shapes",
     category="FC-alignment",
-    oracle="""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
-        ), seq AS (
-            SELECT event_type, x,
-                   CAST(row_number() OVER (PARTITION BY event_type
-                                           ORDER BY day) AS BIGINT) AS rn
-            FROM daily QUALIFY rn <= 28
-        ), sym AS MATERIALIZED (
-            SELECT event_type, rn,
-                   ((CAST(row_number() OVER (PARTITION BY event_type
-                                             ORDER BY x, rn)
-                          AS BIGINT) - 1) * 3) // 28 AS lv
-            FROM seq
-        ), lens AS (
-            SELECT event_type, CAST(max(rn) AS BIGINT) AS n
-            FROM sym GROUP BY event_type
-        ), pairs AS (
-            SELECT a.event_type AS ca, b.event_type AS cb,
-                   a.n AS na, b.n AS nb
-            FROM lens a JOIN lens b ON a.event_type < b.event_type
-        ), cells AS (
-            -- same anti-diagonal recursive-DP shape as the DTW
-            -- oracle, max-recurrence with edge gaps: cell (0,0)
-            -- seeds; gap moves (+1,0)/(0,+1) cost -2 from diagonal
-            -- d-1, match/mismatch (+1,+1) +2/-1 from d-2; border
-            -- cells (i,0)/(0,j) arise naturally from gap chains
-            WITH RECURSIVE dp AS (
-                SELECT p.ca, p.cb, 0 AS d, 0 AS i, 0 AS j,
-                       CAST(0 AS BIGINT) AS val, 1 AS cur, p.na, p.nb
-                FROM pairs p
-                UNION ALL
-                SELECT * FROM (
-                    WITH w AS (SELECT * FROM dp)
-                    SELECT n.ca, n.cb, n.d, n.i, n.j, n.val,
-                           1 AS cur, n.na, n.nb
-                    FROM (
-                        SELECT g.ca, g.cb, g.d, g.i, g.j,
-                               max(g.prev + CASE
-                                   WHEN g.di + g.dj = 1 THEN -2
-                                   WHEN sa.lv = sb.lv THEN 2
-                                   ELSE -1 END) AS val,
-                               g.na, g.nb
-                        FROM (
-                            SELECT w.ca, w.cb, w.d + 1 AS d,
-                                   w.i + c0.di AS i, w.j + c0.dj AS j,
-                                   w.val AS prev, c0.di, c0.dj,
-                                   w.na, w.nb
-                            FROM w
-                            CROSS JOIN (VALUES (1, 0), (0, 1), (1, 1))
-                                 AS c0(di, dj)
-                            WHERE ((w.cur = 1 AND c0.di + c0.dj = 1)
-                                OR (w.cur = 0 AND c0.di = 1
-                                    AND c0.dj = 1))
-                              AND w.i + c0.di <= w.na
-                              AND w.j + c0.dj <= w.nb
-                        ) g
-                        LEFT JOIN sym sa ON sa.event_type = g.ca
-                                        AND sa.rn = g.i
-                        LEFT JOIN sym sb ON sb.event_type = g.cb
-                                        AND sb.rn = g.j
-                        GROUP BY g.ca, g.cb, g.d, g.i, g.j, g.na, g.nb,
-                                 sa.lv, sb.lv
-                    ) n
-                    UNION ALL
-                    SELECT w.ca, w.cb, w.d + 1, w.i, w.j, w.val,
-                           0, w.na, w.nb
-                    FROM w WHERE w.cur = 1 AND w.d < w.na + w.nb
-                )
-            )
-            SELECT * FROM dp
+    oracle=f"""
+        WITH {_SHAPE_PAIRS_CTE}, cells AS (
+            {_NW_DP}
         )
-        SELECT ca AS channel_a, cb AS channel_b, val AS nw_score,
-               CAST(round(val * 1.0 / (2 * least(na, nb)), 6) AS DOUBLE)
-                   AS norm_sim
-        FROM cells WHERE cur = 1 AND i = na AND j = nb
-        ORDER BY channel_a, channel_b
+        {_pair_scores_sql(
+            "SELECT ca, cb, na, nb, val AS score FROM cells"
+            " WHERE cur = 1 AND i = na AND j = nb",
+            "nw_score", "norm_sim",
+        )}
     """,
 )
 def nw_alignment_channel_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1531,75 +1521,27 @@ def nw_alignment_channel_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, nothing rejoins the facts. At large channel counts, block
     pairs first (the dedup family's LSH buckets) exactly as for DTW.
     """
-    from pyspark.sql.types import LongType
+    return _pair_scores(
+        _shape_pairs(spark, sf_dir), _nw_score, "nw_score", "norm_sim"
+    )
 
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    seq = daily.select(
-        "event_type", "x", F.row_number().over(w).cast("long").alias("rn")
-    ).filter(F.col("rn") <= 28)
-    sym = seq.select(
-        "event_type", "rn",
-        F.expr(
-            "((CAST(row_number() OVER (PARTITION BY event_type"
-            " ORDER BY x, rn) AS BIGINT) - 1) * 3) div 28"
-        ).alias("lv"),
-    )
-    arrs = sym.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("rn", "lv"))),
-            lambda s: s["lv"],
-        ).alias("syms"),
-        F.max("rn").cast("long").alias("n"),
-    )
-    a = arrs.select(
-        F.col("event_type").alias("channel_a"),
-        F.col("syms").alias("sa"),
-        F.col("n").alias("na"),
-    )
-    b = arrs.select(
-        F.col("event_type").alias("channel_b"),
-        F.col("syms").alias("sb"),
-        F.col("n").alias("nb"),
-    )
-    pairs = a.join(F.broadcast(b), F.col("channel_a") < F.col("channel_b"))
 
-    @F.pandas_udf(LongType())
-    def nw_score(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        out = []
-        for xa, xb in zip(sa, sb):
-            n, m = len(xa), len(xb)
-            prev = [-2 * j for j in range(m + 1)]
-            for i in range(1, n + 1):
-                cur = [-2 * i] + [0] * m
-                ai = xa[i - 1]
-                for j in range(1, m + 1):
-                    cur[j] = max(
-                        prev[j] - 2,
-                        cur[j - 1] - 2,
-                        prev[j - 1] + (2 if ai == xb[j - 1] else -1),
-                    )
-                prev = cur
-            out.append(prev[m])
-        return pd.Series(out, dtype="int64")
-
-    scored = pairs.select(
-        "channel_a", "channel_b", "na", "nb",
-        nw_score(F.col("sa"), F.col("sb")).alias("nw_score"),
-    )
-    return (
-        scored.select(
-            "channel_a", "channel_b", "nw_score",
-            F.round(
-                F.col("nw_score")
-                / (2.0 * F.least(F.col("na"), F.col("nb"))),
-                6,
-            ).alias("norm_sim"),
-        )
-    )
+def _nw_score(xa, xb, match: int = 2, mismatch: int = -1,
+              gap: int = -2) -> int:
+    """Needleman-Wunsch GLOBAL alignment score (linear gaps): every
+    symbol of both sequences is consumed, a gap of length L costs
+    L·gap. All-integer max/+ DP, one rolling row: O(n·m) time, O(m)
+    space."""
+    n, m = len(xa), len(xb)
+    prev = [gap * j for j in range(m + 1)]
+    for i in range(1, n + 1):
+        cur = [gap * i] + [0] * m
+        ai = xa[i - 1]
+        for j in range(1, m + 1):
+            s = match if ai == xb[j - 1] else mismatch
+            cur[j] = max(prev[j] + gap, cur[j - 1] + gap, prev[j - 1] + s)
+        prev = cur
+    return prev[m]
 
 
 def _gotoh_affine_score(
@@ -1638,107 +1580,54 @@ def _gotoh_affine_score(
     return max(Mp[m], Ixp[m], Iyp[m])
 
 
-@query(
-    "gotoh_affine_alignment_shapes",
-    category="FC-alignment",
-    oracle="""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
-        ), seq AS (
-            SELECT event_type, x,
-                   CAST(row_number() OVER (PARTITION BY event_type
-                                           ORDER BY day) AS BIGINT) AS rn
-            FROM daily QUALIFY rn <= 28
-        ), sym AS MATERIALIZED (
-            SELECT event_type, rn,
-                   ((CAST(row_number() OVER (PARTITION BY event_type
-                                             ORDER BY x, rn)
-                          AS BIGINT) - 1) * 3) // 28 AS lv
-            FROM seq
-        ), lens AS (
-            SELECT event_type, CAST(max(rn) AS BIGINT) AS n
-            FROM sym GROUP BY event_type
-        ), pairs AS (
-            SELECT a.event_type AS ca, b.event_type AS cb,
-                   a.n AS na, b.n AS nb
-            FROM lens a JOIN lens b ON a.event_type < b.event_type
-        ), cells AS (
-            -- the NW anti-diagonal recursive-DP shape widened to
-            -- Gotoh's THREE values per cell: mv (ends match/mismatch),
-            -- ixv (gap consuming a row of A), iyv (gap consuming a row
-            -- of B). Moves: (1,1) from diagonal d-1 feeds mv;
-            -- (1,0)/(0,1) from diagonal d feed ixv/iyv with
-            -- open-from-M (-3) vs extend-within (-1). Missing move
-            -- kinds coalesce to the -100000 sentinel; border gap
-            -- chains arise naturally from (0,0).
-            WITH RECURSIVE dp AS (
-                SELECT p.ca, p.cb, 0 AS d, 0 AS i, 0 AS j,
+# Gotoh's three values per cell: mv (ends in match/mismatch), ixv (a
+# gap consuming a symbol of A), iyv (of B). The (1,1) move feeds mv,
+# (1,0) / (0,1) feed ixv / iyv with open-from-M (-3) vs extend-within
+# (-1); a missing move kind coalesces to the -100000 sentinel. Seeded
+# at cell (0, 0); border gap chains arise from it.
+_GOTOH_MV = """COALESCE(max(CASE
+                                   WHEN g.di = 1 AND g.dj = 1 THEN
+                                       (CASE WHEN sa.lv = sb.lv
+                                             THEN 2 ELSE -1 END)
+                                       + greatest(g.mv, g.ixv, g.iyv)
+                                   END), -100000)"""
+
+
+def _gotoh_dp_sql(mv: str) -> str:
+    """The Gotoh DP whose new-cell mv is ``mv`` (global: _GOTOH_MV;
+    local: _GOTOH_MV floored at 0)."""
+    return _antidiagonal_dp_sql(
+        seed="""SELECT p.ca, p.cb, 0 AS d, 0 AS i, 0 AS j,
                        CAST(0 AS BIGINT) AS mv,
                        CAST(-100000 AS BIGINT) AS ixv,
                        CAST(-100000 AS BIGINT) AS iyv,
                        1 AS cur, p.na, p.nb
-                FROM pairs p
-                UNION ALL
-                SELECT * FROM (
-                    WITH w AS (SELECT * FROM dp)
-                    SELECT n.ca, n.cb, n.d, n.i, n.j,
-                           n.mv, n.ixv, n.iyv, 1 AS cur, n.na, n.nb
-                    FROM (
-                        SELECT g.ca, g.cb, g.d, g.i, g.j,
-                               COALESCE(max(CASE
-                                   WHEN g.di = 1 AND g.dj = 1 THEN
-                                       (CASE WHEN sa.lv = sb.lv
-                                             THEN 2 ELSE -1 END)
-                                       + greatest(g.pm, g.pix, g.piy)
-                                   END), -100000) AS mv,
+                FROM pairs p""",
+        carry=("mv", "ixv", "iyv"),
+        cell=f"""{mv} AS mv,
                                COALESCE(max(CASE
                                    WHEN g.di = 1 AND g.dj = 0 THEN
-                                       greatest(g.pm - 3, g.pix - 1)
+                                       greatest(g.mv - 3, g.ixv - 1)
                                    END), -100000) AS ixv,
                                COALESCE(max(CASE
                                    WHEN g.di = 0 AND g.dj = 1 THEN
-                                       greatest(g.pm - 3, g.piy - 1)
-                                   END), -100000) AS iyv,
-                               g.na, g.nb
-                        FROM (
-                            SELECT w.ca, w.cb, w.d + 1 AS d,
-                                   w.i + c0.di AS i, w.j + c0.dj AS j,
-                                   w.mv AS pm, w.ixv AS pix,
-                                   w.iyv AS piy, c0.di, c0.dj,
-                                   w.na, w.nb
-                            FROM w
-                            CROSS JOIN (VALUES (1, 0), (0, 1), (1, 1))
-                                 AS c0(di, dj)
-                            WHERE ((w.cur = 1 AND c0.di + c0.dj = 1)
-                                OR (w.cur = 0 AND c0.di = 1
-                                    AND c0.dj = 1))
-                              AND w.i + c0.di <= w.na
-                              AND w.j + c0.dj <= w.nb
-                        ) g
-                        LEFT JOIN sym sa ON sa.event_type = g.ca
-                                        AND sa.rn = g.i
-                        LEFT JOIN sym sb ON sb.event_type = g.cb
-                                        AND sb.rn = g.j
-                        GROUP BY g.ca, g.cb, g.d, g.i, g.j, g.na, g.nb,
-                                 sa.lv, sb.lv
-                    ) n
-                    UNION ALL
-                    SELECT w.ca, w.cb, w.d + 1, w.i, w.j,
-                           w.mv, w.ixv, w.iyv, 0, w.na, w.nb
-                    FROM w WHERE w.cur = 1 AND w.d < w.na + w.nb
-                )
-            )
-            SELECT * FROM dp
+                                       greatest(g.mv - 3, g.iyv - 1)
+                                   END), -100000) AS iyv""",
+    )
+
+
+@query(
+    "gotoh_affine_alignment_shapes",
+    category="FC-alignment",
+    oracle=f"""
+        WITH {_SHAPE_PAIRS_CTE}, cells AS (
+            {_gotoh_dp_sql(_GOTOH_MV)}
         )
-        SELECT ca AS channel_a, cb AS channel_b,
-               greatest(mv, ixv, iyv) AS gotoh_score,
-               CAST(round(greatest(mv, ixv, iyv) * 1.0
-                          / (2 * least(na, nb)), 6) AS DOUBLE)
-                   AS norm_sim
-        FROM cells WHERE cur = 1 AND i = na AND j = nb
-        ORDER BY channel_a, channel_b
+        {_pair_scores_sql(
+            "SELECT ca, cb, na, nb, greatest(mv, ixv, iyv) AS score"
+            " FROM cells WHERE cur = 1 AND i = na AND j = nb",
+            "gotoh_score", "norm_sim",
+        )}
     """,
 )
 def gotoh_affine_alignment_shapes(
@@ -1768,63 +1657,8 @@ def gotoh_affine_alignment_shapes(
     embarrassingly parallel over pairs, nothing rejoins the facts;
     LSH-block pairs first at large channel counts.
     """
-    from pyspark.sql.types import LongType
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    seq = daily.select(
-        "event_type", "x", F.row_number().over(w).cast("long").alias("rn")
-    ).filter(F.col("rn") <= 28)
-    sym = seq.select(
-        "event_type", "rn",
-        F.expr(
-            "((CAST(row_number() OVER (PARTITION BY event_type"
-            " ORDER BY x, rn) AS BIGINT) - 1) * 3) div 28"
-        ).alias("lv"),
-    )
-    arrs = sym.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("rn", "lv"))),
-            lambda s: s["lv"],
-        ).alias("syms"),
-        F.max("rn").cast("long").alias("n"),
-    )
-    a = arrs.select(
-        F.col("event_type").alias("channel_a"),
-        F.col("syms").alias("sa"),
-        F.col("n").alias("na"),
-    )
-    b = arrs.select(
-        F.col("event_type").alias("channel_b"),
-        F.col("syms").alias("sb"),
-        F.col("n").alias("nb"),
-    )
-    pairs = a.join(F.broadcast(b), F.col("channel_a") < F.col("channel_b"))
-
-    @F.pandas_udf(LongType())
-    def gotoh_score(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        out = [
-            _gotoh_affine_score(list(xa), list(xb))
-            for xa, xb in zip(sa, sb)
-        ]
-        return pd.Series(out, dtype="int64")
-
-    scored = pairs.select(
-        "channel_a", "channel_b", "na", "nb",
-        gotoh_score(F.col("sa"), F.col("sb")).alias("gotoh_score"),
-    )
-    return (
-        scored.select(
-            "channel_a", "channel_b", "gotoh_score",
-            F.round(
-                F.col("gotoh_score")
-                / (2.0 * F.least(F.col("na"), F.col("nb"))),
-                6,
-            ).alias("norm_sim"),
-        )
+    return _pair_scores(
+        _shape_pairs(spark, sf_dir), _gotoh_affine_score, "gotoh_score", "norm_sim"
     )
 
 
@@ -1966,93 +1800,31 @@ def _smith_waterman_score(xa, xb, match: int = 2, mismatch: int = -1,
 
 
 # Shared oracle DP for the Smith-Waterman family (score census +
-# traceback): rank-tercile symbols per channel, then the anti-diagonal
-# recursive-CTE local-alignment DP with the 0 floor.
-_SW_DP_CTE = """daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
-        ), seq AS (
-            SELECT event_type, x,
-                   CAST(row_number() OVER (PARTITION BY event_type
-                                           ORDER BY day) AS BIGINT) AS rn
-            FROM daily QUALIFY rn <= 28
-        ), sym AS MATERIALIZED (
-            SELECT event_type, rn,
-                   ((CAST(row_number() OVER (PARTITION BY event_type
-                                             ORDER BY x, rn)
-                          AS BIGINT) - 1) * 3) // 28 AS lv
-            FROM seq
-        ), lens AS (
-            SELECT event_type, CAST(max(rn) AS BIGINT) AS n
-            FROM sym GROUP BY event_type
-        ), pairs AS (
-            SELECT a.event_type AS ca, b.event_type AS cb,
-                   a.n AS na, b.n AS nb
-            FROM lens a JOIN lens b ON a.event_type < b.event_type
-        ), cells AS MATERIALIZED (
-            -- the NW anti-diagonal recursive-DP shape with the local-
-            -- alignment floor at 0. Border cells are never
-            -- materialized: every border value is 0, so a border
-            -- predecessor contributes either gap-from-0 = -2 (always
-            -- absorbed by the floor) or diag-from-0 = s(i,j) — the
-            -- standalone CASE term below, applicable exactly when
-            -- i = 1 OR j = 1. Seed = cell (1,1).
-            WITH RECURSIVE dp AS (
-                SELECT p.ca, p.cb, 2 AS d, 1 AS i, 1 AS j,
+# traceback): the NW moves with the local-alignment floor at 0. Border
+# cells are never materialized: every border value is 0, so a border
+# predecessor contributes either gap-from-0 = -2 (always absorbed by
+# the floor) or diag-from-0 = s(i,j) — the standalone CASE term below,
+# applicable exactly when i = 1 OR j = 1. Seed = cell (1,1).
+_SW_DP = _antidiagonal_dp_sql(
+    seed="""SELECT p.ca, p.cb, 2 AS d, 1 AS i, 1 AS j,
                        greatest(CAST(0 AS BIGINT),
                                 CASE WHEN sa.lv = sb.lv THEN 2
                                      ELSE -1 END) AS val,
                        1 AS cur, p.na, p.nb
                 FROM pairs p
                 JOIN sym sa ON sa.event_type = p.ca AND sa.rn = 1
-                JOIN sym sb ON sb.event_type = p.cb AND sb.rn = 1
-                UNION ALL
-                SELECT * FROM (
-                    WITH w AS (SELECT * FROM dp)
-                    SELECT n.ca, n.cb, n.d, n.i, n.j, n.val,
-                           1 AS cur, n.na, n.nb
-                    FROM (
-                        SELECT g.ca, g.cb, g.d, g.i, g.j,
-                               greatest(
+                JOIN sym sb ON sb.event_type = p.cb AND sb.rn = 1""",
+    carry=("val",),
+    cell=f"""greatest(
                                    CAST(0 AS BIGINT),
                                    CASE WHEN g.i = 1 OR g.j = 1 THEN
                                        (CASE WHEN sa.lv = sb.lv THEN 2
                                              ELSE -1 END)
                                    ELSE CAST(-1000 AS BIGINT) END,
-                                   max(g.prev + CASE
-                                       WHEN g.di + g.dj = 1 THEN -2
-                                       WHEN sa.lv = sb.lv THEN 2
-                                       ELSE -1 END)) AS val,
-                               g.na, g.nb
-                        FROM (
-                            SELECT w.ca, w.cb, w.d + 1 AS d,
-                                   w.i + c0.di AS i, w.j + c0.dj AS j,
-                                   w.val AS prev, c0.di, c0.dj,
-                                   w.na, w.nb
-                            FROM w
-                            CROSS JOIN (VALUES (1, 0), (0, 1), (1, 1))
-                                 AS c0(di, dj)
-                            WHERE ((w.cur = 1 AND c0.di + c0.dj = 1)
-                                OR (w.cur = 0 AND c0.di = 1
-                                    AND c0.dj = 1))
-                              AND w.i + c0.di <= w.na
-                              AND w.j + c0.dj <= w.nb
-                        ) g
-                        JOIN sym sa ON sa.event_type = g.ca
-                                   AND sa.rn = g.i
-                        JOIN sym sb ON sb.event_type = g.cb
-                                   AND sb.rn = g.j
-                        GROUP BY g.ca, g.cb, g.d, g.i, g.j, g.na, g.nb,
-                                 sa.lv, sb.lv
-                    ) n
-                    UNION ALL
-                    SELECT w.ca, w.cb, w.d + 1, w.i, w.j, w.val,
-                           0, w.na, w.nb
-                    FROM w WHERE w.cur = 1 AND w.d < w.na + w.nb
-                )
-            )
-            SELECT * FROM dp
+                                   max({_LINEAR_MOVE})) AS val""",
+)
+_SW_DP_CTE = f"""{_SHAPE_PAIRS_CTE}, cells AS MATERIALIZED (
+            {_SW_DP}
         )"""
 
 
@@ -2061,13 +1833,11 @@ _SW_DP_CTE = """daily AS (
     category="FC-alignment",
     oracle=f"""
         WITH {_SW_DP_CTE}
-        SELECT ca AS channel_a, cb AS channel_b,
-               CAST(max(val) AS BIGINT) AS sw_score,
-               CAST(round(max(val) * 1.0 / (2 * least(na, nb)), 6)
-                    AS DOUBLE) AS norm_local_sim
-        FROM cells
-        GROUP BY ca, cb, na, nb
-        ORDER BY channel_a, channel_b
+        {_pair_scores_sql(
+            "SELECT ca, cb, na, nb, max(val) AS score FROM cells"
+            " GROUP BY ca, cb, na, nb",
+            "sw_score", "norm_local_sim",
+        )}
     """,
 )
 def smith_waterman_local_shapes(
@@ -2095,65 +1865,8 @@ def smith_waterman_local_shapes(
     Scale: identical to NW/Gotoh — one rollup, broadcast pair frame,
     one Arrow-batched rolling-row DP per pair.
     """
-    from pyspark.sql.types import LongType
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    seq = daily.select(
-        "event_type", "x", F.row_number().over(w).cast("long").alias("rn")
-    ).filter(F.col("rn") <= 28)
-    sym = seq.select(
-        "event_type", "rn",
-        F.expr(
-            "((CAST(row_number() OVER (PARTITION BY event_type"
-            " ORDER BY x, rn) AS BIGINT) - 1) * 3) div 28"
-        ).alias("lv"),
-    )
-    arrs = sym.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("rn", "lv"))),
-            lambda s: s["lv"],
-        ).alias("syms"),
-        F.max("rn").cast("long").alias("n"),
-    )
-    a = arrs.select(
-        F.col("event_type").alias("channel_a"),
-        F.col("syms").alias("sa"),
-        F.col("n").alias("na"),
-    )
-    b = arrs.select(
-        F.col("event_type").alias("channel_b"),
-        F.col("syms").alias("sb"),
-        F.col("n").alias("nb"),
-    )
-    pairs = a.join(F.broadcast(b), F.col("channel_a") < F.col("channel_b"))
-
-    @F.pandas_udf(LongType())
-    def sw_score(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        out = [
-            _smith_waterman_score(list(xa), list(xb))
-            for xa, xb in zip(sa, sb)
-        ]
-        return pd.Series(out, dtype="int64")
-
-    scored = pairs.select(
-        "channel_a", "channel_b", "na", "nb",
-        # single UDF invocation: referencing the UDF twice in one
-        # select plans two ArrowEvalPython nodes (today's DTW lesson)
-        sw_score(F.col("sa"), F.col("sb")).alias("sw_score"),
-    )
-    return (
-        scored.select(
-            "channel_a", "channel_b", "sw_score",
-            F.round(
-                F.col("sw_score")
-                / (2.0 * F.least(F.col("na"), F.col("nb"))),
-                6,
-            ).alias("norm_local_sim"),
-        )
+    return _pair_scores(
+        _shape_pairs(spark, sf_dir), _smith_waterman_score, "sw_score", "norm_local_sim"
     )
 
 
@@ -2257,37 +1970,8 @@ def smith_waterman_traceback_alignment(
     here; sequences are bounded windows by construction) and O(n+m)
     walk steps. Output is one row per channel pair.
     """
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
+    from pyspark.sql.types import StringType, StructField, StructType
 
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    seq = daily.select(
-        "event_type", "x", F.row_number().over(w).cast("long").alias("rn")
-    ).filter(F.col("rn") <= 28)
-    sym = seq.select(
-        "event_type", "rn",
-        F.expr(
-            "((CAST(row_number() OVER (PARTITION BY event_type"
-            " ORDER BY x, rn) AS BIGINT) - 1) * 3) div 28"
-        ).alias("lv"),
-    )
-    arrs = sym.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("rn", "lv"))),
-            lambda s: s["lv"],
-        ).alias("syms"),
-    )
-    a = arrs.select(
-        F.col("event_type").alias("channel_a"), F.col("syms").alias("sa")
-    )
-    b = arrs.select(
-        F.col("event_type").alias("channel_b"), F.col("syms").alias("sb")
-    )
     # contract: a score-0 pair has NO local alignment — emit nothing,
     # matching the oracle's `rk = 1 AND val > 0` seed guard. Score 0
     # <=> the two symbol alphabets are DISJOINT (any shared symbol
@@ -2296,9 +1980,7 @@ def smith_waterman_traceback_alignment(
     # both skips the DP for dead pairs and keeps the plan at exactly
     # one ArrowEvalPython (a post-UDF filter on the struct field
     # pushes down and re-plans the UDF twice — the r5 DTW lesson).
-    pairs = a.join(
-        F.broadcast(b), F.col("channel_a") < F.col("channel_b")
-    ).filter(F.arrays_overlap("sa", "sb"))
+    pairs = _shape_pairs(spark, sf_dir).filter(F.arrays_overlap("sa", "sb"))
 
     ret = StructType([
         StructField("sw_score", LongType()),
@@ -2419,103 +2101,21 @@ def _gotoh_local_score(xa, xb, match: int = 2, mismatch: int = -1,
 @query(
     "gotoh_local_alignment_shapes",
     category="FC-alignment",
-    oracle="""
-        WITH daily AS (
-            SELECT event_type, CAST(ts AS DATE) AS day,
-                   CAST(count(*) AS BIGINT) AS x
-            FROM events GROUP BY event_type, CAST(ts AS DATE)
-        ), seq AS (
-            SELECT event_type, x,
-                   CAST(row_number() OVER (PARTITION BY event_type
-                                           ORDER BY day) AS BIGINT) AS rn
-            FROM daily QUALIFY rn <= 28
-        ), sym AS MATERIALIZED (
-            SELECT event_type, rn,
-                   ((CAST(row_number() OVER (PARTITION BY event_type
-                                             ORDER BY x, rn)
-                          AS BIGINT) - 1) * 3) // 28 AS lv
-            FROM seq
-        ), lens AS (
-            SELECT event_type, CAST(max(rn) AS BIGINT) AS n
-            FROM sym GROUP BY event_type
-        ), pairs AS (
-            SELECT a.event_type AS ca, b.event_type AS cb,
-                   a.n AS na, b.n AS nb
-            FROM lens a JOIN lens b ON a.event_type < b.event_type
-        ), cells AS (
-            -- the Gotoh 3-value anti-diagonal recursive DP with the
-            -- LOCAL floor: mv = greatest(0, diag-contribution), so a
-            -- cell with no diagonal move (a border) carries mv = 0 =
-            -- the empty local alignment, and every interior cell may
-            -- restart. ixv/iyv keep the global-Gotoh open/extend
-            -- transitions (they go negative and are dominated).
-            WITH RECURSIVE dp AS (
-                SELECT p.ca, p.cb, 0 AS d, 0 AS i, 0 AS j,
-                       CAST(0 AS BIGINT) AS mv,
-                       CAST(-100000 AS BIGINT) AS ixv,
-                       CAST(-100000 AS BIGINT) AS iyv,
-                       1 AS cur, p.na, p.nb
-                FROM pairs p
-                UNION ALL
-                SELECT * FROM (
-                    WITH w AS (SELECT * FROM dp)
-                    SELECT n.ca, n.cb, n.d, n.i, n.j,
-                           n.mv, n.ixv, n.iyv, 1 AS cur, n.na, n.nb
-                    FROM (
-                        SELECT g.ca, g.cb, g.d, g.i, g.j,
-                               greatest(CAST(0 AS BIGINT),
-                               COALESCE(max(CASE
-                                   WHEN g.di = 1 AND g.dj = 1 THEN
-                                       (CASE WHEN sa.lv = sb.lv
-                                             THEN 2 ELSE -1 END)
-                                       + greatest(g.pm, g.pix, g.piy)
-                                   END), -100000)) AS mv,
-                               COALESCE(max(CASE
-                                   WHEN g.di = 1 AND g.dj = 0 THEN
-                                       greatest(g.pm - 3, g.pix - 1)
-                                   END), -100000) AS ixv,
-                               COALESCE(max(CASE
-                                   WHEN g.di = 0 AND g.dj = 1 THEN
-                                       greatest(g.pm - 3, g.piy - 1)
-                                   END), -100000) AS iyv,
-                               g.na, g.nb
-                        FROM (
-                            SELECT w.ca, w.cb, w.d + 1 AS d,
-                                   w.i + c0.di AS i, w.j + c0.dj AS j,
-                                   w.mv AS pm, w.ixv AS pix,
-                                   w.iyv AS piy, c0.di, c0.dj,
-                                   w.na, w.nb
-                            FROM w
-                            CROSS JOIN (VALUES (1, 0), (0, 1), (1, 1))
-                                 AS c0(di, dj)
-                            WHERE ((w.cur = 1 AND c0.di + c0.dj = 1)
-                                OR (w.cur = 0 AND c0.di = 1
-                                    AND c0.dj = 1))
-                              AND w.i + c0.di <= w.na
-                              AND w.j + c0.dj <= w.nb
-                        ) g
-                        LEFT JOIN sym sa ON sa.event_type = g.ca
-                                        AND sa.rn = g.i
-                        LEFT JOIN sym sb ON sb.event_type = g.cb
-                                        AND sb.rn = g.j
-                        GROUP BY g.ca, g.cb, g.d, g.i, g.j, g.na, g.nb,
-                                 sa.lv, sb.lv
-                    ) n
-                    UNION ALL
-                    SELECT w.ca, w.cb, w.d + 1, w.i, w.j,
-                           w.mv, w.ixv, w.iyv, 0, w.na, w.nb
-                    FROM w WHERE w.cur = 1 AND w.d < w.na + w.nb
-                )
-            )
-            SELECT * FROM dp
+    oracle=f"""
+        WITH {_SHAPE_PAIRS_CTE}, cells AS (
+            -- the Gotoh DP with the LOCAL floor: mv = greatest(0,
+            -- diag-contribution), so a cell with no diagonal move (a
+            -- border) carries mv = 0 = the empty local alignment, and
+            -- every interior cell may restart. ixv/iyv keep the
+            -- global-Gotoh open/extend transitions (they go negative
+            -- and are dominated).
+            {_gotoh_dp_sql(f"greatest(CAST(0 AS BIGINT), {_GOTOH_MV})")}
         )
-        SELECT ca AS channel_a, cb AS channel_b,
-               CAST(max(mv) AS BIGINT) AS gotoh_local_score,
-               CAST(round(max(mv) * 1.0 / (2 * least(na, nb)), 6)
-                    AS DOUBLE) AS norm_local_sim
-        FROM cells
-        GROUP BY ca, cb, na, nb
-        ORDER BY channel_a, channel_b
+        {_pair_scores_sql(
+            "SELECT ca, cb, na, nb, max(mv) AS score FROM cells"
+            " GROUP BY ca, cb, na, nb",
+            "gotoh_local_score", "norm_local_sim",
+        )}
     """,
 )
 def gotoh_local_alignment_shapes(
@@ -2546,64 +2146,8 @@ def gotoh_local_alignment_shapes(
     rolling-row DP per pair; LSH-block pairs first at large channel
     counts.
     """
-    from pyspark.sql.types import LongType
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-    w = Window.partitionBy("event_type").orderBy("day")
-    seq = daily.select(
-        "event_type", "x", F.row_number().over(w).cast("long").alias("rn")
-    ).filter(F.col("rn") <= 28)
-    sym = seq.select(
-        "event_type", "rn",
-        F.expr(
-            "((CAST(row_number() OVER (PARTITION BY event_type"
-            " ORDER BY x, rn) AS BIGINT) - 1) * 3) div 28"
-        ).alias("lv"),
-    )
-    arrs = sym.groupBy("event_type").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("rn", "lv"))),
-            lambda s: s["lv"],
-        ).alias("syms"),
-        F.max("rn").cast("long").alias("n"),
-    )
-    a = arrs.select(
-        F.col("event_type").alias("channel_a"),
-        F.col("syms").alias("sa"),
-        F.col("n").alias("na"),
-    )
-    b = arrs.select(
-        F.col("event_type").alias("channel_b"),
-        F.col("syms").alias("sb"),
-        F.col("n").alias("nb"),
-    )
-    pairs = a.join(F.broadcast(b), F.col("channel_a") < F.col("channel_b"))
-
-    @F.pandas_udf(LongType())
-    def gl_score(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        out = [
-            _gotoh_local_score(list(xa), list(xb))
-            for xa, xb in zip(sa, sb)
-        ]
-        return pd.Series(out, dtype="int64")
-
-    scored = pairs.select(
-        "channel_a", "channel_b", "na", "nb",
-        # single UDF reference (the pandas-UDF-in-filter house rule)
-        gl_score(F.col("sa"), F.col("sb")).alias("gotoh_local_score"),
-    )
-    return (
-        scored.select(
-            "channel_a", "channel_b", "gotoh_local_score",
-            F.round(
-                F.col("gotoh_local_score")
-                / (2.0 * F.least(F.col("na"), F.col("nb"))),
-                6,
-            ).alias("norm_local_sim"),
-        )
+    return _pair_scores(
+        _shape_pairs(spark, sf_dir), _gotoh_local_score, "gotoh_local_score", "norm_local_sim"
     )
 
 

@@ -131,11 +131,10 @@ def fuzzy_blocked_typo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cand.filter(F.levenshtein("name1", "name2") == 1)
 
 
-@query(
-    "bm25_topk_docs",
-    category="L5-ir",
-    oracle="""
-        WITH toks AS (
+# Okapi BM25 (k1 = 1.2, b = 0.75) of every document matching the
+# fixed 3-term query 'hash join stream', rounded to 6: scored (doc_id,
+# bm25). _bm25 is the Spark side.
+_BM25_CTE = """toks AS (
             SELECT doc_id, unnest(string_split(text, ' ')) AS tok
             FROM documents
         ), dl AS (
@@ -146,22 +145,61 @@ def fuzzy_blocked_typo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_id, tok, count(*) AS tf FROM toks
             WHERE tok IN ('hash', 'join', 'stream')
             GROUP BY doc_id, tok
-        ), df AS (
+        ), dfreq AS (
             SELECT tok, count(*) AS df FROM tf GROUP BY tok
         ), scored AS (
             SELECT tf.doc_id,
-                   sum(
+                   round(sum(
                        ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) *
                        (tf * 2.2) /
                        (tf + 1.2 * (0.25 + 0.75 * doclen / avgdl))
-                   ) AS raw
-            FROM tf
-            JOIN df USING (tok)
-            JOIN dl USING (doc_id)
+                   ), 6) AS bm25
+            FROM tf JOIN dfreq USING (tok) JOIN dl USING (doc_id)
             CROSS JOIN stats
             GROUP BY tf.doc_id
-        )
-        SELECT doc_id, round(raw, 6) AS bm25
+        )"""
+
+
+def _bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, bm25): the scores of _BM25_CTE, planned as
+    bm25_topk_docs describes."""
+    docs = load_table(spark, sf_dir, "documents")
+    terms = ["hash", "join", "stream"]
+    k1, b = 1.2, 0.75
+    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
+    stats = dl.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.avg("doclen").alias("avgdl")
+    )
+    tf = (
+        toks.filter(F.col("tok").isin(terms))
+        .groupBy("doc_id", "tok")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    idf = F.log(
+        F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    )
+    score = (
+        idf
+        * (F.col("tf") * (k1 + 1.0))
+        / (F.col("tf") + k1 * ((1.0 - b) + b * F.col("doclen") / F.col("avgdl")))
+    )
+    return (
+        tf.join(F.broadcast(dfreq), "tok")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .groupBy("doc_id")
+        .agg(F.round(F.sum(score), 6).alias("bm25"))
+    )
+
+
+@query(
+    "bm25_topk_docs",
+    category="L5-ir",
+    oracle=f"""
+        WITH {_BM25_CTE}
+        SELECT doc_id, bm25
         FROM scored
         ORDER BY bm25 DESC, doc_id
         LIMIT 15
@@ -179,37 +217,7 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (rounding before ORDER BY keeps the rank cross-engine
     deterministic; see oracle_conventions on libm drift).
     """
-    docs = load_table(spark, sf_dir, "documents")
-    terms = ["hash", "join", "stream"]
-    k1, b = 1.2, 0.75
-    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("doclen").alias("avgdl")
-    )
-    tf = (
-        toks.filter(F.col("tok").isin(terms))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    score = (
-        idf
-        * (F.col("tf") * (k1 + 1.0))
-        / (F.col("tf") + k1 * ((1.0 - b) + b * F.col("doclen") / F.col("avgdl")))
-    )
-    return (
-        tf.join(F.broadcast(df), "tok")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(score), 6).alias("bm25"))
-        .orderBy(F.col("bm25").desc(), "doc_id")
-        .limit(15)
-    )
+    return _bm25(spark, sf_dir).orderBy(F.col("bm25").desc(), "doc_id").limit(15)
 
 
 @query(
@@ -596,36 +604,12 @@ def zipf_rank_frequency_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "hybrid_rrf_fusion",
-    category="L5-hybrid",
-    oracle="""
-        WITH toks AS (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-            FROM documents
-        ), dl AS (
-            SELECT doc_id, count(*) AS doclen FROM toks GROUP BY doc_id
-        ), stats AS (
-            SELECT count(*) AS n_docs, avg(doclen) AS avgdl FROM dl
-        ), tf AS (
-            SELECT doc_id, tok, count(*) AS tf FROM toks
-            WHERE tok IN ('hash', 'join', 'stream')
-            GROUP BY doc_id, tok
-        ), dfreq AS (
-            SELECT tok, count(*) AS df FROM tf GROUP BY tok
-        ), scored AS (
-            SELECT tf.doc_id,
-                   round(sum(
-                       ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) *
-                       (tf * 2.2) /
-                       (tf + 1.2 * (0.25 + 0.75 * doclen / avgdl))
-                   ), 6) AS bm25
-            FROM tf
-            JOIN dfreq USING (tok)
-            JOIN dl USING (doc_id)
-            CROSS JOIN stats
-            GROUP BY tf.doc_id
-        ), lrank AS (
+# The two rankings hybrid_rrf_fusion fuses and
+# team_draft_interleaving_eval interleaves: lrank by BM25 and vrank by
+# exact cosine to the vec_id-0 query embedding (vsim), each over
+# scores rounded to 6 with a doc_id tie-break. _query_cosine is the
+# Spark side of vsim.
+_RANKS_CTE = f"""{_BM25_CTE}, lrank AS (
             SELECT doc_id,
                    row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r
             FROM scored
@@ -641,7 +625,33 @@ def zipf_rank_frequency_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_id,
                    row_number() OVER (ORDER BY sim DESC, doc_id) AS r
             FROM vsim
-        ), l50 AS (SELECT doc_id, r FROM lrank WHERE r <= 50),
+        )"""
+
+
+def _query_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sim): vsim of _RANKS_CTE, a scan of the embeddings
+    against the one broadcast query vector."""
+    from ..functions.vectors import cosine_similarity, to_double_array
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", to_double_array("embedding").alias("vec")
+    )
+    qvec = emb.filter(F.col("vec_id") == 0).select(F.col("vec").alias("qvec"))
+    return (
+        emb.filter(F.col("vec_id") != 0)
+        .join(F.broadcast(qvec))
+        .select(
+            F.col("vec_id").alias("doc_id"),
+            F.round(cosine_similarity(F.col("vec"), F.col("qvec")), 6).alias("sim"),
+        )
+    )
+
+
+@query(
+    "hybrid_rrf_fusion",
+    category="L5-hybrid",
+    oracle=f"""
+        WITH {_RANKS_CTE}, l50 AS (SELECT doc_id, r FROM lrank WHERE r <= 50),
            v50 AS (SELECT doc_id, r FROM vrank WHERE r <= 50),
         fused AS (
             SELECT coalesce(l.doc_id, v.doc_id) AS doc_id,
@@ -678,36 +688,7 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     50-row frames — metadata. The doc_id↔vec_id aligned id space is
     the testdata contract.
     """
-    from ..functions.vectors import cosine_similarity, to_double_array
-
-    docs = load_table(spark, sf_dir, "documents")
-    terms = ["hash", "join", "stream"]
-    k1, b = 1.2, 0.75
-    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("doclen").alias("avgdl")
-    )
-    tf = (
-        toks.filter(F.col("tok").isin(terms))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    contrib = (
-        idf * (F.col("tf") * (k1 + 1.0))
-        / (F.col("tf") + k1 * (1 - b + b * F.col("doclen") / F.col("avgdl")))
-    )
-    scored = (
-        tf.join(F.broadcast(dfreq), "tok")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(contrib), 6).alias("bm25"))
-    )
+    scored = _bm25(spark, sf_dir)
     l50 = (
         scored.orderBy(F.col("bm25").desc(), "doc_id").limit(50)
         .select(
@@ -717,18 +698,7 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lr"),
         )
     )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("vec")
-    )
-    qvec = emb.filter(F.col("vec_id") == 0).select(F.col("vec").alias("qvec"))
-    vsim = (
-        emb.filter(F.col("vec_id") != 0)
-        .join(F.broadcast(qvec))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(cosine_similarity(F.col("vec"), F.col("qvec")), 6).alias("sim"),
-        )
-    )
+    vsim = _query_cosine(spark, sf_dir)
     v50 = (
         vsim.orderBy(F.col("sim").desc(), "doc_id").limit(50)
         .select(
@@ -764,30 +734,7 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ndcg_at_10_eval",
     category="L5-ndcg",
     oracle=f"""
-        WITH toks AS (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-            FROM documents
-        ), dl AS (
-            SELECT doc_id, count(*) AS doclen FROM toks GROUP BY doc_id
-        ), stats AS (
-            SELECT count(*) AS n_docs, avg(doclen) AS avgdl FROM dl
-        ), tf AS (
-            SELECT doc_id, tok, count(*) AS tf FROM toks
-            WHERE tok IN ('hash', 'join', 'stream')
-            GROUP BY doc_id, tok
-        ), dfreq AS (
-            SELECT tok, count(*) AS df FROM tf GROUP BY tok
-        ), scored AS (
-            SELECT tf.doc_id,
-                   round(sum(
-                       ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) *
-                       (tf * 2.2) /
-                       (tf + 1.2 * (0.25 + 0.75 * doclen / avgdl))
-                   ), 6) AS bm25
-            FROM tf JOIN dfreq USING (tok) JOIN dl USING (doc_id)
-            CROSS JOIN stats
-            GROUP BY tf.doc_id
-        ), rel AS (
+        WITH {_BM25_CTE}, rel AS (
             SELECT doc_id, bm25,
                    CAST(floor({md5_uniform_sql("'rel:' || CAST(doc_id AS VARCHAR)")}
                               * 4) AS BIGINT) AS rel
@@ -841,38 +788,7 @@ def ndcg_at_10_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.sampling import md5_uniform
 
-    docs = load_table(spark, sf_dir, "documents")
-    terms = ["hash", "join", "stream"]
-    k1, b = 1.2, 0.75
-    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("doclen").alias("avgdl")
-    )
-    tf = (
-        toks.filter(F.col("tok").isin(terms))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    contrib = (
-        idf
-        * (F.col("tf") * (k1 + 1.0))
-        / (
-            F.col("tf")
-            + k1 * (1 - b + b * F.col("doclen") / F.col("avgdl"))
-        )
-    )
-    scored = (
-        tf.join(F.broadcast(dfreq), "tok")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(contrib), 6).alias("bm25"))
-    )
+    scored = _bm25(spark, sf_dir)
     rel = scored.withColumn(
         "rel",
         F.floor(
@@ -916,55 +832,11 @@ def ndcg_at_10_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TD_LEX_CTES = """
-        toks AS (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-            FROM documents
-        ), dl AS (
-            SELECT doc_id, count(*) AS doclen FROM toks GROUP BY doc_id
-        ), stats AS (
-            SELECT count(*) AS n_docs, avg(doclen) AS avgdl FROM dl
-        ), tf AS (
-            SELECT doc_id, tok, count(*) AS tf FROM toks
-            WHERE tok IN ('hash', 'join', 'stream')
-            GROUP BY doc_id, tok
-        ), dfreq AS (
-            SELECT tok, count(*) AS df FROM tf GROUP BY tok
-        ), scored AS (
-            SELECT tf.doc_id,
-                   round(sum(
-                       ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) *
-                       (tf * 2.2) /
-                       (tf + 1.2 * (0.25 + 0.75 * doclen / avgdl))
-                   ), 6) AS bm25
-            FROM tf JOIN dfreq USING (tok) JOIN dl USING (doc_id)
-            CROSS JOIN stats
-            GROUP BY tf.doc_id
-        ), lrank AS (
-            SELECT doc_id,
-                   row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r
-            FROM scored
-        ), vsim AS (
-            SELECT e.vec_id AS doc_id,
-                   round(list_cosine_similarity(
-                       CAST(e.embedding AS DOUBLE[]),
-                       CAST(q.embedding AS DOUBLE[])), 6) AS sim
-            FROM embeddings e,
-                 (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-            WHERE e.vec_id <> 0
-        ), vrank AS (
-            SELECT doc_id,
-                   row_number() OVER (ORDER BY sim DESC, doc_id) AS r
-            FROM vsim
-        )
-"""
-
-
 @query(
     "team_draft_interleaving_eval",
     category="L5-interleave",
     oracle=f"""
-        WITH {_TD_LEX_CTES}, draft AS (
+        WITH {_RANKS_CTE}, draft AS (
             WITH RECURSIVE td AS (
                 SELECT 0 AS step, CAST('' AS VARCHAR) AS picked,
                        CAST(NULL AS BIGINT) AS doc_id,
@@ -1057,57 +929,15 @@ def team_draft_interleaving_eval(
     state); click minting and the summary run on the 10-row result.
     """
     from ..functions.sampling import md5_uniform
-    from ..functions.vectors import cosine_similarity, to_double_array
 
-    docs = load_table(spark, sf_dir, "documents")
-    terms = ["hash", "join", "stream"]
-    k1, b = 1.2, 0.75
-    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("doclen").alias("avgdl")
-    )
-    tf = (
-        toks.filter(F.col("tok").isin(terms))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    contrib = (
-        idf * (F.col("tf") * (k1 + 1.0))
-        / (F.col("tf") + k1 * (1 - b + b * F.col("doclen") / F.col("avgdl")))
-    )
-    scored = (
-        tf.join(F.broadcast(dfreq), "tok")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(contrib), 6).alias("bm25"))
-    )
+    scored = _bm25(spark, sf_dir)
     # bounded-metadata collects: the two top-30 candidate probes
     la = [
         r["doc_id"]
         for r in scored.orderBy(F.col("bm25").desc(), "doc_id")
         .limit(30).collect()
     ]
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("vec")
-    )
-    qvec = emb.filter(F.col("vec_id") == 0).select(F.col("vec").alias("qvec"))
-    vsim = (
-        emb.filter(F.col("vec_id") != 0)
-        .join(F.broadcast(qvec))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(
-                cosine_similarity(F.col("vec"), F.col("qvec")), 6
-            ).alias("sim"),
-        )
-    )
+    vsim = _query_cosine(spark, sf_dir)
     lb = [
         r["doc_id"]
         for r in vsim.orderBy(F.col("sim").desc(), "doc_id")

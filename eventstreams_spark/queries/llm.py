@@ -1082,7 +1082,8 @@ def ann_pq_recall_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     an m*k LUT — this is what makes billion-vector search a Spark
     aggregation instead of an index service.
     """
-    from ..operators.pq import pq_adc_topk, pq_encode, pq_train, _sq_dist
+    from ..functions.vectors import sq_dist
+    from ..operators.pq import pq_adc_topk, pq_encode, pq_train
 
     M, K = 8, 16
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -1095,7 +1096,7 @@ def ann_pq_recall_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = pq_adc_topk(codes, cb, qrow, "qvec", 5, M)
     exact = (
         corpus.crossJoin(F.broadcast(qrow))
-        .select("vec_id", _sq_dist(F.col("vec"), F.col("qvec")).alias("d"))
+        .select("vec_id", sq_dist(F.col("vec"), F.col("qvec")).alias("d"))
         .orderBy(F.col("d").asc(), F.col("vec_id").asc())
         .limit(5)
     )
@@ -1310,8 +1311,9 @@ def ann_ivfpq_recall_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors, candidate-only encoding, ADC LUT-sum top-50 shortlist,
     and the exact re-rank — recall/cost agree to the bit.
     """
+    from ..functions.vectors import sq_dist
     from ..operators.ivf import ivf_build, ivf_probe_ids, l2_normalize
-    from ..operators.pq import _sq_dist, pq_adc_topk, pq_encode, pq_train
+    from ..operators.pq import pq_adc_topk, pq_encode, pq_train
 
     M, K, N_CENT, N_PROBE = 8, 16, 8, 3
     # one metric everywhere: unit-normalize, then sq-L2 == cosine order
@@ -1340,13 +1342,13 @@ def ann_ivfpq_recall_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = (
         corpus.join(shortlist.select(F.col("vid").alias("vec_id")), "vec_id")
         .crossJoin(F.broadcast(qrow))
-        .select("vec_id", _sq_dist(F.col("vec"), F.col("qvec")).alias("d"))
+        .select("vec_id", sq_dist(F.col("vec"), F.col("qvec")).alias("d"))
         .orderBy(F.col("d").asc(), F.col("vec_id").asc())
         .limit(5)
     )
     exact = (
         corpus.crossJoin(F.broadcast(qrow))
-        .select("vec_id", _sq_dist(F.col("vec"), F.col("qvec")).alias("d"))
+        .select("vec_id", sq_dist(F.col("vec"), F.col("qvec")).alias("d"))
         .orderBy(F.col("d").asc(), F.col("vec_id").asc())
         .limit(5)
     )
@@ -2745,17 +2747,39 @@ def _build_suffix_array_lcp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return truncate_lineage(out, par)
 
 
-@query(
-    "suffix_array_doubling_gate",
-    category="L2-suffixarray",
-    oracle="""
-        WITH pos AS (
-            SELECT doc_id, CAST(t.off AS BIGINT) AS off,
+# Every suffix of every document, oracle side: pos (doc_id, lang, off,
+# suf) with suf the text from the 1-based offset off — the rows the
+# suffix-array oracles sort.
+_SUFFIXES_CTE = """pos AS (
+            SELECT doc_id, lang, CAST(t.off AS BIGINT) AS off,
                    substring(text, CAST(t.off AS INTEGER)) AS suf
             FROM documents,
                  LATERAL unnest(generate_series(1, length(text)))
                      AS t(off)
-        ), sa AS (
+        )"""
+
+
+def _lcp_sql(a: str, b: str) -> str:
+    """DuckDB BIGINT: the length of the longest common prefix of the
+    strings ``a`` and ``b``, the position of their first differing
+    character minus one. list_zip pads the shorter split with NULL,
+    which counts as a difference, so a proper prefix yields its own
+    length; equal strings differ nowhere and yield their length."""
+    first_diff = (
+        f"list_position(list_transform(list_zip(string_split({a}, ''),"
+        f" string_split({b}, '')), p -> coalesce(p[1] = p[2], false)), false)"
+    )
+    return (
+        f"CAST(coalesce(nullif({first_diff}, 0) - 1,"
+        f" least(length({a}), length({b}))) AS BIGINT)"
+    )
+
+
+@query(
+    "suffix_array_doubling_gate",
+    category="L2-suffixarray",
+    oracle=f"""
+        WITH {_SUFFIXES_CTE}, sa AS (
             SELECT doc_id, off, suf,
                    CAST(row_number() OVER w AS BIGINT) AS sa_idx,
                    lead(suf) OVER w AS nsuf
@@ -2764,19 +2788,7 @@ def _build_suffix_array_lcp(spark: SparkSession, sf_dir: str) -> DataFrame:
         ), lcps AS (
             SELECT sa_idx, doc_id, off, suf,
                    CASE WHEN nsuf IS NULL THEN CAST(0 AS BIGINT)
-                        WHEN coalesce(list_position(list_transform(
-                          list_zip(string_split(suf, ''),
-                                   string_split(nsuf, '')),
-                          p -> coalesce(p[1] = p[2], false)), false), 0)
-                          = 0
-                        THEN CAST(least(length(suf), length(nsuf))
-                                  AS BIGINT)
-                        ELSE CAST(list_position(list_transform(
-                          list_zip(string_split(suf, ''),
-                                   string_split(nsuf, '')),
-                          p -> coalesce(p[1] = p[2], false)), false) - 1
-                          AS BIGINT)
-                   END AS lcp_next
+                        ELSE {_lcp_sql("suf", "nsuf")} END AS lcp_next
             FROM sa
         ), stats AS (
             SELECT CAST(count(*) AS BIGINT) AS n_suffixes,
@@ -2860,14 +2872,8 @@ def suffix_array_doubling_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "exact_substring_dup_coverage",
     category="L2-suffixarray",
-    oracle="""
-        WITH pos AS (
-            SELECT doc_id, CAST(t.off AS BIGINT) AS off,
-                   substring(text, CAST(t.off AS INTEGER)) AS suf
-            FROM documents,
-                 LATERAL unnest(generate_series(1, length(text)))
-                     AS t(off)
-        ), sa AS (
+    oracle=f"""
+        WITH {_SUFFIXES_CTE}, sa AS (
             SELECT doc_id, off, suf,
                    lead(suf) OVER w AS nsuf
             FROM pos
@@ -2875,19 +2881,7 @@ def suffix_array_doubling_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ), lcps AS (
             SELECT doc_id, off, suf,
                    CASE WHEN nsuf IS NULL THEN CAST(0 AS BIGINT)
-                        WHEN coalesce(list_position(list_transform(
-                          list_zip(string_split(suf, ''),
-                                   string_split(nsuf, '')),
-                          p -> coalesce(p[1] = p[2], false)), false), 0)
-                          = 0
-                        THEN CAST(least(length(suf), length(nsuf))
-                                  AS BIGINT)
-                        ELSE CAST(list_position(list_transform(
-                          list_zip(string_split(suf, ''),
-                                   string_split(nsuf, '')),
-                          p -> coalesce(p[1] = p[2], false)), false) - 1
-                          AS BIGINT)
-                   END AS lcp_next
+                        ELSE {_lcp_sql("suf", "nsuf")} END AS lcp_next
             FROM sa
         ), marked AS (
             -- max LCP of a suffix with ANY other suffix = max of the
@@ -3463,14 +3457,8 @@ def fm_index_backward_search(
 @query(
     "lcp_interval_tree_nodes",
     category="L2-suffixarray",
-    oracle="""
-        WITH pos AS (
-            SELECT doc_id, CAST(t.off AS BIGINT) AS off,
-                   substring(text, CAST(t.off AS INTEGER)) AS suf
-            FROM documents,
-                 LATERAL unnest(generate_series(1, length(text)))
-                     AS t(off)
-        ), sa AS (
+    oracle=f"""
+        WITH {_SUFFIXES_CTE}, sa AS (
             SELECT suf,
                    row_number() OVER (ORDER BY suf, doc_id, off) AS s,
                    lead(suf) OVER (ORDER BY suf, doc_id, off) AS nsuf
@@ -3478,19 +3466,7 @@ def fm_index_backward_search(
         ), lcps AS (
             SELECT s, suf,
                    CASE WHEN nsuf IS NULL THEN 0
-                        WHEN coalesce(list_position(list_transform(
-                          list_zip(string_split(suf, ''),
-                                   string_split(nsuf, '')),
-                          p -> coalesce(p[1] = p[2], false)), false), 0)
-                          = 0
-                        THEN CAST(least(length(suf), length(nsuf))
-                                  AS BIGINT)
-                        ELSE CAST(list_position(list_transform(
-                          list_zip(string_split(suf, ''),
-                                   string_split(nsuf, '')),
-                          p -> coalesce(p[1] = p[2], false)), false) - 1
-                          AS BIGINT)
-                   END AS lcp
+                        ELSE {_lcp_sql("suf", "nsuf")} END AS lcp
             FROM sa
         ), el AS (
             SELECT s, lcp FROM lcps WHERE lcp >= 12
@@ -3595,14 +3571,8 @@ def lcp_interval_tree_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     "repeat_family_census",
     category="L2-suffixarray",
     variant_of="lcp_interval_tree_nodes",
-    oracle="""
-        WITH pos AS (
-            SELECT doc_id, CAST(t.off AS BIGINT) AS off,
-                   substring(text, CAST(t.off AS INTEGER)) AS suf
-            FROM documents,
-                 LATERAL unnest(generate_series(1, length(text)))
-                     AS t(off)
-        ), eligible AS (
+    oracle=f"""
+        WITH {_SUFFIXES_CTE}, eligible AS (
             SELECT doc_id, off, suf,
                    substring(suf, 1, 20) AS fingerprint20
             FROM pos WHERE length(suf) >= 20
@@ -3614,19 +3584,7 @@ def lcp_interval_tree_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ), lcps AS (
             SELECT fingerprint20, doc_id,
                    CASE WHEN nsuf IS NULL THEN NULL
-                        WHEN coalesce(list_position(list_transform(
-                          list_zip(string_split(suf, ''),
-                                   string_split(nsuf, '')),
-                          p -> coalesce(p[1] = p[2], false)), false), 0)
-                          = 0
-                        THEN CAST(least(length(suf), length(nsuf))
-                                  AS BIGINT)
-                        ELSE CAST(list_position(list_transform(
-                          list_zip(string_split(suf, ''),
-                                   string_split(nsuf, '')),
-                          p -> coalesce(p[1] = p[2], false)), false) - 1
-                          AS BIGINT)
-                   END AS lcp_in
+                        ELSE {_lcp_sql("suf", "nsuf")} END AS lcp_in
             FROM adj
         ), fams AS (
             SELECT fingerprint20,
@@ -3855,14 +3813,8 @@ def allpairs_prefix_filter_join(
 @query(
     "cross_group_lcs_via_gsa",
     category="L2-suffixarray",
-    oracle="""
-        WITH pos AS (
-            SELECT d.doc_id, d.lang, CAST(t.off AS BIGINT) AS off,
-                   substring(d.text, CAST(t.off AS INTEGER)) AS suf
-            FROM documents d,
-                 LATERAL unnest(generate_series(1, length(d.text)))
-                     AS t(off)
-        ), sa AS (
+    oracle=f"""
+        WITH {_SUFFIXES_CTE}, sa AS (
             SELECT doc_id, lang, off, suf,
                    row_number() OVER (ORDER BY suf, doc_id, off) AS s,
                    lead(suf) OVER (ORDER BY suf, doc_id, off) AS nsuf,
@@ -3873,19 +3825,7 @@ def allpairs_prefix_filter_join(
         ), lcps AS (
             SELECT s, doc_id, lang, doc_b, lang_b, suf,
                    CASE WHEN nsuf IS NULL THEN 0
-                        WHEN coalesce(list_position(list_transform(
-                          list_zip(string_split(suf, ''),
-                                   string_split(nsuf, '')),
-                          p -> coalesce(p[1] = p[2], false)), false), 0)
-                          = 0
-                        THEN CAST(least(length(suf), length(nsuf))
-                                  AS BIGINT)
-                        ELSE CAST(list_position(list_transform(
-                          list_zip(string_split(suf, ''),
-                                   string_split(nsuf, '')),
-                          p -> coalesce(p[1] = p[2], false)), false) - 1
-                          AS BIGINT)
-                   END AS lcp
+                        ELSE {_lcp_sql("suf", "nsuf")} END AS lcp
             FROM sa
         )
         SELECT s AS sa_idx, CAST(lcp AS BIGINT) AS lcs_len,

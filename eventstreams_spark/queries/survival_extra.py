@@ -15,7 +15,7 @@ the same pinned way.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -218,43 +218,150 @@ def kaplan_meier_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("day")
 
 
-@query(
-    "logrank_two_group_test",
-    category="SV-logrank",
-    oracle=f"""
-        WITH {_LIFE_CTE}, grouped AS (
-            SELECT user_id, dur, died,
+# The md5 A/B experiment arm of each subject: 'A' when the first hex
+# digit of md5(user_id) is even. _arms is the Spark side.
+_ARMS_CTE = """grouped AS (
+            SELECT *,
                    CASE WHEN (instr('0123456789abcdef',
                                     substr(md5(cast(user_id AS VARCHAR)),
                                            1, 1)) - 1) % 2 = 0
                         THEN 'A' ELSE 'B' END AS grp
             FROM subj
-        ), at_t AS (
-            SELECT dur AS t,
+        )"""
+
+
+def _arms(subj: DataFrame) -> DataFrame:
+    """``subj`` plus its md5 A/B arm grp (_ARMS_CTE)."""
+    nibble = F.expr(
+        "instr('0123456789abcdef', substr(md5(cast(user_id AS STRING)), 1, 1)) - 1"
+    )
+    return subj.withColumn("grp", F.when(nibble % 2 == 0, "A").otherwise("B"))
+
+
+def _arm_risk_sql(by: str = "") -> str:
+    """The at_t and risk CTEs over ``grouped``: the oracle side of
+    _arm_risk, within each value of the key column ``by`` if given."""
+    keys = f"{by}, " if by else ""
+    part = f"PARTITION BY {by} " if by else ""
+    return f"""at_t AS (
+            SELECT {keys}dur AS t,
                    CAST(sum(died) AS BIGINT) AS d_t,
                    CAST(sum(CASE WHEN grp = 'A' THEN died ELSE 0 END)
                         AS BIGINT) AS d_at,
                    CAST(count(*) AS BIGINT) AS leave_t,
                    CAST(sum(CASE WHEN grp = 'A' THEN 1 ELSE 0 END)
                         AS BIGINT) AS leave_at
-            FROM grouped GROUP BY dur
+            FROM grouped GROUP BY {keys}dur
         ), risk AS (
-            SELECT t, d_t, d_at,
+            SELECT {keys}t, d_t, d_at,
                    CAST(sum(leave_t) OVER w AS BIGINT) AS n_t,
                    CAST(sum(leave_at) OVER w AS BIGINT) AS n_at
             FROM at_t
-            WINDOW w AS (ORDER BY t
+            WINDOW w AS ({part}ORDER BY t
                          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-        ), terms AS (
-            SELECT t, d_t, d_at, n_t, n_at,
+        )"""
+
+
+def _arm_risk(arms: DataFrame, *by: str) -> DataFrame:
+    """The two-arm risk table of _arms per distinct duration t (within
+    each ``by`` key): deaths d_t, arm-A deaths d_at, and the risk sets
+    n_t / n_at as suffix sums of leavers at durations >= t — exact
+    integers on the bounded distinct-duration frame."""
+    at_t = arms.groupBy(*by, F.col("dur").alias("t")).agg(
+        F.sum("died").cast("long").alias("d_t"),
+        F.sum(F.when(F.col("grp") == "A", F.col("died")).otherwise(0))
+        .cast("long").alias("d_at"),
+        F.count(F.lit(1)).cast("long").alias("leave_t"),
+        F.sum(F.when(F.col("grp") == "A", 1).otherwise(0))
+        .cast("long").alias("leave_at"),
+    )
+    w_suf = (
+        Window.partitionBy(*by)
+        .orderBy("t")
+        .rowsBetween(0, Window.unboundedFollowing)
+    )
+    return at_t.select(
+        *by, "t", "d_t", "d_at",
+        F.sum("leave_t").over(w_suf).cast("long").alias("n_t"),
+        F.sum("leave_at").over(w_suf).cast("long").alias("n_at"),
+    )
+
+
+def _logrank_terms_sql(by: str = "") -> str:
+    """The terms CTE over ``risk``: the oracle side of _logrank_terms."""
+    keys = f"{by}, " if by else ""
+    return f"""terms AS (
+            SELECT {keys}t, d_t, d_at, n_t, n_at,
                    CAST(d_t AS DOUBLE) * n_at / n_t AS e_at,
-                   CASE WHEN n_t > 1 THEN
-                       CAST(d_t AS DOUBLE) * (CAST(n_at AS DOUBLE) / n_t)
+                   {_hypergeom_var_sql("CAST(d_t AS DOUBLE)")} AS v_t
+            FROM risk WHERE d_t > 0
+        )"""
+
+
+def _logrank_terms(risk: DataFrame, *by: str) -> DataFrame:
+    """Per death time of _arm_risk: arm A's hypergeometric expected
+    deaths e_at = d·n_A/n and variance v_t = d(n_A/n)(1 − n_A/n)(n −
+    d)/(n − 1)."""
+    return risk.filter(F.col("d_t") > 0).select(
+        *by, "t", "d_t", "d_at", "n_t", "n_at",
+        (F.col("d_t").cast("double") * F.col("n_at") / F.col("n_t"))
+        .alias("e_at"),
+        _hypergeom_var(F.col("d_t").cast("double")).alias("v_t"),
+    )
+
+
+def _hypergeom_var_sql(lead: str) -> str:
+    """The oracle side of _hypergeom_var."""
+    return f"""CASE WHEN n_t > 1 THEN
+                       {lead} * (CAST(n_at AS DOUBLE) / n_t)
                        * (1.0 - CAST(n_at AS DOUBLE) / n_t)
                        * (n_t - d_t) / (n_t - 1)
-                   ELSE 0.0 END AS v_t
-            FROM risk WHERE d_t > 0
-        ), folded AS (
+                   ELSE 0.0 END"""
+
+
+def _hypergeom_var(lead: Column) -> Column:
+    """``lead``·(n_A/n)(1 − n_A/n)(n − d)/(n − 1), 0 at n = 1: with
+    lead = d, the hypergeometric variance of arm A's deaths at one
+    death time; a weighted test puts its weight into ``lead``."""
+    return F.when(
+        F.col("n_t") > 1,
+        lead
+        * (F.col("n_at").cast("double") / F.col("n_t"))
+        * (1.0 - F.col("n_at").cast("double") / F.col("n_t"))
+        * (F.col("n_t") - F.col("d_t"))
+        / (F.col("n_t") - 1),
+    ).otherwise(0.0)
+
+
+# The log-rank verdict read off the running sums o_a (observed arm-A
+# deaths), e_a (expected) and v (variance) at the last death time:
+# χ² = (O − E)²/V against the 5% critical value of χ²(1).
+_LOGRANK_VERDICT_SQL = """CAST(o_a AS DOUBLE) AS observed_a,
+               CAST(round(e_a, 6) AS DOUBLE) AS expected_a,
+               CAST(round((o_a - e_a) * (o_a - e_a) / v, 6) AS DOUBLE)
+                   AS chi2,
+               ((o_a - e_a) * (o_a - e_a) > 3.841459 * v) AS reject_5pct"""
+
+
+def _logrank_verdict(folded: DataFrame, *keep: str) -> DataFrame:
+    """_LOGRANK_VERDICT_SQL on the rdesc = 1 row of ``folded``, after
+    its ``keep`` columns."""
+    diff = F.col("o_a") - F.col("e_a")
+    return folded.filter(F.col("rdesc") == 1).select(
+        *keep,
+        F.col("o_a").cast("double").alias("observed_a"),
+        F.round("e_a", 6).alias("expected_a"),
+        F.round(diff * diff / F.col("v"), 6).alias("chi2"),
+        (diff * diff > 3.841459 * F.col("v")).alias("reject_5pct"),
+    )
+
+
+@query(
+    "logrank_two_group_test",
+    category="SV-logrank",
+    oracle=f"""
+        WITH {_LIFE_CTE}, {_ARMS_CTE}, {_arm_risk_sql()},
+             {_logrank_terms_sql()}, folded AS (
             SELECT t,
                    sum(CAST(d_at AS DOUBLE)) OVER w2 AS o_a,
                    sum(e_at) OVER w2 AS e_a,
@@ -263,11 +370,7 @@ def kaplan_meier_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM terms
             WINDOW w2 AS (ORDER BY t)
         )
-        SELECT CAST(o_a AS DOUBLE) AS observed_a,
-               CAST(round(e_a, 6) AS DOUBLE) AS expected_a,
-               CAST(round((o_a - e_a) * (o_a - e_a) / v, 6) AS DOUBLE)
-                   AS chi2,
-               ((o_a - e_a) * (o_a - e_a) > 3.841459 * v) AS reject_5pct
+        SELECT {_LOGRANK_VERDICT_SQL}
         FROM folded WHERE rdesc = 1
     """,
 )
@@ -290,45 +393,8 @@ def logrank_two_group_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to kaplan_meier_survival — one sessionize
     pass, then bounded-frame algebra; output is one row.
     """
-    grouped = _subjects(spark, sf_dir).select(
-        "user_id", "dur", "died",
-        F.when(
-            F.expr(
-                "(instr('0123456789abcdef',"
-                " substr(md5(cast(user_id AS STRING)), 1, 1)) - 1) % 2"
-            )
-            == 0,
-            "A",
-        ).otherwise("B").alias("grp"),
-    )
-    at_t = grouped.groupBy(F.col("dur").alias("t")).agg(
-        F.sum("died").cast("long").alias("d_t"),
-        F.sum(F.when(F.col("grp") == "A", F.col("died")).otherwise(0))
-        .cast("long").alias("d_at"),
-        F.count(F.lit(1)).cast("long").alias("leave_t"),
-        F.sum(F.when(F.col("grp") == "A", 1).otherwise(0))
-        .cast("long").alias("leave_at"),
-    )
-    w_suf = Window.orderBy("t").rowsBetween(0, Window.unboundedFollowing)
-    risk = at_t.select(
-        "t", "d_t", "d_at",
-        F.sum("leave_t").over(w_suf).cast("long").alias("n_t"),
-        F.sum("leave_at").over(w_suf).cast("long").alias("n_at"),
-    )
-    terms = risk.filter(F.col("d_t") > 0).select(
-        "t", "d_t", "d_at", "n_t", "n_at",
-        (F.col("d_t").cast("double") * F.col("n_at") / F.col("n_t")).alias(
-            "e_at"
-        ),
-        F.when(
-            F.col("n_t") > 1,
-            F.col("d_t").cast("double")
-            * (F.col("n_at").cast("double") / F.col("n_t"))
-            * (1.0 - F.col("n_at").cast("double") / F.col("n_t"))
-            * (F.col("n_t") - F.col("d_t"))
-            / (F.col("n_t") - 1),
-        ).otherwise(0.0).alias("v_t"),
-    )
+    risk = _arm_risk(_arms(_subjects(spark, sf_dir)))
+    terms = _logrank_terms(risk)
     w_cum = Window.orderBy("t")
     w_desc = Window.orderBy(F.desc("t"))
     folded = terms.select(
@@ -338,27 +404,14 @@ def logrank_two_group_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("v_t").over(w_cum).alias("v"),
         F.row_number().over(w_desc).alias("rdesc"),
     )
-    diff = F.col("o_a") - F.col("e_a")
-    return folded.filter(F.col("rdesc") == 1).select(
-        F.col("o_a").cast("double").alias("observed_a"),
-        F.round("e_a", 6).alias("expected_a"),
-        F.round(diff * diff / F.col("v"), 6).alias("chi2"),
-        (diff * diff > 3.841459 * F.col("v")).alias("reject_5pct"),
-    )
+    return _logrank_verdict(folded)
 
 
 @query(
     "kaplan_meier_by_group",
     category="SV-kmgroup",
     oracle=f"""
-        WITH {_LIFE_CTE}, grouped AS (
-            SELECT user_id, dur, died,
-                   CASE WHEN (instr('0123456789abcdef',
-                                    substr(md5(cast(user_id AS VARCHAR)),
-                                           1, 1)) - 1) % 2 = 0
-                        THEN 'A' ELSE 'B' END AS grp
-            FROM subj
-        ), at_t AS (
+        WITH {_LIFE_CTE}, {_ARMS_CTE}, at_t AS (
             SELECT grp, dur AS t,
                    CAST(sum(died) AS BIGINT) AS d_t,
                    CAST(count(*) AS BIGINT) AS leave_t
@@ -401,17 +454,7 @@ def kaplan_meier_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-frame algebra parallelizes across groups — the same move
     that segment- or cohort-scopes any survival analysis.
     """
-    grouped = _subjects(spark, sf_dir).select(
-        "user_id", "dur", "died",
-        F.when(
-            F.expr(
-                "(instr('0123456789abcdef',"
-                " substr(md5(cast(user_id AS STRING)), 1, 1)) - 1) % 2"
-            )
-            == 0,
-            "A",
-        ).otherwise("B").alias("grp"),
-    )
+    grouped = _arms(_subjects(spark, sf_dir))
     at_t = grouped.groupBy("grp", F.col("dur").alias("t")).agg(
         F.sum("died").cast("long").alias("d_t"),
         F.count(F.lit(1)).cast("long").alias("leave_t"),
@@ -544,39 +587,8 @@ def nelson_aalen_cumulative_hazard(
     "logrank_stratified_test",
     category="SV-logrank-strat",
     oracle=f"""
-        WITH {_LIFE_STRAT_CTE}, grouped AS (
-            SELECT stratum, dur, died,
-                   CASE WHEN (instr('0123456789abcdef',
-                                    substr(md5(cast(user_id AS VARCHAR)),
-                                           1, 1)) - 1) % 2 = 0
-                        THEN 'A' ELSE 'B' END AS grp
-            FROM subj
-        ), at_t AS (
-            SELECT stratum, dur AS t,
-                   CAST(sum(died) AS BIGINT) AS d_t,
-                   CAST(sum(CASE WHEN grp = 'A' THEN died ELSE 0 END)
-                        AS BIGINT) AS d_at,
-                   CAST(count(*) AS BIGINT) AS leave_t,
-                   CAST(sum(CASE WHEN grp = 'A' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS leave_at
-            FROM grouped GROUP BY stratum, dur
-        ), risk AS (
-            SELECT stratum, t, d_t, d_at,
-                   CAST(sum(leave_t) OVER w AS BIGINT) AS n_t,
-                   CAST(sum(leave_at) OVER w AS BIGINT) AS n_at
-            FROM at_t
-            WINDOW w AS (PARTITION BY stratum ORDER BY t
-                         ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-        ), terms AS (
-            SELECT stratum, t, d_t, d_at, n_t, n_at,
-                   CAST(d_t AS DOUBLE) * n_at / n_t AS e_at,
-                   CASE WHEN n_t > 1 THEN
-                       CAST(d_t AS DOUBLE) * (CAST(n_at AS DOUBLE) / n_t)
-                       * (1.0 - CAST(n_at AS DOUBLE) / n_t)
-                       * (n_t - d_t) / (n_t - 1)
-                   ELSE 0.0 END AS v_t
-            FROM risk WHERE d_t > 0
-        ), folded AS (
+        WITH {_LIFE_STRAT_CTE}, {_ARMS_CTE}, {_arm_risk_sql("stratum")},
+             {_logrank_terms_sql("stratum")}, folded AS (
             SELECT sum(CAST(d_at AS DOUBLE)) OVER w2 AS o_a,
                    sum(e_at) OVER w2 AS e_a,
                    sum(v_t) OVER w2 AS v,
@@ -590,12 +602,7 @@ def nelson_aalen_cumulative_hazard(
             FROM terms
             WINDOW w2 AS (ORDER BY stratum, t)
         )
-        SELECT n_strata,
-               CAST(o_a AS DOUBLE) AS observed_a,
-               CAST(round(e_a, 6) AS DOUBLE) AS expected_a,
-               CAST(round((o_a - e_a) * (o_a - e_a) / v, 6) AS DOUBLE)
-                   AS chi2,
-               ((o_a - e_a) * (o_a - e_a) > 3.841459 * v) AS reject_5pct
+        SELECT n_strata, {_LOGRANK_VERDICT_SQL}
         FROM folded WHERE rdesc = 1
     """,
 )
@@ -621,48 +628,10 @@ def logrank_stratified_test(
     bounded-frame algebra parallelizes across strata; adding strata
     adds partitions, not passes. One sessionize shuffle total.
     """
-    grouped = _subjects(spark, sf_dir, with_stratum=True).select(
-        "stratum", "dur", "died",
-        F.when(
-            F.expr(
-                "(instr('0123456789abcdef',"
-                " substr(md5(cast(user_id AS STRING)), 1, 1)) - 1) % 2"
-            )
-            == 0,
-            "A",
-        ).otherwise("B").alias("grp"),
+    risk = _arm_risk(
+        _arms(_subjects(spark, sf_dir, with_stratum=True)), "stratum"
     )
-    at_t = grouped.groupBy("stratum", F.col("dur").alias("t")).agg(
-        F.sum("died").cast("long").alias("d_t"),
-        F.sum(F.when(F.col("grp") == "A", F.col("died")).otherwise(0))
-        .cast("long").alias("d_at"),
-        F.count(F.lit(1)).cast("long").alias("leave_t"),
-        F.sum(F.when(F.col("grp") == "A", 1).otherwise(0))
-        .cast("long").alias("leave_at"),
-    )
-    w_suf = (
-        Window.partitionBy("stratum")
-        .orderBy("t")
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    risk = at_t.select(
-        "stratum", "t", "d_t", "d_at",
-        F.sum("leave_t").over(w_suf).cast("long").alias("n_t"),
-        F.sum("leave_at").over(w_suf).cast("long").alias("n_at"),
-    )
-    terms = risk.filter(F.col("d_t") > 0).select(
-        "stratum", "t", "d_t", "d_at", "n_t", "n_at",
-        (F.col("d_t").cast("double") * F.col("n_at") / F.col("n_t"))
-        .alias("e_at"),
-        F.when(
-            F.col("n_t") > 1,
-            F.col("d_t").cast("double")
-            * (F.col("n_at").cast("double") / F.col("n_t"))
-            * (1.0 - F.col("n_at").cast("double") / F.col("n_t"))
-            * (F.col("n_t") - F.col("d_t"))
-            / (F.col("n_t") - 1),
-        ).otherwise(0.0).alias("v_t"),
-    )
+    terms = _logrank_terms(risk, "stratum")
     w_cum = Window.orderBy("stratum", "t")
     w_desc = Window.orderBy(F.desc("stratum"), F.desc("t"))
     # the rdesc=1 row carries the DESC-max stratum, so its ascending
@@ -676,43 +645,14 @@ def logrank_stratified_test(
         F.dense_rank().over(Window.orderBy("stratum"))
         .cast("long").alias("n_strata"),
     )
-    diff = F.col("o_a") - F.col("e_a")
-    return folded.filter(F.col("rdesc") == 1).select(
-        "n_strata",
-        F.col("o_a").cast("double").alias("observed_a"),
-        F.round("e_a", 6).alias("expected_a"),
-        F.round(diff * diff / F.col("v"), 6).alias("chi2"),
-        (diff * diff > 3.841459 * F.col("v")).alias("reject_5pct"),
-    )
+    return _logrank_verdict(folded, "n_strata")
 
 
 @query(
     "cox_proportional_hazards",
     category="SV-cox",
     oracle=f"""
-        WITH {_LIFE_CTE}, grouped AS (
-            SELECT user_id, dur, died,
-                   CASE WHEN (instr('0123456789abcdef',
-                                    substr(md5(cast(user_id AS VARCHAR)),
-                                           1, 1)) - 1) % 2 = 0
-                        THEN 1 ELSE 0 END AS x
-            FROM subj
-        ), at_t AS (
-            SELECT dur AS t,
-                   CAST(sum(died) AS BIGINT) AS d_t,
-                   CAST(sum(CASE WHEN x = 1 THEN died ELSE 0 END)
-                        AS BIGINT) AS d_at,
-                   CAST(count(*) AS BIGINT) AS leave_t,
-                   CAST(sum(x) AS BIGINT) AS leave_at
-            FROM grouped GROUP BY dur
-        ), risk AS (
-            SELECT t, d_t, d_at,
-                   CAST(sum(leave_t) OVER w AS BIGINT) AS n_t,
-                   CAST(sum(leave_at) OVER w AS BIGINT) AS n_at
-            FROM at_t
-            WINDOW w AS (ORDER BY t
-                         ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-        ), times AS (
+        WITH {_LIFE_CTE}, {_ARMS_CTE}, {_arm_risk_sql()}, times AS (
             SELECT t, d_t, d_at, n_at, n_t - n_at AS n_bt,
                    CAST(row_number() OVER (ORDER BY t) AS BIGINT) AS idx,
                    CAST(count(*) OVER () AS BIGINT) AS n_times
@@ -793,30 +733,7 @@ def cox_proportional_hazards(
     """
     import math
 
-    grouped = _subjects(spark, sf_dir).select(
-        "dur", "died",
-        F.when(
-            F.expr(
-                "(instr('0123456789abcdef',"
-                " substr(md5(cast(user_id AS STRING)), 1, 1)) - 1) % 2"
-            )
-            == 0,
-            1,
-        ).otherwise(0).alias("x"),
-    )
-    at_t = grouped.groupBy(F.col("dur").alias("t")).agg(
-        F.sum("died").cast("long").alias("d_t"),
-        F.sum(F.when(F.col("x") == 1, F.col("died")).otherwise(0))
-        .cast("long").alias("d_at"),
-        F.count(F.lit(1)).cast("long").alias("leave_t"),
-        F.sum("x").cast("long").alias("leave_at"),
-    )
-    w_suf = Window.orderBy("t").rowsBetween(0, Window.unboundedFollowing)
-    risk = at_t.select(
-        "t", "d_t", "d_at",
-        F.sum("leave_t").over(w_suf).cast("long").alias("n_t"),
-        F.sum("leave_at").over(w_suf).cast("long").alias("n_at"),
-    )
+    risk = _arm_risk(_arms(_subjects(spark, sf_dir)))
     # bounded metadata collect (|distinct death minutes| rows), sorted
     # by t so the Newton accumulation order is pinned on both engines
     rows = (
@@ -1103,30 +1020,7 @@ def aalen_johansen_competing_risks(
     "logrank_peto_weighted_test",
     category="SV-logrank-fh",
     oracle=f"""
-        WITH {_LIFE_CTE}, grouped AS (
-            SELECT user_id, dur, died,
-                   CASE WHEN (instr('0123456789abcdef',
-                                    substr(md5(cast(user_id AS VARCHAR)),
-                                           1, 1)) - 1) % 2 = 0
-                        THEN 'A' ELSE 'B' END AS grp
-            FROM subj
-        ), at_t AS (
-            SELECT dur AS t,
-                   CAST(sum(died) AS BIGINT) AS d_t,
-                   CAST(sum(CASE WHEN grp = 'A' THEN died ELSE 0 END)
-                        AS BIGINT) AS d_at,
-                   CAST(count(*) AS BIGINT) AS leave_t,
-                   CAST(sum(CASE WHEN grp = 'A' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS leave_at
-            FROM grouped GROUP BY dur
-        ), risk AS (
-            SELECT t, d_t, d_at,
-                   CAST(sum(leave_t) OVER w AS BIGINT) AS n_t,
-                   CAST(sum(leave_at) OVER w AS BIGINT) AS n_at
-            FROM at_t
-            WINDOW w AS (ORDER BY t
-                         ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-        ), lns AS (
+        WITH {_LIFE_CTE}, {_ARMS_CTE}, {_arm_risk_sql()}, lns AS (
             SELECT t, d_t, d_at, n_t, n_at,
                    sum(CASE WHEN d_t > 0 AND d_t < n_t
                             THEN ln(1.0 - CAST(d_t AS DOUBLE) / n_t)
@@ -1142,12 +1036,8 @@ def aalen_johansen_competing_risks(
             SELECT t, w_t,
                    w_t * (CAST(d_at AS DOUBLE)
                           - CAST(d_t AS DOUBLE) * n_at / n_t) AS ome,
-                   CASE WHEN n_t > 1 THEN
-                       w_t * w_t * CAST(d_t AS DOUBLE)
-                       * (CAST(n_at AS DOUBLE) / n_t)
-                       * (1.0 - CAST(n_at AS DOUBLE) / n_t)
-                       * (n_t - d_t) / (n_t - 1)
-                   ELSE 0.0 END AS v_t
+                   {_hypergeom_var_sql("w_t * w_t * CAST(d_t AS DOUBLE)")}
+                       AS v_t
             FROM surv WHERE d_t > 0
         ), folded AS (
             SELECT sum(ome) OVER w2 AS z_num,
@@ -1183,31 +1073,7 @@ def logrank_peto_weighted_test(
     Scale: identical to logrank_two_group_test — one sessionize
     shuffle, bounded distinct-duration algebra, one output row.
     """
-    grouped = _subjects(spark, sf_dir).select(
-        "user_id", "dur", "died",
-        F.when(
-            F.expr(
-                "(instr('0123456789abcdef',"
-                " substr(md5(cast(user_id AS STRING)), 1, 1)) - 1) % 2"
-            )
-            == 0,
-            "A",
-        ).otherwise("B").alias("grp"),
-    )
-    at_t = grouped.groupBy(F.col("dur").alias("t")).agg(
-        F.sum("died").cast("long").alias("d_t"),
-        F.sum(F.when(F.col("grp") == "A", F.col("died")).otherwise(0))
-        .cast("long").alias("d_at"),
-        F.count(F.lit(1)).cast("long").alias("leave_t"),
-        F.sum(F.when(F.col("grp") == "A", 1).otherwise(0))
-        .cast("long").alias("leave_at"),
-    )
-    w_suf = Window.orderBy("t").rowsBetween(0, Window.unboundedFollowing)
-    risk = at_t.select(
-        "t", "d_t", "d_at",
-        F.sum("leave_t").over(w_suf).cast("long").alias("n_t"),
-        F.sum("leave_at").over(w_suf).cast("long").alias("n_at"),
-    )
+    risk = _arm_risk(_arms(_subjects(spark, sf_dir)))
     w_cum = Window.orderBy("t")
     lns = risk.select(
         "t", "d_t", "d_at", "n_t", "n_at",
@@ -1234,15 +1100,9 @@ def logrank_peto_weighted_test(
                 * F.col("n_at") / F.col("n_t")
             )
         ).alias("ome"),
-        F.when(
-            F.col("n_t") > 1,
-            F.col("w_t") * F.col("w_t")
-            * F.col("d_t").cast("double")
-            * (F.col("n_at").cast("double") / F.col("n_t"))
-            * (1.0 - F.col("n_at").cast("double") / F.col("n_t"))
-            * (F.col("n_t") - F.col("d_t"))
-            / (F.col("n_t") - 1),
-        ).otherwise(0.0).alias("v_t"),
+        _hypergeom_var(
+            F.col("w_t") * F.col("w_t") * F.col("d_t").cast("double")
+        ).alias("v_t"),
     )
     w_desc = Window.orderBy(F.desc("t"))
     folded = terms.select(

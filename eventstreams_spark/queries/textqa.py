@@ -263,16 +263,42 @@ def doc_fingerprint_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- n-gram Jaccard verify
 
+def _dup_corpus_sql(*prefixes: str) -> str:
+    """The corpus CTE of the near-dup queries: _dup_corpus's oracle
+    side."""
+    dups = "".join(
+        f"""
+            UNION ALL
+            SELECT doc_id + {k * 1000000}, concat('{prefix}', text)
+            FROM documents WHERE doc_id % 50 = 0"""
+        for k, prefix in enumerate(prefixes, 1)
+    )
+    return f"""corpus AS (
+            SELECT doc_id AS id, text FROM documents{dups}
+        )"""
+
+
+def _dup_corpus(docs: DataFrame, *prefixes: str) -> DataFrame:
+    """The documents as (id, text) plus one injected dup generation
+    per prefix: generation k copies every 50th doc with id doc_id +
+    k·1000000 and the k-th prefix in front of its text."""
+    corpus = docs.select(F.col("doc_id").alias("id"), "text")
+    base50 = docs.filter(F.col("doc_id") % 50 == 0)
+    for k, prefix in enumerate(prefixes, 1):
+        corpus = corpus.unionAll(
+            base50.select(
+                (F.col("doc_id") + k * 1000000).alias("id"),
+                F.concat(F.lit(prefix), F.col("text")).alias("text"),
+            )
+        )
+    return corpus
+
+
 @query(
     "neardup_ngram_jaccard",
     category="L2",
     oracle=f"""
-        WITH corpus AS (
-            SELECT doc_id AS id, text FROM documents
-            UNION ALL
-            SELECT doc_id + 1000000, concat('dup prefix ', text)
-            FROM documents WHERE doc_id % 50 = 0
-        ), t AS (
+        WITH {_dup_corpus_sql("dup prefix ")}, t AS (
             SELECT id, {_DUCK_TOKENS.replace("lower(text)", "lower(text)")} AS ws FROM corpus
         ), s AS (
             SELECT id, list_distinct({_DUCK_SHINGLES3}) AS sh FROM t
@@ -303,12 +329,7 @@ def neardup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     size computed as |A|+|B|-|A∩B| to evaluate the intersection once.
     """
     docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.select(F.col("doc_id").alias("id"), "text").unionAll(
-        docs.filter(F.col("doc_id") % 50 == 0).select(
-            (F.col("doc_id") + 1000000).alias("id"),
-            F.concat(F.lit("dup prefix "), F.col("text")).alias("text"),
-        )
-    )
+    corpus = _dup_corpus(docs, "dup prefix ")
     s = corpus.select(
         "id", F.array_distinct(shingles3(tokens_col(F.col("text")))).alias("sh")
     )
@@ -411,12 +432,7 @@ def _duck_hex6_to_int(h: str) -> str:
     "simhash_hamming_pairs",
     category="L2",
     oracle=f"""
-        WITH corpus AS (
-            SELECT doc_id AS id, text FROM documents
-            UNION ALL
-            SELECT doc_id + 1000000, concat('dup prefix ', text)
-            FROM documents WHERE doc_id % 50 = 0
-        ), tok AS (
+        WITH {_dup_corpus_sql("dup prefix ")}, tok AS (
             SELECT id, {_duck_hex6_to_int("substr(md5(t), 1, 6)")} AS th
             FROM corpus, unnest({_DUCK_TOKENS}) AS u(t)
         ), sig AS (
@@ -444,12 +460,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     band the signature (e.g. 4×6-bit keys) exactly like MinHash-LSH.
     """
     docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.select(F.col("doc_id").alias("id"), "text").unionAll(
-        docs.filter(F.col("doc_id") % 50 == 0).select(
-            (F.col("doc_id") + 1000000).alias("id"),
-            F.concat(F.lit("dup prefix "), F.col("text")).alias("text"),
-        )
-    )
+    corpus = _dup_corpus(docs, "dup prefix ")
     tok = corpus.select("id", F.explode(tokens_col(F.col("text"))).alias("t")).select(
         "id",
         F.conv(F.substring(F.md5(F.col("t").cast("binary")), 1, 6), 16, 10)
@@ -606,19 +617,13 @@ def redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- near-dup cluster assembly
 
-@query(
-    "neardup_cluster_cc",
-    category="L2-cc",
-    oracle=f"""
-        WITH RECURSIVE corpus AS (
-            SELECT doc_id AS id, text FROM documents
-            UNION ALL
-            SELECT doc_id + 1000000, concat('dup prefix ', text)
-            FROM documents WHERE doc_id % 50 = 0
-            UNION ALL
-            SELECT doc_id + 2000000, concat('dup prefix v2 ', text)
-            FROM documents WHERE doc_id % 50 = 0
-        ), t AS (
+# The near-dup cluster chain, oracle side (_neardup_clusters is the
+# Spark side): the corpus with two injected dup generations, 3-gram
+# shingle sets, the candidate pairs (each original with both of its
+# dups), Jaccard >= 0.5 verification, and the connected components cc
+# (id, cluster_id = min id in the component) by recursive
+# reachability, so the query must open with WITH RECURSIVE.
+_NEARDUP_CC_CTE = f"""{_dup_corpus_sql("dup prefix ", "dup prefix v2 ")}, t AS (
             SELECT id, {_DUCK_TOKENS} AS ws FROM corpus
         ), s AS (
             SELECT id, list_distinct({_DUCK_SHINGLES3}) AS sh FROM t
@@ -645,43 +650,21 @@ def redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
         ), cc AS (
             SELECT node AS id, min(label) AS cluster_id
             FROM reach GROUP BY node
-        )
-        SELECT id, cluster_id,
-               count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-        FROM cc
-    """,
-)
-def neardup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTER assembly: candidate pairs (two injected dup
-    generations of every 50th doc) are Jaccard-verified (>= 0.5), then
-    connected components stitches transitive groups — original, dup-v1
-    and dup-v2 share a cluster even though no direct v1~v2 pair was
-    ever generated. cluster_id = min doc_id in the group (the natural
-    "keep the canonical doc" dedup policy).
+        )"""
 
-    The oracle replays the same graph with a recursive CTE; Spark runs
+
+def _neardup_clusters(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(corpus, cc) of _NEARDUP_CC_CTE: corpus (id, text) and the
+    clustered ids cc (id, cluster_id). Components come from
     distributed min-label propagation (operators/graph.py) — log-
-    diameter rounds of join+groupBy, no driver-side graph.
-    """
+    diameter rounds of join+groupBy, no driver-side graph."""
     from ..operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
     base50 = docs.filter(F.col("doc_id") % 50 == 0)
-    corpus = (
-        docs.select(F.col("doc_id").alias("id"), "text")
-        .unionAll(
-            base50.select(
-                (F.col("doc_id") + 1000000).alias("id"),
-                F.concat(F.lit("dup prefix "), F.col("text")).alias("text"),
-            )
-        )
-        .unionAll(
-            base50.select(
-                (F.col("doc_id") + 2000000).alias("id"),
-                F.concat(F.lit("dup prefix v2 "), F.col("text")).alias("text"),
-            )
-        )
-    )
+    corpus = _dup_corpus(docs, "dup prefix ", "dup prefix v2 ")
     s = corpus.select(
         "id", F.array_distinct(shingles3(tokens_col(F.col("text")))).alias("sh")
     )
@@ -702,11 +685,37 @@ def neardup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(inter / F.greatest(union, F.lit(1)) >= 0.5)
         .select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
     )
-    cc = connected_components(verified, "src", "dst")
-    w = Window.partitionBy("cluster_id")
-    return cc.select(
+    cc = connected_components(verified, "src", "dst").select(
         "id", F.col("component").alias("cluster_id")
-    ).withColumn("cluster_size", F.count("*").over(w))
+    )
+    return corpus, cc
+
+
+@query(
+    "neardup_cluster_cc",
+    category="L2-cc",
+    oracle=f"""
+        WITH RECURSIVE {_NEARDUP_CC_CTE}
+        SELECT id, cluster_id,
+               count(*) OVER (PARTITION BY cluster_id) AS cluster_size
+        FROM cc
+    """,
+)
+def neardup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup CLUSTER assembly: candidate pairs (two injected dup
+    generations of every 50th doc) are Jaccard-verified (>= 0.5), then
+    connected components stitches transitive groups — original, dup-v1
+    and dup-v2 share a cluster even though no direct v1~v2 pair was
+    ever generated. cluster_id = min doc_id in the group (the natural
+    "keep the canonical doc" dedup policy).
+
+    The oracle replays the same graph with a recursive CTE; Spark runs
+    distributed min-label propagation (operators/graph.py) — log-
+    diameter rounds of join+groupBy, no driver-side graph.
+    """
+    _, cc = _neardup_clusters(spark, sf_dir)
+    w = Window.partitionBy("cluster_id")
+    return cc.withColumn("cluster_size", F.count("*").over(w))
 
 
 @query(
@@ -740,42 +749,7 @@ def fuzzy_match_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     "neardup_dedup_end_to_end",
     category="L2-e2e",
     oracle=f"""
-        WITH RECURSIVE corpus AS (
-            SELECT doc_id AS id, text FROM documents
-            UNION ALL
-            SELECT doc_id + 1000000, concat('dup prefix ', text)
-            FROM documents WHERE doc_id % 50 = 0
-            UNION ALL
-            SELECT doc_id + 2000000, concat('dup prefix v2 ', text)
-            FROM documents WHERE doc_id % 50 = 0
-        ), t AS (
-            SELECT id, {_DUCK_TOKENS} AS ws FROM corpus
-        ), s AS (
-            SELECT id, list_distinct({_DUCK_SHINGLES3}) AS sh FROM t
-        ), cand AS (
-            SELECT doc_id AS id1, doc_id + 1000000 AS id2
-            FROM documents WHERE doc_id % 50 = 0
-            UNION ALL
-            SELECT doc_id, doc_id + 2000000
-            FROM documents WHERE doc_id % 50 = 0
-        ), verified AS (
-            SELECT c.id1, c.id2
-            FROM cand c JOIN s a ON c.id1 = a.id JOIN s b ON c.id2 = b.id
-            WHERE len(list_intersect(a.sh, b.sh)) * 1.0 /
-                  greatest(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)), 1)
-                  >= 0.5
-        ), edges AS (
-            SELECT id1 AS src, id2 AS dst FROM verified
-            UNION
-            SELECT id2, id1 FROM verified
-        ), reach AS (
-            SELECT src AS node, src AS label FROM edges
-            UNION
-            SELECT e.dst, r.label FROM edges e JOIN reach r ON e.src = r.node
-        ), cc AS (
-            SELECT node AS id, min(label) AS cluster_id
-            FROM reach GROUP BY node
-        ), kept AS (
+        WITH RECURSIVE {_NEARDUP_CC_CTE}, kept AS (
             SELECT corpus.id FROM corpus
             LEFT JOIN cc ON corpus.id = cc.id
             WHERE cc.id IS NULL OR cc.id = cc.cluster_id
@@ -800,48 +774,7 @@ def neardup_dedup_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label propagation) and adds only the anti-join-style keep
     rule — demonstrating that the operator library composes into a
     one-plan dedup pass with no driver-side orchestration."""
-    from ..operators.graph import connected_components
-
-    docs = load_table(spark, sf_dir, "documents")
-    base50 = docs.filter(F.col("doc_id") % 50 == 0)
-    corpus = (
-        docs.select(F.col("doc_id").alias("id"), "text")
-        .unionAll(
-            base50.select(
-                (F.col("doc_id") + 1000000).alias("id"),
-                F.concat(F.lit("dup prefix "), F.col("text")).alias("text"),
-            )
-        )
-        .unionAll(
-            base50.select(
-                (F.col("doc_id") + 2000000).alias("id"),
-                F.concat(F.lit("dup prefix v2 "), F.col("text")).alias("text"),
-            )
-        )
-    )
-    s = corpus.select(
-        "id", F.array_distinct(shingles3(tokens_col(F.col("text")))).alias("sh")
-    )
-    cand = base50.select(
-        F.col("doc_id").alias("id1"), (F.col("doc_id") + 1000000).alias("id2")
-    ).unionAll(
-        base50.select(
-            F.col("doc_id").alias("id1"), (F.col("doc_id") + 2000000).alias("id2")
-        )
-    )
-    a = s.select(F.col("id").alias("id1"), F.col("sh").alias("sh1"))
-    b = s.select(F.col("id").alias("id2"), F.col("sh").alias("sh2"))
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    union = F.size("sh1") + F.size("sh2") - inter
-    verified = (
-        cand.join(a, "id1")
-        .join(b, "id2")
-        .filter(inter / F.greatest(union, F.lit(1)) >= 0.5)
-        .select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    )
-    cc = connected_components(verified, "src", "dst").select(
-        "id", F.col("component").alias("cluster_id")
-    )
+    corpus, cc = _neardup_clusters(spark, sf_dir)
     kept = corpus.join(cc, corpus.id == cc.id, "left").filter(
         cc.id.isNull() | (cc.id == cc.cluster_id)
     ).select(corpus.id)

@@ -96,3 +96,17 @@ def test_louvain_coarsening_does_not_decrease_modularity(spark, sf_dir):
     qn1 = q1.select("q_num").first().q_num
     qn2 = q2.select("q_num").first().q_num
     assert qn2 >= qn1, (qn1, qn2)
+
+
+def test_ktruss_round_keeps_exactly_the_edges_on_two_triangles(spark):
+    """One 4-truss round over a K4 {1, 2, 3, 4} with a triangle
+    {4, 5, 6} hanging off vertex 4: each K4 edge lies on 2 triangles,
+    each hanging edge on 1, so the round keeps exactly the K4's 6 edges.
+    A support threshold of 1 would keep all 9 edges, one of 3 none."""
+    from eventstreams_spark.queries.graph2_extra import _ktruss_survivors
+
+    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    hanging = [(4, 5), (4, 6), (5, 6)]
+    edges = spark.createDataFrame(k4 + hanging, "a long, b long")
+    got = sorted((r["a"], r["b"]) for r in _ktruss_survivors(edges).collect())
+    assert got == k4

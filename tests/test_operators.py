@@ -545,6 +545,26 @@ def test_gotoh_affine_score_matches_exhaustive_enumeration():
     assert _gotoh_affine_score([1, 2, 0, 1], [1, 2, 0, 1]) == 8
 
 
+def test_nw_score_is_gotoh_with_open_equal_to_extend():
+    """NW's linear gap of -2 per symbol is an affine gap with open =
+    extend = 2, so _nw_score equals the enumeration-checked Gotoh score
+    at those costs, empty sequences included."""
+    import random
+
+    from eventstreams_spark.queries.forecast_extra import (
+        _gotoh_affine_score,
+        _nw_score,
+    )
+
+    rng = random.Random(7)
+    for _ in range(500):
+        xa = [rng.randint(0, 2) for _ in range(rng.randint(0, 8))]
+        xb = [rng.randint(0, 2) for _ in range(rng.randint(0, 8))]
+        assert _nw_score(xa, xb) == _gotoh_affine_score(
+            xa, xb, gap_open=2, gap_ext=2
+        ), (xa, xb)
+
+
 def test_smith_waterman_matches_all_substring_pairs_maximum():
     """SW local score == max over ALL substring pairs of the global
     (no-floor) NW score — the definitional characterization, computed

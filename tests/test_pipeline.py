@@ -124,6 +124,14 @@ def test_throttle_per_bucket(spark):
     assert len(out) == 8  # 2 keys × 2 hours × min(3, limit=2)
 
 
+def test_throttle_rejects_an_unknown_period_at_compile():
+    with pytest.raises(ValueError, match="throttle: period must be one of"):
+        Pipeline.from_config(
+            {"steps": [{"type": "throttle", "key": "key", "order": "ts",
+                        "period": "2 hours"}]}
+        )
+
+
 def test_unknown_step_fails_at_compile():
     with pytest.raises(ValueError, match="unknown type 'nope'"):
         Pipeline.from_config({"steps": [{"type": "nope"}]})
